@@ -60,16 +60,13 @@ object StockPipeline {
     // of the reference's thread-pool fan-out (`main_parallel.py:460+`).
     // Each load is several small driver-synchronized actions; running
     // them sequentially would pay that latency 3x.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     val factLoads = Seq(
       "daily_stock_prices" -> dailyRows,
       "intraday_stock_prices" -> intradayRows,
       "sma_indicators" -> smaRows
-    ).map { case (table, rows) => Future(table -> load(table, rows)) }
+    ).map { case (table, rows) => () => table -> load(table, rows) }
     val inserted = ("companies", nCompanies) +:
-      factLoads.map(Await.result(_, Duration.Inf))
+      Jobs.concurrently(spark, "stock fact loads", factLoads: _*)
 
     inserted.toDF("table", "rows_inserted")
   }

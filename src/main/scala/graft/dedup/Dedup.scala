@@ -404,6 +404,10 @@ object Dedup {
     * (GPT-3 appx. C / PaLM / Llama decontamination). Pairs at or above
     * `minOverlap` coverage are contamination candidates.
     *
+    * Shingles are matched by their 128-bit md5, not by their text, so
+    * "shared" is equality up to an md5 collision: probabilistic, not
+    * exact (a collision would inflate `shared_ngrams`).
+    *
     * Shape: both sides shingle narrowly, then ONE inverted-index
     * equi-join on the shingle (shuffle carries ids + 16-byte tokens)
     * and a pair-count aggregate — never a doc×doc product. At 100 TB
@@ -1008,9 +1012,9 @@ object Dedup {
     // for a hash: x carries exactly one salt, y is replicated across
     // all of that hash's salts — each pair produced exactly once,
     // byte-identical to the unsalted join.
+    // integer `div`: a double `/` plus floor is exact only below 2^53
     val nSalt = least(
-      floor((col("__df") + lit(hotDf.toLong - 1L)) / lit(hotDf.toLong))
-        .cast("long"),
+      expr(s"(__df + ${hotDf.toLong - 1L}L) div ${hotDf.toLong}L"),
       lit(saltCap.toLong))
     val hotX = hot.withColumn("__salt",
       pmod(xxhash64(col("doc_id")), nSalt))

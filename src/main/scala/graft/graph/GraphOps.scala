@@ -218,45 +218,30 @@ object GraphOps {
   }
 
   /** Connected components by min-label propagation to fixpoint, capped
-    * at `maxRounds` (the oracle unrolls exactly `maxRounds` rounds —
-    * once converged further rounds are the identity, so the two agree
-    * whenever the graph converges within the cap; the fixture graphs
-    * converge in ≤11). Each round is one join + one min-aggregate on
-    * the neighbor key. Rounds needed = component eccentricity of its
-    * min node — fine for the short-diameter components of co-occurrence
-    * and domain graphs; a 2^rounds alternative (large-star/small-star,
-    * Kiveris '14) slots into the same loop if diameters grow.
-    *
-    * `localCheckpoint` truncates the per-round lineage so the fixpoint
-    * count doesn't recompute the whole history each round — the same
-    * discipline a 1000-executor run needs, where round k's plan must
-    * not replay rounds 1..k-1.
+    * at `maxRounds` (the round contract is [[Fixpoint.converge]]'s; the
+    * fixture graphs converge in ≤11). Each round is one join + one
+    * min-aggregate on the neighbor key. Rounds needed = component
+    * eccentricity of its min node — fine for the short-diameter
+    * components of co-occurrence and domain graphs; a 2^rounds
+    * alternative (large-star/small-star, Kiveris '14) slots into the
+    * same step if diameters grow.
     */
   def connectedComponents(edgesUndirected: DataFrame, maxRounds: Int): DataFrame = {
     // materialized once — every round joins against it (see pageRank)
     val both = edgesUndirected.select(col("src"), col("dst"))
       .unionAll(edgesUndirected.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
-    var labels = both.select(col("src").as("node")).distinct()
+    val init = both.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
+    Fixpoint.converge(init, Seq("node"), maxRounds) { labels =>
       // each node's own label rides the same union as its neighbors' —
       // min(self, neighbors) in ONE keyed aggregate, no left join
-      val next = both
+      both
         .join(labels.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), col("label"))
         .unionAll(labels)
         .groupBy(col("node")).agg(min(col("label")).as("label"))
-        .localCheckpoint(true)
-      changed = next.as("n").join(labels.as("o"), Seq("node"))
-        .where(col("n.label") =!= col("o.label")).limit(1).count() > 0
-      labels = next
-      round += 1
-    }
-    labels
+    }._1
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) for
@@ -502,10 +487,9 @@ object GraphOps {
     * the H-index invariant: equal values occupy contiguous ranks and
     * the count of positions with value ≥ rank does not depend on
     * their order). Iterates to fixpoint with early exit, capped at
-    * `maxRounds` (the oracle unrolls exactly that many rounds; once
-    * converged every extra round is the identity — the g02
-    * CcRounds contract, convergence spec-asserted at fixture scale:
-    * 21/10/5 rounds at sf 0.001/0.01/0.1).
+    * `maxRounds` (the round contract is [[Fixpoint.converge]]'s;
+    * convergence spec-asserted at fixture scale: 21/10/5 rounds at
+    * sf 0.001/0.01/0.1).
     *
     * Returns (node, coreness, degree).
     */
@@ -517,28 +501,21 @@ object GraphOps {
     val deg = both.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("degree"))
       .localCheckpoint(true)
-    var h = deg.select(col("node"), col("degree").as("h"))
-      .localCheckpoint(true)
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
+    val w = Window.partitionBy(col("node")).orderBy(col("__nh").desc)
+    val (core, _) = Fixpoint.converge(
+        deg.select(col("node"), col("degree").as("h")), Seq("node"),
+        maxRounds) { h =>
       val nb = both
         .join(h.withColumnRenamed("node", "src"), "src")
         .select(col("dst").as("node"), col("h").as("__nh"))
-      val w = Window.partitionBy(col("node")).orderBy(col("__nh").desc)
-      val next = h.select(col("node"))
+      h.select(col("node"))
         .join(nb.withColumn("__rn", row_number().over(w))
             .where(col("__nh") >= col("__rn"))
             .groupBy(col("node")).agg(max(col("__rn")).as("h")),
           Seq("node"), "left")
         .select(col("node"), coalesce(col("h"), lit(0L)).cast("long").as("h"))
-        .localCheckpoint(true)
-      changed = next.as("n").join(h.as("o"), Seq("node"))
-        .where(col("n.h") =!= col("o.h")).limit(1).count() > 0
-      h = next
-      round += 1
     }
-    h.join(deg, Seq("node"))
+    core.join(deg, Seq("node"))
       .select(col("node"), col("h").as("coreness"), col("degree"))
   }
 
@@ -550,11 +527,10 @@ object GraphOps {
     * one keyed join carrying dist+cost along edges and one
     * map-side-combined min — the g02 two-exchange discipline, so the
     * frontier is bit-reproducible at any partitioning. Unreachable
-    * (probe, node) pairs simply never materialize a row. Iterates to
-    * fixpoint with early exit, capped at `maxRounds` (the oracle
-    * unrolls exactly that many rounds; past the fixpoint every round
-    * is the identity — the g02 CcRounds contract; measured 4/11/5
-    * rounds at sf 0.001/0.01/0.1, convergence spec-asserted).
+    * (probe, node) pairs simply never materialize a row, so a round
+    * that reaches a new node adds a row — a change under
+    * [[Fixpoint.converge]], whose round contract applies (measured
+    * 4/11/5 rounds at sf 0.001/0.01/0.1, convergence spec-asserted).
     *
     * `edges(src, dst, cost)` is treated as undirected (mirrored
     * internally). No overflow: cost ≤ 10⁶ per edge and paths are
@@ -566,27 +542,17 @@ object GraphOps {
       .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
         col("cost")))
       .localCheckpoint(true)
-    var dist = probes.select(col("probe"), col("probe").as("node"),
-      lit(0L).as("dist")).localCheckpoint(true)
-    var round = 0
-    var changed = true
-    while (changed && round < maxRounds) {
-      val next = both
+    val init = probes.select(col("probe"), col("probe").as("node"),
+      lit(0L).as("dist"))
+    Fixpoint.converge(init, Seq("probe", "node"), maxRounds) { dist =>
+      both
         .join(dist.withColumnRenamed("node", "src"), "src")
         .select(col("probe"), col("dst").as("node"),
           (col("dist") + col("cost")).as("dist"))
         .unionAll(dist.select(col("probe"), col("node"), col("dist")))
         .groupBy(col("probe"), col("node"))
         .agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-      changed = next.as("n")
-        .join(dist.as("o"), Seq("probe", "node"), "left")
-        .where(col("o.dist").isNull || col("n.dist") =!= col("o.dist"))
-        .limit(1).count() > 0
-      dist = next
-      round += 1
-    }
-    dist
+    }._1
   }
 
   /** DIRECTED sequence edges from `lineitem`: src part immediately
@@ -718,9 +684,6 @@ object GraphOps {
       outer += 1
       require(outer <= maxOuter,
         s"scc: settle rounds exceeded maxOuter=$maxOuter — raise the cap")
-      var st = nodes
-        .select(col("node"), col("node").as("f"), col("node").as("b"))
-        .localCheckpoint(true)
       // one propagation round, composed lazily: min(f) arrives along
       // in-edges, min(b) along out-edges, self rides the union — ONE
       // keyed aggregate, the connectedComponents shape done twice-in-one
@@ -735,22 +698,11 @@ object GraphOps {
           .groupBy(col("node")).agg(min(col("f")).as("f"),
             min(col("b")).as("b"))
       }
-      var inner = 0
-      var changed = true
-      while (changed) {
-        inner += innerStride
-        require(inner <= maxInner + innerStride,
-          s"scc: propagation exceeded maxInner=$maxInner — raise the cap")
-        // stride rounds per materialization: propagation past the
-        // fixpoint is the identity, so overshooting inside a stride is
-        // harmless and the change check runs once per stride
-        val next = (1 to innerStride).foldLeft(st)((s, _) => propagate(s))
-          .localCheckpoint(true)
-        changed = next.as("n").join(st.as("o"), Seq("node"))
-          .where(col("n.f") =!= col("o.f") || col("n.b") =!= col("o.b"))
-          .limit(1).count() > 0
-        st = next
-      }
+      val (st, converged) = Fixpoint.converge(
+        nodes.select(col("node"), col("node").as("f"), col("node").as("b")),
+        Seq("node"), maxInner, innerStride)(propagate)
+      require(converged,
+        s"scc: propagation exceeded maxInner=$maxInner — raise the cap")
       val settled = st.where(col("f") === col("b"))
         .select(col("node"), col("f").as("scc_id"))
       // st is checkpointed, so the growing union stays shallow (≤

@@ -31,20 +31,17 @@ object Incremental {
 
   /** A7 (order-independent): keep incoming rows strictly newer than the
     * target's watermark for their key; keys unseen in the target pass.
+    * The watermark frame (one row per key) is broadcast.
     */
   def newerThanWatermark(
       incoming: DataFrame,
       target: DataFrame,
       keyCol: String,
-      tsCol: String,
-      broadcastWatermark: Boolean = true): DataFrame = {
-    val hwm0 = highWaterMarks(target, keyCol, tsCol)
-    val hwm = if (broadcastWatermark) broadcast(hwm0) else hwm0
+      tsCol: String): DataFrame =
     incoming
-      .join(hwm, Seq(keyCol), "left")
+      .join(broadcast(highWaterMarks(target, keyCol, tsCol)), Seq(keyCol), "left")
       .where(col("__hwm").isNull || col(tsCol) > col("__hwm"))
       .drop("__hwm")
-  }
 
   /** B6 within-batch + B4 cross-batch: at-most-once on the PK.
     *

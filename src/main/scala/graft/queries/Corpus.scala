@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Jobs.concurrently
 import graft.Tables
 import graft.dedup.Dedup
 import graft.similarity.Similarity
@@ -6932,42 +6933,6 @@ object Corpus {
     mi.unionAll(ma).unionAll(mv)
   }
 
-  /** Run independent per-kind job chains concurrently (guide §2.6 —
-    * "overlap independent jobs"): each thunk runs on its own driver
-    * thread with a thread-local job description, so the scheduler
-    * back-fills one chain's straggler tail with the next chain's
-    * tasks. Returns the thunks' results in input order; any failure
-    * propagates. Used by the media capstones whose three kinds
-    * (image/audio/video) decode and group independently.
-    */
-  private def concurrently[T](s: SparkSession, what: String,
-      thunks: (() => T)*): Seq[T] = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutor(pool)
-    // each thunk runs under its own job GROUP (not just a
-    // description) so a sibling's failure can cancel the others'
-    // in-flight jobs — without this, Await.result rethrows while the
-    // surviving threads keep running (and writing) to completion
-    val groups = thunks.indices.map(i => s"$what [$i]")
-    try {
-      val futs = thunks.zipWithIndex.map { case (t, i) =>
-        scala.concurrent.Future {
-          s.sparkContext.setJobGroup(groups(i), groups(i),
-            interruptOnCancel = true)
-          try t() finally s.sparkContext.clearJobGroup()
-        }
-      }
-      try scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(futs),
-        scala.concurrent.duration.Duration.Inf).toSeq
-      catch { case e: Throwable =>
-        groups.foreach(s.sparkContext.cancelJobGroup)
-        throw e
-      }
-    } finally { pool.shutdown() }
-  }
-
   def c04_sql: String = {
     def kindBlock(kind: String, pfx: String, itemsSql: String, pairsSql: String) =
       (s"""${pfx}i AS ($itemsSql),
@@ -7073,7 +7038,7 @@ object Corpus {
     val vid = MultiModal.videoFrameDHashes(vidC)
       .join(sized(vidC), "media_id")
     // guide §2.6 — the three decode-and-dump chains are independent;
-    // overlap them (see [[concurrently]], same as c04)
+    // overlap them (see [[graft.Jobs.concurrently]], same as c04)
     concurrently(s, "c11 hash dump",
       () => img.coalesce(1).write.mode("overwrite")
         .parquet(s"$c11Root/image.parquet"),

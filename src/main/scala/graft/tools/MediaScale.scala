@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-growth measurement for the perceptual near-dup family
   * (m07 images, m08 audio, m09 video) — these corpora are authored
   * in-query (real codec bytes), not read from the sf dirs, so
@@ -17,13 +15,7 @@ import org.apache.spark.sql.SparkSession
 object MediaScale {
 
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import org.apache.spark.sql.functions._
     import graft.multimodal.MultiModal

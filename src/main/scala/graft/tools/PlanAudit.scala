@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted plans + warm timings for chosen SparkEntry queries —
   * the `.explain` audit loop (pushdown/broadcast/codegen checks).
   * Usage: runMain graft.tools.PlanAudit <sfDir> <query...>
@@ -15,14 +13,7 @@ object PlanAudit {
         graft.SparkEntry.queries.keys.toSeq.sorted
       else if (args.length > 1) args.tail.toSeq
       else Seq("q06_semi_join", "q07_anti_join")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // SPARK_GRAFT_PLAN_ONLY=1: dump formatted plans without the timing
     // loop — the bulk whole-surface audit mode (guide §1: capture the

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.functions.PortableMath
@@ -22,11 +21,7 @@ import graft.functions.PortableMath.Dual
 object PortableMathProbe {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/pm_probe")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
