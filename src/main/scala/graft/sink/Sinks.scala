@@ -1,41 +1,8 @@
 package graft.sink
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
 
-import graft.load.{Catalog, Incremental}
-
-/** Table sinks behind one trait (SURVEY.md §7.1 decision 5): parquet is
-  * the primary, driver-comparable store; JDBC mirrors the reference's
-  * Postgres mode (B5/A10). Both share the idempotent-append contract
-  * from [[Incremental]] — single-writer assumption, like the
-  * reference's read-then-insert (§7.5.1).
-  */
-trait Sink {
-
-  /** Append `rows`, skipping any whose PK already exists in the target.
-    * Returns rows actually written.
-    */
-  def appendIdempotent(rows: DataFrame): Long
-
-  /** Raw append without the PK guard (for pre-deduplicated batches). */
-  def append(rows: DataFrame): Unit
-}
-
-/** Parquet-table sink at `path` with schema `schema` and PK `pk`. */
-final class ParquetSink(
-    spark: SparkSession,
-    path: String,
-    schema: StructType,
-    pk: Seq[String]) extends Sink {
-
-  def appendIdempotent(rows: DataFrame): Long =
-    Incremental.appendIdempotent(spark, path, rows, pk, schema)
-
-  def append(rows: DataFrame): Unit =
-    rows.select(schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(SaveMode.Append).parquet(path)
-}
+import graft.load.Incremental
 
 /** JDBC sink — the reference's Postgres target (`main_parallel.py`
   * batched inserts, A10/B5). `batchsize` maps to the reference's
@@ -44,9 +11,10 @@ final class ParquetSink(
   * `rows.coalesce(n)` against small DBMS pools).
   *
   * Idempotency: Spark's JDBC writer has no ON CONFLICT; the PK guard
-  * reads the current target and anti-joins (same plan as the parquet
-  * path). Under a single writer this reproduces `INSERT … ON CONFLICT
-  * DO NOTHING`; concurrent writers would race (documented §7.5.1) —
+  * reads the current target and anti-joins (the same
+  * [[Incremental.notInTarget]] plan as the parquet load path). Under a
+  * single writer this reproduces `INSERT … ON CONFLICT DO NOTHING`;
+  * concurrent writers would race (documented §7.5.1) —
   * [[appendIdempotentTxn]] closes that race with a staging table and
   * one transactional `INSERT … WHERE NOT EXISTS` on the DBMS side.
   */
@@ -56,7 +24,7 @@ final class JdbcSink(
     table: String,
     pk: Seq[String],
     properties: java.util.Properties = new java.util.Properties(),
-    batchSize: Int = 1000) extends Sink {
+    batchSize: Int = 1000) {
 
   /** Only the PK columns leave the DBMS — the `.select` prunes at the
     * JDBC scan (the reader compiles a projection using the column names
@@ -70,6 +38,9 @@ final class JdbcSink(
     spark.read.jdbc(url, table, properties)
       .select(pk.map(p => org.apache.spark.sql.functions.col(p).as(p)): _*)
 
+  /** Append `rows`, skipping any whose PK already exists in the target.
+    * Returns rows actually written.
+    */
   def appendIdempotent(rows: DataFrame): Long = {
     val fresh = Incremental.notInTarget(rows, existingPks(), pk).cache()
     try {
@@ -143,24 +114,10 @@ final class JdbcSink(
     } finally conn.close()
   }
 
+  /** Raw append without the PK guard (for pre-deduplicated batches). */
   def append(rows: DataFrame): Unit =
     rows.write
       .mode(SaveMode.Append)
       .option("batchsize", batchSize)
       .jdbc(url, table, properties)
-}
-
-object Sinks {
-
-  /** Parquet sink for one of the four stock tables under `basePath`. */
-  def parquetFor(spark: SparkSession, basePath: String, table: String): ParquetSink =
-    new ParquetSink(spark, Catalog.tablePath(basePath, table),
-      graft.schema.StockSchemas.tables(table),
-      graft.schema.StockSchemas.primaryKeys(table))
-
-  /** JDBC sink for one of the four stock tables. */
-  def jdbcFor(spark: SparkSession, url: String, table: String,
-      properties: java.util.Properties = new java.util.Properties()): JdbcSink =
-    new JdbcSink(spark, url, table,
-      graft.schema.StockSchemas.primaryKeys(table), properties)
 }

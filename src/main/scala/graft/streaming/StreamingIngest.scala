@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
@@ -28,27 +29,14 @@ object StreamingIngest {
       spark: SparkSession,
       payloadDir: String,
       targetPath: String,
-      checkpointDir: String): StreamingQuery = {
-    val payloads = spark.readStream
-      .schema(PayloadReader.payloadSchema)
-      .option("multiLine", true)
-      .json(payloadDir)
-    val rows = Normalize.daily(payloads)
-      // The bar date is the event time; 1:1 with the PK's date column,
-      // so dedup state expires with the watermark while still keying
-      // exactly on the (symbol, date) PK.
-      .withColumn("event_ts", col("date").cast("timestamp"))
-      .withWatermark("event_ts", "14 days")
-      .dropDuplicates("company_symbol", "event_ts")
-      .drop("event_ts")
-    rows.writeStream
+      checkpointDir: String): StreamingQuery =
+    dedupedDailyBars(spark, payloadDir).writeStream
       .format("parquet")
       .option("path", targetPath)
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
 
   /** Streaming ingest into a JDBC target: the same normalize + watermark
     * dedup as [[dailyIngestStream]], delivered per micro-batch through
@@ -68,17 +56,8 @@ object StreamingIngest {
       table: String,
       pk: Seq[String],
       properties: java.util.Properties,
-      checkpointDir: String): StreamingQuery = {
-    val payloads = spark.readStream
-      .schema(PayloadReader.payloadSchema)
-      .option("multiLine", true)
-      .json(payloadDir)
-    val rows = Normalize.daily(payloads)
-      .withColumn("event_ts", col("date").cast("timestamp"))
-      .withWatermark("event_ts", "14 days")
-      .dropDuplicates("company_symbol", "event_ts")
-      .drop("event_ts")
-    rows.writeStream
+      checkpointDir: String): StreamingQuery =
+    dedupedDailyBars(spark, payloadDir).writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
         new graft.sink.JdbcSink(spark, url, table, pk, properties)
           .appendIdempotent(batch.toDF())
@@ -88,7 +67,24 @@ object StreamingIngest {
       .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
       .start()
-  }
+
+  /** Payload JSON files appearing under `payloadDir` → normalized daily
+    * bars → PK dedup under a 14-day watermark: the stream both daily
+    * ingest sinks deliver.
+    */
+  private def dedupedDailyBars(
+      spark: SparkSession, payloadDir: String): DataFrame =
+    Normalize.daily(spark.readStream
+        .schema(PayloadReader.payloadSchema)
+        .option("multiLine", true)
+        .json(payloadDir))
+      // The bar date is the event time; 1:1 with the PK's date column,
+      // so dedup state expires with the watermark while still keying
+      // exactly on the (symbol, date) PK.
+      .withColumn("event_ts", col("date").cast("timestamp"))
+      .withWatermark("event_ts", "14 days")
+      .dropDuplicates("company_symbol", "event_ts")
+      .drop("event_ts")
 
   /** Tumbling event-time window aggregate over an intraday bar stream:
     * per (symbol, window) OHLCV candle — open/close from the earliest/
@@ -512,32 +508,53 @@ object StreamingIngest {
       .map(p => spark.read.parquet(p))
 
   private def priorGeneration(
-      spark: SparkSession, dimRoot: String, below: Long): Option[String] = {
-    val root = new org.apache.hadoop.fs.Path(dimRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
-      // COMMITTED generations only: every writer drops `_SUCCESS` in
-      // the gen dir as its LAST act (Spark's parquet committer for
-      // direct gen-dir tables; [[commitGeneration]] for sub-table
-      // layouts), so a marker-less dir is a mid-write crash remnant —
-      // resolving it by name alone would hand every external read-side
-      // a silently-truncated snapshot between the crash and the replay.
-      // Sub-table generations written BEFORE the gen-level marker
-      // existed are adopted by [[backfillGenerationMarkers]] — a
-      // read-time fallback to per-table markers is deliberately NOT
-      // done here, because mid-crash dirs (one committed table, the
-      // next never started) are indistinguishable from legacy commits
-      // without the expected table list.
-      .filter(s => fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .flatMap(s => s.getPath.getName.stripPrefix("gen-").toLongOption
-        .map(id => (id, s.getPath.toString)))
-      .filter(_._1 < below)
-      .sortBy(_._1)
-      .lastOption.map(_._2)
+      spark: SparkSession, root: String, below: Long): Option[String] =
+    generations(spark, root, below).lastOption
+
+  /** Paths of the COMMITTED generations under `root` with id below
+    * `below`, ascending by id.
+    */
+  private def generations(
+      spark: SparkSession, root: String, below: Long): Seq[String] = {
+    val (fs, gens) = listGenerations(spark, root)
+    // COMMITTED generations only: every writer drops `_SUCCESS` in the
+    // gen dir as its LAST act (Spark's parquet committer for direct
+    // gen-dir tables; [[commitGeneration]] for sub-table layouts), so a
+    // marker-less dir is a mid-write crash remnant — resolving it by
+    // name alone would hand every external read-side a
+    // silently-truncated snapshot between the crash and the replay.
+    // Sub-table generations written BEFORE the gen-level marker existed
+    // are adopted by [[backfillGenerationMarkers]] — a read-time
+    // fallback to per-table markers is deliberately NOT done here,
+    // because mid-crash dirs (one committed table, the next never
+    // started) are indistinguishable from legacy commits without the
+    // expected table list.
+    gens.collect { case (id, p) if id < below && committed(fs, p) => p.toString }
   }
+
+  /** Every `gen-<id>` dir under `root` as (id, path), ascending by id,
+    * committed or not — the one listing all generation-store readers,
+    * migrations and GC share.
+    */
+  private def listGenerations(spark: SparkSession, root: String)
+      : (FileSystem, Seq[(Long, Path)]) = {
+    val rootPath = new Path(root)
+    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val gens =
+      if (!fs.exists(rootPath)) Seq.empty
+      else fs.listStatus(rootPath).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
+        .flatMap(s => s.getPath.getName.stripPrefix("gen-").toLongOption
+          .map(id => (id, s.getPath)))
+        .sortBy(_._1)
+    (fs, gens)
+  }
+
+  /** A dir (generation or one of its tables) is committed once its
+    * writer has dropped `_SUCCESS` in it.
+    */
+  private def committed(fs: FileSystem, dir: Path): Boolean =
+    fs.exists(new Path(dir, "_SUCCESS"))
 
   /** Brackets one generation's table writes with the generation-level
     * `_SUCCESS` commit marker: deleted first (so a replayed batch's
@@ -552,13 +569,79 @@ object StreamingIngest {
     */
   private def commitGeneration(
       spark: SparkSession, genDir: String)(writes: => Unit): Unit = {
-    val p = new org.apache.hadoop.fs.Path(genDir)
+    val p = new Path(genDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(p, "_SUCCESS")
+    val marker = new Path(p, "_SUCCESS")
     if (fs.exists(marker)) fs.delete(marker, false)
     writes
     fs.create(marker, true).close()
   }
+
+  /** The generation-store protocol of every single-table fold stream.
+    * Micro-batch `n` maps its rows to a `partial`, folds that into the
+    * `table` of the newest COMMITTED generation with id strictly below
+    * `n` (the first batch's snapshot is its partial alone), and commits
+    * the result as `gen-<n>/<table>` under `root` through
+    * [[commitGeneration]].
+    *
+    * Replay contract: generations below `n` are immutable (a batch only
+    * ever writes `gen-<its own id>`), so a batch Spark replays after a
+    * crash resolves the same parent, recomputes the same fold and
+    * overwrites its own half- or fully-written output. Each generation
+    * is a deterministic function of the batch id — Structured
+    * Streaming's condition for exactly-once micro-batch output — and
+    * a full folded snapshot, so readers go through [[latest]] and
+    * [[pruneGenerations]] may reclaim older ones. Per-trigger cost is
+    * the partial plus one fold against the previous snapshot.
+    */
+  private def foldStream(
+      input: DataFrame, root: String, table: String, checkpointDir: String)(
+      fold: (DataFrame, DataFrame) => DataFrame)(
+      partial: DataFrame => DataFrame): StreamingQuery =
+    input.writeStream
+      .foreachBatch {
+        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+            batchId: Long) =>
+          val spark = batch.sparkSession
+          val part = partial(batch.toDF())
+          val merged = priorGeneration(spark, root, batchId)
+            .map(p => fold(spark.read.parquet(s"$p/$table"), part))
+            .getOrElse(part)
+          commitGeneration(spark, s"$root/gen-$batchId") {
+            merged.write.mode("overwrite")
+              .parquet(s"$root/gen-$batchId/$table")
+          }
+          ()
+      }
+      .option("checkpointLocation", checkpointDir)
+      .outputMode(OutputMode.Append)
+      .start()
+
+  /** Additive fold: the union of both snapshots re-aggregated by `keys`,
+    * summing every other column under its own name (keys first, then
+    * the summed columns in the partial's order). No keys = one row.
+    */
+  private def sumBy(keys: String*)(prior: DataFrame, part: DataFrame): DataFrame = {
+    val sums = part.columns.filterNot(keys.contains).map(c => sum(col(c)).as(c))
+    prior.unionByName(part).groupBy(keys.map(col): _*)
+      .agg(sums.head, sums.tail: _*)
+  }
+
+  /** Store fold under at-least-once armor: a `key` already in the prior
+    * snapshot keeps its prior row, so an upstream re-emission can never
+    * double-count or rewrite history. The partial must already be
+    * unique on `key`.
+    */
+  private def firstWins(key: String)(prior: DataFrame, part: DataFrame): DataFrame =
+    prior.unionByName(part.join(prior.select(col(key)), Seq(key), "left_anti"))
+
+  /** The `table` of the newest committed generation under `root`, or
+    * None before the first batch lands.
+    */
+  private def latest(
+      spark: SparkSession, root: String, table: String): Option[DataFrame] =
+    priorGeneration(spark, root, Long.MaxValue)
+      .map(p => spark.read.parquet(s"$p/$table"))
 
   /** One-time upgrade migration for SUB-TABLE generation stores
     * (corpus stats and any layout committed via [[commitGeneration]]):
@@ -580,22 +663,12 @@ object StreamingIngest {
   def backfillGenerationMarkers(spark: SparkSession, root: String,
       tables: Seq[String]): Int = {
     require(tables.nonEmpty, "expected sub-table names must be given")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return 0
-    fs.listStatus(rootPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-")
-        && s.getPath.getName.stripPrefix("gen-").toLongOption.isDefined)
-      .filterNot(s => fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .filter(s => tables.forall(tbl => fs.exists(
-        new org.apache.hadoop.fs.Path(
-          new org.apache.hadoop.fs.Path(s.getPath, tbl), "_SUCCESS"))))
-      .map { s =>
-        fs.create(new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS"),
-          true).close()
-        1
-      }.sum
+    val (fs, gens) = listGenerations(spark, root)
+    val adopted = gens.map(_._2)
+      .filterNot(committed(fs, _))
+      .filter(g => tables.forall(tbl => committed(fs, new Path(g, tbl))))
+    adopted.foreach(g => fs.create(new Path(g, "_SUCCESS"), true).close())
+    adopted.size
   }
 
   /** Time-travel read over any generation store: the path of the
@@ -698,28 +771,19 @@ object StreamingIngest {
   def pruneGenerations(spark: SparkSession, root: String,
       keep: Int = 2): Int = {
     require(keep >= 1, "must keep at least the newest generation")
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(rootPath)) return 0
-    val gens = fs.listStatus(rootPath).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
-      // prune counts and deletes COMMITTED generations only: a
-      // marker-less dir is a mid-write crash remnant the restarted
-      // stream is about to overwrite — it must neither consume a slot
-      // of the keep window (with keep = 1, a remnant above the only
-      // committed generation would otherwise get "kept" while the
-      // committed one is deleted — data loss) nor be deleted out from
-      // under the replay that owns it. Pre-marker sub-table
-      // generations are adopted (gen marker backfilled) by the
-      // explicit [[backfillGenerationMarkers]] migration, after which
-      // they count here like any other committed generation.
-      .filter(s => fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .flatMap(s => s.getPath.getName.stripPrefix("gen-").toLongOption
-        .map(id => (id, s.getPath)))
-      .sortBy(_._1)
-    val doomed = gens.dropRight(keep)
-    doomed.foreach { case (_, p) => fs.delete(p, true) }
+    val (fs, gens) = listGenerations(spark, root)
+    // prune counts and deletes COMMITTED generations only: a marker-less
+    // dir is a mid-write crash remnant the restarted stream is about to
+    // overwrite — it must neither consume a slot of the keep window
+    // (with keep = 1, a remnant above the only committed generation
+    // would otherwise get "kept" while the committed one is deleted —
+    // data loss) nor be deleted out from under the replay that owns it.
+    // Pre-marker sub-table generations are adopted (gen marker
+    // backfilled) by the explicit [[backfillGenerationMarkers]]
+    // migration, after which they count here like any other committed
+    // generation.
+    val doomed = gens.map(_._2).filter(committed(fs, _)).dropRight(keep)
+    doomed.foreach(fs.delete(_, true))
     doomed.size
   }
 
@@ -776,9 +840,8 @@ object StreamingIngest {
     * [[corpusStatsStream]] does for t33: transition counts are
     * ADDITIVE, so each micro-batch's (from, to) counts merge with the
     * previous generation by summation and land as `gen-<batchId>`
-    * under `matrixRoot` (the scdApplyStream replay protocol — read
-    * strictly-below generation, overwrite only your own). Per-trigger
-    * cost O(|batch| + |types|²); the matrix never needs an event-log
+    * under `matrixRoot` ([[foldStream]] owns the replay contract).
+    * Per-trigger cost O(|batch| + |types|²); the matrix never needs an event-log
     * rescan. Probabilities are DERIVED at read time
     * ([[currentTransitionMatrix]]) — persisting the additive counts,
     * not the normalized rows, is what makes the fold exact.
@@ -787,30 +850,11 @@ object StreamingIngest {
       events: org.apache.spark.sql.Dataset[TypedEvent],
       matrixRoot: String,
       checkpointDir: String): StreamingQuery =
-    streamingTransitions(events).toDF().writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = batch.toDF()
-            .groupBy(col("from_type"), col("to_type"))
-            .agg(count(lit(1)).as("n_trans"))
-          val merged = priorGeneration(spark, matrixRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/matrix").unionByName(part)
-                .groupBy(col("from_type"), col("to_type"))
-                .agg(sum(col("n_trans")).as("n_trans"))
-            case None => part
-          }
-          commitGeneration(spark, s"$matrixRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$matrixRoot/gen-$batchId/matrix")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(streamingTransitions(events).toDF(), matrixRoot, "matrix",
+        checkpointDir)(sumBy("from_type", "to_type")) {
+      _.groupBy(col("from_type"), col("to_type"))
+        .agg(count(lit(1)).as("n_trans"))
+    }
 
   /** Newest committed transition matrix with row-normalized
     * probabilities derived from the persisted counts (q88's exact
@@ -818,11 +862,10 @@ object StreamingIngest {
     */
   def currentTransitionMatrix(
       spark: SparkSession, matrixRoot: String): Option[DataFrame] =
-    priorGeneration(spark, matrixRoot, Long.MaxValue).map { p =>
+    latest(spark, matrixRoot, "matrix").map { m =>
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("from_type"))
-      spark.read.parquet(s"$p/matrix")
-        .select(col("from_type"), col("to_type"), col("n_trans"),
+      m.select(col("from_type"), col("to_type"), col("n_trans"),
           round(col("n_trans").cast("double") /
             sum(col("n_trans")).over(w), 6).as("p_trans"))
     }
@@ -832,8 +875,8 @@ object StreamingIngest {
   /** Continuously maintained CUSUM drift statistics — the streaming
     * face of q89: per-type DAILY event counts are ADDITIVE, so each
     * micro-batch's (event_type, day) counts merge with the previous
-    * generation by summation and land as `gen-<batchId>` (the
-    * scdApplyStream replay protocol). The CUSUM recursion itself is
+    * generation by summation and land as `gen-<batchId>` (through
+    * [[foldStream]]). The CUSUM recursion itself is
     * NOT folded — it is order-dependent, so persisting it would bake
     * in arrival order; instead [[currentCusum]] re-derives it at read
     * time from the folded daily series, which is affordable at ANY
@@ -849,40 +892,19 @@ object StreamingIngest {
       events: DataFrame, // streaming frame with event_type + ts columns
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = batch.toDF()
-            .groupBy(col("event_type"),
-              date_trunc("day", col("ts")).as("day"))
-            .agg(count(lit(1)).as("n"))
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/daily").unionByName(part)
-                .groupBy(col("event_type"), col("day"))
-                .agg(sum(col("n")).as("n"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/daily")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(events, statsRoot, "daily", checkpointDir)(
+        sumBy("event_type", "day")) {
+      _.groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
+        .agg(count(lit(1)).as("n"))
+    }
 
   /** q89's exact output derived from the newest folded daily series
     * (integer-scaled Page recursion over the calendar-bounded frame),
     * or None before the first batch lands.
     */
   def currentCusum(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Extensions.cusumFromDaily(
-        spark.read.parquet(s"$p/daily")))
+    latest(spark, statsRoot, "daily")
+      .map(graft.queries.Extensions.cusumFromDaily)
 
   /** Continuously maintained drift histogram — the streaming face of
     * q122's PSI report (the train/serve skew monitor a feature
@@ -890,7 +912,7 @@ object StreamingIngest {
     * them). Per-bin (n_ref, n_cur) counts are ADDITIVE, so each
     * micro-batch folds [[graft.queries.Features.psiHistogram]]'s
     * partial into the previous generation by summation
-    * (the [[cusumStream]] replay protocol); the PSI arithmetic itself
+    * (through [[foldStream]]); the PSI arithmetic itself
     * is a RATIO statistic — order-dependent on nothing but the folded
     * totals — so [[currentPsi]] re-derives the report at read time
     * through the SAME [[graft.queries.Features.psiFromBins]] the batch
@@ -903,36 +925,15 @@ object StreamingIngest {
       events: DataFrame, // streaming frame with ts + value columns
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Features.psiHistogram(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/bins").unionByName(part)
-                .groupBy(col("bin"))
-                .agg(sum(col("n_ref")).as("n_ref"),
-                  sum(col("n_cur")).as("n_cur"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/bins")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(events, statsRoot, "bins", checkpointDir)(sumBy("bin"))(
+      graft.queries.Features.psiHistogram)
 
   /** q122's exact PSI report derived from the newest folded histogram,
     * or None before the first batch lands.
     */
   def currentPsi(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.psiFromBins(spark.read.parquet(s"$p/bins")))
+    latest(spark, statsRoot, "bins")
+      .map(graft.queries.Features.psiFromBins)
 
   /** Continuously maintained KS drift monitor — the streaming face of
     * q135 (the significance-tested companion to [[psiDriftStream]]:
@@ -940,8 +941,8 @@ object StreamingIngest {
     * the raw distributions). Per-value (ref, cur) counts are ADDITIVE,
     * so each micro-batch folds
     * [[graft.queries.Features.ksValueCounts]]'s partial into the
-    * previous generation by summation (the [[cusumStream]] replay
-    * protocol); the KS max-gap is an order statistic over the folded
+    * previous generation by summation (through [[foldStream]]); the KS
+    * max-gap is an order statistic over the folded
     * CDF — a function of the totals alone — so [[currentKs]] derives
     * the report at read time through the SAME
     * [[graft.queries.Features.ksFromCounts]] the batch query uses,
@@ -954,36 +955,15 @@ object StreamingIngest {
       events: DataFrame, // streaming frame with ts + value columns
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Features.ksValueCounts(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/vals").unionByName(part)
-                .groupBy(col("v"))
-                .agg(sum(col("__cr")).as("__cr"),
-                  sum(col("__cc")).as("__cc"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/vals")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(events, statsRoot, "vals", checkpointDir)(sumBy("v"))(
+      graft.queries.Features.ksValueCounts)
 
   /** q135's exact KS report derived from the newest folded counts, or
     * None before the first batch lands.
     */
   def currentKs(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.ksFromCounts(spark.read.parquet(s"$p/vals")))
+    latest(spark, statsRoot, "vals")
+      .map(graft.queries.Features.ksFromCounts)
 
   /** Continuously maintained PER-SLICE drift dashboard — the streaming
     * face of q139 (the production monitor: per-segment KS + rank-sum
@@ -1002,38 +982,16 @@ object StreamingIngest {
       events: DataFrame, // streaming frame: ts + event_type + value
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Features.sliceValueCounts(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/svals").unionByName(part)
-                .groupBy(col("slice"), col("v"))
-                .agg(sum(col("__cr")).as("__cr"),
-                  sum(col("__cc")).as("__cc"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/svals")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(events, statsRoot, "svals", checkpointDir)(
+      sumBy("slice", "v"))(graft.queries.Features.sliceValueCounts)
 
   /** q139's exact per-slice dashboard derived from the newest folded
     * counts, or None before the first batch lands.
     */
   def currentDriftBySlice(
       spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.driftFromSliceCounts(
-        spark.read.parquet(s"$p/svals")))
+    latest(spark, statsRoot, "svals")
+      .map(graft.queries.Features.driftFromSliceCounts)
 
   /** q143's FDR-corrected dashboard derived from the SAME folded
     * per-slice counts [[driftBySliceStream]] maintains — a pure
@@ -1071,27 +1029,10 @@ object StreamingIngest {
       docs: DataFrame, // streaming frame: doc_id + source + text
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Corpus.c06SurvivorPartial(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              graft.queries.Corpus.c06FoldSurvivors(
-                spark.read.parquet(s"$p/surv").unionByName(part))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/surv")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(docs, statsRoot, "surv", checkpointDir)(
+      (prior, part) =>
+        graft.queries.Corpus.c06FoldSurvivors(prior.unionByName(part)))(
+      graft.queries.Corpus.c06SurvivorPartial)
 
   /** c06's exact release manifest derived from the newest folded
     * survivor set, or None before the first batch lands.
@@ -1099,9 +1040,8 @@ object StreamingIngest {
   def currentRelease(
       spark: SparkSession, statsRoot: String,
       budget: Long = graft.queries.Corpus.C06Budget): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Corpus.releaseFromSurvivors(
-        spark.read.parquet(s"$p/surv").drop("__htext"), budget))
+    latest(spark, statsRoot, "surv").map(surv =>
+      graft.queries.Corpus.releaseFromSurvivors(surv.drop("__htext"), budget))
 
   /** Continuously maintained QUALITY-GATED release — the streaming
     * face of c09, closing the family releaseStream (c06) opened.
@@ -1127,42 +1067,19 @@ object StreamingIngest {
       docs: DataFrame, // streaming frame: doc_id + source + text
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          // at-least-once armor (r14 advice): checkpoint replay
-          // protects against a REPLAYED batch, but an upstream that
-          // re-emits a document in a LATER micro-batch would
-          // permanently double-count it in every read side (c09 gate,
-          // c10 manifest, dedup group sizing). Dedup on doc_id both
-          // within the batch (deterministic min-struct pick) and
-          // against the prior generation (anti-join — the prior
-          // generation's row wins, so a re-emission can never rewrite
-          // history either).
-          val part = batch.toDF()
-            .select(col("doc_id"), col("source"), col("text"))
-            .groupBy(col("doc_id"))
-            .agg(min(struct(col("source"), col("text"))).as("__s"))
-            .select(col("doc_id"), col("__s.source"), col("__s.text"))
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              val prior = spark.read.parquet(s"$p/docs")
-              prior.unionByName(
-                part.join(prior.select(col("doc_id")), Seq("doc_id"),
-                  "left_anti"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/docs")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    // at-least-once armor (r14 advice): checkpoint replay protects
+    // against a REPLAYED batch, but an upstream that re-emits a document
+    // in a LATER micro-batch would permanently double-count it in every
+    // read side (c09 gate, c10 manifest, dedup group sizing). Dedup on
+    // doc_id both within the batch (deterministic min-struct pick) and
+    // against the prior generation (firstWins — the prior generation's
+    // row wins, so a re-emission can never rewrite history either).
+    foldStream(docs, statsRoot, "docs", checkpointDir)(firstWins("doc_id")) {
+      _.select(col("doc_id"), col("source"), col("text"))
+        .groupBy(col("doc_id"))
+        .agg(min(struct(col("source"), col("text"))).as("__s"))
+        .select(col("doc_id"), col("__s.source"), col("__s.text"))
+    }
 
   /** Continuously maintained EMBEDDING store — the vector sibling of
     * [[qualityReleaseStream]]'s doc store (state is the input
@@ -1179,33 +1096,12 @@ object StreamingIngest {
       vecs: DataFrame, // streaming frame: vec_id + embedding
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    vecs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = batch.toDF()
-            .select(col("vec_id"), col("embedding"))
-            .groupBy(col("vec_id"))
-            .agg(min(struct(col("embedding"))).as("__s"))
-            .select(col("vec_id"), col("__s.embedding"))
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              val prior = spark.read.parquet(s"$p/vecs")
-              prior.unionByName(
-                part.join(prior.select(col("vec_id")), Seq("vec_id"),
-                  "left_anti"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/vecs")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(vecs, statsRoot, "vecs", checkpointDir)(firstWins("vec_id")) {
+      _.select(col("vec_id"), col("embedding"))
+        .groupBy(col("vec_id"))
+        .agg(min(struct(col("embedding"))).as("__s"))
+        .select(col("vec_id"), col("__s.embedding"))
+    }
 
   /** s21's mined bitext pairs derived from the newest embedding
     * store, or None before the first batch lands — zero new state
@@ -1220,9 +1116,8 @@ object StreamingIngest {
     */
   def currentBitextPairs(
       spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Corpus.s21BruteMinedPairs(
-        spark.read.parquet(s"$p/vecs")))
+    latest(spark, statsRoot, "vecs")
+      .map(graft.queries.Corpus.s21BruteMinedPairs)
 
   /** s23's PCA projection + whitening derived from the newest
     * embedding store, or None before the first batch lands — the
@@ -1239,11 +1134,9 @@ object StreamingIngest {
     */
   def currentPcaWhitening(
       spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map { p =>
-      val store = spark.read.parquet(s"$p/vecs")
+    latest(spark, statsRoot, "vecs").map(store =>
       graft.queries.Corpus.pcaWhitenOf(store,
-        graft.queries.Corpus.fitPca(store))
-    }
+        graft.queries.Corpus.fitPca(store)))
 
   /** c09's exact quality-gated release derived from the newest doc
     * store, or None before the first batch lands.
@@ -1251,9 +1144,8 @@ object StreamingIngest {
   def currentQualityRelease(
       spark: SparkSession, statsRoot: String,
       budget: Long = graft.queries.Corpus.C06Budget): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Corpus.qualityReleaseOf(
-        spark.read.parquet(s"$p/docs"), budget))
+    latest(spark, statsRoot, "docs")
+      .map(graft.queries.Corpus.qualityReleaseOf(_, budget))
 
   /** c10's exact domain-gate manifest derived from the SAME doc store
     * [[qualityReleaseStream]] maintains — a pure read-side addition
@@ -1267,8 +1159,8 @@ object StreamingIngest {
     */
   def currentDomainGate(
       spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Corpus.c10ManifestOf(spark.read.parquet(s"$p/docs")))
+    latest(spark, statsRoot, "docs")
+      .map(graft.queries.Corpus.c10ManifestOf)
 
   /** q150's exact Bradley–Terry fit derived from the SAME turn store
     * [[sftAssemblyStream]] maintains (the third read-side consumer
@@ -1283,10 +1175,9 @@ object StreamingIngest {
   def currentBradleyTerry(
       spark: SparkSession, statsRoot: String,
       iters: Int = graft.queries.Corpus.BtIters): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
+    latest(spark, statsRoot, "turns").map(turns =>
       graft.analytics.Preference.bradleyTerryFromDuels(
-        graft.queries.Corpus.btDuelsFromTurns(
-          spark.read.parquet(s"$p/turns")), iters))
+        graft.queries.Corpus.btDuelsFromTurns(turns), iters))
 
   /** Continuously maintained SFT assembly — the streaming face of c07
     * (conversations that grow as events arrive, loss-mask offsets that
@@ -1311,34 +1202,16 @@ object StreamingIngest {
       events: DataFrame, // streaming frame: events-shaped rows
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Corpus.c07TurnFrame(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/turns").unionByName(part)
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/turns")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(events, statsRoot, "turns", checkpointDir)(_ unionByName _)(
+      graft.queries.Corpus.c07TurnFrame)
 
   /** c07's exact assembly derived from the newest turn store, or None
     * before the first batch lands.
     */
   def currentSftAssembly(
       spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Corpus.sftFromTurns(spark.read.parquet(s"$p/turns")))
+    latest(spark, statsRoot, "turns")
+      .map(graft.queries.Corpus.sftFromTurns)
 
   /** c08's exact preference pairs derived from the SAME turn store
     * [[sftAssemblyStream]] maintains — a pure read-side addition with
@@ -1351,9 +1224,8 @@ object StreamingIngest {
     */
   def currentPreferencePairs(
       spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Corpus.prefPairsFromTurns(
-        spark.read.parquet(s"$p/turns")))
+    latest(spark, statsRoot, "turns")
+      .map(graft.queries.Corpus.prefPairsFromTurns)
 
   /** Continuously maintained epoch-shard layout — the streaming face
     * of t45 (a corpus that grows all day, epoch shard manifests that
@@ -1370,35 +1242,17 @@ object StreamingIngest {
       docs: DataFrame, // streaming frame: doc_id + text
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Corpus.epochShufflePartial(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              graft.queries.Corpus.foldEpochShuffle(
-                spark.read.parquet(s"$p/layout").unionByName(part))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/layout")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(docs, statsRoot, "layout", checkpointDir)(
+      (prior, part) =>
+        graft.queries.Corpus.foldEpochShuffle(prior.unionByName(part)))(
+      graft.queries.Corpus.epochShufflePartial)
 
   /** t45's exact layout derived from the newest folded generation, or
     * None before the first batch lands.
     */
   def currentEpochShuffle(
       spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      spark.read.parquet(s"$p/layout"))
+    latest(spark, statsRoot, "layout")
 
   /** Continuously maintained tokenizer scorecard — the streaming face
     * of t46 (fertility/compression per language, always current as
@@ -1421,37 +1275,18 @@ object StreamingIngest {
       ym: graft.text.Bpe.Merges, // byte-level table (t52's alphabet)
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Corpus.tokenizerEvalPartial(
-            batch.toDF(), bm, um, wm, ym)
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              graft.queries.Corpus.foldTokenizerEval(
-                spark.read.parquet(s"$p/mass").unionByName(part))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/mass")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(docs, statsRoot, "mass", checkpointDir)(
+      (prior, part) =>
+        graft.queries.Corpus.foldTokenizerEval(prior.unionByName(part)))(
+      graft.queries.Corpus.tokenizerEvalPartial(_, bm, um, wm, ym))
 
   /** t46's exact scorecard derived from the newest folded generation,
     * or None before the first batch lands.
     */
   def currentTokenizerEval(
       spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Corpus.tokenizerEvalReport(
-        spark.read.parquet(s"$p/mass")))
+    latest(spark, statsRoot, "mass")
+      .map(graft.queries.Corpus.tokenizerEvalReport)
 
   /** Continuously maintained experiment readout — the streaming face
     * of q127's Welch A/B test (the live experimentation dashboard:
@@ -1459,8 +1294,8 @@ object StreamingIngest {
     * nightly batch). Per-variant (n, Σy, Σy²) sufficient statistics
     * are ADDITIVE, so each micro-batch folds
     * [[graft.queries.Features.abSufficientStats]]'s partial into the
-    * previous generation by summation (the [[cusumStream]] replay
-    * protocol), and [[currentAbTest]] derives t and df at read time
+    * previous generation by summation (through [[foldStream]]), and
+    * [[currentAbTest]] derives t and df at read time
     * through the SAME [[graft.queries.Features.welchFromStats]] the
     * batch query uses — streamed ≡ batch exact on the union of
     * batches (spec-asserted), because decimal sums are
@@ -1472,36 +1307,15 @@ object StreamingIngest {
       events: DataFrame, // streaming frame: user_id + event_type + value
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Features.abSufficientStats(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/ab").unionByName(part)
-                .groupBy(col("variant_a"))
-                .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
-                  sum(col("s2")).as("s2"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/ab")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(events, statsRoot, "ab", checkpointDir)(sumBy("variant_a"))(
+      graft.queries.Features.abSufficientStats)
 
   /** q127's exact readout derived from the newest folded statistics,
     * or None before the first batch lands.
     */
   def currentAbTest(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.welchFromStats(spark.read.parquet(s"$p/ab")))
+    latest(spark, statsRoot, "ab")
+      .map(graft.queries.Features.welchFromStats)
 
   /** q149's design readout derived from the SAME folded statistics
     * [[abTestStream]] maintains — zero new state (the c08 read-side
@@ -1510,8 +1324,8 @@ object StreamingIngest {
     * one store.
     */
   def currentMde(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.mdeFromStats(spark.read.parquet(s"$p/ab")))
+    latest(spark, statsRoot, "ab")
+      .map(graft.queries.Features.mdeFromStats)
 
   /** Continuously maintained multi-arm experiment readout — q141's
     * streaming face, the [[abTestStream]] protocol over ALL event
@@ -1527,36 +1341,15 @@ object StreamingIngest {
       events: DataFrame, // streaming frame: event_type + value
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Features.anovaSufficientStats(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/anova").unionByName(part)
-                .groupBy(col("event_type"))
-                .agg(sum(col("n")).as("n"), sum(col("s")).as("s"),
-                  sum(col("s2")).as("s2"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/anova")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(events, statsRoot, "anova", checkpointDir)(
+      sumBy("event_type"))(graft.queries.Features.anovaSufficientStats)
 
   /** q141's exact readout derived from the newest folded statistics,
     * or None before the first batch lands.
     */
   def currentAnova(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.anovaFromStats(spark.read.parquet(s"$p/anova")))
+    latest(spark, statsRoot, "anova")
+      .map(graft.queries.Features.anovaFromStats)
 
   /** Continuously maintained Kruskal–Wallis monitor — q142's
     * streaming face, the [[anovaStream]] protocol on the
@@ -1573,45 +1366,23 @@ object StreamingIngest {
       events: DataFrame, // streaming frame: event_type + value
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Features.kwCounts(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/kw").unionByName(part)
-                .groupBy(col("event_type"), col("v"))
-                .agg(sum(col("c")).as("c"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/kw")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(events, statsRoot, "kw", checkpointDir)(
+      sumBy("event_type", "v"))(graft.queries.Features.kwCounts)
 
   /** q142's exact readout derived from the newest folded counts, or
     * None before the first batch lands.
     */
   def currentKruskal(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.kruskalWallisFromCounts(
-        spark.read.parquet(s"$p/kw")))
+    latest(spark, statsRoot, "kw")
+      .map(graft.queries.Features.kruskalWallisFromCounts)
 
   /** q146's pairwise post-hoc derived from the SAME folded counts
     * [[kruskalStream]] maintains — zero new state (the c08 read-side
     * pattern): the omnibus monitor and its follow-up read one store.
     */
   def currentDunn(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.dunnFromCounts(
-        spark.read.parquet(s"$p/kw")))
+    latest(spark, statsRoot, "kw")
+      .map(graft.queries.Features.dunnFromCounts)
 
   /** Continuously maintained Mann–Kendall trend monitor — q147's
     * streaming face: per-(type, day) counts are additive, each
@@ -1627,46 +1398,25 @@ object StreamingIngest {
       events: DataFrame, // streaming frame: ts + event_type
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = batch.toDF()
-            .groupBy(col("event_type"),
-              date_trunc("day", col("ts")).as("day"))
-            .agg(count(lit(1)).as("n"))
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/mk").unionByName(part)
-                .groupBy(col("event_type"), col("day"))
-                .agg(sum(col("n")).as("n"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/mk")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(events, statsRoot, "mk", checkpointDir)(
+        sumBy("event_type", "day")) {
+      _.groupBy(col("event_type"), date_trunc("day", col("ts")).as("day"))
+        .agg(count(lit(1)).as("n"))
+    }
 
   /** q147's exact readout derived from the newest folded daily
     * counts, or None before the first batch lands.
     */
   def currentMannKendall(
       spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.mannKendallFromDaily(
-        spark.read.parquet(s"$p/mk")))
+    latest(spark, statsRoot, "mk")
+      .map(graft.queries.Features.mannKendallFromDaily)
 
   /** Continuously maintained term-frequency counts — t47's streaming
     * face (and the general corpus-coverage audit): per-token
     * occurrence counts are additive
     * ([[graft.queries.Corpus.tfCounts]]), each micro-batch folds the
-    * partial by summation (the corpusStatsStream protocol — state is
+    * partial by summation (through [[foldStream]] — state is
     * vocabulary-bounded, the same O(V) generation the df store
     * carries), and [[currentChao1]] derives the Chao1/Good–Turing
     * report at read time through the SAME
@@ -1677,35 +1427,15 @@ object StreamingIngest {
       docs: DataFrame, // streaming frame with a `text` column
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Corpus.tfCounts(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/tf").unionByName(part)
-                .groupBy(col("token"))
-                .agg(sum(col("c")).as("c"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/tf")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(docs, statsRoot, "tf", checkpointDir)(sumBy("token"))(
+      graft.queries.Corpus.tfCounts)
 
   /** t47's exact readout derived from the newest folded counts, or
     * None before the first batch lands.
     */
   def currentChao1(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Corpus.chao1FromCounts(spark.read.parquet(s"$p/tf")))
+    latest(spark, statsRoot, "tf")
+      .map(graft.queries.Corpus.chao1FromCounts)
 
   /** Continuously maintained panel-agreement monitor — q144's
     * streaming face, the [[anovaStream]] protocol on Fleiss' κ: the
@@ -1721,38 +1451,16 @@ object StreamingIngest {
       docs: DataFrame, // streaming frame with a `text` column
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Features.fleissPartial(
-            graft.queries.Features.fleissLabels(batch.toDF()))
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/fleiss").unionByName(part)
-                .agg(sum(col("n_docs")).as("n_docs"),
-                  sum(col("s_agree")).as("s_agree"),
-                  sum(col("s_pos")).as("s_pos"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/fleiss")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(docs, statsRoot, "fleiss", checkpointDir)(sumBy())(
+      batch => graft.queries.Features.fleissPartial(
+        graft.queries.Features.fleissLabels(batch)))
 
   /** q144's exact readout derived from the newest folded statistics,
     * or None before the first batch lands.
     */
   def currentFleiss(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.fleissFromStats(
-        spark.read.parquet(s"$p/fleiss")))
+    latest(spark, statsRoot, "fleiss")
+      .map(graft.queries.Features.fleissFromStats)
 
   /** Continuously maintained categorical mix monitor — q145's
     * streaming face: per-type (ref, cur) counts are additive
@@ -1767,37 +1475,15 @@ object StreamingIngest {
       events: DataFrame, // streaming frame: ts + event_type
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Features.catDriftCounts(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/cat").unionByName(part)
-                .groupBy(col("event_type"))
-                .agg(sum(col("n_ref")).as("n_ref"),
-                  sum(col("n_cur")).as("n_cur"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/cat")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(events, statsRoot, "cat", checkpointDir)(
+      sumBy("event_type"))(graft.queries.Features.catDriftCounts)
 
   /** q145's exact readout derived from the newest folded counts, or
     * None before the first batch lands.
     */
   def currentCatDrift(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Features.chi2FromCatCounts(
-        spark.read.parquet(s"$p/cat")))
+    latest(spark, statsRoot, "cat")
+      .map(graft.queries.Features.chi2FromCatCounts)
 
   /** Continuously maintained truncation-loss curve — t48's streaming
     * face: the per-candidate-length sums are additive
@@ -1812,39 +1498,15 @@ object StreamingIngest {
       docs: DataFrame, // streaming frame with a `text` column
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = graft.queries.Corpus.truncationPartial(batch.toDF())
-          val merged = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/trunc").unionByName(part)
-                .groupBy(col("max_len"))
-                .agg(sum(col("n_docs")).as("n_docs"),
-                  sum(col("n_truncated")).as("n_truncated"),
-                  sum(col("tokens_total")).as("tokens_total"),
-                  sum(col("tokens_lost")).as("tokens_lost"))
-            case None => part
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/trunc")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(docs, statsRoot, "trunc", checkpointDir)(sumBy("max_len"))(
+      graft.queries.Corpus.truncationPartial)
 
   /** t48's exact readout derived from the newest folded partials, or
     * None before the first batch lands.
     */
   def currentTruncation(spark: SparkSession, statsRoot: String): Option[DataFrame] =
-    priorGeneration(spark, statsRoot, Long.MaxValue).map(p =>
-      graft.queries.Corpus.truncationReport(
-        spark.read.parquet(s"$p/trunc")))
+    latest(spark, statsRoot, "trunc")
+      .map(graft.queries.Corpus.truncationReport)
 
   /** Streaming near-dup admission — the continuous-dedup serving loop
     * over [[graft.dedup.Dedup.incrementalNearDups]]: each micro-batch
@@ -1908,25 +1570,6 @@ object StreamingIngest {
     if (gens.isEmpty) None else Some(spark.read.parquet(gens: _*))
   }
 
-  private def generations(
-      spark: SparkSession, root: String, below: Long): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Seq.empty
-    else fs.listStatus(p).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen-"))
-      // same commit gate as priorGeneration: near-dup admission gens
-      // are direct parquet writes (Spark's committer owns the marker);
-      // exact-substr admission gens commit via commitGeneration
-      .filter(s => fs.exists(
-        new org.apache.hadoop.fs.Path(s.getPath, "_SUCCESS")))
-      .flatMap(s => s.getPath.getName.stripPrefix("gen-").toLongOption
-        .map(id => (id, s.getPath.toString)))
-      .filter(_._1 < below)
-      .sortBy(_._1)
-      .map(_._2)
-  }
-
   /** Streaming exact-substring decontamination — the continuous face
     * of the d17/d18 batch pair (Lee et al. 2022), completing find →
     * cut → ADMIT-AS-YOU-INGEST: each micro-batch of (doc_id, text) is
@@ -1978,25 +1621,11 @@ object StreamingIngest {
             .where(col("doc_id") > col("__min"))
             .select(col("doc_id")).distinct()
           val gens = generations(spark, corpusRoot, batchId)
-          // store upgrade (r18): anchors are BINARY(16) md5 since the
-          // spanAnchors key shrink; generations written by older
-          // builds hold the 32-char hex STRING form. Normalize each
-          // generation on load (unhex is the exact inverse of the old
-          // key), so mixed-era stores keep probing correctly without
-          // a rewrite.
           val corpusHit =
             if (gens.isEmpty) selfDrop.limit(0)
-            else {
-              val anchorIdx = gens.map { p =>
-                val a = spark.read.parquet(s"$p/anchors")
-                if (a.schema("h").dataType ==
-                    org.apache.spark.sql.types.StringType)
-                  a.select(unhex(col("h")).as("h"))
-                else a.select(col("h"))
-              }.reduce(_ unionAll _)
-              ex.join(anchorIdx, Seq("h"), "left_semi")
-                .select(col("doc_id")).distinct()
-            }
+            else ex.join(anchorIndex(spark, corpusRoot, gens), Seq("h"),
+                "left_semi")
+              .select(col("doc_id")).distinct()
           val dropped = selfDrop.unionByName(corpusHit).distinct()
           val admitted = b.join(dropped, Seq("doc_id"), "left_anti")
           commitGeneration(spark, s"$corpusRoot/gen-$batchId") {
@@ -2013,6 +1642,56 @@ object StreamingIngest {
       .option("checkpointLocation", checkpointDir)
       .outputMode(OutputMode.Append)
       .start()
+
+  /** The anchor index of the generations at `gens`, read with one
+    * multi-path scan. Anchors are BINARY(16) md5 keys; a generation
+    * written before that key shrink holds 32-char hex STRING anchors,
+    * which this read would see as 32-byte BINARY keys that match
+    * nothing — silently admitting duplicates. So any anchor that is not
+    * 16 bytes fails the batch and names the one-time
+    * [[rewriteHexAnchors]] migration.
+    */
+  private def anchorIndex(
+      spark: SparkSession, corpusRoot: String, gens: Seq[String]): DataFrame =
+    spark.read.schema("h BINARY").parquet(gens.map(p => s"$p/anchors"): _*)
+      .select(when(length(col("h")) =!= 16, raise_error(lit(
+          s"hex-era STRING anchors under $corpusRoot: run " +
+            "StreamingIngest.rewriteHexAnchors(spark, corpusRoot) once " +
+            "before starting the stream")))
+        .otherwise(col("h")).as("h"))
+
+  /** One-time upgrade migration for [[exactSubstrAdmissionStream]]
+    * stores written before anchors became BINARY(16) md5 keys: every
+    * committed generation whose `anchors` table holds the 32-char hex
+    * STRING form gets it rewritten as `unhex(h)`, the exact inverse of
+    * the old key. The rewrite lands beside the old table as
+    * `anchors.rewrite` and is then swapped in by delete + rename, so the
+    * generation stays committed throughout and `anchors` is never
+    * half-written: a crash leaves the old table, the new one, or —
+    * between delete and rename — no `anchors` at all, which fails the
+    * next probe loudly until a re-run finishes the swap. Idempotent;
+    * returns the number of generations rewritten. Run once per store
+    * before restarting its stream.
+    */
+  def rewriteHexAnchors(spark: SparkSession, corpusRoot: String): Int = {
+    val (fs, gens) = listGenerations(spark, corpusRoot)
+    gens.map(_._2).filter(committed(fs, _)).count { g =>
+      val anchors = new Path(g, "anchors")
+      val staged = new Path(g, "anchors.rewrite")
+      if (fs.exists(anchors)) {
+        val a = spark.read.parquet(anchors.toString)
+        if (a.schema("h").dataType == org.apache.spark.sql.types.StringType)
+          a.select(unhex(col("h")).as("h"))
+            .write.mode("overwrite").parquet(staged.toString)
+      }
+      // a committed staged table is a finished rewrite — this run's, or
+      // one a crash left between delete and rename
+      committed(fs, staged) && {
+        fs.delete(anchors, true)
+        fs.rename(staged, anchors)
+      }
+    }
+  }
 
   /** The span-clean admitted corpus across all committed generations
     * of [[exactSubstrAdmissionStream]], or None before any exist.
@@ -2146,8 +1825,8 @@ object StreamingIngest {
     * the way [[transitionMatrixStream]] does for q88: pair SUPPORT is
     * ADDITIVE, so each micro-batch's (src, dst) delta counts merge
     * with the previous generation by summation and land as
-    * `gen-<batchId>` under `edgesRoot` (the scdApplyStream replay
-    * protocol). Per-trigger cost O(|batch|·width + |edges|); the graph
+    * `gen-<batchId>` under `edgesRoot` (through [[foldStream]]).
+    * Per-trigger cost O(|batch|·width + |edges|); the graph
     * operators then run on [[currentCopurchaseEdges]] — the support
     * threshold is applied at READ time, because persisting the raw
     * additive counts (not the thresholded edge set) is what makes the
@@ -2157,30 +1836,10 @@ object StreamingIngest {
       items: org.apache.spark.sql.Dataset[OrderItem],
       edgesRoot: String,
       checkpointDir: String): StreamingQuery =
-    streamingCopurchasePairs(items).toDF().writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = batch.toDF()
-            .groupBy(col("src"), col("dst"))
-            .agg(count(lit(1)).as("support"))
-          val merged = priorGeneration(spark, edgesRoot, batchId) match {
-            case Some(p) =>
-              spark.read.parquet(s"$p/edges").unionByName(part)
-                .groupBy(col("src"), col("dst"))
-                .agg(sum(col("support")).as("support"))
-            case None => part
-          }
-          commitGeneration(spark, s"$edgesRoot/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$edgesRoot/gen-$batchId/edges")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    foldStream(streamingCopurchasePairs(items).toDF(), edgesRoot, "edges",
+        checkpointDir)(sumBy("src", "dst")) {
+      _.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("support"))
+    }
 
   /** Newest committed edge set at the given support threshold —
     * shaped exactly like `copurchaseEdgesUndirected(lineitem, k)`, so
@@ -2189,8 +1848,7 @@ object StreamingIngest {
     */
   def currentCopurchaseEdges(
       spark: SparkSession, edgesRoot: String, minSupport: Int): Option[DataFrame] =
-    priorGeneration(spark, edgesRoot, Long.MaxValue).map(p =>
-      spark.read.parquet(s"$p/edges")
+    latest(spark, edgesRoot, "edges").map(_
         .where(col("support") >= minSupport)
         .select(col("src"), col("dst")))
 
@@ -2202,8 +1860,8 @@ object StreamingIngest {
     */
   def currentCopurchaseEdgesWeighted(
       spark: SparkSession, edgesRoot: String, minSupport: Int): Option[DataFrame] =
-    priorGeneration(spark, edgesRoot, Long.MaxValue).map { p =>
-      val u = spark.read.parquet(s"$p/edges")
+    latest(spark, edgesRoot, "edges").map { edges =>
+      val u = edges
         .where(col("support") >= minSupport)
         .select(col("src"), col("dst"), col("support").as("w"))
       u.unionAll(u.select(col("dst").as("src"), col("src").as("dst"), col("w")))

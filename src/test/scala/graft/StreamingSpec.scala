@@ -1174,6 +1174,45 @@ class StreamingSpec extends SparkSpec {
     assert(streamed.nonEmpty)
   }
 
+  test("foldStream replay: a batch re-run under its own id rewrites the same generation and creates no new one") {
+    import org.apache.spark.sql.types._
+    val base = Files.createTempDirectory("graft_fold_replay").toString
+    val (inDir, cp, root) = (s"$base/in", s"$base/cp", s"$base/cusum")
+    def ts(d: Int, h: Int) = java.sql.Timestamp.from(
+      java.time.Instant.parse(f"2025-01-$d%02dT$h%02d:00:00Z"))
+    def writeBatch(events: (String, java.sql.Timestamp)*): Unit =
+      events.toDF("event_type", "ts").repartition(1)
+        .write.mode("append").parquet(inDir)
+    val schema = StructType(Seq(
+      StructField("event_type", StringType), StructField("ts", TimestampType)))
+    def start() = StreamingIngest.cusumStream(
+      spark.readStream.schema(schema).parquet(inDir), root, cp)
+    def readGen(id: Int) = spark.read.parquet(s"$root/gen-$id/daily").collect()
+      .map(r => (r.getString(0), r.getTimestamp(1).toInstant.toString, r.getLong(2)))
+      .toSet
+    writeBatch(("view", ts(1, 1)), ("view", ts(1, 2)), ("click", ts(2, 3)))
+    val q1 = start(); q1.processAllAvailable()
+    // batch 1 overlaps batch 0's (type, day) keys, so folding it twice
+    // would show up as doubled counts
+    writeBatch(("view", ts(1, 5)), ("click", ts(2, 6)), ("buy", ts(3, 7)))
+    q1.processAllAvailable(); q1.stop()
+    val gen1 = readGen(1)
+    assert(gen1 === Set(("view", "2025-01-01T00:00:00Z", 3L),
+      ("click", "2025-01-02T00:00:00Z", 2L), ("buy", "2025-01-03T00:00:00Z", 1L)))
+    // crash after the sink wrote gen-1 but before Spark logged batch 1
+    // as committed: the restart must replay batch 1 under the SAME id
+    assert(new java.io.File(s"$cp/commits/1").delete())
+    new java.io.File(s"$cp/commits/.1.crc").delete()
+    val q2 = start(); q2.processAllAvailable(); q2.stop()
+    assert(q2.recentProgress.map(_.batchId).contains(1L),
+      "batch 1 was not replayed")
+    assert(new java.io.File(s"$cp/commits/1").exists)
+    assert(!new java.io.File(s"$root/gen-2").exists,
+      "the replay must rewrite gen-1, not commit a new generation")
+    assert(new java.io.File(s"$root/gen-1/_SUCCESS").exists)
+    assert(readGen(1) === gen1, "the replay folded its own generation in")
+  }
+
   test("psiDriftStream: folded histogram generations derive exactly q122, out-of-order batches included") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col
@@ -1891,12 +1930,34 @@ class StreamingSpec extends SparkSpec {
       .select(lower(hex(col("hb"))).as("h")).distinct()
       .write.mode("overwrite").parquet(s"$root/gen--1/anchors")
     new java.io.File(s"$root/gen--1/_SUCCESS").createNewFile()
+    val dupOfOld = (10L, (words("x", 2) ++ span ++ words("y", 2)).mkString(" "))
+    // unmigrated: the probe must fail the batch and name the migration,
+    // never read the hex bytes as keys and admit the duplicate
+    val unmigrated = MemoryStream[(Long, String)]
+    val q0 = StreamingIngest.exactSubstrAdmissionStream(
+      unmigrated.toDF().toDF("doc_id", "text"), root, s"$base/ckpt0", L = 20)
+    unmigrated.addData(dupOfOld)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      q0.processAllAvailable())
+    q0.stop()
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    assert(causes(err).exists(e => Option(e.getMessage).exists(
+      _.contains("rewriteHexAnchors"))), err.toString)
+    assert(!new java.io.File(s"$root/gen-0/_SUCCESS").exists)
+    // the one-time migration rewrites the hex generation in place and
+    // keeps it committed; a second run has nothing left to do
+    assert(StreamingIngest.rewriteHexAnchors(spark, root) === 1)
+    assert(StreamingIngest.rewriteHexAnchors(spark, root) === 0)
+    assert(new java.io.File(s"$root/gen--1/_SUCCESS").exists)
+    assert(spark.read.parquet(s"$root/gen--1/anchors").schema("h").dataType ===
+      org.apache.spark.sql.types.BinaryType)
     val stream = MemoryStream[(Long, String)]
     val q = StreamingIngest.exactSubstrAdmissionStream(
       stream.toDF().toDF("doc_id", "text"), root, ckpt, L = 20)
     stream.addData(
       // shares the span with the hex-era gen-0 doc → must reject
-      (10L, (words("x", 2) ++ span ++ words("y", 2)).mkString(" ")),
+      dupOfOld,
       (11L, words("n", 25).mkString(" ")))                        // novel
     q.processAllAvailable()
     q.stop()
@@ -1907,6 +1968,42 @@ class StreamingSpec extends SparkSpec {
     val newSchema = spark.read.parquet(s"$root/gen-0/anchors").schema
     assert(newSchema("h").dataType ===
       org.apache.spark.sql.types.BinaryType)
+  }
+
+  test("rewriteHexAnchors finishes an interrupted swap and leaves binary and uncommitted generations alone") {
+    import org.apache.spark.sql.functions.{col, unhex}
+    val base = Files.createTempDirectory("graft_hex_rewrite").toString
+    val root = s"$base/corpus"
+    val hexKeys = Seq("00112233445566778899aabbccddeeff", "ffeeddccbbaa99887766554433221100")
+    def writeHex(path: String) = hexKeys.toDF("h").write.parquet(path)
+    def writeBin(path: String) =
+      hexKeys.toDF("h").select(unhex(col("h")).as("h")).write.parquet(path)
+    def commit(gen: Int) = assert(new java.io.File(s"$root/gen-$gen/_SUCCESS").createNewFile())
+    def keys(gen: Int) = spark.read.parquet(s"$root/gen-$gen/anchors")
+    def hexOf(df: org.apache.spark.sql.DataFrame) = df
+      .select(org.apache.spark.sql.functions.lower(
+        org.apache.spark.sql.functions.hex(col("h"))))
+      .collect().map(_.getString(0)).toSet
+    // gen-0: already BINARY
+    writeBin(s"$root/gen-0/anchors"); commit(0)
+    // gen-1: a crash between delete and rename — the finished rewrite
+    // sits beside a missing `anchors`
+    writeBin(s"$root/gen-1/anchors.rewrite"); commit(1)
+    // gen-2: an uncommitted crash remnant the stream's replay owns
+    writeHex(s"$root/gen-2/anchors")
+    // gen-3: hex-era, with a half-written rewrite from a crashed run
+    writeHex(s"$root/gen-3/anchors"); commit(3)
+    assert(new java.io.File(s"$root/gen-3/anchors.rewrite").mkdirs())
+    assert(StreamingIngest.rewriteHexAnchors(spark, root) === 2)
+    val binary = org.apache.spark.sql.types.BinaryType
+    for (g <- Seq(0, 1, 3)) {
+      assert(keys(g).schema("h").dataType === binary, s"gen-$g")
+      assert(hexOf(keys(g)) === hexKeys.toSet, s"gen-$g")
+      assert(!new java.io.File(s"$root/gen-$g/anchors.rewrite").exists, s"gen-$g")
+      assert(new java.io.File(s"$root/gen-$g/_SUCCESS").exists, s"gen-$g")
+    }
+    assert(keys(2).schema("h").dataType === org.apache.spark.sql.types.StringType)
+    assert(StreamingIngest.rewriteHexAnchors(spark, root) === 0)
   }
 
   test("copurchaseEdgeStream: folded support equals the batch co-purchase graph") {
