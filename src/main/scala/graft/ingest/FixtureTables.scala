@@ -3,18 +3,20 @@ package graft.ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dumps the embedded payload fixtures as RAW relational parquet so an
-  * external SQL engine (the driver's DuckDB oracle) can replay the
-  * normalize / incremental-load / top-N semantics from the exact same
-  * input rows the Spark queries consume.
+/** Names and writes every artifact a query leaves for the DuckDB
+  * oracle to replay: fitted models and indexes, format round trips,
+  * media hashes, and the raw payload tables below.
   *
-  * The dumped shape is the post-explode, pre-cast bar: one row per
-  * (symbol, series key) with every numeric still a STRING. Everything
-  * the reference's parse loop does after that point — strict key-format
-  * timestamp parsing, DECIMAL(15,4)/BIGINT casts, permissive bad-row
-  * drop (`main_parallel.py:254-362`) — is then replayable in portable
-  * SQL, giving the stock surface the same hash-level differential proof
-  * as the corpus queries instead of rows-only checks.
+  * The payload fixtures are dumped as RAW relational parquet so the
+  * oracle can replay the normalize / incremental-load / top-N semantics
+  * from the exact same input rows the Spark queries consume. The dumped
+  * shape is the post-explode, pre-cast bar (`Normalize.bars`): one
+  * row per (symbol, series key) with every numeric still a STRING.
+  * Everything the reference's parse loop does after that point — strict
+  * key-format timestamp parsing, DECIMAL(15,4)/BIGINT casts, permissive
+  * bad-row drop (`main_parallel.py:254-362`) — is then replayable in
+  * portable SQL, giving the stock surface the same hash-level
+  * differential proof as the corpus queries instead of rows-only checks.
   */
 object FixtureTables {
 
@@ -38,11 +40,22 @@ object FixtureTables {
 
   @volatile private var writtenBy: SparkSession = _
 
+  /** Where the artifact `name` fitted over fixture dir `dir` lives:
+    * one file per (name, dir) under [[root]], so a run at another dir
+    * never overwrites the dump a pending oracle compare replays. The
+    * writer and its oracle SQL both go through here.
+    */
+  def path(name: String, dir: String): String =
+    s"$root/${name}_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}"
+
+  /** Writes a small artifact as one parquet file at `path`, replacing
+    * what was there.
+    */
+  def dump(df: DataFrame, path: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+
   private def rawBars(payloads: DataFrame, seriesKey: String): DataFrame =
-    PayloadReader.valid(payloads)
-      .select(
-        PayloadReader.symbol.as("company_symbol"),
-        explode(col(seriesKey)).as(Seq("k", "bar")))
+    Normalize.bars(payloads, seriesKey)
       .select(
         col("company_symbol"), col("k"),
         col("bar")("1. open").as("open_s"),
@@ -52,23 +65,19 @@ object FixtureTables {
         col("bar")("5. volume").as("volume_s"))
 
   private def rawSma(payloads: DataFrame): DataFrame =
-    PayloadReader.valid(payloads)
-      .select(
-        PayloadReader.symbol.as("company_symbol"),
-        explode(col("Technical Analysis: SMA")).as(Seq("k", "bar")))
+    Normalize.bars(payloads, "Technical Analysis: SMA")
       .select(col("company_symbol"), col("k"), col("bar")("SMA").as("sma_s"))
 
-  /** Idempotently (once per session) write the four raw fixture tables.
-    * Tiny frames — coalesce(1) keeps each table a single file.
-    */
+  /** Idempotently (once per session) write the four raw fixture tables. */
   def ensure(spark: SparkSession): String = synchronized {
     if (writtenBy ne spark) {
-      def dump(df: DataFrame, name: String): Unit =
-        df.coalesce(1).write.mode("overwrite").parquet(s"$root/$name.parquet")
-      dump(rawBars(Fixtures.dailyPayloads(spark), "Time Series (Daily)"), "daily_raw")
-      dump(rawBars(Fixtures.dailyPayloadsNextRun(spark), "Time Series (Daily)"), "daily_raw2")
-      dump(rawBars(Fixtures.intradayPayloads(spark), "Time Series (5min)"), "intraday_raw")
-      dump(rawSma(Fixtures.smaPayloads(spark)), "sma_raw")
+      dump(rawBars(Fixtures.dailyPayloads(spark), "Time Series (Daily)"),
+        s"$root/daily_raw.parquet")
+      dump(rawBars(Fixtures.dailyPayloadsNextRun(spark), "Time Series (Daily)"),
+        s"$root/daily_raw2.parquet")
+      dump(rawBars(Fixtures.intradayPayloads(spark), "Time Series (5min)"),
+        s"$root/intraday_raw.parquet")
+      dump(rawSma(Fixtures.smaPayloads(spark)), s"$root/sma_raw.parquet")
       writtenBy = spark
     }
     root

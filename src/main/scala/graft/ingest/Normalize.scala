@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   */
 object Normalize {
 
-  private def bars(payloads: DataFrame, seriesKey: String): DataFrame =
+  private[ingest] def bars(payloads: DataFrame, seriesKey: String): DataFrame =
     PayloadReader.valid(payloads)
       .select(
         PayloadReader.symbol.as("company_symbol"),

@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
 import graft.functions.KmvSketch
 import graft.operators.Joins
 
@@ -14,10 +13,6 @@ import graft.operators.Joins
   * bit-exact DuckDB oracle.
   */
 object Advanced {
-
-  type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   // same money-parity discipline as Relational: exact decimal sums,
   // final cast back to double
@@ -672,26 +667,6 @@ object Advanced {
       | AND c.click_ts >= p.purchase_ts - INTERVAL 30 MINUTE
       | AND c.click_ts <= p.purchase_ts""".stripMargin
 
-  // shared per-(supplier, day) revenue series for the indicator-family
-  // queries below (the q19-q22 shape: exact decimal day sums,
-  // pre-partitioned by supplier so the agg and every downstream window
-  // share one exchange)
-  private def supplierDaily(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
-      .select(col("l_suppkey"), col("l_shipdate"),
-        dec(col("l_extendedprice")).as("__p"))
-      .repartition(col("l_suppkey"))
-      .groupBy(col("l_suppkey"), col("l_shipdate"))
-      // re-narrow the sum to DECIMAL(18,2): downstream decimal PRODUCTS
-      // (q47's Σxy/Σx²) stay inside both engines' 38-digit budget —
-      // (18,2)×(18,2) is exact everywhere, sum-widened operands are not
-      .agg(sum(col("__p")).cast(DecimalType(18, 2)).as("day_price"))
-
-  private val supplierDailySql: String =
-    """SELECT l_suppkey, l_shipdate,
-      |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS day_price
-      |FROM lineitem GROUP BY l_suppkey, l_shipdate""".stripMargin
-
   // The literal-weight EMA fold (q22's proven recipe) as a reusable
   // oracle fragment: strict left-to-right double fold over the
   // newest-first value list with Indicators.emaWeights(n) interpolated
@@ -716,7 +691,7 @@ object Advanced {
     */
   val q43_macd: Q = (s, dir) => {
     import graft.analytics.Indicators
-    val daily = supplierDaily(s, dir)
+    val daily = Relational.supplierDaily(s, dir)
     val emas = Indicators.ema(
       Indicators.ema(daily, "l_suppkey", Seq("l_shipdate"), "day_price",
         n = 12, out = "__e12"),
@@ -729,7 +704,7 @@ object Advanced {
   }
 
   val q43_sql: String =
-    s"""WITH daily AS ($supplierDailySql),
+    s"""WITH daily AS (${Relational.supplierDailySql}),
        |lists AS (
        |  SELECT l_suppkey, l_shipdate,
        |    list_reverse(list(CAST(day_price AS DOUBLE))
@@ -799,7 +774,7 @@ object Advanced {
     import org.apache.spark.sql.expressions.Window
     val running = Window.partitionBy(col("l_suppkey")).orderBy(col("l_shipdate"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    supplierDaily(s, dir)
+    Relational.supplierDaily(s, dir)
       .withColumn("__peak", max(col("day_price")).over(running))
       .withColumn("__dd",
         col("day_price").cast("double") / col("__peak").cast("double") - 1)
@@ -809,7 +784,7 @@ object Advanced {
   }
 
   val q45_sql: String =
-    s"""WITH daily AS ($supplierDailySql),
+    s"""WITH daily AS (${Relational.supplierDailySql}),
        |dd AS (
        |  SELECT l_suppkey,
        |    CAST(day_price AS DOUBLE)
@@ -834,7 +809,7 @@ object Advanced {
     * supplier.
     */
   val q47_beta: Q = (s, dir) => {
-    val daily = supplierDaily(s, dir)
+    val daily = Relational.supplierDaily(s, dir)
     val market = daily.groupBy(col("l_shipdate"))
       .agg(sum(col("day_price")).cast(DecimalType(18, 2)).as("mkt_price"))
     val joined = daily.join(broadcast(market), Seq("l_shipdate"))
@@ -863,7 +838,7 @@ object Advanced {
   }
 
   val q47_sql: String =
-    s"""WITH daily AS ($supplierDailySql),
+    s"""WITH daily AS (${Relational.supplierDailySql}),
        |mkt AS (SELECT l_shipdate, CAST(SUM(day_price) AS DECIMAL(18,2)) AS mkt_price
        |        FROM daily GROUP BY l_shipdate),
        |st AS (
@@ -1101,7 +1076,7 @@ object Advanced {
     */
   val q55_rolling_beta: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val daily = supplierDaily(s, dir)
+    val daily = Relational.supplierDaily(s, dir)
     val market = daily.groupBy(col("l_shipdate"))
       .agg(sum(col("day_price")).cast(DecimalType(18, 2)).as("mkt_price"))
     val joined = daily.join(broadcast(market), Seq("l_shipdate"))
@@ -1133,7 +1108,7 @@ object Advanced {
   }
 
   val q55_sql: String =
-    s"""WITH daily AS ($supplierDailySql),
+    s"""WITH daily AS (${Relational.supplierDailySql}),
        |mkt AS (SELECT l_shipdate, CAST(SUM(day_price) AS DECIMAL(18,2)) AS mkt_price
        |        FROM daily GROUP BY l_shipdate),
        |j AS (SELECT * FROM daily JOIN mkt USING (l_shipdate)),

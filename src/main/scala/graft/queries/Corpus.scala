@@ -4,8 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Jobs.concurrently
-import graft.Tables
 import graft.dedup.Dedup
+import graft.ingest.FixtureTables
+import graft.ingest.FixtureTables.dump
 import graft.similarity.Similarity
 import graft.text.TextAnalysis
 
@@ -21,10 +22,6 @@ import graft.text.TextAnalysis
   * double sums rounded to 6 decimals on output in both engines.
   */
 object Corpus {
-
-  type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   /** Round-robin exchange ONLY when the scan cannot already feed every
     * core. The sf fixtures are single-row-group parquet files (1-2
@@ -631,31 +628,38 @@ object Corpus {
   private val bpeModels =
     scala.collection.concurrent.TrieMap[String, graft.text.Bpe.Merges]()
 
-  private def bpeMergesPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/bpe_merges_$key.parquet"
+  private def bpeMergesPath(dir: String): String =
+    FixtureTables.path("bpe_merges", dir)
+
+  /** The training sample of every tokenizer fit: bounded and
+    * deterministic, the corpus word-frequency table capped at 4096 rows
+    * by (freq desc, token asc) — one keyed aggregate feeding a driver
+    * fit, the PqCodebook.fit discipline (tokenizers are always trained
+    * on samples).
+    */
+  private def vocabSample(s: SparkSession, dir: String): Seq[(String, Long)] =
+    t(s, dir, "documents")
+      .select(explode_outer(TextAnalysis.tokens(col("text"))).as("token"))
+      .where(col("token").isNotNull)
+      .groupBy(col("token")).agg(count(lit(1)).as("freq"))
+      .orderBy(col("freq").desc, col("token").asc)
+      .limit(4096)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
+
+  /** Dumps a fitted BPE merge table `(rank, lft, rgt)` for the oracle
+    * and returns it.
+    */
+  private def dumpMerges(s: SparkSession, m: graft.text.Bpe.Merges,
+      path: String): graft.text.Bpe.Merges = {
+    import s.implicits._
+    dump(m.lefts.indices.map(i => (i, m.lefts(i), m.rights(i)))
+      .toDF("rank", "lft", "rgt"), path)
+    m
   }
 
   private def bpeModel(s: SparkSession, dir: String): graft.text.Bpe.Merges =
-    bpeModels.getOrElseUpdate(dir, {
-      // bounded, deterministic training sample: the corpus word-
-      // frequency table capped at 4096 rows by (freq desc, token asc)
-      // — one keyed aggregate + a driver fit, the PqCodebook.fit
-      // discipline (tokenizers are always trained on samples)
-      val vocab = t(s, dir, "documents")
-        .select(explode_outer(TextAnalysis.tokens(col("text"))).as("token"))
-        .where(col("token").isNotNull)
-        .groupBy(col("token")).agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("token").asc)
-        .limit(4096)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val m = graft.text.Bpe.train(vocab, nMerges = 48)
-      import s.implicits._
-      m.lefts.indices.map(i => (i, m.lefts(i), m.rights(i)))
-        .toDF("rank", "lft", "rgt")
-        .coalesce(1).write.mode("overwrite").parquet(bpeMergesPath(dir))
-      m
-    })
+    bpeModels.getOrElseUpdate(dir, dumpMerges(s,
+      graft.text.Bpe.train(vocabSample(s, dir), nMerges = 48), bpeMergesPath(dir)))
 
   /** REAL BPE tokenization ([[graft.text.Bpe]] — Sennrich et al. ACL
     * 2016): a merge table is trained on the corpus's bounded
@@ -827,28 +831,13 @@ object Corpus {
   private val byteBpeModels =
     scala.collection.concurrent.TrieMap[String, graft.text.Bpe.Merges]()
 
-  private def byteBpeMergesPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/bytebpe_merges_$key.parquet"
-  }
+  private def byteBpeMergesPath(dir: String): String =
+    FixtureTables.path("bytebpe_merges", dir)
 
   private def byteBpeModel(s: SparkSession, dir: String): graft.text.Bpe.Merges =
-    byteBpeModels.getOrElseUpdate(dir, {
-      // same bounded fit sample as t37 (freq desc, token asc, 4096)
-      val vocab = t(s, dir, "documents")
-        .select(explode_outer(TextAnalysis.tokens(col("text"))).as("token"))
-        .where(col("token").isNotNull)
-        .groupBy(col("token")).agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("token").asc)
-        .limit(4096)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val m = graft.text.Bpe.trainBytes(vocab, nMerges = 48)
-      import s.implicits._
-      m.lefts.indices.map(i => (i, m.lefts(i), m.rights(i)))
-        .toDF("rank", "lft", "rgt")
-        .coalesce(1).write.mode("overwrite").parquet(byteBpeMergesPath(dir))
-      m
-    })
+    byteBpeModels.getOrElseUpdate(dir, dumpMerges(s,
+      graft.text.Bpe.trainBytes(vocabSample(s, dir), nMerges = 48),
+      byteBpeMergesPath(dir)))
 
   /** t52: byte-fallback BPE — the GPT-2-style BYTE-LEVEL alphabet
     * (Radford et al. 2019) that closes the tokenizer family's realism
@@ -967,10 +956,8 @@ object Corpus {
   private val unigramModels =
     scala.collection.concurrent.TrieMap[String, graft.text.Unigram.Model]()
 
-  private def unigramModelPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/unigram_model_$key.parquet"
-  }
+  private def unigramModelPath(dir: String): String =
+    FixtureTables.path("unigram_model", dir)
 
   /** The fixed unigram-LM piece-length cap — a train-time parameter
     * (not data-derived), so both the expression and the oracle's
@@ -980,23 +967,11 @@ object Corpus {
 
   private def unigramModel(s: SparkSession, dir: String): graft.text.Unigram.Model =
     unigramModels.getOrElseUpdate(dir, {
-      // the SAME bounded training sample discipline as bpeModel: the
-      // corpus word-frequency table capped at 4096 rows by
-      // (freq desc, token asc) — one keyed aggregate + a driver fit
-      val vocab = t(s, dir, "documents")
-        .select(explode_outer(TextAnalysis.tokens(col("text"))).as("token"))
-        .where(col("token").isNotNull)
-        .groupBy(col("token")).agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("token").asc)
-        .limit(4096)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      val m = graft.text.Unigram.train(vocab,
+      val m = graft.text.Unigram.train(vocabSample(s, dir),
         vocabSize = 512, maxPieceLen = UnigramMaxPieceLen, iters = 3)
       import s.implicits._
-      m.pieces.indices.map(i => (m.pieces(i), m.costs(i)))
-        .toDF("piece", "cost")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(unigramModelPath(dir))
+      dump(m.pieces.indices.map(i => (m.pieces(i), m.costs(i)))
+        .toDF("piece", "cost"), unigramModelPath(dir))
       m
     })
 
@@ -1116,32 +1091,17 @@ object Corpus {
   private val wordPieceModels =
     scala.collection.concurrent.TrieMap[String, graft.text.WordPiece.Vocab]()
 
-  private def wordPieceVocabPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/wordpiece_vocab_$key.parquet"
-  }
+  private def wordPieceVocabPath(dir: String): String =
+    FixtureTables.path("wordpiece_vocab", dir)
 
   private def wordPieceModel(s: SparkSession,
-      dir: String): graft.text.WordPiece.Vocab = {
-    val m = wordPieceModels.getOrElseUpdate(dir, {
-      // the SAME bounded training sample discipline as bpeModel /
-      // unigramModel: word-frequency table capped at 4096 rows by
-      // (freq desc, token asc) — one keyed aggregate + a driver fit
-      val vocab = t(s, dir, "documents")
-        .select(explode_outer(TextAnalysis.tokens(col("text"))).as("token"))
-        .where(col("token").isNotNull)
-        .groupBy(col("token")).agg(count(lit(1)).as("freq"))
-        .orderBy(col("freq").desc, col("token").asc)
-        .limit(4096)
-        .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
-      graft.text.WordPiece.train(vocab, nMerges = 48)
+      dir: String): graft.text.WordPiece.Vocab =
+    wordPieceModels.getOrElseUpdate(dir, {
+      val m = graft.text.WordPiece.train(vocabSample(s, dir), nMerges = 48)
+      import s.implicits._
+      dump(m.pieces.toSeq.toDF("piece"), wordPieceVocabPath(dir))
+      m
     })
-    import s.implicits._
-    m.pieces.toSeq.toDF("piece")
-      .coalesce(1).write.mode("overwrite")
-      .parquet(wordPieceVocabPath(dir))
-    m
-  }
 
   /** t51: WordPiece tokenization ([[graft.text.WordPiece]] — Schuster
     * & Nakajima 2012, the BERT-family encoder), completing the
@@ -2865,8 +2825,7 @@ object Corpus {
   private def lshKnnIndex(s: SparkSession, dir: String): (Int, Similarity.LshIndex) =
     lshKnnIndexes.getOrElseUpdate(dir, {
       val e = t(s, dir, "embeddings")
-      val planes = math.max(4,
-        math.ceil(math.log(e.count() / 30.0) / math.log(2.0)).toInt)
+      val planes = d16AdaptivePlanes(e.count())
       (planes, Similarity.LshIndex.build(e, "vec_id", "embedding",
         dim = 64, planes = planes, tables = 32))
     })
@@ -4542,10 +4501,10 @@ object Corpus {
        |FROM p GROUP BY lang, pack_id""".stripMargin
 
   private def m01FeaturePath: String =
-    s"${graft.ingest.FixtureTables.root}/m01_features.parquet"
+    s"${FixtureTables.root}/m01_features.parquet"
 
   private def m07HashPath: String =
-    s"${graft.ingest.FixtureTables.root}/m07_dhash.parquet"
+    s"${FixtureTables.root}/m07_dhash.parquet"
 
   /** Perceptual image near-dup join — the multimodal face of the
     * dedup ladder (d02 is to text what this is to rasters): REAL PNG
@@ -4566,7 +4525,7 @@ object Corpus {
   val m07_image_neardups: Q = (s, _) => {
     val hashes = graft.multimodal.MultiModal.imageDHashes(
       graft.multimodal.MultiModal.imageCorpus(s, n = 400))
-    hashes.coalesce(1).write.mode("overwrite").parquet(m07HashPath)
+    dump(hashes, m07HashPath)
     graft.multimodal.MultiModal.bandedHammingPairs(
       s.read.parquet(m07HashPath).withColumnRenamed("dhash", "h"), maxDist = 3)
   }
@@ -4580,7 +4539,7 @@ object Corpus {
        |WHERE bit_count(xor(a.dhash, b.dhash)) <= 3""".stripMargin
 
   private def m08HashPath: String =
-    s"${graft.ingest.FixtureTables.root}/m08_audiofp.parquet"
+    s"${FixtureTables.root}/m08_audiofp.parquet"
 
   /** Perceptual AUDIO near-dup join — m07's audio sibling: real WAVs
     * (encoded + decoded through `javax.sound`, planted near-dup
@@ -4595,7 +4554,7 @@ object Corpus {
   val m08_audio_neardups: Q = (s, _) => {
     val fps = graft.multimodal.MultiModal.audioFingerprints(
       graft.multimodal.MultiModal.audioCorpus(s, n = 400))
-    fps.coalesce(1).write.mode("overwrite").parquet(m08HashPath)
+    dump(fps, m08HashPath)
     graft.multimodal.MultiModal.bandedHammingPairs(
       s.read.parquet(m08HashPath).withColumnRenamed("fp", "h"), maxDist = 3)
   }
@@ -4609,7 +4568,7 @@ object Corpus {
        |WHERE bit_count(xor(a.fp, b.fp)) <= 3""".stripMargin
 
   private def m09HashPath: String =
-    s"${graft.ingest.FixtureTables.root}/m09_framedh.parquet"
+    s"${FixtureTables.root}/m09_framedh.parquet"
 
   /** Perceptual VIDEO near-dup join, completing the modality sweep
     * (d02 text, m07 images, m08 audio): real MJPEG-AVI clips (authored
@@ -4626,7 +4585,7 @@ object Corpus {
   val m09_video_neardups: Q = (s, _) => {
     val fps = graft.multimodal.MultiModal.videoFrameDHashes(
       graft.multimodal.MultiModal.videoCorpus(s, n = 200))
-    fps.coalesce(1).write.mode("overwrite").parquet(m09HashPath)
+    dump(fps, m09HashPath)
     graft.multimodal.MultiModal.videoNearDupPairs(s.read.parquet(m09HashPath))
   }
 
@@ -4640,13 +4599,8 @@ object Corpus {
        |SELECT id_a, id_b, COUNT(*) AS n_close_frames
        |FROM close GROUP BY id_a, id_b HAVING COUNT(*) >= 3""".stripMargin
 
-  // per-dir key (the q121/q126/q128 rule): a bench or verify run at a
-  // DIFFERENT sfDir must never overwrite the weights a pending oracle
-  // compare will replay — the one cross-run interference this family had
-  private def t38WeightsPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/t38_weights_$key"
-  }
+  private def qcDumpPath(dir: String): String =
+    FixtureTables.path("qc_weights", dir)
 
   /** Model-based document filter (fastText shape, CCNet-family): a
     * logistic classifier over 1024 hashed bag-of-words COUNT buckets
@@ -4666,24 +4620,22 @@ object Corpus {
     * (100·n_stop > 6·n_tok) are integer comparisons, so no float
     * boundary can flip either between engines.
     */
-  /** Shared t38/q121 scorer: fits the distilled logistic model on the
-    * bounded sample, dumps the micro-unit weight table to
-    * `weightsPath`, and returns the whole-corpus scored frame
-    * `(doc_id, __logit_u, __ntok, __nstop)` — the integer logit plus
-    * the rule's raw counters, from which t38 projects its
-    * classification view and q121 its evaluation report.
+  /** Shared scorer of t38/q121/q126/q128/q152: fits the distilled
+    * logistic model on the bounded sample and returns the whole-corpus
+    * scored frame `(doc_id, __logit_u, __ntok, __nstop)` — the integer
+    * logit plus the rule's raw counters, from which each query projects
+    * its classification view or evaluation report.
     */
-  // one fit per fixture dir: t38/q121/q126 share the model (the fit is
-  // deterministic, so this is a pure cache — each caller still dumps
-  // the weight table to its OWN path for its oracle's replay)
-  private val qcFits =
-    scala.collection.concurrent.TrieMap[String, (Array[Long], Long)]()
+  // one fit per fixture dir, shared by all five queries: the fit is
+  // deterministic, so this is a pure cache, and its fill dumps the
+  // micro-unit weight table once to the one path every oracle replays.
+  // Holds the bias; the weights are read back from the dump.
+  private val qcFits = scala.collection.concurrent.TrieMap[String, Long]()
 
-  private def qcScored(s: SparkSession, dir: String,
-      weightsPath: String): DataFrame = {
+  private def qcScored(s: SparkSession, dir: String): DataFrame = {
     import graft.text.QualityClassifier
     val docs = t(s, dir, "documents")
-    val (w, bias) = qcFits.getOrElseUpdate(dir, {
+    val bias = qcFits.getOrElseUpdate(dir, {
       // bounded, deterministically ordered training sample;
       // pseudo-labels from the stopword rule over the SAME tokenizer
       val sample = docs.where(col("doc_id") < 200)
@@ -4693,14 +4645,13 @@ object Corpus {
           val text = r.getString(1)
           (text, QualityClassifier.label(QualityClassifier.tokens(text)))
         }.toSeq
-      QualityClassifier.fit(sample)
+      val (w, bias) = QualityClassifier.fit(sample)
+      import s.implicits._
+      dump((w.zipWithIndex.map { case (wu, bkt) => (bkt.toLong, wu) } :+
+        (-1L, bias)).toSeq.toDF("bucket", "w_u"), qcDumpPath(dir))
+      bias
     })
-    val weightRows = w.zipWithIndex
-      .map { case (wu, bkt) => (bkt.toLong, wu) } :+ (-1L, bias)
-    import s.implicits._
-    weightRows.toSeq.toDF("bucket", "w_u")
-      .coalesce(1).write.mode("overwrite").parquet(weightsPath)
-    val weights = s.read.parquet(weightsPath)
+    val weights = s.read.parquet(qcDumpPath(dir))
     val staged = docs
       .withColumn("__toks", TextAnalysis.tokens(col("text")))
       .select(col("doc_id"),
@@ -4724,7 +4675,7 @@ object Corpus {
   }
 
   val t38_quality_classifier: Q = (s, dir) =>
-    qcScored(s, dir, t38WeightsPath(dir)).select(
+    qcScored(s, dir).select(
       col("doc_id"),
       (col("__logit_u").cast("double") / lit(1000000.0)).as("logit"),
       (col("__logit_u") > 0).as("pred_high_stop"),
@@ -4733,7 +4684,7 @@ object Corpus {
 
   def t38_sql: String =
     s"""WITH w AS (SELECT bucket, w_u
-       |           FROM read_parquet('${t38WeightsPath(oracleSfDir)}/*.parquet')),
+       |           FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')),
        |t AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |st AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS ntok,
        |         CAST(len(list_filter(toks, x -> x IN ($stopRuleInSql)))
@@ -4747,7 +4698,7 @@ object Corpus {
        |sw AS (SELECT doc_id, CAST(SUM(b.c * w.w_u) AS BIGINT) AS sw
        |       FROM b JOIN w USING (bucket) WHERE w.bucket >= 0
        |       GROUP BY doc_id),
-       |bias AS (SELECT w_u FROM read_parquet('${t38WeightsPath(oracleSfDir)}/*.parquet')
+       |bias AS (SELECT w_u FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')
        |         WHERE bucket = -1)
        |SELECT st.doc_id,
        |  CAST((SELECT w_u FROM bias) + COALESCE(sw.sw, 0) AS DOUBLE)
@@ -4755,11 +4706,6 @@ object Corpus {
        |  ((SELECT w_u FROM bias) + COALESCE(sw.sw, 0)) > 0 AS pred_high_stop,
        |  (st.nstop * 100 > st.ntok * 6) AS label_high_stop
        |FROM st LEFT JOIN sw USING (doc_id)""".stripMargin
-
-  private def q121WeightsPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/q121_weights_$key"
-  }
 
   /** q121: model evaluation at corpus scale — the ROC AUC (plus the
     * confusion matrix and accuracy at the model's own 0 threshold) of
@@ -4785,7 +4731,7 @@ object Corpus {
     */
   val q121_auc_eval: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val scored = qcScored(s, dir, q121WeightsPath(dir))
+    val scored = qcScored(s, dir)
       .select(col("__logit_u").as("s_u"),
         (col("__nstop") * lit(100L) > col("__ntok") * lit(6L)).as("__y"))
     // distinct-score frame: |g| ≤ distinct integer logits — consumed
@@ -4832,7 +4778,7 @@ object Corpus {
 
   def q121_sql: String =
     s"""WITH w AS (SELECT bucket, w_u
-       |  FROM read_parquet('${q121WeightsPath(oracleSfDir)}/*.parquet')),
+       |  FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')),
        |t AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |st AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS ntok,
        |         CAST(len(list_filter(toks, x -> x IN ($stopRuleInSql)))
@@ -4874,11 +4820,6 @@ object Corpus {
        |    / (2.0 * CAST(SUM(p) AS DOUBLE) * CAST(SUM(n) AS DOUBLE)) AS auc
        |FROM c""".stripMargin
 
-  private def q126WeightsPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/q126_weights_$key"
-  }
-
   /** q126: calibration report — q121's companion (AUC measures
     * RANKING; calibration measures whether the scores MEAN what they
     * claim, which is what a downstream threshold or mixture weight
@@ -4905,7 +4846,7 @@ object Corpus {
   }
 
   val q126_calibration: Q = (s, dir) => {
-    val scored = qcScored(s, dir, q126WeightsPath(dir))
+    val scored = qcScored(s, dir)
       .select(col("__logit_u"),
         (col("__nstop") * lit(100L) > col("__ntok") * lit(6L)).as("__y"))
     val g = scored
@@ -4926,7 +4867,7 @@ object Corpus {
     val chain = graft.functions.PortableMath.sqlWithBindings(
       "SELECT * FROM g", q126Bindings)
     s"""WITH w AS (SELECT bucket, w_u
-       |  FROM read_parquet('${q126WeightsPath(oracleSfDir)}/*.parquet')),
+       |  FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')),
        |t AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |st AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS ntok,
        |         CAST(len(list_filter(toks, x -> x IN ($stopRuleInSql)))
@@ -4958,11 +4899,6 @@ object Corpus {
        |      FROM fin)""".stripMargin
   }
 
-  private def q128WeightsPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/q128_weights_$key"
-  }
-
   /** q128: per-slice AUC — q121 grouped by document source, the way
     * model evaluation is actually consumed (a global AUC hides a
     * slice the model ranks at chance; per-language/per-source
@@ -4980,7 +4916,7 @@ object Corpus {
     */
   val q128_auc_by_slice: Q = (s, dir) => {
     import org.apache.spark.sql.expressions.Window
-    val scored = qcScored(s, dir, q128WeightsPath(dir))
+    val scored = qcScored(s, dir)
     val withSrc = t(s, dir, "documents").select(col("doc_id"), col("source"))
       .join(scored, Seq("doc_id"))
       .select(col("source"), col("__logit_u").as("s_u"),
@@ -5020,7 +4956,7 @@ object Corpus {
 
   def q128_sql: String =
     s"""WITH w AS (SELECT bucket, w_u
-       |  FROM read_parquet('${q128WeightsPath(oracleSfDir)}/*.parquet')),
+       |  FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')),
        |t AS (SELECT doc_id, source, $toksSql AS toks FROM documents),
        |st AS (SELECT doc_id, source, CAST(len(toks) AS BIGINT) AS ntok,
        |         CAST(len(list_filter(toks, x -> x IN ($stopRuleInSql)))
@@ -5057,11 +4993,6 @@ object Corpus {
        |GROUP BY source
        |HAVING SUM(p) > 0 AND SUM(n) > 0""".stripMargin
 
-  private def q152WeightsPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/q152_weights_$key"
-  }
-
   /** q152: per-slice fairness report — the responsible-AI readout the
     * eval family still lacked: q121 scores the classifier, q126
     * calibrates it, q128 ranks it per slice, and q152 asks whether
@@ -5085,7 +5016,7 @@ object Corpus {
     * NULL, the ksTail rule, and its gap is NULL rather than a silent
     * 0. The scorer is the SHARED [[qcScored]] fit (one model —
     * t38/q121/q126/q128/q152 read the same distillation), dumped
-    * per-query for the oracle's replay.
+    * once per dir for the oracle's replay.
     *
     * Ground-truth caveat: the `__y` label is the stopword RULE
     * itself — the same family the t38 classifier was distilled from,
@@ -5102,7 +5033,7 @@ object Corpus {
     * driver state.
     */
   val q152_fairness_report: Q = (s, dir) => {
-    val scored = qcScored(s, dir, q152WeightsPath(dir))
+    val scored = qcScored(s, dir)
     val base = t(s, dir, "documents").select(col("doc_id"), col("source"))
       .join(scored, Seq("doc_id"))
       .select(col("source"),
@@ -5162,7 +5093,7 @@ object Corpus {
 
   def q152_sql: String =
     s"""WITH w AS (SELECT bucket, w_u
-       |  FROM read_parquet('${q152WeightsPath(oracleSfDir)}/*.parquet')),
+       |  FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')),
        |t AS (SELECT doc_id, source, $toksSql AS toks FROM documents),
        |st AS (SELECT doc_id, source, CAST(len(toks) AS BIGINT) AS ntok,
        |         CAST(len(list_filter(toks, x -> x IN ($stopRuleInSql)))
@@ -6868,7 +6799,7 @@ object Corpus {
        |FROM btk""".stripMargin
   }
 
-  private def c04Root: String = s"${graft.ingest.FixtureTables.root}/c04"
+  private def c04Root: String = s"${FixtureTables.root}/c04"
 
   /** Multimodal curation capstone — the c02 keep/drop composition
     * applied to MEDIA: every modality's perceptual near-dup pairs
@@ -6897,12 +6828,9 @@ object Corpus {
     // are unchanged (each job writes/derives its own kind); only the
     // driver-side sequencing goes away.
     concurrently(s, "c04 hash dump",
-      () => img.coalesce(1).write.mode("overwrite")
-        .parquet(s"$c04Root/image.parquet"),
-      () => aud.coalesce(1).write.mode("overwrite")
-        .parquet(s"$c04Root/audio.parquet"),
-      () => vid.coalesce(1).write.mode("overwrite")
-        .parquet(s"$c04Root/video.parquet"))
+      () => dump(img, s"$c04Root/image.parquet"),
+      () => dump(aud, s"$c04Root/audio.parquet"),
+      () => dump(vid, s"$c04Root/video.parquet"))
     def manifest(kind: String, ids: org.apache.spark.sql.DataFrame,
         pairs: org.apache.spark.sql.DataFrame) = {
       val comps = graft.graph.GraphOps.connectedComponents(
@@ -6989,7 +6917,7 @@ object Corpus {
 
   // --------------------------------------- c11 media training-mix release
 
-  private def c11Root: String = s"${graft.ingest.FixtureTables.root}/c11"
+  private def c11Root: String = s"${FixtureTables.root}/c11"
 
   /** c11's release budget — below every fixture's kept-media total,
     * so the per-kind Hamilton quotas bind (the C06Budget argument).
@@ -7040,12 +6968,9 @@ object Corpus {
     // guide §2.6 — the three decode-and-dump chains are independent;
     // overlap them (see [[graft.Jobs.concurrently]], same as c04)
     concurrently(s, "c11 hash dump",
-      () => img.coalesce(1).write.mode("overwrite")
-        .parquet(s"$c11Root/image.parquet"),
-      () => aud.coalesce(1).write.mode("overwrite")
-        .parquet(s"$c11Root/audio.parquet"),
-      () => vid.coalesce(1).write.mode("overwrite")
-        .parquet(s"$c11Root/video.parquet"))
+      () => dump(img, s"$c11Root/image.parquet"),
+      () => dump(aud, s"$c11Root/audio.parquet"),
+      () => dump(vid, s"$c11Root/video.parquet"))
     val imgH = s.read.parquet(s"$c11Root/image.parquet")
     val audH = s.read.parquet(s"$c11Root/audio.parquet")
     val vidH = s.read.parquet(s"$c11Root/video.parquet")
@@ -7173,7 +7098,7 @@ object Corpus {
       .extractFeatures(graft.multimodal.MultiModal.syntheticMedia(s, n = 300))
       .toDF()
       .select(col("mediaId").as("media_id"), col("kind"), col("features"))
-    feats.coalesce(1).write.mode("overwrite").parquet(m01FeaturePath)
+    dump(feats, m01FeaturePath)
     s.read.parquet(m01FeaturePath)
       .select(col("kind"),
         sqrt(aggregate(transform(col("features"),
@@ -7333,9 +7258,19 @@ object Corpus {
     */
   @volatile var oracleSfDir: String = "/root/testdata/sf0.01"
 
-  private def ivfCentroidPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/ivf_centroids_$key.parquet"
+  private def ivfCentroidPath(dir: String): String =
+    FixtureTables.path("ivf_centroids", dir)
+
+  /** Dumps an IVF fit's centroid table `(list_id, centroid)` so the
+    * oracle SQL replays assignment from this run's exact centroid bits,
+    * and returns the index.
+    */
+  private def dumpCentroids(s: SparkSession, built: Similarity.IvfIndex,
+      path: String): Similarity.IvfIndex = {
+    import s.implicits._
+    dump(built.centroids.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("list_id", "centroid"), path)
+    built
   }
 
   /** The s03 IVF index, built once per dir and dumped for the oracle —
@@ -7346,15 +7281,9 @@ object Corpus {
     ivfIndexes.getOrElseUpdate(dir, {
       // nLists = 0 → corpus-proportional (floor 16, so = 16 at every sf
       // fixture; grows with the corpus at 10×+ — see adaptiveNLists)
-      val built = Similarity.IvfIndex.build(
-        t(s, dir, "embeddings"), "vec_id", "embedding", nLists = 0)
-      // dump the fitted quantizer so the oracle SQL can replay the
-      // assignment from this run's exact centroid bits
-      import s.implicits._
-      built.centroids.zipWithIndex.map { case (c, i) => (i, c) }
-        .toDF("list_id", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(ivfCentroidPath(dir))
-      built
+      dumpCentroids(s, Similarity.IvfIndex.build(
+        t(s, dir, "embeddings"), "vec_id", "embedding", nLists = 0),
+        ivfCentroidPath(dir))
     })
 
   val s03_ivf_topk: Q = (s, dir) =>
@@ -7754,19 +7683,13 @@ object Corpus {
   private val s23Models =
     scala.collection.concurrent.TrieMap[String, graft.similarity.Pca.Model]()
 
-  private def s23ModelPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/s23_pca_$key"
-  }
+  private def s23ModelPath(dir: String): String =
+    FixtureTables.path("s23_pca", dir)
 
   private[graft] val S23K = 4
   private[graft] val S23Dim = 64
   private[graft] val S23MaxSample = 4096
 
-  /** One PCA fit per fixture dir (the qcFits pure-cache discipline);
-    * each call re-dumps the model tables to the per-dir path so the
-    * oracle replays from THIS run's fixtures.
-    */
   /** Fit the PCA model on an explicit embeddings frame — bounded
     * deterministic sample: the smallest-vec_id rows, the
     * bpeModel/PqCodebook driver-fit discipline. Quantization to e-6
@@ -7793,25 +7716,27 @@ object Corpus {
     graft.similarity.Pca.fit(sample, dim, math.min(S23K, dim))
   }
 
+  /** One PCA fit per fixture dir (the qcFits pure-cache discipline);
+    * the cache fill dumps the model tables once to the per-dir path
+    * the oracle replays.
+    */
   private[graft] def s23Model(s: SparkSession,
-      dir: String): graft.similarity.Pca.Model = {
-    val m = s23Models.getOrElseUpdate(dir, fitPca(t(s, dir, "embeddings")))
-    import s.implicits._
-    val path = s23ModelPath(dir)
-    // n rides at j = -1 (the bias-at-bucket-−1 move)
-    ((-1L, m.n) +: m.sums.toSeq.zipWithIndex
-        .map { case (v, j) => (j.toLong, v) })
-      .toDF("j", "s")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/means")
-    (for (k <- 0 until S23K; j <- 0 until S23Dim)
-      yield (k.toLong + 1L, j.toLong, m.loadings(k)(j)))
-      .toDF("k", "j", "v_e6")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/load")
-    m.sigE6.toSeq.zipWithIndex.map { case (v, k) => (k.toLong + 1L, v) }
-      .toDF("k", "sig_e6")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/sig")
-    m
-  }
+      dir: String): graft.similarity.Pca.Model =
+    s23Models.getOrElseUpdate(dir, {
+      val m = fitPca(t(s, dir, "embeddings"))
+      import s.implicits._
+      val path = s23ModelPath(dir)
+      // n rides at j = -1 (the bias-at-bucket-−1 move)
+      dump(((-1L, m.n) +: m.sums.toSeq.zipWithIndex
+          .map { case (v, j) => (j.toLong, v) })
+        .toDF("j", "s"), s"$path/means")
+      dump((for (k <- 0 until S23K; j <- 0 until S23Dim)
+          yield (k.toLong + 1L, j.toLong, m.loadings(k)(j)))
+        .toDF("k", "j", "v_e6"), s"$path/load")
+      dump(m.sigE6.toSeq.zipWithIndex.map { case (v, k) => (k.toLong + 1L, v) }
+        .toDF("k", "sig_e6"), s"$path/sig")
+      m
+    })
 
   /** s23: PCA projection + whitening over the embeddings table — the
     * learned linear dimensionality reduction the s-series lacked
@@ -8031,9 +7956,18 @@ object Corpus {
   private val graphAnnIndexes =
     scala.collection.concurrent.TrieMap[String, graft.similarity.GraphAnn.Index]()
 
-  private def graphAnnPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/graphann_$key"
+  private def graphAnnPath(dir: String): String =
+    FixtureTables.path("graphann", dir)
+
+  /** Dumps a graph-ANN index (graph edges + entry points) under `path`
+    * so the oracle replays the walk over this exact graph, and returns
+    * the index.
+    */
+  private def dumpGraphAnn(built: graft.similarity.GraphAnn.Index,
+      path: String): graft.similarity.GraphAnn.Index = {
+    dump(built.graph, s"$path/graph.parquet")
+    dump(built.entries, s"$path/entry.parquet")
+    built
   }
 
   /** The s25 graph-ANN serving index — built once per dir from the
@@ -8043,15 +7977,10 @@ object Corpus {
     * exact persisted index, the s03 dump-then-replay protocol.
     */
   private def s25Index(s: SparkSession, dir: String): graft.similarity.GraphAnn.Index =
-    graphAnnIndexes.getOrElseUpdate(dir, {
-      val built = graft.similarity.GraphAnn.build(
-        lshKnnIndex(s, dir)._2, degree = 8, nEntries = 4)
-      built.graph.coalesce(1).write.mode("overwrite")
-        .parquet(s"${graphAnnPath(dir)}/graph.parquet")
-      built.entries.coalesce(1).write.mode("overwrite")
-        .parquet(s"${graphAnnPath(dir)}/entry.parquet")
-      built
-    })
+    graphAnnIndexes.getOrElseUpdate(dir, dumpGraphAnn(
+      graft.similarity.GraphAnn.build(
+        lshKnnIndex(s, dir)._2, degree = 8, nEntries = 4),
+      graphAnnPath(dir)))
 
   /** s25: graph-ANN beam serving ([[graft.similarity.GraphAnn]]) —
     * greedy beam search over the persisted s15-family kNN graph, the
@@ -8142,10 +8071,8 @@ object Corpus {
   private val graphAnnRestIndexes =
     scala.collection.concurrent.TrieMap[String, graft.similarity.GraphAnn.Index]()
 
-  private def graphAnnRestPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/graphann_rest_$key"
-  }
+  private def graphAnnRestPath(dir: String): String =
+    FixtureTables.path("graphann_rest", dir)
 
   /** The s26 PRE-INSERT index: built over the corpus MINUS the delta
     * decile (vec_id % 10 ≠ 0), dumped so the oracle replays the
@@ -8156,17 +8083,10 @@ object Corpus {
     graphAnnRestIndexes.getOrElseUpdate(dir, {
       val rest = t(s, dir, "embeddings")
         .where(pmod(col("vec_id"), lit(10)) =!= 0)
-      val planes = math.max(4,
-        math.ceil(math.log(rest.count() / 30.0) / math.log(2.0)).toInt)
-      val built = graft.similarity.GraphAnn.build(
-        graft.similarity.Similarity.LshIndex.build(
-          rest, "vec_id", "embedding", dim = 64, planes = planes, tables = 32),
-        degree = 8, nEntries = 4)
-      built.graph.coalesce(1).write.mode("overwrite")
-        .parquet(s"${graphAnnRestPath(dir)}/graph.parquet")
-      built.entries.coalesce(1).write.mode("overwrite")
-        .parquet(s"${graphAnnRestPath(dir)}/entry.parquet")
-      built
+      dumpGraphAnn(graft.similarity.GraphAnn.build(
+        graft.similarity.Similarity.LshIndex.build(rest, "vec_id", "embedding",
+          dim = 64, planes = d16AdaptivePlanes(rest.count()), tables = 32),
+        degree = 8, nEntries = 4), graphAnnRestPath(dir))
     })
 
   /** s26: graph-ANN INSERT ([[graft.similarity.GraphAnn.insert]]) —
@@ -8282,10 +8202,8 @@ object Corpus {
   private val ivfMetaIndexes =
     scala.collection.concurrent.TrieMap[String, Similarity.IvfIndex]()
 
-  private def ivfMetaCentroidPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/ivf_centroids_meta_$key.parquet"
-  }
+  private def ivfMetaCentroidPath(dir: String): String =
+    FixtureTables.path("ivf_centroids_meta", dir)
 
   /** The shared metadata-carrying IVF index (s09 filtered ANN + d11
     * semantic dedup). Whichever query runs first builds it and dumps
@@ -8294,16 +8212,11 @@ object Corpus {
     * depend on which query wins.
     */
   private def ivfMetaIndex(s: SparkSession, dir: String): Similarity.IvfIndex =
-    ivfMetaIndexes.getOrElseUpdate(dir, {
-      val built = Similarity.IvfIndex.build(
+    ivfMetaIndexes.getOrElseUpdate(dir, dumpCentroids(s,
+      Similarity.IvfIndex.build(
         t(s, dir, "embeddings"), "vec_id", "embedding",
-        nLists = 0, metaCols = Seq("label"))
-      import s.implicits._
-      built.centroids.zipWithIndex.map { case (c, i) => (i, c) }
-        .toDF("list_id", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(ivfMetaCentroidPath(dir))
-      built
-    })
+        nLists = 0, metaCols = Seq("label")),
+      ivfMetaCentroidPath(dir)))
 
   val s09_filtered_ann: Q = (s, dir) => {
     val idx = ivfMetaIndex(s, dir)
@@ -8621,10 +8534,7 @@ object Corpus {
   private val ivfStoresWritten =
     scala.collection.concurrent.TrieMap[String, Boolean]()
 
-  def ivfStorePath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/ivf_store_$key"
-  }
+  def ivfStorePath(dir: String): String = FixtureTables.path("ivf_store", dir)
 
   val s12_ivf_serving: Q = (s, dir) => {
     val path = ivfStorePath(dir)
@@ -8701,23 +8611,16 @@ object Corpus {
   private val ivfDeltaIndexes =
     scala.collection.concurrent.TrieMap[String, Similarity.IvfIndex]()
 
-  private def ivfDeltaCentroidPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/ivf_centroids_delta_$key.parquet"
-  }
+  private def ivfDeltaCentroidPath(dir: String): String =
+    FixtureTables.path("ivf_centroids_delta", dir)
 
   val s13_ivf_delta_append: Q = (s, dir) => {
     val e = t(s, dir, "embeddings")
-    val baseIdx = ivfDeltaIndexes.getOrElseUpdate(dir, {
-      val built = Similarity.IvfIndex.build(
+    val baseIdx = ivfDeltaIndexes.getOrElseUpdate(dir, dumpCentroids(s,
+      Similarity.IvfIndex.build(
         e.where(pmod(col("vec_id"), lit(10)) =!= 0), "vec_id", "embedding",
-        nLists = 0)
-      import s.implicits._
-      built.centroids.zipWithIndex.map { case (c, i) => (i, c) }
-        .toDF("list_id", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(ivfDeltaCentroidPath(dir))
-      built
-    })
+        nLists = 0),
+      ivfDeltaCentroidPath(dir)))
     val merged = baseIdx.append(
       e.where(pmod(col("vec_id"), lit(10)) === 0), "vec_id", "embedding")
     merged.search(e.where(col("vec_id") >= 8 && col("vec_id") < 13),
@@ -8926,10 +8829,8 @@ object Corpus {
   private val pqCodebooks =
     scala.collection.concurrent.TrieMap[String, graft.similarity.PqCodebook]()
 
-  private def pqCodebookPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/pq_codebooks_$key.parquet"
-  }
+  private def pqCodebookPath(dir: String): String =
+    FixtureTables.path("pq_codebooks", dir)
 
   // PQ 16×4 (m subspaces of subDim dims, 16-entry codebooks — 4-bit
   // codes, a standard FAISS configuration): measured recall@10 0.90 at
@@ -8970,10 +8871,9 @@ object Corpus {
       // dump the fitted codebooks so the oracle SQL replays encoding
       // from this run's exact centroid bits
       import s.implicits._
-      fitted.codebooks.zipWithIndex.flatMap { case (book, j) =>
+      dump(fitted.codebooks.zipWithIndex.flatMap { case (book, j) =>
         book.zipWithIndex.map { case (ctr, c) => (j, c, ctr) }
-      }.toDF("sub_id", "code", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(pqCodebookPath(dir))
+      }.toDF("sub_id", "code", "centroid"), pqCodebookPath(dir))
       fitted
     })
 

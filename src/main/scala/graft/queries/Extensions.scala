@@ -4,8 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
-
 /** Round-5 SQL-surface extensions: correlated LATERAL joins, recursive
   * CTEs (Spark 4's `WITH RECURSIVE` / `UnionLoop`), and higher-order
   * array functions — surfaces a DBMS-backed pipeline like the
@@ -14,10 +12,6 @@ import graft.Tables
   * oracle that reaches the same result by an independent mechanism.
   */
 object Extensions {
-
-  type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   private val dec2 = DecimalType(18, 2)
 
@@ -1062,10 +1056,8 @@ object Extensions {
     * format and float text round-tripping is a parser-specific
     * contract no interchange pipeline should lean on.
     */
-  private def csvRoundTripPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/csv_lineitem_$key"
-  }
+  private def csvRoundTripPath(dir: String): String =
+    graft.ingest.FixtureTables.path("csv_lineitem", dir)
 
   val q84_csv_roundtrip: Q = (s, dir) => {
     val path = csvRoundTripPath(dir)
@@ -1107,10 +1099,8 @@ object Extensions {
     * the three referenced columns (ReadSchema, like any columnar
     * scan).
     */
-  private def orcRoundTripPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/orc_lineitem_$key"
-  }
+  private def orcRoundTripPath(dir: String): String =
+    graft.ingest.FixtureTables.path("orc_lineitem", dir)
 
   val q115_orc_roundtrip: Q = (s, dir) => {
     val path = orcRoundTripPath(dir)
@@ -1147,10 +1137,8 @@ object Extensions {
     * Long/string/date columns by q84's no-float rule: JSON is textual
     * and float text round-tripping is parser-specific.
     */
-  private def jsonRoundTripPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/json_orders_$key"
-  }
+  private def jsonRoundTripPath(dir: String): String =
+    graft.ingest.FixtureTables.path("json_orders", dir)
 
   val q116_json_roundtrip: Q = (s, dir) => {
     val path = jsonRoundTripPath(dir)
@@ -1199,10 +1187,8 @@ object Extensions {
     * 2-decimal money; the s03 boundary discipline), never via float
     * text.
     */
-  private def avroRoundTripPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/avro_orders_$key"
-  }
+  private def avroRoundTripPath(dir: String): String =
+    graft.ingest.FixtureTables.path("avro_orders", dir)
 
   val q153_avro_roundtrip: Q = (s, dir) => {
     import graft.functions.KmvSketch
@@ -1262,10 +1248,8 @@ object Extensions {
     * pinned by an explicit cast (discovery yields INT, the manifest
     * contract is BIGINT).
     */
-  private def shardExportPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/q124_shards_$key"
-  }
+  private def shardExportPath(dir: String): String =
+    graft.ingest.FixtureTables.path("q124_shards", dir)
 
   val q124_shard_manifest: Q = (s, dir) => {
     val path = shardExportPath(dir)
@@ -1317,10 +1301,8 @@ object Extensions {
     * DuckDB's independent `union_by_name` parquet reader, so null
     * semantics and decimal round-trip are cross-engine-checked.
     */
-  private def schemaEvoPath(dir: String): String = {
-    val key = dir.replaceAll("[^A-Za-z0-9._-]", "_")
-    s"${graft.ingest.FixtureTables.root}/q125_schema_evo_$key"
-  }
+  private def schemaEvoPath(dir: String): String =
+    graft.ingest.FixtureTables.path("q125_schema_evo", dir)
 
   val q125_schema_evolution: Q = (s, dir) => {
     val path = schemaEvoPath(dir)

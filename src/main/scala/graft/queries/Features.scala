@@ -5,7 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
 import graft.operators.Joins
 
 /** Round-9 (continued) training-pipeline surface: point-in-time
@@ -24,10 +23,6 @@ import graft.operators.Joins
   * rounded from identical inputs.
   */
 object Features {
-
-  type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   private val dec2 = DecimalType(18, 2)
 

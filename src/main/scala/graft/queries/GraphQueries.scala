@@ -4,7 +4,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Tables
 import graft.graph.GraphOps
 
 /** Graph analytics over the deterministic co-purchase graph derived
@@ -20,10 +19,6 @@ import graft.graph.GraphOps
   * a final rounding coincidence.
   */
 object GraphQueries {
-
-  type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   private val PrIters = 6
   private val CcRounds = 12

@@ -21,8 +21,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object HashProbes {
 
-  type Q = (SparkSession, String) => DataFrame
-
   private case class Probe(name: String, cast: String, vals: Seq[String])
 
   // RETIRED (round 13): the decimal probes h01a/h01b/h02/h03/h04 ran in

@@ -5,8 +5,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
-
 /** The relational query surface (SURVEY.md §2.B + §2.C), each entry
   * paired with DuckDB oracle SQL in [[graft.SparkEntry.oracleSql]].
   *
@@ -33,10 +31,6 @@ object Relational {
     val s = d.toString
     if (s.contains('E') || s.contains('e')) s else s + "e0"
   }
-
-  type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   /** B1-style scan+agg (TPC-H Q1 pricing summary): filter → hash agg with
     * partial aggregation map-side; only 6 of 10 lineitem columns read.
@@ -446,18 +440,22 @@ object Relational {
       |WHERE r_name = 'ASIA'
       |GROUP BY n_name""".stripMargin
 
-  /** Shared series for the indicator queries: per-(supplier, day)
-    * revenue as DECIMAL(18,2), pre-partitioned by supplier so the agg
-    * and every downstream window share one exchange.
+  /** Shared series for the indicator queries (here and in
+    * [[Advanced]]): per-(supplier, day) revenue as DECIMAL(18,2),
+    * pre-partitioned by supplier so the agg and every downstream window
+    * share one exchange.
     */
-  private def supplierDaily(s: SparkSession, dir: String): DataFrame =
+  private[queries] def supplierDaily(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "lineitem")
       .select(col("l_suppkey"), col("l_shipdate"), dec(col("l_extendedprice")).as("__p"))
       .repartition(col("l_suppkey"))
       .groupBy(col("l_suppkey"), col("l_shipdate"))
+      // re-narrow the sum to DECIMAL(18,2): downstream decimal PRODUCTS
+      // (q47's Σxy/Σx²) stay inside both engines' 38-digit budget —
+      // (18,2)×(18,2) is exact everywhere, sum-widened operands are not
       .agg(sum(col("__p")).cast(D).as("day_price"))
 
-  private val supplierDailySql: String =
+  private[queries] val supplierDailySql: String =
     """SELECT l_suppkey, l_shipdate,
       |       CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS day_price
       |FROM lineitem GROUP BY l_suppkey, l_shipdate""".stripMargin

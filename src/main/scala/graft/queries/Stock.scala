@@ -19,8 +19,6 @@ import graft.ingest.{Fixtures, FixtureTables, Normalize}
   */
 object Stock {
 
-  type Q = (SparkSession, String) => DataFrame
-
   /** Query-output boundary: DECIMAL(15,4) stays the internal/storage
     * money type (reference schema fidelity, exact row-drop semantics),
     * but emitted price columns leave as DOUBLE. Spark's decimal→double

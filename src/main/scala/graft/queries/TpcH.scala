@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
-import graft.Tables
-
 /** The remaining TPC-H-expressible queries, completing a 22/22 coverage
   * map over the fixture star schema (see README §TPC-H). The fixtures
   * lack `partsupp`, `l_commitdate`/`l_receiptdate`/`l_shipmode`,
@@ -28,10 +26,6 @@ import graft.Tables
   * those capabilities imply.
   */
 object TpcH {
-
-  type Q = (SparkSession, String) => DataFrame
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
 
   private val dec2 = DecimalType(18, 2)
   private def d2(c: Column): Column = c.cast(dec2)
