@@ -23,8 +23,11 @@ object StockPipeline {
 
   /** Run one ingest batch from payload frames into the parquet tables at
     * `basePath`. Any of the three frames may be empty. Returns a summary
-    * frame `(table, rows_inserted)` — the engine's version of the
-    * reference's per-task success report (`main_parallel.py:452-455`).
+    * frame `(table, rows_inserted, rows_offered)` — the engine's version
+    * of the reference's per-task success report
+    * (`main_parallel.py:452-455`). `rows_offered` counts the normalized
+    * rows (for `companies`, the distinct symbols) each load saw; it is
+    * recorded by the same job that writes, with no extra scan.
     */
   def run(
       spark: SparkSession,
@@ -44,10 +47,10 @@ object StockPipeline {
       .unionByName(intradayRows.select("company_symbol"))
       .unionByName(smaRows.select("company_symbol"))
       .distinct()
-    val nCompanies = Catalog.ensureCompanies(spark, basePath, symbols)
+    val companies = Catalog.appendCompanies(spark, basePath, symbols)
 
-    def load(table: String, rows: DataFrame): Long =
-      Incremental.appendIdempotent(
+    def load(table: String, rows: DataFrame): Incremental.Appended =
+      Incremental.append(
         spark,
         Catalog.tablePath(basePath, table),
         rows,
@@ -58,17 +61,18 @@ object StockPipeline {
     // The three fact loads are independent (distinct target paths) —
     // submit them as concurrent Spark jobs, the engine-side equivalent
     // of the reference's thread-pool fan-out (`main_parallel.py:460+`).
-    // Each load is several small driver-synchronized actions; running
-    // them sequentially would pay that latency 3x.
+    // Each load is one write job whose stages are small, so running them
+    // side by side lets one load's tasks fill the others' idle cores.
     val factLoads = Seq(
       "daily_stock_prices" -> dailyRows,
       "intraday_stock_prices" -> intradayRows,
       "sma_indicators" -> smaRows
     ).map { case (table, rows) => () => table -> load(table, rows) }
-    val inserted = ("companies", nCompanies) +:
+    val loaded = ("companies" -> companies) +:
       Jobs.concurrently(spark, "stock fact loads", factLoads: _*)
 
-    inserted.toDF("table", "rows_inserted")
+    loaded.map { case (table, a) => (table, a.inserted, a.offered) }
+      .toDF("table", "rows_inserted", "rows_offered")
   }
 
   /** How many ingest runs [[demo]] performs. 2 (the default — what

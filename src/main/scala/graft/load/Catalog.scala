@@ -59,11 +59,16 @@ object Catalog {
     * reference's `INSERT … ON CONFLICT DO NOTHING`,
     * `main_parallel.py:221-227`). Returns symbols added.
     */
-  def ensureCompanies(spark: SparkSession, basePath: String, symbols: DataFrame): Long = {
+  def ensureCompanies(spark: SparkSession, basePath: String, symbols: DataFrame): Long =
+    appendCompanies(spark, basePath, symbols).inserted
+
+  /** [[ensureCompanies]], also reporting the non-NULL symbols offered. */
+  def appendCompanies(spark: SparkSession, basePath: String,
+      symbols: DataFrame): Incremental.Appended = {
     val incoming = symbols
       .select(col(symbols.columns.head).cast("string").as("company_symbol"))
       .where(col("company_symbol").isNotNull)
-    Incremental.appendIdempotent(
+    Incremental.append(
       spark,
       tablePath(basePath, "companies"),
       incoming,

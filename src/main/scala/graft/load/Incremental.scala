@@ -1,24 +1,27 @@
 package graft.load
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Incremental, idempotent loading — the reference's high-water-mark +
   * `ON CONFLICT DO NOTHING` semantics (SURVEY.md §2 A7/B1/B4/B6),
   * re-expressed as set operations so they are order-independent and
-  * shuffle-parallel:
+  * shuffle-parallel.
   *
-  *   - watermark: ONE hash aggregate over the target computes
-  *     `MAX(ts) per key` for all keys (vs. the reference's one SELECT
-  *     round-trip per symbol, `main_parallel.py:206-218`);
-  *   - the watermark frame is broadcast when small (key cardinality ~
-  *     symbols), so the incoming fact stream is filtered map-side with
-  *     no shuffle;
-  *   - cross-batch dedup: left-anti join on the PK — at scale this is
-  *     the only correct general idempotent append (the target's PK set
-  *     can be arbitrarily large), and AQE picks broadcast vs. shuffled
-  *     anti join by runtime size.
+  * The append path ([[appendIdempotent]], [[append]]) is the
+  * primary-key (PK) anti-join alone ([[notInTarget]]): the batch, deduped
+  * on the PK, keeps the rows whose PK the target lacks. At scale this is
+  * the only correct general idempotent append (the target's PK set can be
+  * arbitrarily large), and AQE picks a broadcast or shuffled join by
+  * runtime size.
+  *
+  * The watermark helpers ([[highWaterMarks]], [[newerThanWatermark]])
+  * are not on that path. They express A7's per-key high-water mark as
+  * ONE hash aggregate over the target (vs. the reference's one SELECT
+  * round-trip per symbol, `main_parallel.py:206-218`), broadcast so the
+  * incoming fact stream is filtered map-side; a watermark filter alone
+  * would drop late bars the anti-join keeps.
   *
   * The order-dependent early-break variant (A8, `main.py:137-140`) is
   * deliberately NOT reproduced — SURVEY.md §7.1 decision 2.
@@ -52,10 +55,23 @@ object Incremental {
     * idempotency.
     */
   def notInTarget(incoming: DataFrame, target: DataFrame, pk: Seq[String]): DataFrame =
+    marked(incoming, target, pk).where(col("__fresh"))
+      .select(incoming.columns.map(col): _*)
+
+  /** [[notInTarget]] as a flag instead of a filter, so a count over the
+    * result sees every offered row: one row per distinct incoming PK
+    * (within-batch duplicates keep the first row, as `dropDuplicates`
+    * does), with `__n`, the incoming rows it stands for, and `__fresh`,
+    * true when the row is to be appended.
+    */
+  private def marked(incoming: DataFrame, target: DataFrame, pk: Seq[String]): DataFrame = {
+    val rest = incoming.columns.filterNot(pk.contains).map(c => first(col(c)).as(c))
     incoming
-      .where(pk.map(col(_).isNotNull).reduce(_ && _))
-      .dropDuplicates(pk)
-      .join(target.select(pk.map(col): _*), pk, "left_anti")
+      .groupBy(pk.map(col): _*)
+      .agg(count(lit(1)).as("__n"), rest.toSeq: _*)
+      .join(target.select(pk.map(col): _*).withColumn("__hit", lit(true)), pk, "left")
+      .withColumn("__fresh", pk.map(col(_).isNotNull).reduce(_ && _) && col("__hit").isNull)
+  }
 
   /** Incremental aggregate maintenance: merge partial aggregate STATES
     * instead of recomputing from raw history — the materialized-view
@@ -160,18 +176,13 @@ object Incremental {
       .unionByName(merged)
   }
 
+  /** Rows one append saw (`offered`) and rows it wrote (`inserted`). */
+  final case class Appended(offered: Long, inserted: Long)
+
   /** Idempotent append of `incoming` into the parquet table at `path`
     * (creating it with `schema` if absent). Returns rows inserted —
     * re-running with the same batch inserts 0 (the reference's observed
-    * behavior on its second run, BASELINE.md).
-    *
-    * `partitionBy` columns produce hive-style directory partitioning:
-    * point/range predicates on them (the reference's
-    * `WHERE company_symbol = ?` access pattern, B2) prune whole
-    * partitions at planning time instead of scanning the table.
-    *
-    * Single-writer assumption, like the reference's read-then-insert
-    * (SURVEY.md §7.5.1).
+    * behavior on its second run, BASELINE.md). See [[append]].
     */
   def appendIdempotent(
       spark: SparkSession,
@@ -179,19 +190,72 @@ object Incremental {
       incoming: DataFrame,
       pk: Seq[String],
       schema: StructType,
-      partitionBy: Seq[String] = Nil): Long = {
-    val target = Catalog.readOrEmpty(spark, path, schema)
-    val fresh = notInTarget(incoming, target, pk)
-      .select(schema.fieldNames.map(col): _*)
-      .cache()
-    try {
-      val n = fresh.count()
-      if (n > 0) {
-        val w = fresh.write.mode("append")
-        (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-          .parquet(path)
-      }
-      n
-    } finally fresh.unpersist()
+      partitionBy: Seq[String] = Nil): Long =
+    append(spark, path, incoming, pk, schema, partitionBy).inserted
+
+  /** [[appendIdempotent]], also reporting the rows `incoming` offered.
+    *
+    * `partitionBy` columns produce hive-style directory partitioning:
+    * point/range predicates on them (the reference's
+    * `WHERE company_symbol = ?` access pattern, B2) prune whole
+    * partitions at planning time instead of scanning the table. The
+    * rows are repartitioned on those columns before the write, so one
+    * append adds exactly one data file per partition value it inserts
+    * into, and none when it inserts nothing.
+    *
+    * A partitioned append is ONE query, the write itself, and caches
+    * nothing: both counts come from an [[Observation]] recorded while the
+    * write runs.
+    * It sits in the write's last stage, so the already-present rows cross
+    * the repartition too and are filtered out after it: AQE replaces a
+    * stage whose output turns out empty (as in a batch that inserts
+    * nothing) by an empty relation, and an observation inside that stage
+    * would be lost with it.
+    *
+    * An unpartitioned target counts first and writes only when something
+    * is fresh: Spark writes an empty part file for an empty unpartitioned
+    * append, so a no-op batch would otherwise add one file per run.
+    *
+    * Single-writer assumption, like the reference's read-then-insert
+    * (SURVEY.md §7.5.1).
+    */
+  def append(
+      spark: SparkSession,
+      path: String,
+      incoming: DataFrame,
+      pk: Seq[String],
+      schema: StructType,
+      partitionBy: Seq[String] = Nil): Appended = {
+    val rows = marked(incoming, Catalog.readOrEmpty(spark, path, schema), pk)
+    val counts = Seq(
+      "offered" -> coalesce(sum(col("__n")), lit(0L)),
+      "inserted" -> count(when(col("__fresh"), 1)))
+    def fresh(df: DataFrame) = df.where(col("__fresh")).select(schema.fieldNames.map(col): _*)
+    if (partitionBy.isEmpty) {
+      val c = rows.select(counts.map(_._2): _*).first()
+      val appended = Appended(c.getLong(0), c.getLong(1))
+      if (appended.inserted > 0) fresh(rows).write.mode("append").parquet(path)
+      appended
+    } else {
+      val Seq(offered, inserted) =
+        observedWrite(rows.repartition(partitionBy.map(col): _*), counts: _*) {
+          fresh(_).write.mode("append").partitionBy(partitionBy: _*).parquet(path)
+        }
+      Appended(offered, inserted)
+    }
+  }
+
+  /** Runs `write` over `df` and returns the named counts, evaluated by an
+    * [[Observation]] inside the write job rather than by a second scan.
+    * The counts see `df` as given, before anything `write` adds on top.
+    */
+  private[graft] def observedWrite(df: DataFrame, counts: (String, Column)*)(
+      write: DataFrame => Unit): Seq[Long] = {
+    val o = Observation()
+    val named = counts.map { case (n, c) => c.as(n) }
+    write(df.observe(o, named.head, named.tail: _*))
+    val got = o.get
+    require(got.nonEmpty, "the write's plan lost its observed counts")
+    counts.map { case (n, _) => got(n).asInstanceOf[Long] }
   }
 }

@@ -1,6 +1,7 @@
 package graft.sink
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.load.Incremental
 
@@ -39,16 +40,12 @@ final class JdbcSink(
       .select(pk.map(p => org.apache.spark.sql.functions.col(p).as(p)): _*)
 
   /** Append `rows`, skipping any whose PK already exists in the target.
-    * Returns rows actually written.
+    * Returns rows actually written, counted inside the one write job. An
+    * empty append writes nothing, so there is no count-first path.
     */
-  def appendIdempotent(rows: DataFrame): Long = {
-    val fresh = Incremental.notInTarget(rows, existingPks(), pk).cache()
-    try {
-      val n = fresh.count()
-      if (n > 0) append(fresh)
-      n
-    } finally { fresh.unpersist(); () }
-  }
+  def appendIdempotent(rows: DataFrame): Long =
+    Incremental.observedWrite(Incremental.notInTarget(rows, existingPks(), pk),
+      "rows" -> count(lit(1)))(append).head
 
   /** Concurrent-writer-safe idempotent append — the staging-table +
     * transactional `INSERT … WHERE NOT EXISTS` route the single-writer

@@ -72,6 +72,42 @@ class IncrementalSpec extends SparkSpec {
       schema, partitionBy = Seq("sym")) == 0)
   }
 
+  test("an append inserting zero rows leaves the data-file list unchanged, partitioned or not") {
+    val empty = Seq.empty[(String, Int, Double)].toDF("sym", "d", "v")
+    val batch = Seq(("A", 1, 1.0), ("A", 2, 2.0), ("B", 1, 3.0)).toDF("sym", "d", "v")
+    Seq(Nil, Seq("sym")).foreach { parts =>
+      val base = Files.createTempDirectory("graft_noop_spec").toString + "/t"
+      def append(df: org.apache.spark.sql.DataFrame) =
+        Incremental.append(spark, base, df, Seq("sym", "d"), schema, parts)
+      assert(append(empty) == Incremental.Appended(0, 0), s"partitionBy $parts")
+      assert(IncrementalSpec.dataFiles(base).isEmpty, s"partitionBy $parts")
+      assert(append(batch) == Incremental.Appended(3, 3), s"partitionBy $parts")
+      val before = IncrementalSpec.dataFiles(base)
+      assert(before.nonEmpty)
+      assert(append(batch) == Incremental.Appended(3, 0), s"partitionBy $parts")
+      assert(append(empty) == Incremental.Appended(0, 0), s"partitionBy $parts")
+      assert(IncrementalSpec.dataFiles(base) == before, s"partitionBy $parts")
+    }
+  }
+
+  test("a partitioned append writes exactly one data file per partition value") {
+    val base = Files.createTempDirectory("graft_onefile_spec").toString + "/t"
+    def batch(days: Range, syms: Seq[String]) =
+      (for (s <- syms; d <- days) yield (s, d, d.toDouble)).toDF("sym", "d", "v")
+        .repartition(8) // every symbol's rows spread over several tasks
+    def append(df: org.apache.spark.sql.DataFrame) =
+      Incremental.appendIdempotent(spark, base, df, Seq("sym", "d"), schema,
+        partitionBy = Seq("sym"))
+    def filesPer(sym: String) =
+      IncrementalSpec.dataFiles(base).count(_.startsWith(s"sym=$sym/"))
+    assert(append(batch(1 to 40, Seq("A", "B", "C"))) == 120)
+    assert(Seq("A", "B", "C").map(filesPer) == Seq(1, 1, 1))
+    // an overlapping batch touching two symbols adds one file to each
+    assert(append(batch(31 to 60, Seq("A", "B"))) == 40)
+    assert(Seq("A", "B", "C").map(filesPer) == Seq(2, 2, 1))
+    assert(spark.read.schema(schema).parquet(base).count() == 160)
+  }
+
   test("snapshotDiff classifies inserts, deletes, and updates") {
     val old = Seq((1L, "a", 10.0), (2L, "b", 20.0), (3L, "c", 30.0))
       .toDF("id", "name", "v")
@@ -226,6 +262,24 @@ class IncrementalSpec extends SparkSpec {
         Seq(CorpusStats.totalsPartial(seen, toks)))
       assert(stats(foldedDf, foldedTot) === stats(fullDf, fullTot),
         s"fold diverged from recompute after batch $i")
+    }
+  }
+}
+
+object IncrementalSpec {
+
+  /** The parquet data files under `root`, as sorted relative paths. */
+  def dataFiles(root: String): Seq[String] = {
+    val r = java.nio.file.Paths.get(root)
+    if (!Files.exists(r)) Nil
+    else {
+      val s = Files.walk(r)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala
+          .filter(p => Files.isRegularFile(p) && p.getFileName.toString.endsWith(".parquet"))
+          .map(p => r.relativize(p).toString).toSeq.sorted
+      } finally s.close()
     }
   }
 }
