@@ -525,19 +525,22 @@ object Dedup {
 
   // --------------------------------------------------- group formation
 
-  /** Consolidate near-duplicate PAIRS into duplicate GROUPS: connected
-    * components by iterative min-label propagation. Each round, every
-    * node adopts the smallest label among itself and its neighbors;
-    * convergence takes O(component diameter) rounds (near-dup clusters
-    * are shallow — chains longer than a few hops are rare), checked by
-    * an exact changed-label count per round and capped by `maxIters`.
+  /** Consolidate near-duplicate PAIRS into duplicate GROUPS: the
+    * connected components of the pair graph.
     *
     * Input: (id_a, id_b) pair frame. Output: (id, group_id) for every
     * id appearing in a pair, where group_id is the component's minimum
     * id — the deterministic canonical representative.
     *
-    * Scale shape: each round is one shuffle join on the node id + one
-    * aggregate; nothing materializes the transitive closure.
+    * Two paths, chosen by input size: up to `driverThreshold` mirrored
+    * edges with integral ids, a driver-side union-find; otherwise
+    * [[graft.graph.GraphOps.connectedComponents]]'s min-label loop
+    * with `maxIters` as its round cap. That loop needs O(component
+    * diameter) rounds (near-dup clusters are shallow — chains longer
+    * than a few hops are rare) and fails loudly at the cap instead of
+    * returning unconverged groups. Each of its rounds is one shuffle
+    * join on the node id + one aggregate; nothing materializes the
+    * transitive closure.
     */
   def duplicateGroups(
       pairs: DataFrame,
@@ -583,38 +586,18 @@ object Dedup {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       edges.unpersist()
-      return parent.keys.toSeq.sorted
+      parent.keys.toSeq.sorted
         .map(id => (id, find(id))).toDF("id", "group_id")
+    } else {
+      // connectedComponents mirrors its input, so pass one orientation
+      // of the mirrored edges; its result is checkpointed, so the edges
+      // cache can go
+      val out = graft.graph.GraphOps.connectedComponents(
+          edges.where(col("src") <= col("dst")), maxIters)
+        .select(col("node").as("id"), col("label").as("group_id"))
+      edges.unpersist(false)
+      out
     }
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("label", col("id"))
-      .cache()
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIters) {
-      val neighborLabels = edges
-        .join(labels.withColumnRenamed("id", "dst")
-          .withColumnRenamed("label", "nlabel"), Seq("dst"))
-        .select(col("src").as("id"), col("nlabel"))
-      val next = labels
-        .unionByName(neighborLabels.withColumnRenamed("nlabel", "label"))
-        .groupBy("id").agg(min(col("label")).as("label"))
-        .cache()
-      val changed = next.join(labels.withColumnRenamed("label", "old"), Seq("id"))
-        .where(col("label") =!= col("old")).count()
-      labels.unpersist()
-      labels = next
-      converged = changed == 0
-      iter += 1
-    }
-    // Labels are already cached+materialized by the convergence counts;
-    // checkpoint the (tiny) result so both caches can be dropped without
-    // re-exposing the full upstream lineage to later consumers.
-    val out = labels.select(col("id"), col("label").as("group_id"))
-      .localCheckpoint(true)
-    labels.unpersist(false)
-    edges.unpersist(false)
-    out
   }
 
   // ------------------------------------------------- embedding near-dup

@@ -13,13 +13,20 @@ import org.apache.spark.sql.functions._
   * `maxRounds` rounds of the same recurrence, and a round applied past
   * the fixpoint is the identity, so the early exit here and the full
   * unroll agree whenever the state converges within the cap.
+  * [[converge]] enforces that condition: it returns only a fixpoint and
+  * fails loudly at the cap, so no caller handles convergence itself.
   */
 object Fixpoint {
 
   /** Iterate `step` from `init` until a stride of `stride` rounds leaves
     * the state unchanged, running `step` at most `maxRounds` times (the
-    * last stride is shortened to fit). Returns the final state and
-    * whether the loop converged, i.e. its last stride changed nothing.
+    * last stride is shortened to fit), and return the fixpoint.
+    *
+    * Cap: if the last stride still changed the state when `maxRounds`
+    * steps are used up, one more `step` is compared to the state; the
+    * state is returned when that step changes nothing, and otherwise an
+    * `IllegalStateException` naming `label` and the cap is thrown. A
+    * loop that converges before its cap runs no extra job.
     *
     * Materialization: `init` and the state after every stride are
     * `localCheckpoint`ed, so round k's plan never replays rounds
@@ -30,8 +37,8 @@ object Fixpoint {
     * new state to the old on `keys`, comparing every other column
     * null-safely — a row whose key the old state lacks is a change.
     */
-  def converge(init: DataFrame, keys: Seq[String], maxRounds: Int,
-      stride: Int = 1)(step: DataFrame => DataFrame): (DataFrame, Boolean) = {
+  def converge(label: String, init: DataFrame, keys: Seq[String],
+      maxRounds: Int, stride: Int = 1)(step: DataFrame => DataFrame): DataFrame = {
     var state = init.localCheckpoint(true)
     var rounds = 0
     var changed = true
@@ -43,7 +50,10 @@ object Fixpoint {
       state = next
       rounds += n
     }
-    (state, !changed)
+    if (changed && differs(step(state), state, keys))
+      throw new IllegalStateException(
+        s"$label: no fixpoint within maxRounds=$maxRounds — raise the cap")
+    state
   }
 
   private def differs(next: DataFrame, prev: DataFrame,

@@ -217,10 +217,12 @@ object GraphOps {
     ranks
   }
 
-  /** Connected components by min-label propagation to fixpoint, capped
-    * at `maxRounds` (the round contract is [[Fixpoint.converge]]'s; the
-    * fixture graphs converge in ≤11). Each round is one join + one
-    * min-aggregate on the neighbor key. Rounds needed = component
+  /** Connected components by min-label propagation to fixpoint; fails
+    * loudly at the cap `maxRounds` ([[Fixpoint.converge]]). Measured
+    * changing rounds at sf 0.001/0.01/0.1: g02 3/10/7 of 12, c05
+    * 1/1/1 of 8; c04 and c11 (media corpora that do not grow with sf)
+    * 1, 1 and 4 across the three media kinds, of 12. Each round is one
+    * join + one min-aggregate on the neighbor key. Rounds needed = component
     * eccentricity of its min node — fine for the short-diameter
     * components of co-occurrence and domain graphs; a 2^rounds
     * alternative (large-star/small-star, Kiveris '14) slots into the
@@ -233,7 +235,8 @@ object GraphOps {
       .localCheckpoint(true)
     val init = both.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-    Fixpoint.converge(init, Seq("node"), maxRounds) { labels =>
+    Fixpoint.converge("connectedComponents", init, Seq("node"),
+        maxRounds) { labels =>
       // each node's own label rides the same union as its neighbors' —
       // min(self, neighbors) in ONE keyed aggregate, no left join
       both
@@ -241,7 +244,7 @@ object GraphOps {
         .select(col("dst").as("node"), col("label"))
         .unionAll(labels)
         .groupBy(col("node")).agg(min(col("label")).as("label"))
-    }._1
+    }
   }
 
   /** Synchronous label propagation (Raghavan et al. 2007) for
@@ -486,10 +489,9 @@ object GraphOps {
     * reproducible at any partitioning (ties inside the window leave
     * the H-index invariant: equal values occupy contiguous ranks and
     * the count of positions with value ≥ rank does not depend on
-    * their order). Iterates to fixpoint with early exit, capped at
-    * `maxRounds` (the round contract is [[Fixpoint.converge]]'s;
-    * convergence spec-asserted at fixture scale: 21/10/5 rounds at
-    * sf 0.001/0.01/0.1).
+    * their order). Iterates to fixpoint with early exit and fails
+    * loudly at the cap `maxRounds` ([[Fixpoint.converge]]); g12
+    * measured 20/9/4 changing rounds of 24 at sf 0.001/0.01/0.1.
     *
     * Returns (node, coreness, degree).
     */
@@ -502,7 +504,7 @@ object GraphOps {
       .agg(count(lit(1)).as("degree"))
       .localCheckpoint(true)
     val w = Window.partitionBy(col("node")).orderBy(col("__nh").desc)
-    val (core, _) = Fixpoint.converge(
+    val core = Fixpoint.converge("coreness",
         deg.select(col("node"), col("degree").as("h")), Seq("node"),
         maxRounds) { h =>
       val nb = both
@@ -529,8 +531,8 @@ object GraphOps {
     * frontier is bit-reproducible at any partitioning. Unreachable
     * (probe, node) pairs simply never materialize a row, so a round
     * that reaches a new node adds a row — a change under
-    * [[Fixpoint.converge]], whose round contract applies (measured
-    * 4/11/5 rounds at sf 0.001/0.01/0.1, convergence spec-asserted).
+    * [[Fixpoint.converge]], which fails loudly at the cap `maxRounds`
+    * (g13 measured 3/10/4 changing rounds of 16 at sf 0.001/0.01/0.1).
     *
     * `edges(src, dst, cost)` is treated as undirected (mirrored
     * internally). No overflow: cost ≤ 10⁶ per edge and paths are
@@ -544,7 +546,8 @@ object GraphOps {
       .localCheckpoint(true)
     val init = probes.select(col("probe"), col("probe").as("node"),
       lit(0L).as("dist"))
-    Fixpoint.converge(init, Seq("probe", "node"), maxRounds) { dist =>
+    Fixpoint.converge("shortestPaths", init, Seq("probe", "node"),
+        maxRounds) { dist =>
       both
         .join(dist.withColumnRenamed("node", "src"), "src")
         .select(col("probe"), col("dst").as("node"),
@@ -552,7 +555,7 @@ object GraphOps {
         .unionAll(dist.select(col("probe"), col("node"), col("dist")))
         .groupBy(col("probe"), col("node"))
         .agg(min(col("dist")).as("dist"))
-    }._1
+    }
   }
 
   /** DIRECTED sequence edges from `lineitem`: src part immediately
@@ -612,10 +615,12 @@ object GraphOps {
     * path witnessing mutual reachability between two active nodes
     * lies entirely inside their own SCC (each intermediate node is
     * mutually reachable with both endpoints), never through a settled
-    * one. Empirically the fixture graphs settle in 5/6/9 outer rounds
-    * at sf 0.001/0.01/0.1 (the verdict-grade convergence measurement
-    * lives in GraphSpec); both caps FAIL LOUDLY when exceeded — the
-    * BhMaxM discipline — rather than return a wrong partition.
+    * one. Measured on g11's graph at sf 0.001/0.01/0.1, after the trim
+    * prepass: 1/3/2 settle rounds of `maxOuter` = 16, the longest
+    * propagation changing for 17/18/23 rounds of `maxInner` = 36. Both
+    * caps fail loudly when exceeded (the propagation's inside
+    * [[Fixpoint.converge]]) — the BhMaxM discipline — rather than
+    * return a wrong partition.
     *
     * A trim prepass runs first: nodes with zero in- or out-degree lie
     * on no cycle, so they are peeled iteratively as singleton SCCs
@@ -629,7 +634,7 @@ object GraphOps {
     * (batched `innerStride` rounds per materialization to amortize
     * job launch); min-folds are order-free, so the result is
     * bit-reproducible at any partitioning — the g02 discipline. No
-    * driver state beyond the fixpoint flag.
+    * driver state beyond the round counters.
     */
   def stronglyConnectedComponents(edges0: DataFrame,
       maxOuter: Int = 16, maxInner: Int = 36): DataFrame = {
@@ -698,11 +703,9 @@ object GraphOps {
           .groupBy(col("node")).agg(min(col("f")).as("f"),
             min(col("b")).as("b"))
       }
-      val (st, converged) = Fixpoint.converge(
+      val st = Fixpoint.converge("stronglyConnectedComponents propagation",
         nodes.select(col("node"), col("node").as("f"), col("node").as("b")),
         Seq("node"), maxInner, innerStride)(propagate)
-      require(converged,
-        s"scc: propagation exceeded maxInner=$maxInner — raise the cap")
       val settled = st.where(col("f") === col("b"))
         .select(col("node"), col("f").as("scc_id"))
       // st is checkpointed, so the growing union stays shallow (≤

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Incremental, idempotent loading — the reference's high-water-mark +
-  * `ON CONFLICT DO NOTHING` semantics (SURVEY.md §2 A7/B1/B4/B6),
+  * `ON CONFLICT DO NOTHING` semantics (SURVEY.md §2 A7/B4/B6),
   * re-expressed as set operations so they are order-independent and
   * shuffle-parallel.
   *
@@ -16,35 +16,10 @@ import org.apache.spark.sql.types.StructType
   * arbitrarily large), and AQE picks a broadcast or shuffled join by
   * runtime size.
   *
-  * The watermark helpers ([[highWaterMarks]], [[newerThanWatermark]])
-  * are not on that path. They express A7's per-key high-water mark as
-  * ONE hash aggregate over the target (vs. the reference's one SELECT
-  * round-trip per symbol, `main_parallel.py:206-218`), broadcast so the
-  * incoming fact stream is filtered map-side; a watermark filter alone
-  * would drop late bars the anti-join keeps.
-  *
   * The order-dependent early-break variant (A8, `main.py:137-140`) is
   * deliberately NOT reproduced — SURVEY.md §7.1 decision 2.
   */
 object Incremental {
-
-  /** B1: per-key high-water marks, one aggregate for all keys. */
-  def highWaterMarks(target: DataFrame, keyCol: String, tsCol: String): DataFrame =
-    target.groupBy(col(keyCol)).agg(max(col(tsCol)).as("__hwm"))
-
-  /** A7 (order-independent): keep incoming rows strictly newer than the
-    * target's watermark for their key; keys unseen in the target pass.
-    * The watermark frame (one row per key) is broadcast.
-    */
-  def newerThanWatermark(
-      incoming: DataFrame,
-      target: DataFrame,
-      keyCol: String,
-      tsCol: String): DataFrame =
-    incoming
-      .join(broadcast(highWaterMarks(target, keyCol, tsCol)), Seq(keyCol), "left")
-      .where(col("__hwm").isNull || col(tsCol) > col("__hwm"))
-      .drop("__hwm")
 
   /** B6 within-batch + B4 cross-batch: at-most-once on the PK.
     *

@@ -5433,8 +5433,9 @@ object Corpus {
     * losslessness (blocked ≡ brute force) moved to a named GraphSpec
     * test over the shipped fixtures — structural parity in the
     * oracle, semantic completeness in the spec. The Spark loop
-    * early-exits on convergence; converged rounds are identity, so
-    * any unroll ≥ the convergence round matches.
+    * early-exits on convergence and fails loudly at the cap;
+    * converged rounds are identity, so any unroll ≥ the convergence
+    * round matches.
     *
     * Scale shape: matching runs on DISTINCT NAMES, never on rows —
     * records sharing a name are by definition one entity (JW(x,x)=1
@@ -5454,11 +5455,11 @@ object Corpus {
     * back onto records, and survivorship + rollup are one keyed
     * aggregate each plus a broadcast-sized name join.
     */
-  /** c05's name-level match graph — factored so GraphSpec can assert
-    * the closure converges within [[ErRounds]] on each shipped
-    * fixture (the oracle unrolls EXACTLY ErRounds; a future fixture
-    * with a longer min-label chain must fail a named test, not the
-    * hash compare).
+  /** c05's name-level match graph — factored so GraphSpec can run the
+    * closure at [[ErRounds]] on each shipped fixture (the oracle
+    * unrolls EXACTLY ErRounds, and the Spark closure fails loudly at
+    * that cap, so a future fixture with a longer min-label chain fails
+    * a named test, not the hash compare).
     */
   private[graft] def c05NamePairs(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.JaroWinklerSimilarity
@@ -5528,6 +5529,10 @@ object Corpus {
         col("n_lineitems"), col("total_qty_e2"))
   }
 
+  /** c05's closure cap, shared by the Spark loop (which fails loudly
+    * when it is reached) and the oracle's unroll; measured 1/1/1
+    * changing rounds at sf 0.001/0.01/0.1.
+    */
   private[graft] val ErRounds = 8
 
   /** The oracle mirrors the Spark plan's NAME-LEVEL shape since round
@@ -6807,7 +6812,10 @@ object Corpus {
     * fixtures, so the query is self-contained and order-independent
     * of the m-series) feed the distributed connected-components
     * operator ([[graft.graph.GraphOps.connectedComponents]] — the
-    * g02 loop reused as a library piece), each group keeps its min-id
+    * g02 loop reused as a library piece, failing loudly at its 12-round
+    * cap; the media corpora do not grow with sf, and their closures
+    * change for 1, 1 and 4 rounds across the three kinds at every sf
+    * measured, 0.001 to 0.1), each group keeps its min-id
     * canonical, and the release manifest reports per-kind kept /
     * dropped / duplicate-group counts. The oracle replays pair
     * generation brute-force from the dumps and the closure as a
@@ -6947,9 +6955,10 @@ object Corpus {
     *
     * Scale shape: each kind's corpus is decoded ONCE into (hash,
     * size) rows; pair generation is banded (never all-pairs), the
-    * grouping is the distributed CC loop, and everything after the
-    * kept frame runs on (id, kind, 3×BIGINT) rows — media bytes never
-    * travel past the hash stage.
+    * grouping is the distributed CC loop (c04's 12-round cap, failing
+    * loudly there; the same 1, 1 and 4 changing rounds per kind), and
+    * everything after the kept frame runs on (id, kind, 3×BIGINT) rows
+    * — media bytes never travel past the hash stage.
     */
   val c11_media_mix_release: Q = (s, _) => {
     import graft.multimodal.MultiModal

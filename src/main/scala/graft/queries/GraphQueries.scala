@@ -21,7 +21,7 @@ import graft.graph.GraphOps
 object GraphQueries {
 
   private val PrIters = 6
-  private val CcRounds = 12
+  private[graft] val CcRounds = 12
   private val MinSupport = 2
   private val Hops = 3
 
@@ -78,11 +78,12 @@ object GraphQueries {
   }
 
   /** g02: connected components of the support≥2 co-purchase graph by
-    * min-label propagation — Spark iterates to fixpoint (capped at
-    * [[CcRounds]]); the oracle unrolls exactly [[CcRounds]] rounds.
-    * Once converged every further round is the identity, so the two
-    * agree whenever convergence happens within the cap (the sf0.01
-    * graph converges in 11; a spec asserts the cap holds).
+    * min-label propagation — Spark iterates to fixpoint and fails
+    * loudly at the cap [[CcRounds]]; the oracle unrolls exactly
+    * [[CcRounds]] rounds. Once converged every further round is the
+    * identity, so the two agree whenever Spark returns (measured
+    * 3/10/7 changing rounds at sf 0.001/0.01/0.1; a spec runs the cap
+    * at sf0.01).
     */
   val g02_components: Q = (s, dir) => {
     val eu = GraphOps.copurchaseEdgesUndirected(t(s, dir, "lineitem"), MinSupport)
@@ -527,18 +528,18 @@ object GraphQueries {
       |  COUNT(*) OVER (PARTITION BY scc_id) AS scc_size
       |FROM scc""".stripMargin
 
-  private val KcRounds = 24
+  private[graft] val KcRounds = 24
 
   /** g12: k-core decomposition of the support≥2 co-purchase graph —
     * per-part coreness by the distributed h-index iteration
     * ([[GraphOps.coreness]]; the fixpoint equals peeling coreness,
     * spec-proven against a driver-side peeling reference). The oracle
     * unrolls EXACTLY [[KcRounds]] h-index rounds as materialized CTEs
-    * (the g02 CcRounds contract — convergence within the cap is
-    * spec-asserted at both oracle scales: 21 rounds at sf0.001, 10 at
-    * sf0.01), each round one window rank + one max per node, integer
-    * state throughout, so the hash match certifies round-for-round
-    * equivalence of the whole recurrence.
+    * (the g02 CcRounds contract — Spark fails loudly at the cap;
+    * measured 20/9/4 changing rounds at sf 0.001/0.01/0.1, and a spec
+    * runs the cap at both oracle scales), each round one window rank
+    * + one max per node, integer state throughout, so the hash match
+    * certifies round-for-round equivalence of the whole recurrence.
     */
   val g12_kcore: Q = (s, dir) => {
     val eu = GraphOps.copurchaseEdgesUndirected(t(s, dir, "lineitem"), MinSupport)
@@ -568,7 +569,7 @@ object GraphQueries {
        |FROM h$KcRounds f JOIN h0 ON h0.node = f.node""".stripMargin
   }
 
-  private val SpRounds = 16
+  private[graft] val SpRounds = 16
 
   /** g13: weighted shortest paths from the 5 smallest nodes of the
     * support≥2 co-purchase graph — the DISTANCE face g04's reach
@@ -577,9 +578,9 @@ object GraphQueries {
     * = cheaper hop), distances exact BIGINTs through the synchronous
     * Bellman–Ford relaxation ([[GraphOps.shortestPaths]]); the oracle
     * unrolls EXACTLY [[SpRounds]] relaxation rounds as materialized
-    * CTEs (the g02 contract — measured convergence 4/11 rounds at the
-    * two oracle scales, spec-asserted), so the hash match certifies
-    * the whole recurrence. Unreachable pairs carry no row.
+    * CTEs (the g02 contract — Spark fails loudly at the cap; measured
+    * 3/10/4 changing rounds at sf 0.001/0.01/0.1), so the hash match
+    * certifies the whole recurrence. Unreachable pairs carry no row.
     */
   val g13_shortest_paths: Q = (s, dir) => {
     val ew = GraphOps.copurchaseEdgesWeighted(t(s, dir, "lineitem"), MinSupport)

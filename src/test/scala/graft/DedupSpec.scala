@@ -228,15 +228,30 @@ class DedupSpec extends SparkSpec {
   }
 
   test("duplicateGroups: chains collapse to min-id components (both paths agree)") {
-    // components: {1,2,3,7} (chain 1-2, 2-3, 3-7), {5,6}
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 7L), (5L, 6L)).toDF("id_a", "id_b")
-    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 5L -> 5L, 6L -> 5L)
+    // components: {1,2,3,7} (chain 1-2, 2-3, 3-7), {5,6}, and the
+    // chain 16-15-…-10, whose far end needs 6 min-label rounds
+    val chain = (10L until 16L).map(i => (i + 1, i))
+    val pairs = (Seq((1L, 2L), (2L, 3L), (3L, 7L), (5L, 6L)) ++ chain)
+      .toDF("id_a", "id_b")
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 7L -> 1L, 5L -> 5L, 6L -> 5L) ++
+      (10L to 16L).map(_ -> 10L)
     val driverPath = Dedup.duplicateGroups(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val iterativePath = Dedup.duplicateGroups(pairs, driverThreshold = 0)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(driverPath == expected)
     assert(iterativePath == expected)
+  }
+
+  test("duplicateGroups: the iterative path fails loudly on a chain longer than maxIters") {
+    // 1-2-…-8 needs 7 rounds to carry label 1 to node 8; at a cap of 3
+    // the loop must throw rather than return unconverged groups
+    val pairs = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.duplicateGroups(pairs, maxIters = 3, driverThreshold = 0)
+    }
+    assert(e.getMessage.contains("connectedComponents"), e.getMessage)
+    assert(e.getMessage.contains("maxRounds=3"), e.getMessage)
   }
 
   test("embedding near-dups: brute force and LSH both find the planted duplicate") {

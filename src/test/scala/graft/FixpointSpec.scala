@@ -15,24 +15,38 @@ class FixpointSpec extends SparkSpec {
   private def rows(df: DataFrame): Set[(Long, Long)] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSet
 
-  test("a state still changing at the cap returns converged = false") {
+  private def incr(s: DataFrame): DataFrame =
+    s.select(col("k"), (col("v") + 1L).as("v"))
+
+  test("a state still changing at the cap throws, naming the operator and its cap") {
     val init = Seq((1L, 0L), (2L, 0L)).toDF("k", "v")
-    val (out, converged) =
-      Fixpoint.converge(init, Seq("k"), maxRounds = 3)(
-        _.select(col("k"), (col("v") + 1L).as("v")))
-    assert(!converged)
-    assert(rows(out) === Set(1L -> 3L, 2L -> 3L))
+    val e = intercept[IllegalStateException] {
+      Fixpoint.converge("incr", init, Seq("k"), maxRounds = 3)(incr)
+    }
+    assert(e.getMessage.contains("incr"), e.getMessage)
+    assert(e.getMessage.contains("maxRounds=3"), e.getMessage)
+  }
+
+  test("a state that reaches its fixpoint on exactly step maxRounds does not throw") {
+    var steps = 0
+    val init = Seq((1L, 0L)).toDF("k", "v")
+    val out = Fixpoint.converge("climb", init, Seq("k"), maxRounds = 3) { s =>
+      steps += 1
+      s.select(col("k"), least(col("v") + 1L, lit(3L)).as("v"))
+    }
+    // 0 → 1 → 2 → 3 changes on every step up to the cap; the one
+    // confirming step past it is the identity
+    assert(steps === 4)
+    assert(rows(out) === Set(1L -> 3L))
   }
 
   test("a state that stops changing converges and then stops stepping") {
     var steps = 0
     val init = Seq((1L, 0L), (2L, 5L)).toDF("k", "v")
-    val (out, converged) =
-      Fixpoint.converge(init, Seq("k"), maxRounds = 10) { s =>
-        steps += 1
-        s.select(col("k"), least(col("v") + 1L, lit(2L)).as("v"))
-      }
-    assert(converged)
+    val out = Fixpoint.converge("clamp", init, Seq("k"), maxRounds = 10) { s =>
+      steps += 1
+      s.select(col("k"), least(col("v") + 1L, lit(2L)).as("v"))
+    }
     // 0 → 1 → 2 changes twice; the third step is the identity
     assert(steps === 3)
     assert(rows(out) === Set(1L -> 2L, 2L -> 2L))
@@ -40,39 +54,47 @@ class FixpointSpec extends SparkSpec {
 
   test("a round that only adds a row with a new key counts as a change") {
     // every existing (k, v) is unchanged; the only difference is the
-    // new key 9 — the shortestPaths case of a newly reached node
+    // new key 9 — the shortestPaths case of a newly reached node. Seen
+    // as a change, the loop takes a second step to confirm the fixpoint.
+    var steps = 0
     val init = Seq((1L, 7L)).toDF("k", "v")
-    val grow = (s: DataFrame) =>
+    val out = Fixpoint.converge("grow", init, Seq("k"), 5) { s =>
+      steps += 1
       s.unionAll(Seq((9L, 7L)).toDF("k", "v")).distinct()
-    val (out, converged) = Fixpoint.converge(init, Seq("k"), 1)(grow)
-    assert(!converged)
+    }
+    assert(steps === 2)
     assert(rows(out) === Set(1L -> 7L, 9L -> 7L))
-    val (_, settled) = Fixpoint.converge(init, Seq("k"), 2)(grow)
-    assert(settled)
   }
 
   test("null values compare null-safely") {
     val init = Seq[(Long, Option[Long])]((1L, None), (2L, Some(3L)))
       .toDF("k", "v")
-    val (_, same) = Fixpoint.converge(init, Seq("k"), 2)(identity)
-    assert(same)
-    val (_, gained) = Fixpoint.converge(init, Seq("k"), 1)(
-      _.select(col("k"), coalesce(col("v"), lit(0L)).as("v")))
-    assert(!gained)
+    var same = 0
+    Fixpoint.converge("identity", init, Seq("k"), 2) { s => same += 1; s }
+    assert(same === 1)
+    // null → 0 is a change (a null-unsafe compare would miss it and
+    // stop after one step)
+    var gained = 0
+    val out = Fixpoint.converge("coalesce", init, Seq("k"), 5) { s =>
+      gained += 1
+      s.select(col("k"), coalesce(col("v"), lit(0L)).as("v"))
+    }
+    assert(gained === 2)
+    assert(rows(out) === Set(1L -> 0L, 2L -> 3L))
   }
 
-  test("with stride 2 and an odd maxRounds, step runs at most maxRounds times") {
+  test("stride 2, odd maxRounds: the loop takes maxRounds steps plus one confirming step") {
     Seq(1, 3, 5).foreach { maxRounds =>
       var steps = 0
       val init = Seq((1L, 0L)).toDF("k", "v")
-      val (out, converged) =
-        Fixpoint.converge(init, Seq("k"), maxRounds, stride = 2) { s =>
+      val e = intercept[IllegalStateException] {
+        Fixpoint.converge("incr", init, Seq("k"), maxRounds, stride = 2) { s =>
           steps += 1
-          s.select(col("k"), (col("v") + 1L).as("v"))
+          incr(s)
         }
-      assert(steps === maxRounds)
-      assert(!converged)
-      assert(rows(out) === Set(1L -> maxRounds.toLong))
+      }
+      assert(steps === maxRounds + 1)
+      assert(e.getMessage.contains(s"maxRounds=$maxRounds"), e.getMessage)
     }
   }
 }

@@ -15,18 +15,6 @@ class IncrementalSpec extends SparkSpec {
     StructField("d", IntegerType),
     StructField("v", DoubleType)))
 
-  test("newerThanWatermark keeps strictly-newer rows and passes unseen keys") {
-    val target = Seq(("A", 3, 1.0), ("A", 5, 1.0), ("B", 2, 1.0)).toDF("sym", "d", "v")
-    val incoming = Seq(
-      ("A", 5, 2.0), ("A", 6, 2.0),     // 5 = watermark -> dropped; 6 kept
-      ("B", 1, 2.0),                     // older -> dropped
-      ("C", 1, 2.0)                      // unseen key -> kept
-    ).toDF("sym", "d", "v")
-    val out = Incremental.newerThanWatermark(incoming, target, "sym", "d")
-      .select("sym", "d").collect().map(r => (r.getString(0), r.getInt(1))).toSet
-    assert(out == Set(("A", 6), ("C", 1)))
-  }
-
   test("appendIdempotent: re-running the same batch inserts zero; order-shuffled input is equivalent") {
     val base = Files.createTempDirectory("graft_inc_spec").toString + "/t"
     val batch = Seq(("A", 1, 1.0), ("A", 2, 2.0), ("A", 2, 99.0), ("B", 1, 3.0))

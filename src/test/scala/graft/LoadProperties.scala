@@ -9,8 +9,8 @@ import org.scalacheck.{Gen, Prop, Properties, Test => ScTest}
 import graft.analytics.Indicators
 import graft.load.Incremental
 
-/** Property-based checks (SURVEY.md §5): load idempotency, HWM ≡
-  * anti-join on duplicate-free histories, SMA ≡ brute force. Spark jobs
+/** Property-based checks (SURVEY.md §5): load idempotency, SMA ≡
+  * brute force and the fold/sketch algebras below. Spark jobs
   * per case are slow, so the per-property case count is small; the
   * generators still cover empty/duplicate/out-of-order shapes.
   */
@@ -42,22 +42,6 @@ object LoadProperties extends Properties("graft.load") {
       val n2 = Incremental.appendIdempotent(spark, path, batch, Seq("sym", "d"), schema)
       val distinctPk = rows.map(r => (r._1, r._2)).distinct.size
       n1 == distinctPk && n2 == 0
-    }
-
-  property("HWM filter ≡ PK anti-join when histories are duplicate-free") =
-    Prop.forAll(genRows, genRows) { (t0, i0 ) =>
-      val target = t0.distinctBy(r => (r._1, r._2)).toDF("sym", "d", "v")
-      val incoming = i0.distinctBy(r => (r._1, r._2)).toDF("sym", "d", "v")
-      // HWM semantics: strictly newer than the target's max per key.
-      val viaHwm = Incremental.newerThanWatermark(incoming, target, "sym", "d")
-        .select("sym", "d").collect().map(r => (r.getString(0), r.getInt(1))).toSet
-      // anti-join keeps new PKs even when older than the watermark — the
-      // two agree exactly on the rows above every key's watermark.
-      val maxPerKey = t0.groupBy(_._1).map { case (k, rs) => k -> rs.map(_._2).max }
-      val expected = i0.distinctBy(r => (r._1, r._2))
-        .filter(r => maxPerKey.get(r._1).forall(r._2 > _))
-        .map(r => (r._1, r._2)).toSet
-      viaHwm == expected
     }
 
   property("TopKPerKey ≡ rank window on arbitrary keyed data") =

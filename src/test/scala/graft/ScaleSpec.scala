@@ -19,6 +19,20 @@ class ScaleSpec extends SparkSpec {
     assert(plain.count(_.head == "hot") == 100)
   }
 
+  test("saltedJoin rejects a full join and a zero salt") {
+    val big = Seq(("k", 1)).toDF("k", "v")
+    val small = Seq(("k", 2)).toDF("k", "w")
+    // replicating the small side breaks right/full join semantics
+    val full = intercept[IllegalArgumentException] {
+      Scale.saltedJoin(big, small, "k", salt = 4, joinType = "full")
+    }
+    assert(full.getMessage.contains("supports inner/left joins, got full"))
+    val zero = intercept[IllegalArgumentException] {
+      Scale.saltedJoin(big, small, "k", salt = 0)
+    }
+    assert(zero.getMessage.contains("salt must be >= 1, got 0"))
+  }
+
   test("topNPerKey equals the plain rank-window formulation") {
     val df = (1 to 500).map(i => (s"k${i % 7}", i)).toDF("k", "v")
       .repartition(8)

@@ -63,6 +63,18 @@ class SqlSurfaceSpec extends SparkSpec {
     }
   }
 
+  test("graft_cosine on a wrong argument type fails analysis with its own type-check message") {
+    graft.functions.VectorExpressions.register(spark)
+    // spark.sql analyzes eagerly: the error surfaces before any job,
+    // not as a runtime cast error
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      spark.sql("SELECT graft_cosine('a', 'b')")
+    }
+    assert(e.getMessage.contains(
+      "graft_cosine requires two array<double> arguments, got string and string"),
+      e.getMessage)
+  }
+
   test("registerViews exposes the corpus and the graft SQL functions to spark.sql") {
     Tables.registerViews(spark, "/root/testdata/sf0.001")
     val n = spark.sql("SELECT COUNT(*) FROM lineitem WHERE l_quantity < 10")
