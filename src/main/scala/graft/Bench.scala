@@ -203,7 +203,8 @@ object Bench {
     // Spark-lineage change, diagnosable from the JSON alone only if the
     // runtime version rides along.
     val ver = spark.version
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreadJson,"failed":$failedJson,"noise_suspect":$noiseJson,"host":$hostJson,"sf":"$sfDir","spark_version":"$ver"}""")
+    val record = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreadJson,"failed":$failedJson,"noise_suspect":$noiseJson,"host":$hostJson,"sf":"$sfDir","spark_version":"$ver"}"""
+    println(record)
     // The per-query line above can exceed the driver's tail-capture
     // window (~70 entries); repeat the total on a FINAL compact line —
     // no per-query map — so a machine-readable number always survives.
@@ -211,13 +212,13 @@ object Bench {
     // ... and persist the FULL record to bench_total.json (cwd — the
     // driver invokes sbt from the repo root) so the number survives
     // even when stdout capture truncates both lines: read the file
-    // instead of parsing a tail.
-    try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("bench_total.json"),
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spreadJson,"failed":$failedJson,"noise_suspect":$noiseJson,"host":$hostJson,"sf":"$sfDir","spark_version":"$ver"}\n""")
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] bench_total.json write failed: ${e.getMessage}")
-    }
+    // instead of parsing a tail. Full runs only: a subset is no record.
+    if (only.isEmpty)
+      try java.nio.file.Files.writeString(
+        java.nio.file.Paths.get("bench_total.json"), record + "\n")
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] bench_total.json write failed: ${e.getMessage}")
+      }
     spark.stop()
   }
 }

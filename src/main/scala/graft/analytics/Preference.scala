@@ -3,6 +3,8 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.graph.Fixpoint
+
 /** Preference-data consumption: the Bradley–Terry strength fit over a
   * duel table — the read side of the preference ladder whose write
   * side is c08's chosen/rejected pair assembly (a DPO/RLHF corpus is
@@ -80,12 +82,12 @@ object Preference {
         coalesce(col("__w"), lit(0L)).as("n_wins"),
         (coalesce(col("__w"), lit(0L)) + lit(1L)).as("__w1"))
       .localCheckpoint(true)
-    var s = base.select(col("i"), lit(BtScale).as("s_e6"))
-    var k = 0
-    while (k < iters) {
+    // each state is one round over its materialized raw: stride iters
+    val s = Fixpoint.iterate(base.select(col("i"), lit(BtScale).as("s_e6")),
+        iters, stride = iters) { st =>
       val den = nm
-        .join(s.select(col("i"), col("s_e6").as("__si")), Seq("i"))
-        .join(s.select(col("i").as("j"), col("s_e6").as("__sj")), Seq("j"))
+        .join(st.select(col("i"), col("s_e6").as("__si")), Seq("i"))
+        .join(st.select(col("i").as("j"), col("s_e6").as("__sj")), Seq("j"))
         .select(col("i"),
           expr(s"CAST(n_ij AS DECIMAL(38,0)) * ${BtInnerK}L" +
             " div (__si + __sj)").as("__t"))
@@ -97,13 +99,12 @@ object Preference {
             .as("__raw"))
         .localCheckpoint(true) // the max fold AND the normalize
       val mx = raw.agg(max(col("__raw")).as("__mx"))
-      s = raw.crossJoin(broadcast(mx))
+      raw.crossJoin(broadcast(mx))
         .select(col("i"),
           greatest(
             expr(s"CAST(__raw AS DECIMAL(38,0)) * ${BtScale}L div __mx"),
             lit(1L)).as("s_e6"))
-      k += 1
-    }
+    }.last
     // the report: constant-key rank windows over the item-domain-
     // bounded frame (≤ |items| rows at any corpus size — the q143
     // report shape)

@@ -945,9 +945,12 @@ object Dedup {
     // routes stay shuffle joins.
     val hotDf = spark.conf.getOption("spark.graft.dedup.hotAnchorDf")
       .map(_.toInt).getOrElse(1024)
-    // r18: hotAnchorSalts is now the CAP on the per-hash salt count —
-    // the actual count scales with the measured anchor heat (see the
-    // routing below), so one constant no longer has to fit every df.
+    // hotAnchorSalts CAPS the per-hash salt count, which scales with the
+    // measured anchor heat (routing below). Why 2²⁰: it binds only past
+    // hotDf·2²⁰ occurrences of one hash (~10⁹ at the default hotDf), so
+    // below that every (h, salt) key keeps ≤ ~hotDf x rows; past it, it
+    // bounds the salt `sequence` each hot y row explodes to 2²⁰ longs
+    // (8 MB in one row), and x keys grow as df / 2²⁰ instead.
     val saltCap = spark.conf.getOption("spark.graft.dedup.hotAnchorSalts")
       .map(_.toInt).getOrElse(1 << 20)
     // misconfiguration guard: pmod(x, 0) is NULL under non-ANSI SQL,
@@ -995,14 +998,7 @@ object Dedup {
     // for a hash: x carries exactly one salt, y is replicated across
     // all of that hash's salts — each pair produced exactly once,
     // byte-identical to the unsalted join.
-    // integer `div`: a double `/` plus floor is exact only below 2^53
-    val nSalt = least(
-      expr(s"(__df + ${hotDf.toLong - 1L}L) div ${hotDf.toLong}L"),
-      lit(saltCap.toLong))
-    val hotX = hot.withColumn("__salt",
-      pmod(xxhash64(col("doc_id")), nSalt))
-    val hotY = hot.withColumn("__salt",
-      explode(sequence(lit(0L), nSalt - lit(1L))))
+    val (hotX, hotY) = saltHot(hot, hotDf, saltCap)
     val hotPairs = hotX.as("x").join(hotY.as("y"),
       col("x.h") === col("y.h") && col("x.__salt") === col("y.__salt") &&
         col("x.doc_id") < col("y.doc_id"))
@@ -1026,6 +1022,19 @@ object Dedup {
         concat_ws(" ",
           slice(col("__toks"), col("a_start").cast("int"),
             col("n_tokens").cast("int"))).as("span"))
+  }
+
+  /** [[maximalMatches]]' salted hot-anchor join sides over
+    * `hot(h, doc_id, p, __df)`: x with one salt per row, y with every salt.
+    */
+  private[graft] def saltHot(hot: DataFrame, hotDf: Int,
+      saltCap: Int): (DataFrame, DataFrame) = {
+    // integer `div`: a double `/` plus floor is exact only below 2^53
+    val nSalt = least(
+      expr(s"(__df + ${hotDf.toLong - 1L}L) div ${hotDf.toLong}L"),
+      lit(saltCap.toLong))
+    (hot.withColumn("__salt", pmod(xxhash64(col("doc_id")), nSalt)),
+      hot.withColumn("__salt", explode(sequence(lit(0L), nSalt - lit(1L)))))
   }
 
   /** Apply the [[maximalMatches]] inventory: CUT every duplicated

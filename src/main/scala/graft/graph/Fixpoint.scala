@@ -3,11 +3,12 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The one convergence policy of the iterate-to-fixpoint operators in
-  * [[GraphOps]]: a DataFrame is a lazily built plan, so an iterative
-  * operator is its `step` plan plus this driver, which owns when the
-  * plan is materialized, how a change is detected and where the loop
-  * stops.
+/** The one round driver of the iterative operators in [[GraphOps]] and
+  * [[graft.analytics.Preference]]: a DataFrame is a lazily built plan,
+  * so an iterative operator is its `step` plan plus this driver, which
+  * owns when the plan is materialized, how a change is detected and
+  * where the loop stops. [[converge]] runs to a fixpoint; [[iterate]]
+  * runs a fixed round count.
   *
   * Contract the callers' oracles rely on: each oracle unrolls exactly
   * `maxRounds` rounds of the same recurrence, and a round applied past
@@ -17,6 +18,30 @@ import org.apache.spark.sql.functions._
   * fails loudly at the cap, so no caller handles convergence itself.
   */
 object Fixpoint {
+
+  /** Run `step` exactly `n` times from `init`; return `init` and the
+    * states after steps 1..n (`n = 0` returns `Seq(init)`).
+    *
+    * State k (1 ≤ k < n) is `localCheckpoint`ed when `stride` divides
+    * k; `init` and the last state stay lazy. The stride decides how the
+    * composed plan grows with `n`:
+    *   - stride 1 when a step reads its state more than once, or every
+    *     round's state feeds an output: left lazy, khop's
+    *     `reach ∪ expand(reach)` doubles every round, and SCC
+    *     materialized every 7th round took 413 s;
+    *   - stride `n` when a step reads its state once, or only through
+    *     what it materializes itself (hits' and Bradley–Terry's raw
+    *     sums): the plan grows linearly and costs no checkpoint job.
+    */
+  def iterate(init: DataFrame, n: Int, stride: Int = 1)(
+      step: DataFrame => DataFrame): Seq[DataFrame] = {
+    require(n >= 0 && (n == 0 || stride >= 1),
+      s"iterate needs n >= 0 and stride >= 1, got n=$n stride=$stride")
+    (1 to n).scanLeft(init) { (state, k) =>
+      val next = step(state)
+      if (k < n && k % stride == 0) next.localCheckpoint(true) else next
+    }
+  }
 
   /** Iterate `step` from `init` until a stride of `stride` rounds leaves
     * the state unchanged, running `step` at most `maxRounds` times (the
@@ -44,7 +69,7 @@ object Fixpoint {
     var changed = true
     while (changed && rounds < maxRounds) {
       val n = math.min(stride, maxRounds - rounds)
-      val next = (1 to n).foldLeft(state)((s, _) => step(s))
+      val next = iterate(state, n, stride = n)(step).last
         .localCheckpoint(true)
       changed = differs(next, state, keys)
       state = next

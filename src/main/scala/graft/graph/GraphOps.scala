@@ -117,64 +117,22 @@ object GraphOps {
     * integer arithmetic (see [[pageRank]]'s doc), so weighted
     * results stay bit-reproducible at any partitioning. No overflow:
     * rank_u ≤ 10¹², ×85×w keeps far under 2⁶³ for any realistic
-    * support.
-    *
-    * Edges are RESTRICTED to `nodes` (semi-joins on both endpoints)
-    * before iterating — without it an edge head outside the node set
-    * would inject a phantom rank row and skew the teleport mass
-    * against the documented semantics. The edge list and out-weights
-    * materialize ONCE (`localCheckpoint`): left lazy, the
-    * edge-derivation subtree is replayed in every iteration's lineage
-    * — measured 8.4s → 2.9s at sf0.1. The 100 TB form is the same:
-    * persist the edges, iterate over the materialized blocks.
+    * support. The teleport is uniform: every node is a seed of
+    * [[rankRecurrence]].
     */
   def pageRankWeighted(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
     val nodeSet = nodes.select(col("node")).localCheckpoint(true)
     val n = nodeSet.count()
     require(n > 0, "pageRankWeighted requires a non-empty node set")
-    // out-weight is STATIC across iterations — attach it to the edge
-    // frame once (guide §2.4: two operations keyed the same way share
-    // one exchange) so each iteration pays ONE src-keyed join
-    // (edges⋈ranks) instead of two (edges⋈ranks⋈deg). A src-partitioned
-    // window sum computes it inside the SAME src exchange the frame
-    // needs anyway — no deg join, no second edge-sized checkpoint (the
-    // r17 formulation paid both and measured flat). Arithmetic per
-    // edge is unchanged, so ranks stay bit-identical.
-    val ew = edges.select(col("src"), col("dst"), col("w"))
-      .join(nodeSet.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
-      .join(nodeSet.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
-      .withColumn("outw", sum(col("w")).over(
-        Window.partitionBy(col("src"))))
-      .localCheckpoint(true)
-    val baseU = lit(PrScale * 15L / 100L / n) // 0.15/n in e-12 units
-    var ranks = nodeSet.select(col("node"), lit(PrScale / n).as("rank_u"))
-    var i = 0
-    while (i < iters) {
-      val contribs = ew
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"),
-          expr("(rank_u * 85L * w) div (outw * 100L)").as("contrib"))
-      // a zero row per node replaces a nodes LEFT JOIN: same sums,
-      // one exchange per iteration instead of two
-      ranks = contribs.select(col("dst").as("node"), col("contrib"))
-        .unionAll(nodeSet.select(col("node"), lit(0L).as("contrib")))
-        .groupBy(col("node"))
-        .agg((baseU + sum(col("contrib"))).as("rank_u"))
-      i += 1
-    }
-    ranks
+    rankRecurrence(edges, nodeSet.withColumn("__seed", lit(true)), n, iters)
   }
 
   /** Personalized PageRank: teleport mass returns to a SEED set
     * instead of spreading uniformly — the recommendation / expansion
     * face of the rank family ("items related to this basket", seed
     * -domain crawl prioritization). Same fixed-point integer
-    * discipline as [[pageRank]]; the only structural difference is
-    * that the teleport vector is a frame, not a scalar, so each
-    * iteration carries one extra (node-keyed, seed-sparse) left join
-    * — which is also why this is a separate loop rather than a flag
-    * on [[pageRankWeighted]]: the scalar-base loop should not pay
-    * that join. Nodes unreachable from the seeds hold exactly 0.
+    * discipline and the same recurrence as [[pageRank]], with only
+    * the seeds flagged. Nodes unreachable from the seeds hold exactly 0.
     */
   def pageRankPersonalized(
       edges: DataFrame, nodes: DataFrame, seeds: DataFrame,
@@ -184,37 +142,55 @@ object GraphOps {
     val nSeeds = seedSet.count()
     require(nSeeds > 0,
       "pageRankPersonalized requires a non-empty seed set")
-    // static out-weight attached once via the src window — see
-    // pageRankWeighted
-    val ew = edges.select(col("src"), col("dst")).withColumn("w", lit(1L))
+    val seeded = nodeSet
+      .join(seedSet.withColumn("__seed", lit(true)), Seq("node"), "left")
+      .localCheckpoint(true)
+    rankRecurrence(edges.select(col("src"), col("dst")).withColumn("w", lit(1L)),
+      seeded, nSeeds, iters)
+  }
+
+  /** The one rank loop of the PageRanks: of the nodes in
+    * `seeded(node, __seed)`, the `nSeeds` flagged ones start at
+    * 1/nSeeds and get the teleport base 0.15/nSeeds each round, the
+    * others 0. The base joins each round's edge contributions as one
+    * `(node, contrib)` row per node, so ONE node-keyed sum adds it and
+    * keeps every node in the state. A round reads the ranks once, so
+    * rounds compose lazily ([[Fixpoint.iterate]], stride `iters`).
+    *
+    * Edges are RESTRICTED to the nodes (semi-joins on both endpoints)
+    * before iterating — without it an edge head outside the node set
+    * would inject a phantom rank row and skew the teleport mass
+    * against the documented semantics. The edge list and out-weights
+    * materialize ONCE (`localCheckpoint`): left lazy, the
+    * edge-derivation subtree is replayed in every iteration's lineage
+    * — measured 8.4s → 2.9s at sf0.1. The 100 TB form is the same:
+    * persist the edges, iterate over the materialized blocks.
+    */
+  private def rankRecurrence(edges: DataFrame, seeded: DataFrame,
+      nSeeds: Long, iters: Int): DataFrame = {
+    val nodeSet = seeded.select(col("node"))
+    // out-weight is STATIC across rounds: a src-partitioned window sum
+    // attaches it inside the src exchange the edge frame needs anyway
+    // (guide §2.4), so each round pays ONE src-keyed join (edges⋈ranks)
+    // — no deg join, no second edge-sized checkpoint (r17, flat)
+    val ew = edges.select(col("src"), col("dst"), col("w"))
       .join(nodeSet.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
       .join(nodeSet.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
       .withColumn("outw", sum(col("w")).over(
         Window.partitionBy(col("src"))))
       .localCheckpoint(true)
-    val base = seedSet
-      .select(col("node"), lit(PrScale * 15L / 100L / nSeeds).as("base_u"))
-      .localCheckpoint(true)
-    var ranks = nodeSet
-      .join(base, Seq("node"), "left")
-      .select(col("node"),
-        when(col("base_u").isNotNull, lit(PrScale / nSeeds))
-          .otherwise(lit(0L)).as("rank_u"))
-    var i = 0
-    while (i < iters) {
-      val contribs = ew
-        .join(ranks.withColumnRenamed("node", "src"), "src")
-        .select(col("dst"),
+    def perSeed(units: Long): Column =
+      when(col("__seed"), lit(units / nSeeds)).otherwise(lit(0L))
+    val base = seeded.select(col("node"), // 0.15/nSeeds in e-12 units
+      perSeed(PrScale * 15L / 100L).as("contrib"))
+    Fixpoint.iterate(seeded.select(col("node"), perSeed(PrScale).as("rank_u")),
+        iters, stride = iters) { ranks =>
+      ew.join(ranks.withColumnRenamed("node", "src"), "src")
+        .select(col("dst").as("node"),
           expr("(rank_u * 85L * w) div (outw * 100L)").as("contrib"))
-      ranks = contribs.select(col("dst").as("node"), col("contrib"))
-        .unionAll(nodeSet.select(col("node"), lit(0L).as("contrib")))
-        .groupBy(col("node")).agg(sum(col("contrib")).as("__c"))
-        .join(base, Seq("node"), "left")
-        .select(col("node"),
-          (coalesce(col("base_u"), lit(0L)) + col("__c")).as("rank_u"))
-      i += 1
-    }
-    ranks
+        .unionAll(base)
+        .groupBy(col("node")).agg(sum(col("contrib")).as("rank_u"))
+    }.last
   }
 
   /** Connected components by min-label propagation to fixpoint; fails
@@ -260,8 +236,9 @@ object GraphOps {
     *
     * Per iteration: one keyed join carries labels to neighbors, one
     * map-side-combined (node, label) count, one per-node window rank
-    * — the same 2-exchange discipline as [[pageRank]], with
-    * `localCheckpoint` truncating the per-round lineage. Synchronous
+    * — the same 2-exchange discipline as [[pageRank]]. Rounds run
+    * through [[Fixpoint.iterate]] at stride 1: each round's window
+    * plan sits on the previous round's materialized labels. Synchronous
     * updates can oscillate on bipartite structures; with a fixed
     * iteration count both engines see the SAME oscillation, so
     * determinism survives (convergence is a quality knob here, not a
@@ -271,23 +248,19 @@ object GraphOps {
     val both = edgesUndirected.select(col("src"), col("dst"))
       .unionAll(edgesUndirected.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
-    var labels = both.select(col("src").as("node")).distinct()
+    val init = both.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
-      .localCheckpoint(true)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("node"))
+    val w = Window.partitionBy(col("node"))
       .orderBy(col("cnt").desc, col("label").asc)
-    for (_ <- 1 to iters) {
-      labels = both
+    Fixpoint.iterate(init, iters) { labels =>
+      both
         .join(labels.withColumnRenamed("node", "src"), "src")
         .groupBy(col("dst").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .withColumn("__rn", row_number().over(w))
         .where(col("__rn") === 1)
         .select(col("node"), col("label"))
-        .localCheckpoint(true)
-    }
-    labels
+    }.last
   }
 
   /** HITS (Kleinberg 1999) hubs-and-authorities over a DIRECTED
@@ -312,44 +285,39 @@ object GraphOps {
     *
     * Per round: two keyed joins + two map-side-combined aggregates
     * (one per side) and two 1-row max folds (broadcast) — the
-    * two-sided version of the pageRank exchange budget, with
-    * `localCheckpoint` truncating each side's lineage. Every src has
-    * out-degree ≥ 1 and hubs start positive, so both maxima stay > 0
-    * and the divisions are total.
+    * two-sided version of the pageRank exchange budget. The state is
+    * one `(role, node, score_e6)` frame over each side's materialized
+    * raw sums, so rounds compose lazily ([[Fixpoint.iterate]], stride
+    * `iters`). Every src has out-degree ≥ 1 and hubs start positive,
+    * so both maxima stay > 0 and the divisions are total.
     */
   val HitsScale = 1000000L // 10^6 fixed-point units
 
   def hits(edges: DataFrame, iters: Int): DataFrame = {
-    // iters = 0 would leave the authority side uninitialized (there is
-    // no round-0 authority state) and surface as a schema error from
-    // the final union — reject the argument loudly instead
+    // iters = 0 would return the initial hubs with no authority rows
+    // (there is no round-0 authority state) — reject it loudly instead
     require(iters >= 1, s"hits requires iters >= 1, got $iters")
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val norm = expr(
       s"CAST(__raw AS DECIMAL(30,0)) * ${HitsScale}L div CAST(__mx AS DECIMAL(30,0))")
-    var hubs = e.select(col("src")).distinct()
-      .select(col("src"), lit(HitsScale).as("hub_e6"))
-    var auths: DataFrame = e.sparkSession.emptyDataFrame
-    var i = 0
-    while (i < iters) {
-      val araw = e.join(hubs, "src")
-        .groupBy(col("dst")).agg(sum(col("hub_e6")).as("__raw"))
-        .localCheckpoint(true) // the max fold AND the normalize
-      val amax = araw.agg(max(col("__raw")).as("__mx"))
-      auths = araw.crossJoin(broadcast(amax))
-        .select(col("dst"), norm.as("auth_e6"))
-      val hraw = e.join(auths, "dst")
-        .groupBy(col("src")).agg(sum(col("auth_e6")).as("__raw"))
-        .localCheckpoint(true)
-      val hmax = hraw.agg(max(col("__raw")).as("__mx"))
-      hubs = hraw.crossJoin(broadcast(hmax))
-        .select(col("src"), norm.as("hub_e6"))
-      i += 1
+    // one side's scores from its raw (node, __raw) sums, which are
+    // materialized: they feed the max fold AND the normalize
+    def side(raw: DataFrame, role: String): DataFrame = {
+      val r = raw.localCheckpoint(true)
+      r.crossJoin(broadcast(r.agg(max(col("__raw")).as("__mx"))))
+        .select(lit(role).as("role"), col("node"), norm.as("score_e6"))
     }
-    hubs.select(lit("hub").as("role"), col("src").as("node"),
-        col("hub_e6").as("score_e6"))
-      .unionAll(auths.select(lit("authority").as("role"),
-        col("dst").as("node"), col("auth_e6").as("score_e6")))
+    // the scores of one side summed along the edges into the other's
+    def spread(scores: DataFrame, from: String, to: String): DataFrame =
+      e.join(scores.select(col("node").as(from), col("score_e6")), from)
+        .groupBy(col(to).as("node")).agg(sum(col("score_e6")).as("__raw"))
+    val init = e.select(col("src").as("node")).distinct()
+      .select(lit("hub").as("role"), col("node"), lit(HitsScale).as("score_e6"))
+    Fixpoint.iterate(init, iters, stride = iters) { s =>
+      val auths = side(spread(s.where(col("role") === "hub"), "src", "dst"),
+        "authority")
+      side(spread(auths, "dst", "src"), "hub").unionAll(auths)
+    }.last
   }
 
   /** Per-node triangle count + local clustering coefficient over an
@@ -414,26 +382,23 @@ object GraphOps {
     val both = edgesUndirected.select(col("src"), col("dst"))
       .unionAll(edgesUndirected.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
-    var counters = both.select(col("src").as("node")).distinct()
+    // each hop reads the counters twice: init materialized, stride 1
+    val init = both.select(col("src").as("node")).distinct()
       .select(col("node"), array(KmvSketch.hash64(col("node"))).as("ctr"))
       .localCheckpoint(true)
     def est = when(size(col("ctr")) < k, size(col("ctr")).cast("long"))
       .otherwise(floor(lit((k - 1).toDouble) * lit(KmvSketch.TwoPow60)
         / element_at(col("ctr"), k).cast("double")).cast("long"))
-    val out = Seq.newBuilder[DataFrame]
-    var h = 1
-    while (h <= maxHops) {
-      val contrib = counters.select(col("node"), explode(col("ctr")).as("h"))
+    Fixpoint.iterate(init, maxHops) { counters =>
+      counters.select(col("node"), explode(col("ctr")).as("h"))
         .unionAll(both
           .join(counters.withColumnRenamed("node", "src"), "src")
           .select(col("dst").as("node"), explode(col("ctr")).as("h")))
-      counters = contrib.groupBy(col("node"))
+        .groupBy(col("node"))
         .agg(KmvSketch.kmvHashes(col("h"), k).as("ctr"))
-        .localCheckpoint(true)
-      out += counters.select(col("node"), lit(h).as("hop"), est.as("n_ball_est"))
-      h += 1
-    }
-    out.result().reduce(_ unionAll _)
+    }.zipWithIndex.drop(1).map { case (counters, h) =>
+      counters.select(col("node"), lit(h).as("hop"), est.as("n_ball_est"))
+    }.reduce(_ unionAll _)
   }
 
   /** Exact k-hop reach from a probe set: for each probe, the number of
@@ -449,25 +414,21 @@ object GraphOps {
     val both = edgesUndirected.select(col("src"), col("dst"))
       .unionAll(edgesUndirected.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
-    var reach = probes.select(col("probe"), col("probe").as("node"))
+    // reach is referenced twice per hop (self ∪ its own expansion), so
+    // a lazy plan doubles every hop — exponential in maxHops: the
+    // initial reach and every hop's state are materialized (stride 1)
+    val init = probes.select(col("probe"), col("probe").as("node"))
       .localCheckpoint(true)
-    val out = Seq.newBuilder[DataFrame]
-    var h = 1
-    while (h <= maxHops) {
-      // checkpoint per hop: reach is referenced twice (self ∪ its own
-      // expansion), so a lazy plan doubles every hop — exponential in
-      // maxHops, the same lineage discipline as connectedComponents
-      reach = reach
+    Fixpoint.iterate(init, maxHops) { reach =>
+      reach
         .unionAll(reach.join(both, reach("node") === both("src"))
           .select(col("probe"), col("dst").as("node")))
         .distinct()
-        .localCheckpoint(true)
-      out += reach.where(col("node") =!= col("probe"))
+    }.zipWithIndex.drop(1).map { case (reach, h) =>
+      reach.where(col("node") =!= col("probe"))
         .groupBy(col("probe")).agg(count(lit(1)).as("n_reached"))
         .select(col("probe"), lit(h).as("hop"), col("n_reached"))
-      h += 1
-    }
-    out.result().reduce(_ unionAll _)
+    }.reduce(_ unionAll _)
   }
 
   /** k-core decomposition (coreness per node) of an undirected edge

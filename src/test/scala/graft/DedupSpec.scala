@@ -517,6 +517,47 @@ class DedupSpec extends SparkSpec {
          yield (a.toLong, b.toLong))).toSet)
   }
 
+  test("d17 salting at the cap: a binding hotAnchorSalts keeps every pair and bounds the x-side keys") {
+    import spark.implicits._
+    def words(prefix: String, n: Int): Seq[String] =
+      (1 to n).map(i => s"$prefix$i")
+    val shared = words("hot", 22) // per-anchor df = 60 at L=20
+    val docs = (1 to 60).map(i =>
+      (i.toLong,
+        (words(s"u${i}x", 3) ++ shared ++ words(s"v${i}x", 2)).mkString(" ")))
+      .toDF("doc_id", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4), r.getString(5))).toSeq.sortBy(t => (t._1, t._2))
+    val cold = rows(Dedup.maximalMatches(docs, "text", "doc_id", L = 20))
+    // hotDf 4 asks for ceil(60/4) = 15 salts per hash; the cap of 3
+    // binds (df = 60 ≫ hotDf·cap = 12)
+    spark.conf.set("spark.graft.dedup.hotAnchorDf", "4")
+    spark.conf.set("spark.graft.dedup.hotAnchorSalts", "3")
+    val hot =
+      try rows(Dedup.maximalMatches(docs, "text", "doc_id", L = 20))
+      finally {
+        spark.conf.unset("spark.graft.dedup.hotAnchorDf")
+        spark.conf.unset("spark.graft.dedup.hotAnchorSalts")
+      }
+    assert(hot === cold)
+    assert(cold.map(t => (t._1, t._2)).toSet ===
+      (for { a <- 1 to 60; b <- (a + 1) to 60 } yield (a.toLong, b.toLong)).toSet)
+    // the salted sides at that cap: each hash spreads its 60 x rows
+    // over exactly 3 salts, none holding more than twice its fair share
+    // ceil(60/3) = 20, and y carries every row once per salt
+    val hotRows = (for { h <- Seq("a", "b", "c"); d <- 1L to 60L }
+      yield (h, d, 4L, 60L)).toDF("h", "doc_id", "p", "__df")
+    val (x, y) = Dedup.saltHot(hotRows, hotDf = 4, saltCap = 3)
+    val perKey = x.groupBy(col("h"), col("__salt")).count().collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(perKey.keySet ===
+      (for { h <- Seq("a", "b", "c"); s <- 0L until 3L } yield (h, s)).toSet)
+    assert(perKey.values.max <= 2 * 20, s"$perKey")
+    assert(perKey.values.sum === 180L)
+    assert(y.count() === 180L * 3)
+  }
+
   test("d17/d18 misconfigured salt/df guards reject instead of silently dropping pairs") {
     import spark.implicits._
     val docs = Seq((1L, "a b c")).toDF("doc_id", "text")

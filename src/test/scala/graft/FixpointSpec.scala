@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.graph.Fixpoint
@@ -17,6 +18,43 @@ class FixpointSpec extends SparkSpec {
 
   private def incr(s: DataFrame): DataFrame =
     s.select(col("k"), (col("v") + 1L).as("v"))
+
+  private def isMaterialized(df: DataFrame): Boolean =
+    df.queryExecution.logical.isInstanceOf[LogicalRDD]
+
+  private def readsMaterialized(df: DataFrame): Boolean =
+    df.queryExecution.logical.collectLeaves().exists(_.isInstanceOf[LogicalRDD])
+
+  test("iterate runs step exactly n times and returns init then every state") {
+    var steps = 0
+    val init = Seq((1L, 0L), (2L, 5L)).toDF("k", "v")
+    val states = Fixpoint.iterate(init, 4) { s => steps += 1; incr(s) }
+    assert(steps === 4)
+    assert(states.map(rows) ===
+      (0L to 4L).map(i => Set(1L -> i, 2L -> (5L + i))))
+  }
+
+  test("iterate with n = 0 returns Seq(init) and never steps") {
+    val init = Seq((1L, 0L)).toDF("k", "v")
+    val states = Fixpoint.iterate(init, 0) { _ => fail("stepped at n = 0") }
+    assert(states.size === 1 && (states.head eq init))
+  }
+
+  test("iterate materializes every stride-th state a later step reads, and never the last") {
+    val init = Seq((1L, 0L)).toDF("k", "v")
+    // stride 1: states 1..n-1 are checkpoints; the last is a lazy step
+    // over the checkpoint before it
+    val one = Fixpoint.iterate(init, 4)(incr)
+    assert(one.map(isMaterialized) === Seq(false, true, true, true, false))
+    assert(readsMaterialized(one.last))
+    // stride 2 materializes states 2 and 4 of 5
+    assert(Fixpoint.iterate(init, 5, stride = 2)(incr).map(isMaterialized) ===
+      Seq(false, false, true, false, true, false))
+    // stride n: no state is materialized, the last composes all n steps
+    val lazyAll = Fixpoint.iterate(init, 4, stride = 4)(incr)
+    assert(!lazyAll.exists(readsMaterialized))
+    assert(rows(lazyAll.last) === Set(1L -> 4L))
+  }
 
   test("a state still changing at the cap throws, naming the operator and its cap") {
     val init = Seq((1L, 0L), (2L, 0L)).toDF("k", "v")

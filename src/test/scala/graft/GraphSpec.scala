@@ -110,6 +110,22 @@ class GraphSpec extends SparkSpec {
       s"mass $total")
   }
 
+  test("personalized pagerank seeded with every node is pagerank, row for row") {
+    // a node without in-edges (4), a dangling node (5) and an isolated
+    // one (6): the seed base must act as the uniform teleport on each
+    val e = edges((1L, 2L), (2L, 3L), (3L, 1L), (1L, 3L), (4L, 1L), (2L, 5L))
+    val nodes = (1L to 6L).toDF("node")
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq.sorted
+    Seq(0, 1, 5).foreach { iters =>
+      assert(ranks(GraphOps.pageRankPersonalized(e, nodes, nodes, iters)) ===
+        ranks(GraphOps.pageRank(e, nodes, iters)), s"iters=$iters")
+    }
+    // zero rounds return the initial ranks
+    assert(ranks(GraphOps.pageRank(e, nodes, 0)) ===
+      (1L to 6L).map(_ -> GraphOps.PrScale / 6))
+  }
+
   test("connected components finds the exact partition") {
     // {1,2,3} in a path, {10,11} an edge, capped rounds ample.
     val e = edges((1L, 2L), (2L, 3L), (10L, 11L))
