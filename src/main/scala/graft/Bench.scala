@@ -149,8 +149,10 @@ object Bench {
     // min-of-2 for the same sf — provides per-query context: any timed
     // value > 2× its reference (and > 0.25 s above it, so micro-query
     // jitter never trips it) lands in "noise_suspect", telling a reader
-    // the number is probably the host, not a regression. Absent or
-    // sf-mismatched reference → empty list, never an error.
+    // the number is probably the host, not a regression. Floors hold
+    // only for the host that measured them, so a reference applies when
+    // its "sf" and its "cpus" both match this run; absent, mismatched or
+    // without "cpus" → empty list, never an error.
     val reference: Map[String, Double] =
       try {
         val p = java.nio.file.Paths.get("bench_reference.json")
@@ -163,6 +165,8 @@ object Bench {
           // noise_suspect channel for every round it shipped
           val sfOk = "\"sf\":\\s*\"([^\"]+)\"".r.findFirstMatchIn(txt)
             .forall(_.group(1) == sfDir)
+          val cpusOk = "\"cpus\":\\s*([0-9]+)".r.findFirstMatchIn(txt)
+            .exists(_.group(1).toInt == spark.sparkContext.defaultParallelism)
           // parse ONLY the flat "queries" object: the full artifact now
           // also carries the host block (per-query steal_pct map), and
           // an unscoped name:number scan over a merged bench_total.json
@@ -170,7 +174,7 @@ object Bench {
           // the 2×-floor channel
           val qObj = "\"queries\"\\s*:\\s*\\{([^}]*)\\}".r
             .findFirstMatchIn(txt).map(_.group(1)).getOrElse("")
-          if (sfOk)
+          if (sfOk && cpusOk)
             "\"([A-Za-z0-9_]+)\":\\s*([0-9]+\\.?[0-9]*)".r
               .findAllMatchIn(qObj)
               .map(m => m.group(1) -> m.group(2).toDouble).toMap

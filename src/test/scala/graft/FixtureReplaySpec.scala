@@ -12,53 +12,55 @@ import graft.queries.Corpus
   * artifact under [[FixtureTables.root]] and their DuckDB oracle reads
   * it back. The oracle compare itself runs outside `sbt test`, so a
   * writer and an oracle that drift apart on a file name would otherwise
-  * surface only there. This spec runs every such query at sf0.001 and
-  * globs every fixture path its oracle SQL names.
+  * surface only there. The replay is one check of the [[Surface]] walk:
+  * after each such query has run at sf0.001, it globs every fixture path
+  * the query's oracle SQL names.
   */
-class FixtureReplaySpec extends SparkSpec {
-
-  private val sfDir = "/root/testdata/sf0.001"
+object FixtureReplaySpec {
 
   /** The quoted paths under [[FixtureTables.root]] that `sql` reads. */
-  private def fixturePaths(sql: String): Seq[String] =
+  def fixturePaths(sql: String): Seq[String] =
     s"'(${java.util.regex.Pattern.quote(FixtureTables.root)}/[^']*)'".r
       .findAllMatchIn(sql).map(_.group(1)).toSeq.distinct
 
   /** Regular files under [[FixtureTables.root]] matching a DuckDB-style
     * glob (`*` stays within one path segment, as in `java.nio`'s glob).
     */
-  private def globbed(pattern: String): Seq[Path] = {
+  def globbed(pattern: String): Seq[Path] = {
     val matcher = FileSystems.getDefault.getPathMatcher(s"glob:$pattern")
     Using.resource(Files.walk(Paths.get(FixtureTables.root)))(_.iterator.asScala
       .filter(p => Files.isRegularFile(p) && matcher.matches(p)).toList)
   }
 
-  /** Runs `body` with the oracle SQL describing `sfDir`. */
-  private def atSfDir[A](body: => A): A = {
+  /** Runs `body` with the oracle SQL describing [[Surface.sfDir]]. */
+  def atSfDir[A](body: => A): A = {
     val prior = Corpus.oracleSfDir
-    Corpus.oracleSfDir = sfDir
+    Corpus.oracleSfDir = Surface.sfDir
     try body finally Corpus.oracleSfDir = prior
   }
 
+  /** Each query whose oracle names a fixture path, with those paths. */
+  def replayed: Map[String, Seq[String]] = atSfDir(SparkEntry.oracleSql
+    .map { case (name, sql) => name -> fixturePaths(sql) }.filter(_._2.nonEmpty))
+
+  /** The replay as a [[Surface]] check, run after the query has. */
+  def replay: Surface.Check = {
+    val paths = replayed
+    (name, _) => paths.getOrElse(name, Nil).filter(globbed(_).isEmpty)
+      .map(p => s"$name: $p")
+  }
+}
+
+class FixtureReplaySpec extends SparkSpec {
+  import FixtureReplaySpec._, Surface.sfDir
+
   test("every query whose oracle replays a fixture file leaves that file behind") {
-    atSfDir {
-      val replayed = SparkEntry.oracleSql.toSeq.sortBy(_._1)
-        .map { case (name, sql) => name -> fixturePaths(sql) }
-        .filter(_._2.nonEmpty)
-      assert(replayed.map(_._1).contains("q128_auc_by_slice"),
-        s"no oracle names a path under ${FixtureTables.root}")
-      replayed.foreach { case (name, _) =>
-        SparkEntry.queries(name)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-      }
-      val missing = for {
-        (name, paths) <- replayed
-        p <- paths if globbed(p).isEmpty
-      } yield s"$name: $p"
-      assert(missing.isEmpty,
-        s"${missing.size} oracle fixture path(s) match no file:\n  " +
-          missing.mkString("\n  "))
-    }
+    assert(replayed.contains("q128_auc_by_slice"),
+      s"no oracle names a path under ${FixtureTables.root}")
+    val missing = Surface.findings(Surface.Replay)
+    assert(missing.isEmpty,
+      s"${missing.size} oracle fixture path(s) match no file:\n  " +
+        missing.mkString("\n  "))
   }
 
   test("q128_auc_by_slice dumps its classifier weights once per dir") {

@@ -30,11 +30,10 @@ import org.apache.spark.sql.graftbridge.Bridge
   *
   * Patterns 1–2 are plan-shape-only; pattern 3 executes each window's
   * child once (counts are cached by canonicalized subtree, so shared
-  * shapes across the 142 queries are measured once).
+  * shapes across the 291 queries are measured once). The lint is one
+  * check of the [[Surface]] walk, which builds each query once.
   */
-class PlanLintSpec extends SparkSpec {
-
-  private val sfDir = "/root/testdata/sf0.001"
+object PlanLintSpec {
 
   // deliberate nested-loop/cartesian shapes, each justified in-source:
   // s01/s02/s03 broadcast a fixed probe set against candidates; t15 and
@@ -201,7 +200,7 @@ class PlanLintSpec extends SparkSpec {
     * values. Child counts and key cardinalities run as Spark jobs over
     * the lint-scale data; `cache` memoizes across the query surface.
     */
-  private def lowCardWindows(
+  def lowCardWindows(
       df: DataFrame,
       cache: scala.collection.mutable.Map[logical.LogicalPlan, (Long, Long)],
       minRows: Long = 10000L,
@@ -209,7 +208,7 @@ class PlanLintSpec extends SparkSpec {
     df.queryExecution.optimizedPlan.collect {
       case w: logical.Window if w.partitionSpec.nonEmpty =>
         val (n, d) = cache.getOrElseUpdate(w.canonicalized, {
-          val child = Bridge.ofRows(spark, w.child)
+          val child = Bridge.ofRows(df.sparkSession, w.child)
           val rows = child.count()
           val keys =
             if (rows > minRows)
@@ -225,10 +224,12 @@ class PlanLintSpec extends SparkSpec {
     }.flatten
   }
 
-  test("no query plans an unpartitioned window, an unjustified cartesian join, or a low-cardinality window key") {
+  /** The lint as a [[Surface]] check: it plans a fresh frame over the
+    * built query's plan, so the built frame keeps the session's DPP. */
+  def lint(cardCache: scala.collection.mutable.Map[logical.LogicalPlan, (Long, Long)])(
+      name: String, built: DataFrame): Seq[String] = {
+    val spark = built.sparkSession
     val failures = scala.collection.mutable.ListBuffer[String]()
-    val cardCache =
-      scala.collection.mutable.Map[logical.LogicalPlan, (Long, Long)]()
     // DPP injects DynamicPruningSubquery expressions into the OPTIMIZED
     // logical plan (s12's partitioned-store join); re-analyzing such a
     // subtree through Bridge.ofRows (the pattern-3 child count) fails
@@ -239,23 +240,30 @@ class PlanLintSpec extends SparkSpec {
     val dppWas = spark.conf.get(dppKey)
     spark.conf.set(dppKey, "false")
     try {
-      SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-        val df = fn(spark, sfDir)
-        val plan = df.queryExecution.optimizedPlan
-        val badWindows = plan.collect {
-          case w: logical.Window if w.partitionSpec.isEmpty => w
-        }
-        if (badWindows.nonEmpty && !allowUnpartitionedWindow(name))
-          failures += s"$name: ${badWindows.size} unpartitioned window(s)"
-        val phys = df.queryExecution.sparkPlan.toString
-        val nestedLoop = phys.contains("CartesianProduct") ||
-          phys.contains("BroadcastNestedLoopJoin")
-        if (nestedLoop && !allowNestedLoop(name))
-          failures += s"$name: cartesian/nested-loop join"
-        if (!allowLowCardWindow(name))
-          lowCardWindows(df, cardCache).foreach(m => failures += s"$name: $m")
+      val df = Bridge.ofRows(spark, built.queryExecution.logical)
+      val plan = df.queryExecution.optimizedPlan
+      val badWindows = plan.collect {
+        case w: logical.Window if w.partitionSpec.isEmpty => w
       }
+      if (badWindows.nonEmpty && !allowUnpartitionedWindow(name))
+        failures += s"$name: ${badWindows.size} unpartitioned window(s)"
+      val phys = df.queryExecution.sparkPlan.toString
+      val nestedLoop = phys.contains("CartesianProduct") ||
+        phys.contains("BroadcastNestedLoopJoin")
+      if (nestedLoop && !allowNestedLoop(name))
+        failures += s"$name: cartesian/nested-loop join"
+      if (!allowLowCardWindow(name))
+        lowCardWindows(df, cardCache).foreach(m => failures += s"$name: $m")
     } finally spark.conf.set(dppKey, dppWas)
+    failures.toList
+  }
+}
+
+class PlanLintSpec extends SparkSpec {
+  import PlanLintSpec.lowCardWindows
+
+  test("no query plans an unpartitioned window, an unjustified cartesian join, or a low-cardinality window key") {
+    val failures = Surface.findings(Surface.Lint)
     assert(failures.isEmpty,
       s"scale lint failed:\n  ${failures.mkString("\n  ")}")
   }

@@ -1,60 +1,35 @@
 package graft
 
-/** Cheap whole-registry gate: every query in `SparkEntry.queries` must
-  * ANALYZE against the sf0.001 fixtures, and every query must carry an
-  * `oracleSql` entry (or be a deliberate rows-only check).
+/** Whole-registry gate: every query in `SparkEntry.queries` must
+  * ANALYZE and EXECUTE against the sf0.001 fixtures, and every query
+  * must carry an `oracleSql` entry (or be a deliberate rows-only check).
   *
   * Exists because of round 7: a Spark upgrade changed how
   * `events.parquet`'s timestamp column loads, and every events-reading
   * query failed *analysis* — but `sbt test` only exercised the subset of
   * queries with dedicated specs, so 21 queries silently dropped out of
-  * the verified surface and the regression was first seen in the
-  * driver's correctness run. Analysis is milliseconds per query (no
-  * jobs run), so this spec makes that whole failure class a fast, named
-  * CI failure: the assertion message lists each query that no longer
-  * analyzes, not just the first.
+  * the verified surface and the regression was first seen in the full
+  * `graft.Verify` correctness run. The analysis and execution results
+  * come from the one [[Surface]] walk, whose build runs each query's
+  * eager jobs; the assertion messages list each query that fails, not
+  * just the first.
   */
 class RegistrySpec extends SparkSpec {
 
-  private val sfDir = "/root/testdata/sf0.001"
-
   test("every registered query analyzes against the current fixtures") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          fn(spark, sfDir).queryExecution.analyzed
-          None
-        } catch {
-          case e: Throwable =>
-            Some(s"$name: ${e.getClass.getSimpleName} " +
-              Option(e.getMessage).getOrElse("").linesIterator
-                .take(2).mkString(" ").take(300))
-        }
-    }
+    val failures = Surface.findings(Surface.Analysis)
     assert(failures.isEmpty,
       s"${failures.size} quer(ies) no longer analyze:\n  " +
         failures.mkString("\n  "))
   }
 
   test("every registered query executes at sf0.001 through the noop sink") {
-    // Analysis (above) is the fast first signal; this closes the
+    // Analysis (above) is the first signal; this closes the
     // RUNTIME-ONLY failure class — codegen faults, cast overflows,
     // dir-dependent fixture paths (e.g. s03/s09's centroid dumps) —
-    // that analysis cannot see. sf0.001 keeps the full sweep tens of
-    // seconds; the noop sink consumes every output column at full
-    // width, the Bench evaluation discipline.
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        try {
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          None
-        } catch {
-          case e: Throwable =>
-            Some(s"$name: ${e.getClass.getSimpleName} " +
-              Option(e.getMessage).getOrElse("").linesIterator
-                .take(2).mkString(" ").take(300))
-        }
-    }
+    // that analysis cannot see. The noop sink consumes every output
+    // column at full width, the Bench evaluation discipline.
+    val failures = Surface.findings(Surface.Execution)
     assert(failures.isEmpty,
       s"${failures.size} quer(ies) fail at runtime:\n  " +
         failures.mkString("\n  "))
