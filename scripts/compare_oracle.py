@@ -7,11 +7,16 @@ For each query in <verifyOutDir>/oracle_sql.json:
   - read the Spark result parquet at <verifyOutDir>/<name>/
   - run the oracle SQL in DuckDB with one view per corpus table
   - sort columns by name, sort rows, compare row count / schema / values
+
+After the summary it prints the 10 queries whose DuckDB work (reads,
+oracle SQL, type checks) took longest, one `SLOW <name> <seconds>` line
+each.
 """
 import json
 import math
 import os
 import sys
+import time
 
 import duckdb
 
@@ -47,6 +52,7 @@ def main(sf_dir, out_dir):
     if os.path.isfile(marker):
         verify_failed = set(json.load(open(marker)))
     n_pass = n_fail = n_skip = 0
+    seconds = {}
     for name, sql in sorted(oracle.items()):
         if name in verify_failed:
             print(f"FAIL {name}: query FAILED in the producing Verify run "
@@ -58,6 +64,7 @@ def main(sf_dir, out_dir):
         if not os.path.isdir(f"{out_dir}/{name}"):
             n_skip += 1
             continue
+        started = time.perf_counter()
         try:
             spark_rel = con.sql(
                 f"SELECT * FROM read_parquet('{out_dir}/{name}/*.parquet')")
@@ -73,6 +80,7 @@ def main(sf_dir, out_dir):
         except Exception as e:
             print(f"FAIL {name}: exception {e}")
             n_fail += 1
+            seconds[name] = time.perf_counter() - started
             continue
         ok = True
         # Reset per query: the boundary-policy gate below reads duck_types,
@@ -110,6 +118,7 @@ def main(sf_dir, out_dir):
             # boundary is a FAIL, not a WARN.
             print(f"FAIL {name}: type check errored (boundary policy "
                   f"unverifiable): {e}")
+        seconds[name] = time.perf_counter() - started
         if spark_cols != duck_cols:
             print(f"FAIL {name}: columns spark={spark_cols} duck={duck_cols}")
             ok = False
@@ -151,6 +160,8 @@ def main(sf_dir, out_dir):
         else:
             n_fail += 1
     print(f"\n{n_pass} pass, {n_fail} fail" + (f", {n_skip} skipped (not dumped)" if n_skip else ""))
+    for name, s in sorted(seconds.items(), key=lambda kv: -kv[1])[:10]:
+        print(f"SLOW {name} {s:.2f}")
     return 1 if n_fail else 0
 
 

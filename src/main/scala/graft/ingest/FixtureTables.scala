@@ -29,14 +29,22 @@ object FixtureTables {
     * with a Verify, or two Verify generations in the driver's harness)
     * can never overwrite what the other's pending DuckDB compare will
     * replay — the round-9 q124/q125 hash-mismatch class. [[graft.Verify]]
-    * pins it INTO ITS OWN OUTPUT DIRECTORY at startup (before any query
-    * or oracle-SQL generation runs), making each verify run's dumps
+    * pins it to the sibling `<outDir>.fixtures` at startup (before any
+    * query or oracle-SQL generation runs), making each verify run's dumps
     * write-once, private, and durable for the compare process that runs
     * afterwards.
+    *
+    * The default root is read by nothing after its JVM exits, so it is
+    * deleted at exit; a pinned root (Verify's, perfbench's) is left for
+    * the compare that reads it.
     */
-  @volatile var root: String = new java.io.File(
-    sys.props.getOrElse("java.io.tmpdir", "/tmp"),
-    s"graft_fixture_tables_p${ProcessHandle.current().pid()}").getAbsolutePath
+  @volatile var root: String = {
+    val default = new java.io.File(
+      sys.props.getOrElse("java.io.tmpdir", "/tmp"),
+      s"graft_fixture_tables_p${ProcessHandle.current().pid()}")
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(default))
+    default.getAbsolutePath
+  }
 
   @volatile private var writtenBy: SparkSession = _
 

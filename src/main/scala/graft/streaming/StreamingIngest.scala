@@ -1,90 +1,60 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
-import graft.ingest.{Normalize, PayloadReader}
+import graft.ingest.PayloadReader
 
-/** The reference's incremental ingest (SURVEY.md §2 A7/B4) re-expressed
-  * as Structured Streaming — the additive streaming demo of §7.5.5; the
-  * batch anti-join in [[graft.load.Incremental]] remains the contract.
+/** The reference's incremental ingest (SURVEY.md §2 A7/B4) as
+  * Structured Streaming, plus the streaming twins of batch operators
+  * and the generation stores that fold micro-batches into snapshots.
   *
-  * Semantics note (why batch stays canonical): streaming dedup state is
-  * bounded by the watermark — a bar older than the watermark horizon
-  * re-entering the stream would NOT be deduplicated, whereas the batch
-  * anti-join never expires keys. With the 14-day horizon below and
-  * newest-first API payloads the two agree on every reference workload.
+  * Every micro-batch sink here goes through one of two drivers, one
+  * per contract:
+  *   - [[ingestStream]] hands each micro-batch of payload documents to a
+  *     batch loader. A micro-batch is an ordinary DataFrame, so the
+  *     parquet loader is [[graft.StockPipeline.run]] itself and the
+  *     stream runs the batch contract: a bar whose primary key is new is
+  *     inserted whatever its age, one already present is skipped, and
+  *     the store is the partitioned four-table store. No watermark
+  *     bounds the dedup, so stream and batch cannot diverge on a late or
+  *     newly added symbol's history.
+  *   - [[generationStream]] commits each micro-batch as one immutable
+  *     `gen-<batchId>` directory of a generation store.
   */
 object StreamingIngest {
 
-  /** Payload JSON files appearing under `payloadDir` → normalized daily
-    * bars → watermarked PK dedup → parquet append. `Trigger.AvailableNow`
-    * drains everything present, then stops — the streaming twin of one
-    * batch ingest run, with exactly-once sink semantics from the
-    * checkpoint.
-    */
-  def dailyIngestStream(
-      spark: SparkSession,
-      payloadDir: String,
-      targetPath: String,
-      checkpointDir: String): StreamingQuery =
-    dedupedDailyBars(spark, payloadDir).writeStream
-      .format("parquet")
-      .option("path", targetPath)
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** Streaming ingest into a JDBC target: the same normalize + watermark
-    * dedup as [[dailyIngestStream]], delivered per micro-batch through
-    * [[graft.sink.JdbcSink.appendIdempotent]] via `foreachBatch` — the
-    * streaming twin of the reference's continuous Postgres mode.
+  /** Payload JSON documents (one per file) appearing under `payloadDir`,
+    * handed to `load` one micro-batch at a time. `Trigger.AvailableNow`
+    * drains everything present, then stops: one batch ingest run per
+    * start, resumed from `checkpointDir`.
     *
-    * Delivery contract: the checkpoint gives at-least-once batch
-    * delivery; the PK anti-join inside the sink turns a replayed batch
-    * into 0 inserts, so the DBMS sees exactly-once per PK — the same
-    * `ON CONFLICT DO NOTHING` effect the reference relies on, without
-    * requiring an idempotent streaming sink from Spark itself.
+    * A micro-batch holds raw payloads (`PayloadReader.payloadSchema`),
+    * so `load` is a batch loader unchanged:
+    *   - parquet: `b => StockPipeline.run(spark, base, b, b, b)`. Each
+    *     table's normalizer reads only its own series key, so one payload
+    *     directory fills all four tables;
+    *   - JDBC: `b => sink.appendIdempotent(Normalize.daily(b))`, the
+    *     streaming twin of the reference's continuous Postgres mode.
+    *
+    * Delivery: the checkpoint gives at-least-once micro-batch delivery,
+    * and both loaders' PK anti-join turns a replayed micro-batch into 0
+    * inserts, so the target holds each PK exactly once — the reference's
+    * `ON CONFLICT DO NOTHING` effect without an idempotent Spark sink.
     */
-  def dailyIngestStreamToJdbc(
-      spark: SparkSession,
-      payloadDir: String,
-      url: String,
-      table: String,
-      pk: Seq[String],
-      properties: java.util.Properties,
-      checkpointDir: String): StreamingQuery =
-    dedupedDailyBars(spark, payloadDir).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        new graft.sink.JdbcSink(spark, url, table, pk, properties)
-          .appendIdempotent(batch.toDF())
-        ()
-      }
+  def ingestStream(spark: SparkSession, payloadDir: String,
+      checkpointDir: String)(load: DataFrame => Unit): StreamingQuery =
+    spark.readStream
+      .schema(PayloadReader.payloadSchema)
+      .option("multiLine", true)
+      .json(payloadDir)
+      .writeStream
+      .foreachBatch((batch: Dataset[Row], _: Long) => load(batch.toDF()))
       .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
       .trigger(Trigger.AvailableNow())
       .start()
-
-  /** Payload JSON files appearing under `payloadDir` → normalized daily
-    * bars → PK dedup under a 14-day watermark: the stream both daily
-    * ingest sinks deliver.
-    */
-  private def dedupedDailyBars(
-      spark: SparkSession, payloadDir: String): DataFrame =
-    Normalize.daily(spark.readStream
-        .schema(PayloadReader.payloadSchema)
-        .option("multiLine", true)
-        .json(payloadDir))
-      // The bar date is the event time; 1:1 with the PK's date column,
-      // so dedup state expires with the watermark while still keying
-      // exactly on the (symbol, date) PK.
-      .withColumn("event_ts", col("date").cast("timestamp"))
-      .withWatermark("event_ts", "14 days")
-      .dropDuplicates("company_symbol", "event_ts")
-      .drop("event_ts")
 
   /** Tumbling event-time window aggregate over an intraday bar stream:
     * per (symbol, window) OHLCV candle — open/close from the earliest/
@@ -455,18 +425,14 @@ object StreamingIngest {
     * micro-batch coarsen to their final value, the standard micro-batch
     * CDC contract.
     *
-    * The dimension lives in generation directories `gen-<batchId>`
-    * under `dimRoot`: a batch reads the newest generation with id
-    * STRICTLY BELOW its own and writes `gen-<its id>`, so read and
-    * write never touch the same files. Crash/replay safety: a replayed
-    * batch resolves the same parent generation (ids below its own are
-    * immutable by construction) and overwrites its own half- or
-    * fully-written output — same parent + same collapsed changes =
-    * same result, and re-merging already-applied changes is a no-op by
-    * scdMerge's null-safe compare. Durable state is the dimension
-    * itself, never executor memory; each trigger costs scdMerge's one
-    * keyed join, so a 100 TB dimension streams through exactly like
-    * its batch counterpart.
+    * The dimension lives in the generation directories `gen-<batchId>`
+    * of [[generationStream]] under `dimRoot`, one full dimension each: a
+    * batch merges into the newest generation strictly below its own id,
+    * so a replay re-derives the same result, and re-merging
+    * already-applied changes is a no-op by scdMerge's null-safe compare.
+    * Durable state is the dimension itself, never executor memory; each
+    * trigger costs scdMerge's one keyed join, so a 100 TB dimension
+    * streams through exactly like its batch counterpart.
     */
   def scdApplyStream(
       changes: DataFrame,
@@ -475,29 +441,21 @@ object StreamingIngest {
       attr: String,
       ts: String,
       checkpointDir: String): StreamingQuery =
-    changes.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val latest = batch.toDF()
-            .groupBy(col(key))
-            .agg(max_by(col(attr), struct(col(ts), col(attr))).as(attr),
-              max(col(ts)).as(ts))
-          val empty = latest
-            .select(col(key), col(attr), col(ts).as("valid_from"),
-              lit(null).cast(batch.schema(ts).dataType).as("valid_to"))
-            .limit(0)
-          val dim = priorGeneration(spark, dimRoot, batchId)
-            .map(p => spark.read.parquet(p))
-            .getOrElse(empty)
-          graft.load.Incremental.scdMerge(dim, latest, key, attr, ts)
-            .write.mode("overwrite").parquet(s"$dimRoot/gen-$batchId")
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    generationStream(changes, dimRoot, checkpointDir) { (batch, gens, genDir) =>
+      val latest = batch
+        .groupBy(col(key))
+        .agg(max_by(col(attr), struct(col(ts), col(attr))).as(attr),
+          max(col(ts)).as(ts))
+      val empty = latest
+        .select(col(key), col(attr), col(ts).as("valid_from"),
+          lit(null).cast(batch.schema(ts).dataType).as("valid_to"))
+        .limit(0)
+      val dim = gens.lastOption
+        .map(p => batch.sparkSession.read.parquet(p))
+        .getOrElse(empty)
+      graft.load.Incremental.scdMerge(dim, latest, key, attr, ts)
+        .write.mode("overwrite").parquet(genDir)
+    }
 
   /** Newest committed dimension generation under `dimRoot` (the frame
     * consumers read), or None before the first batch lands.
@@ -517,9 +475,8 @@ object StreamingIngest {
   private def generations(
       spark: SparkSession, root: String, below: Long): Seq[String] = {
     val (fs, gens) = listGenerations(spark, root)
-    // COMMITTED generations only: every writer drops `_SUCCESS` in the
-    // gen dir as its LAST act (Spark's parquet committer for direct
-    // gen-dir tables; [[commitGeneration]] for sub-table layouts), so a
+    // COMMITTED generations only: [[generationStream]] drops `_SUCCESS`
+    // in the gen dir as its LAST act, so a
     // marker-less dir is a mid-write crash remnant — resolving it by
     // name alone would hand every external read-side a
     // silently-truncated snapshot between the crash and the replay.
@@ -556,66 +513,65 @@ object StreamingIngest {
   private def committed(fs: FileSystem, dir: Path): Boolean =
     fs.exists(new Path(dir, "_SUCCESS"))
 
-  /** Brackets one generation's table writes with the generation-level
-    * `_SUCCESS` commit marker: deleted first (so a replayed batch's
-    * rewrite UN-commits the dir for the rewrite's duration, exactly
-    * like Spark's own overwrite of a direct-parquet generation),
-    * created empty after the last table lands. [[priorGeneration]]
-    * resolves only marker-bearing dirs, so a read-side arriving
-    * between a mid-write crash and the stream's replay resolves the
-    * newest fully-committed parent instead of a truncated snapshot —
-    * the retire-then-swap discipline [[compactStore]] follows, applied
-    * to generation commits. One exists + one create per trigger.
-    */
-  private def commitGeneration(
-      spark: SparkSession, genDir: String)(writes: => Unit): Unit = {
-    val p = new Path(genDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new Path(p, "_SUCCESS")
-    if (fs.exists(marker)) fs.delete(marker, false)
-    writes
-    fs.create(marker, true).close()
-  }
-
-  /** The generation-store protocol of every single-table fold stream.
-    * Micro-batch `n` maps its rows to a `partial`, folds that into the
-    * `table` of the newest COMMITTED generation with id strictly below
-    * `n` (the first batch's snapshot is its partial alone), and commits
-    * the result as `gen-<n>/<table>` under `root` through
-    * [[commitGeneration]].
+  /** The one driver of every generation store. Micro-batch `n` hands
+    * `write` its rows, the paths of the store's COMMITTED generations
+    * with id strictly below `n` (ascending), and its own directory
+    * `root/gen-<n>`, into which `write` lands one snapshot (or, for the
+    * admission stores, one append-only part) — directly or as named
+    * sub-tables.
+    *
+    * Commit: the generation-level `_SUCCESS` marker is deleted before
+    * `write` runs (so a replayed batch's rewrite un-commits the dir for
+    * the rewrite's duration, as Spark's own overwrite of a direct-parquet
+    * generation does) and created after it returns. Readers resolve
+    * only marker-bearing dirs, so a read-side arriving between a
+    * mid-write crash and the stream's replay resolves the newest
+    * fully-committed generation instead of a truncated one.
     *
     * Replay contract: generations below `n` are immutable (a batch only
     * ever writes `gen-<its own id>`), so a batch Spark replays after a
-    * crash resolves the same parent, recomputes the same fold and
-    * overwrites its own half- or fully-written output. Each generation
-    * is a deterministic function of the batch id — Structured
-    * Streaming's condition for exactly-once micro-batch output — and
-    * a full folded snapshot, so readers go through [[latest]] and
-    * [[pruneGenerations]] may reclaim older ones. Per-trigger cost is
-    * the partial plus one fold against the previous snapshot.
+    * crash resolves the same generations, recomputes the same output and
+    * overwrites its own half- or fully-written dir. Each generation is a
+    * deterministic function of the batch id — Structured Streaming's
+    * condition for exactly-once micro-batch output.
+    */
+  private def generationStream(
+      input: DataFrame, root: String, checkpointDir: String)(
+      write: (DataFrame, Seq[String], String) => Unit): StreamingQuery =
+    input.writeStream
+      .foreachBatch { (batch: Dataset[Row], batchId: Long) =>
+        val spark = batch.sparkSession
+        val below = generations(spark, root, batchId)
+        val genDir = s"$root/gen-$batchId"
+        val marker = new Path(genDir, "_SUCCESS")
+        val fs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (fs.exists(marker)) fs.delete(marker, false)
+        write(batch.toDF(), below, genDir)
+        fs.create(marker, true).close()
+      }
+      .option("checkpointLocation", checkpointDir)
+      .start()
+
+  /** A single-table generation store: micro-batch `n` maps its rows to
+    * a `partial`, folds that into the `table` of the newest committed
+    * generation below `n` (the first batch's snapshot is its partial
+    * alone), and writes the result as `gen-<n>/<table>` through
+    * [[generationStream]]. Every generation is a full folded snapshot,
+    * so readers go through [[latest]] and [[pruneGenerations]] may
+    * reclaim older ones. Per-trigger cost is the partial plus one fold
+    * against the previous snapshot.
     */
   private def foldStream(
       input: DataFrame, root: String, table: String, checkpointDir: String)(
       fold: (DataFrame, DataFrame) => DataFrame)(
       partial: DataFrame => DataFrame): StreamingQuery =
-    input.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = partial(batch.toDF())
-          val merged = priorGeneration(spark, root, batchId)
-            .map(p => fold(spark.read.parquet(s"$p/$table"), part))
-            .getOrElse(part)
-          commitGeneration(spark, s"$root/gen-$batchId") {
-            merged.write.mode("overwrite")
-              .parquet(s"$root/gen-$batchId/$table")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    generationStream(input, root, checkpointDir) { (batch, gens, genDir) =>
+      val part = partial(batch)
+      gens.lastOption
+        .map(p => fold(batch.sparkSession.read.parquet(s"$p/$table"), part))
+        .getOrElse(part)
+        .write.mode("overwrite").parquet(s"$genDir/$table")
+    }
 
   /** Additive fold: the union of both snapshots re-aggregated by `keys`,
     * summing every other column under its own name (keys first, then
@@ -644,7 +600,7 @@ object StreamingIngest {
       .map(p => spark.read.parquet(s"$p/$table"))
 
   /** One-time upgrade migration for SUB-TABLE generation stores
-    * (corpus stats and any layout committed via [[commitGeneration]]):
+    * (corpus stats and every other `gen-<id>/<table>` layout):
     * generations written before the gen-level `_SUCCESS` marker
     * existed carry only per-table markers, so after the upgrade the
     * strict read-side sees the store as empty (fold state silently
@@ -708,47 +664,26 @@ object StreamingIngest {
     * documents contributes its ADDITIVE partials (n_docs, Σdl,
     * per-term df), which merge with the previous generation's stats
     * and land as `gen-<batchId>` under `statsRoot` (a `df` and a `tot`
-    * table per generation). Same replay contract as [[scdApplyStream]]:
-    * a batch reads the newest generation STRICTLY BELOW its own id
-    * (generations below are immutable by construction) and overwrites
-    * only its own output, so a crashed/replayed batch re-derives the
-    * identical generation. Per-trigger cost O(|batch| + |vocab|),
-    * independent of corpus history — the stats never require a corpus
-    * rescan, which is what makes per-batch BM25/LM freshness
-    * affordable on a 100 TB corpus.
+    * table per generation, through [[generationStream]]). Per-trigger
+    * cost O(|batch| + |vocab|), independent of corpus history — the
+    * stats never require a corpus rescan, which is what makes per-batch
+    * BM25/LM freshness affordable on a 100 TB corpus.
     */
   def corpusStatsStream(
       docs: DataFrame, // streaming frame with a `text` column
       statsRoot: String,
       checkpointDir: String): StreamingQuery =
-    docs.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val staged = batch.toDF()
-            .withColumn("__toks", graft.text.TextAnalysis.tokens(col("text")))
-          val dfPart = graft.text.CorpusStats.dfPartial(staged, col("__toks"))
-          val totPart = graft.text.CorpusStats.totalsPartial(staged, col("__toks"))
-          val (dfAll, totAll) = priorGeneration(spark, statsRoot, batchId) match {
-            case Some(p) =>
-              graft.text.CorpusStats.merge(
-                Seq(spark.read.parquet(s"$p/df"), dfPart),
-                Seq(spark.read.parquet(s"$p/tot"), totPart))
-            case None =>
-              graft.text.CorpusStats.merge(Seq(dfPart), Seq(totPart))
-          }
-          commitGeneration(spark, s"$statsRoot/gen-$batchId") {
-            dfAll.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/df")
-            totAll.write.mode("overwrite")
-              .parquet(s"$statsRoot/gen-$batchId/tot")
-          }
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    generationStream(docs, statsRoot, checkpointDir) { (batch, gens, genDir) =>
+      def prior(table: String) =
+        gens.lastOption.map(p => batch.sparkSession.read.parquet(s"$p/$table")).toSeq
+      val staged = batch
+        .withColumn("__toks", graft.text.TextAnalysis.tokens(col("text")))
+      val (dfAll, totAll) = graft.text.CorpusStats.merge(
+        prior("df") :+ graft.text.CorpusStats.dfPartial(staged, col("__toks")),
+        prior("tot") :+ graft.text.CorpusStats.totalsPartial(staged, col("__toks")))
+      dfAll.write.mode("overwrite").parquet(s"$genDir/df")
+      totAll.write.mode("overwrite").parquet(s"$genDir/tot")
+    }
 
   /** Generation GC for every generation-dir stream (scdApplyStream,
     * corpusStatsStream, transitionMatrixStream, cusumStream): each
@@ -1531,35 +1466,26 @@ object StreamingIngest {
       numHashes: Int = 16,
       bands: Int = 4,
       threshold: Double = 0.5): StreamingQuery =
-    incoming.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val b = batch.toDF().select(col("doc_id"), col("text"))
-          val selfDropped = graft.dedup.Dedup.minhashNearDups(
-            b, "text", "doc_id", k, numHashes, bands, threshold)
-            .select(col("id_b").as("doc_id")).distinct()
-          val survivors = b.join(selfDropped, Seq("doc_id"), "left_anti")
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val gens = generations(spark, corpusRoot, batchId)
-          val admitted =
-            if (gens.isEmpty) survivors
-            else {
-              val corpus = spark.read.parquet(gens: _*)
-              val hit = graft.dedup.Dedup.incrementalNearDups(
-                corpus, survivors, "text", "doc_id",
-                k, numHashes, bands, threshold)
-                .select(col("batch_id").as("doc_id")).distinct()
-              survivors.join(hit, Seq("doc_id"), "left_anti")
-            }
-          admitted.write.mode("overwrite").parquet(s"$corpusRoot/gen-$batchId")
-          survivors.unpersist(false)
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    generationStream(incoming, corpusRoot, checkpointDir) { (batch, gens, genDir) =>
+      val b = batch.select(col("doc_id"), col("text"))
+      val selfDropped = graft.dedup.Dedup.minhashNearDups(
+        b, "text", "doc_id", k, numHashes, bands, threshold)
+        .select(col("id_b").as("doc_id")).distinct()
+      val survivors = b.join(selfDropped, Seq("doc_id"), "left_anti")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val admitted =
+        if (gens.isEmpty) survivors
+        else {
+          val corpus = batch.sparkSession.read.parquet(gens: _*)
+          val hit = graft.dedup.Dedup.incrementalNearDups(
+            corpus, survivors, "text", "doc_id",
+            k, numHashes, bands, threshold)
+            .select(col("batch_id").as("doc_id")).distinct()
+          survivors.join(hit, Seq("doc_id"), "left_anti")
+        }
+      admitted.write.mode("overwrite").parquet(genDir)
+      survivors.unpersist(false)
+    }
 
   /** The admitted corpus across all committed generations, or None
     * before any generation (including a `gen--1` seed) exists.
@@ -1592,7 +1518,7 @@ object StreamingIngest {
     *      what it has seen).
     *
     * Commit/replay contract: the two tables land under one
-    * [[commitGeneration]] marker; a replayed batch reads only
+    * [[generationStream]] marker; a replayed batch reads only
     * generations strictly below its own id and re-derives the
     * identical result (anchors are content hashes). The admitted
     * corpus carries the d17 invariant BY CONSTRUCTION: no two
@@ -1604,44 +1530,31 @@ object StreamingIngest {
       corpusRoot: String,
       checkpointDir: String,
       L: Int = 20): StreamingQuery =
-    incoming.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val b = batch.toDF().select(col("doc_id"), col("text"))
-            .withColumn("__anch", array_distinct(
-              graft.dedup.Dedup.spanAnchors(
-                graft.text.TextAnalysis.tokens(col("text")), L)))
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val ex = b.select(col("doc_id"), explode(col("__anch")).as("h"))
-          val selfDrop = ex
-            .join(ex.groupBy(col("h")).agg(min(col("doc_id")).as("__min")),
-              Seq("h"))
-            .where(col("doc_id") > col("__min"))
-            .select(col("doc_id")).distinct()
-          val gens = generations(spark, corpusRoot, batchId)
-          val corpusHit =
-            if (gens.isEmpty) selfDrop.limit(0)
-            else ex.join(anchorIndex(spark, corpusRoot, gens), Seq("h"),
-                "left_semi")
-              .select(col("doc_id")).distinct()
-          val dropped = selfDrop.unionByName(corpusHit).distinct()
-          val admitted = b.join(dropped, Seq("doc_id"), "left_anti")
-          commitGeneration(spark, s"$corpusRoot/gen-$batchId") {
-            admitted.select(col("doc_id"), col("text"))
-              .write.mode("overwrite")
-              .parquet(s"$corpusRoot/gen-$batchId/docs")
-            admitted.select(explode(col("__anch")).as("h")).distinct()
-              .write.mode("overwrite")
-              .parquet(s"$corpusRoot/gen-$batchId/anchors")
-          }
-          b.unpersist(false)
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    generationStream(incoming, corpusRoot, checkpointDir) { (batch, gens, genDir) =>
+      val b = batch.select(col("doc_id"), col("text"))
+        .withColumn("__anch", array_distinct(
+          graft.dedup.Dedup.spanAnchors(
+            graft.text.TextAnalysis.tokens(col("text")), L)))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val ex = b.select(col("doc_id"), explode(col("__anch")).as("h"))
+      val selfDrop = ex
+        .join(ex.groupBy(col("h")).agg(min(col("doc_id")).as("__min")),
+          Seq("h"))
+        .where(col("doc_id") > col("__min"))
+        .select(col("doc_id")).distinct()
+      val corpusHit =
+        if (gens.isEmpty) selfDrop.limit(0)
+        else ex.join(anchorIndex(batch.sparkSession, corpusRoot, gens), Seq("h"),
+            "left_semi")
+          .select(col("doc_id")).distinct()
+      val dropped = selfDrop.unionByName(corpusHit).distinct()
+      val admitted = b.join(dropped, Seq("doc_id"), "left_anti")
+      admitted.select(col("doc_id"), col("text"))
+        .write.mode("overwrite").parquet(s"$genDir/docs")
+      admitted.select(explode(col("__anch")).as("h")).distinct()
+        .write.mode("overwrite").parquet(s"$genDir/anchors")
+      b.unpersist(false)
+    }
 
   /** The anchor index of the generations at `gens`, read with one
     * multi-path scan. Anchors are BINARY(16) md5 keys; a generation
@@ -1895,23 +1808,13 @@ object StreamingIngest {
       events: DataFrame, // streaming: user_id, ts, event_type, value
       storeRoot: String,
       checkpointDir: String): StreamingQuery =
-    events.writeStream
-      .foreachBatch {
-        (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-            batchId: Long) =>
-          val spark = batch.sparkSession
-          val part = featurePartials(batch.toDF())
-          val folded = priorGeneration(spark, storeRoot, batchId) match {
-            case Some(p) => foldFeatures(spark.read.parquet(p), part)
-            case None    => part
-          }
-          folded.write.mode("overwrite")
-            .parquet(s"$storeRoot/gen-$batchId")
-          ()
-      }
-      .option("checkpointLocation", checkpointDir)
-      .outputMode(OutputMode.Append)
-      .start()
+    generationStream(events, storeRoot, checkpointDir) { (batch, gens, genDir) =>
+      val part = featurePartials(batch)
+      gens.lastOption
+        .map(p => foldFeatures(batch.sparkSession.read.parquet(p), part))
+        .getOrElse(part)
+        .write.mode("overwrite").parquet(genDir)
+    }
 
   /** Per-user additive partials of one event batch. Lifetime value is
     * exact integer cents (the 2-decimal event values quantize

@@ -5,7 +5,9 @@ import java.util.Properties
 
 import org.apache.spark.sql.functions._
 
+import graft.ingest.{Fixtures, Normalize}
 import graft.sink.JdbcSink
+import graft.streaming.StreamingIngest
 
 /** Integration test for [[JdbcSink]] against a real JDBC database —
   * embedded Derby (on the Spark classpath, normally serving the Hive
@@ -34,6 +36,22 @@ class JdbcSinkSpec extends SparkSpec {
     }
   }
 
+  private def dailyBarsDdl(table: String): String =
+    s"""CREATE TABLE $table (
+       | company_symbol VARCHAR(16) NOT NULL, "date" DATE NOT NULL,
+       | open_price DECIMAL(15,4), high_price DECIMAL(15,4),
+       | low_price DECIMAL(15,4), close_price DECIMAL(15,4),
+       | volume BIGINT, PRIMARY KEY (company_symbol, "date"))""".stripMargin
+
+  /** The JDBC ingest stream: payload files under `dir` → daily bars →
+    * the sink's idempotent append, one micro-batch at a time.
+    */
+  private def ingestToJdbc(dir: String, table: String, ckpt: String): Unit =
+    StreamingIngest.ingestStream(spark, dir, ckpt) { b =>
+      new JdbcSink(spark, url, table, Seq("company_symbol", "date"), props)
+        .appendIdempotent(Normalize.daily(b))
+    }.awaitTermination()
+
   test("appendIdempotent against Derby: re-run inserts zero, overlap inserts only new rows") {
     withTable(
       "CREATE TABLE bars (sym VARCHAR(8) NOT NULL, d INT NOT NULL, v DOUBLE, PRIMARY KEY (sym, d))",
@@ -60,23 +78,14 @@ class JdbcSinkSpec extends SparkSpec {
   }
 
   test("streaming ingest to Derby: redelivered batches insert zero (foreachBatch + PK guard)") {
-    withTable(
-      """CREATE TABLE daily_bars (
-        | company_symbol VARCHAR(16) NOT NULL, "date" DATE NOT NULL,
-        | open_price DECIMAL(15,4), high_price DECIMAL(15,4),
-        | low_price DECIMAL(15,4), close_price DECIMAL(15,4),
-        | volume BIGINT, PRIMARY KEY (company_symbol, "date"))""".stripMargin,
-      "daily_bars") {
+    withTable(dailyBarsDdl("daily_bars"), "daily_bars") {
       val dir = java.nio.file.Files.createTempDirectory("graft_stream_jdbc")
       java.nio.file.Files.writeString(dir.resolve("aapl.json"), graft.ingest.Fixtures.dailyAapl)
       java.nio.file.Files.writeString(dir.resolve("msft.json"), graft.ingest.Fixtures.dailyMsft)
 
       def runOnce(): Unit = {
         val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
-        val q = graft.streaming.StreamingIngest.dailyIngestStreamToJdbc(
-          spark, dir.toString, url, "daily_bars",
-          Seq("company_symbol", "date"), props, ckpt.toString)
-        q.awaitTermination()
+        ingestToJdbc(dir.toString, "daily_bars", ckpt.toString)
       }
 
       runOnce()
@@ -87,6 +96,25 @@ class JdbcSinkSpec extends SparkSpec {
       // "re-run the whole ingest" case; the PK guard must insert zero
       runOnce()
       assert(spark.read.jdbc(url, "daily_bars", props).count() == 8L)
+    }
+  }
+
+  test("streaming ingest to Derby: a symbol first seen in a later run lands every bar, however old") {
+    withTable(dailyBarsDdl("late_bars"), "late_bars") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_stream_jdbc_late").toString
+      val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt_late").toString
+      StreamingSpec.writePayloads(dir, "aapl" -> Fixtures.dailyAapl)
+      ingestToJdbc(dir, "late_bars", ckpt)
+      assert(spark.read.jdbc(url, "late_bars", props).count() == 5L)
+
+      // same checkpoint: only the new file is a new micro-batch
+      StreamingSpec.writePayloads(dir, "late" -> StreamingSpec.lateSymbolPayload)
+      ingestToJdbc(dir, "late_bars", ckpt)
+      val late = spark.read.jdbc(url, "late_bars", props)
+        .where(col("company_symbol") === StreamingSpec.lateSymbol)
+      assert(late.count() == StreamingSpec.lateBars.toLong)
+      assert(spark.read.jdbc(url, "late_bars", props).count() ==
+        5L + StreamingSpec.lateBars)
     }
   }
 

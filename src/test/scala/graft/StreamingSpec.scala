@@ -1,12 +1,32 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
-import graft.ingest.Fixtures
+import scala.jdk.CollectionConverters._
+import scala.util.Using
+
+import graft.ingest.{Fixtures, PayloadReader}
+import graft.load.Catalog
+import graft.schema.StockSchemas
 import graft.streaming.StreamingIngest
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+  import StreamingSpec._
+
+  /** Drains `in` through the payload ingest stream into the four-table
+    * parquet store at `store`, one `StockPipeline.run` per micro-batch.
+    */
+  private def ingest(in: String, ckpt: String, store: String): Unit =
+    StreamingIngest.ingestStream(spark, in, ckpt)(
+      b => StockPipeline.run(spark, store, b, b, b)).awaitTermination()
+
+  /** Every row of every stock table under `store`, as sorted strings. */
+  private def tables(store: String): Map[String, Seq[String]] =
+    StockSchemas.tables.map { case (t, schema) =>
+      t -> spark.read.schema(schema).parquet(Catalog.tablePath(store, t))
+        .collect().map(_.toString).toSeq.sorted
+    }
 
   test("dailyIngestStream: AvailableNow drains files, dedups on PK, resumes incrementally") {
     val base = Files.createTempDirectory("graft_stream_spec").toString
@@ -15,18 +35,76 @@ class StreamingSpec extends SparkSpec {
 
     Files.writeString(java.nio.file.Paths.get(s"$in/p1.json"), Fixtures.dailyAapl)
     Files.writeString(java.nio.file.Paths.get(s"$in/p2.json"), Fixtures.dailyMsft)
-    StreamingIngest.dailyIngestStream(spark, in, out, ckpt).awaitTermination()
-    val n1 = spark.read.parquet(out).count()
+    ingest(in, ckpt, out)
+    val daily = Catalog.tablePath(out, "daily_stock_prices")
+    val n1 = spark.read.parquet(daily).count()
     assert(n1 == 8)   // 5 AAPL + 3 MSFT good bars (2 edge rows dropped)
 
     // second batch overlaps the first on 2 AAPL bars; only new dates land
     Files.writeString(java.nio.file.Paths.get(s"$in/p3.json"), Fixtures.dailyAaplNextRun)
-    StreamingIngest.dailyIngestStream(spark, in, out, ckpt).awaitTermination()
-    val rows = spark.read.parquet(out)
+    ingest(in, ckpt, out)
+    val rows = spark.read.parquet(daily)
       .select("company_symbol", "date").collect()
       .map(r => (r.getString(0), r.getDate(1).toString))
     assert(rows.length == 10)                     // +2 genuinely-new bars
     assert(rows.distinct.length == 10)            // and no PK duplicates
+  }
+
+  test("ingestStream equals two StockPipeline.run batches on all four tables, a late new symbol's old bars included") {
+    val base = Files.createTempDirectory("graft_ingest_vs_batch").toString
+    val (in, ckpt, streamed, batched) =
+      (s"$base/in", s"$base/ckpt", s"$base/streamed", s"$base/batched")
+    writePayloads(in, "aapl" -> Fixtures.dailyAapl, "msft" -> Fixtures.dailyMsft,
+      "intraday" -> Fixtures.intradayAapl, "sma" -> Fixtures.smaAapl,
+      "error" -> Fixtures.errorPayload)
+    ingest(in, ckpt, streamed)
+    // run 2 adds a symbol whose 40 bars reach 39 days behind run 1's
+    // newest bar: every one of them has a new PK, so all must land
+    writePayloads(in, "aapl2" -> Fixtures.dailyAaplNextRun, "late" -> lateSymbolPayload)
+    ingest(in, ckpt, streamed)
+
+    def payloads(docs: String*) = PayloadReader.fromJsonStrings(spark, docs.toDS())
+    StockPipeline.run(spark, batched,
+      payloads(Fixtures.dailyAapl, Fixtures.dailyMsft, Fixtures.errorPayload),
+      payloads(Fixtures.intradayAapl), payloads(Fixtures.smaAapl))
+    StockPipeline.run(spark, batched,
+      payloads(Fixtures.dailyAaplNextRun, lateSymbolPayload), payloads(), payloads())
+
+    val (s, b) = (tables(streamed), tables(batched))
+    StockSchemas.tables.keys.foreach(t => assert(s(t) == b(t), s"$t differs"))
+    assert(s("daily_stock_prices").count(_.contains(lateSymbol)) == lateBars)
+    assert(s.values.forall(_.nonEmpty))
+  }
+
+  test("ingestStream replay: a micro-batch re-run under its own id inserts 0 rows in every table and writes no file") {
+    val base = Files.createTempDirectory("graft_ingest_replay").toString
+    val (in, cp, store) = (s"$base/in", s"$base/cp", s"$base/store")
+    val inserted = scala.collection.mutable.ArrayBuffer[Map[String, Long]]()
+    def start() = StreamingIngest.ingestStream(spark, in, cp) { b =>
+      inserted += StockPipeline.run(spark, store, b, b, b).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    }
+    def dataFiles(): Set[String] =
+      Using.resource(Files.walk(Paths.get(store)))(_.iterator.asScala
+        .filter(_.toString.endsWith(".parquet")).map(_.toString).toSet)
+    writePayloads(in, "aapl" -> Fixtures.dailyAapl, "sma" -> Fixtures.smaAapl)
+    start().awaitTermination()
+    writePayloads(in, "aapl2" -> Fixtures.dailyAaplNextRun, "late" -> lateSymbolPayload)
+    start().awaitTermination()
+    assert(inserted.last("daily_stock_prices") == 2L + lateBars)
+    assert(inserted.last("companies") == 1L)
+    val files = dataFiles()
+
+    // crash after the loads landed but before Spark logged batch 1 as
+    // committed: the restart must replay batch 1 under the SAME id
+    assert(new java.io.File(s"$cp/commits/1").delete())
+    new java.io.File(s"$cp/commits/.1.crc").delete()
+    val q = start(); q.awaitTermination()
+    assert(q.recentProgress.map(_.batchId).contains(1L), "batch 1 was not replayed")
+    assert(new java.io.File(s"$cp/commits/1").exists)
+    assert(inserted.length == 3)
+    assert(inserted.last == StockSchemas.tables.keys.map(_ -> 0L).toMap)
+    assert(dataFiles() == files, "the replay wrote data files")
   }
 
   test("windowedOhlcv aggregates tumbling event-time windows with watermark") {
@@ -2062,5 +2140,33 @@ class StreamingSpec extends SparkSpec {
       nodes, iters = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(streamedRanks === batchRanks)
+  }
+}
+
+object StreamingSpec {
+
+  /** A symbol no other fixture carries, first offered by a later run. */
+  val lateSymbol = "NVDA"
+  val lateBars = 40
+
+  /** `lateSymbol`'s daily payload: `lateBars` consecutive days ending on
+    * the newest `Fixtures.dailyAapl` bar, so most of them are far older
+    * than anything a later run brings.
+    */
+  val lateSymbolPayload: String = {
+    val last = java.time.LocalDate.parse("2025-12-09")
+    val bars = (0 until lateBars).map { i =>
+      val p = 180.0 + i
+      f""""${last.minusDays(i.toLong)}": {"1. open": "$p%.4f", "2. high": "${p + 2}%.4f", """ +
+        f""""3. low": "${p - 2}%.4f", "4. close": "${p + 1}%.4f", "5. volume": "${1000000 + i}"}"""
+    }
+    s"""{"Meta Data": {"1. Information": "Daily Prices", "2. Symbol": "$lateSymbol"},
+       |"Time Series (Daily)": {${bars.mkString(",\n")}}}""".stripMargin
+  }
+
+  /** Writes each `(name, document)` as `<dir>/<name>.json`. */
+  def writePayloads(dir: String, docs: (String, String)*): Unit = {
+    Files.createDirectories(Paths.get(dir))
+    docs.foreach { case (n, d) => Files.writeString(Paths.get(s"$dir/$n.json"), d) }
   }
 }
