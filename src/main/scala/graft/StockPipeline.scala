@@ -85,10 +85,14 @@ object StockPipeline {
   /** Flagship demo on the embedded fixtures: two ingest runs (the second
     * overlapping the first, proving idempotency), then returns the loaded
     * daily table. Used by `SparkEntry.entry`.
+    *
+    * The returned frame reads the store lazily, so the store lives
+    * until the JVM exits and is deleted then.
     */
   def demo(spark: SparkSession): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_stock_demo").toString
+    val dir = java.nio.file.Files.createTempDirectory("graft_stock_demo").toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    val base = dir.getAbsolutePath
     run(spark, base,
       Fixtures.dailyPayloads(spark),
       Fixtures.intradayPayloads(spark),

@@ -3,12 +3,19 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** The one round driver of the iterative operators in [[GraphOps]] and
-  * [[graft.analytics.Preference]]: a DataFrame is a lazily built plan,
-  * so an iterative operator is its `step` plan plus this driver, which
-  * owns when the plan is materialized, how a change is detected and
-  * where the loop stops. [[converge]] runs to a fixpoint; [[iterate]]
-  * runs a fixed round count.
+/** The one round driver of the iterative operators in [[GraphOps]],
+  * [[graft.similarity.GraphAnn]] and [[graft.analytics.Preference]]: a
+  * DataFrame is a lazily built plan, so an iterative operator is its
+  * `step` plan plus this driver, which owns when the plan is
+  * materialized, how a change is detected and where the loop stops.
+  * No graph loop is hand-rolled.
+  *
+  * [[converge]] runs to a fixpoint: connected components, coreness,
+  * shortest paths, and SCC's trim, settle and inner propagation loops
+  * (the settle step runs a propagation `converge` of its own).
+  * [[iterate]] runs a fixed round count: label propagation, k-hop
+  * reach, HyperBall and the graph-ANN beam at stride 1; the PageRanks,
+  * `hits` and Bradley–Terry at stride `n`.
   *
   * Contract the callers' oracles rely on: each oracle unrolls exactly
   * `maxRounds` rounds of the same recurrence, and a round applied past

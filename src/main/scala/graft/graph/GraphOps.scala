@@ -193,6 +193,16 @@ object GraphOps {
     }.last
   }
 
+  /** An undirected edge set as directed `(src, dst, extra…)` rows, each
+    * edge once per direction, materialized once: every round of the
+    * loop that reads it joins against it (see [[pageRank]]).
+    */
+  private def mirrored(edges: DataFrame, extra: String*): DataFrame =
+    edges.select(Seq(col("src"), col("dst")) ++ extra.map(col): _*)
+      .unionAll(edges.select(
+        Seq(col("dst").as("src"), col("src").as("dst")) ++ extra.map(col): _*))
+      .localCheckpoint(true)
+
   /** Connected components by min-label propagation to fixpoint; fails
     * loudly at the cap `maxRounds` ([[Fixpoint.converge]]). Measured
     * changing rounds at sf 0.001/0.01/0.1: g02 3/10/7 of 12, c05
@@ -205,10 +215,7 @@ object GraphOps {
     * same step if diameters grow.
     */
   def connectedComponents(edgesUndirected: DataFrame, maxRounds: Int): DataFrame = {
-    // materialized once — every round joins against it (see pageRank)
-    val both = edgesUndirected.select(col("src"), col("dst"))
-      .unionAll(edgesUndirected.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    val both = mirrored(edgesUndirected)
     val init = both.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     Fixpoint.converge("connectedComponents", init, Seq("node"),
@@ -245,9 +252,7 @@ object GraphOps {
     * correctness one).
     */
   def labelPropagation(edgesUndirected: DataFrame, iters: Int): DataFrame = {
-    val both = edgesUndirected.select(col("src"), col("dst"))
-      .unionAll(edgesUndirected.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    val both = mirrored(edgesUndirected)
     val init = both.select(col("src").as("node")).distinct()
       .select(col("node"), col("node").as("label"))
     val w = Window.partitionBy(col("node"))
@@ -379,9 +384,7 @@ object GraphOps {
     */
   def hyperballReach(edgesUndirected: DataFrame, maxHops: Int, k: Int): DataFrame = {
     import graft.functions.KmvSketch
-    val both = edgesUndirected.select(col("src"), col("dst"))
-      .unionAll(edgesUndirected.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    val both = mirrored(edgesUndirected)
     // each hop reads the counters twice: init materialized, stride 1
     val init = both.select(col("src").as("node")).distinct()
       .select(col("node"), array(KmvSketch.hash64(col("node"))).as("ctr"))
@@ -410,10 +413,7 @@ object GraphOps {
     * judged against.
     */
   def khopReach(edgesUndirected: DataFrame, probes: DataFrame, maxHops: Int): DataFrame = {
-    // materialized once — each hop joins the frontier against it
-    val both = edgesUndirected.select(col("src"), col("dst"))
-      .unionAll(edgesUndirected.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    val both = mirrored(edgesUndirected)
     // reach is referenced twice per hop (self ∪ its own expansion), so
     // a lazy plan doubles every hop — exponential in maxHops: the
     // initial reach and every hop's state are materialized (stride 1)
@@ -458,9 +458,7 @@ object GraphOps {
     */
   def coreness(edgesUndirected: DataFrame, maxRounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val both = edgesUndirected.select(col("src"), col("dst"))
-      .unionAll(edgesUndirected.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    val both = mirrored(edgesUndirected)
     val deg = both.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("degree"))
       .localCheckpoint(true)
@@ -501,10 +499,7 @@ object GraphOps {
     */
   def shortestPaths(edges: DataFrame, probes: DataFrame,
       maxRounds: Int): DataFrame = {
-    val both = edges.select(col("src"), col("dst"), col("cost"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst"),
-        col("cost")))
-      .localCheckpoint(true)
+    val both = mirrored(edges, "cost")
     val init = probes.select(col("probe"), col("probe").as("node"),
       lit(0L).as("dist"))
     Fixpoint.converge("shortestPaths", init, Seq("probe", "node"),
@@ -561,41 +556,50 @@ object GraphOps {
     * set — the spider-trap / mirror-ring detector the undirected
     * [[connectedComponents]] cannot express (every real link graph is
     * directed; an undirected CC merges a one-way citation chain into
-    * one "component").
+    * one "component"). Returns `(node, scc_id)`, `scc_id` the SCC's
+    * min member.
     *
-    * Algorithm — min-label settle rounds, each round two simultaneous
-    * fixpoint propagations over the ACTIVE subgraph:
+    * State: one `(node, scc_id)` row per endpoint node, `scc_id` NULL
+    * while the node is open. Two [[Fixpoint.converge]] phases run over
+    * it; each closes nodes and never reopens one.
+    *
+    * Trim: an open node with no open in-neighbour or no open
+    * out-neighbour lies on no cycle, so it is its own singleton SCC
+    * (Tarjan's "trivial SCC" observation) and closes at
+    * `scc_id = node`; each close can expose new trivial nodes. On real
+    * digraphs the acyclic tail is most of the graph, and a trim round
+    * costs two semi-joins instead of a settle round's full
+    * propagation. Cap: the node count. A round that changes the state
+    * closes at least one node, so the cap cannot fire.
+    *
+    * Settle: each round restricts the edges to the open nodes and runs
+    * two simultaneous min-label propagations to fixpoint over them:
     * f(v) = min(ancestors(v) ∪ {v}), b(v) = min(descendants(v) ∪ {v}).
     * Within one SCC every member has the SAME ancestor and descendant
     * sets, so f and b are SCC-uniform; f(v) = b(v) = u implies u is
     * both an ancestor and a descendant of v — u ∈ SCC(v) — and since
     * u minimizes ancestors ∪ self ⊇ SCC(v), u IS the SCC's min label:
-    * settled nodes get exactly the canonical min-member id. The
-    * active-subgraph's global min always settles (f = b = itself), so
+    * nodes with f = b close at exactly the canonical min-member id.
+    * The open subgraph's global min always closes (f = b = itself), so
     * every round retires ≥ 1 whole SCC; removal is sound because any
-    * path witnessing mutual reachability between two active nodes
-    * lies entirely inside their own SCC (each intermediate node is
-    * mutually reachable with both endpoints), never through a settled
-    * one. Measured on g11's graph at sf 0.001/0.01/0.1, after the trim
-    * prepass: 1/3/2 settle rounds of `maxOuter` = 16, the longest
-    * propagation changing for 17/18/23 rounds of `maxInner` = 36. Both
-    * caps fail loudly when exceeded (the propagation's inside
-    * [[Fixpoint.converge]]) — the BhMaxM discipline — rather than
-    * return a wrong partition.
+    * path witnessing mutual reachability between two open nodes lies
+    * entirely inside their own SCC (each intermediate node is mutually
+    * reachable with both endpoints), never through a closed one.
     *
-    * A trim prepass runs first: nodes with zero in- or out-degree lie
-    * on no cycle, so they are peeled iteratively as singleton SCCs
-    * (Tarjan's "trivial SCC" observation) before any propagation —
-    * on real digraphs the acyclic tail is most of the graph, and a
-    * peel round costs two semi-joins instead of a settle round's
-    * full fixpoint.
+    * Measured on g11's graph (200/2,000/20,000 nodes) at sf
+    * 0.001/0.01/0.1: 7/6/10 trim rounds that change the state, then
+    * 1/3/2 settle rounds of `maxOuter` = 16, the longest propagation
+    * changing for 17/18/23 rounds of `maxInner` = 36. Without the trim
+    * the settle loop needs 7/8/11 rounds. Both settle caps fail loudly
+    * when exceeded ([[Fixpoint.converge]]) — the BhMaxM discipline —
+    * rather than return a wrong partition.
     *
-    * Scale shape: state is (node, f, b) BIGINTs; each propagation
-    * round is two keyed joins + one map-side-combined min aggregate
-    * (batched `innerStride` rounds per materialization to amortize
-    * job launch); min-folds are order-free, so the result is
+    * Scale shape: ids are BIGINTs; each propagation round is two keyed
+    * joins + one map-side-combined min aggregate (batched
+    * `innerStride` rounds per materialization to amortize job
+    * launch); min-folds are order-free, so the result is
     * bit-reproducible at any partitioning — the g02 discipline. No
-    * driver state beyond the round counters.
+    * driver state beyond the node count.
     */
   def stronglyConnectedComponents(edges0: DataFrame,
       maxOuter: Int = 16, maxInner: Int = 36): DataFrame = {
@@ -605,51 +609,40 @@ object GraphOps {
     // at sf0.001 (analysis/codegen explosion) vs 21.5s at stride 2;
     // stride 1 doubles the job count for no plan saving
     val innerStride = 2
-    var active = edges0.select(col("src"), col("dst")).localCheckpoint(true)
-    var nodes = active.select(col("src").as("node"))
-      .unionAll(active.select(col("dst").as("node"))).distinct()
-      .localCheckpoint(true)
-    var result = nodes.select(col("node"), col("node").as("scc_id"))
-      .where(lit(false)).localCheckpoint(true)
-    // Trim prepass: a node with zero in-degree or zero out-degree in
-    // the active subgraph lies on no cycle — it is its own singleton
-    // SCC (label = itself = its min member, matching the settle
-    // loop's labeling). Peel such nodes iteratively (each peel can
-    // expose new trivial nodes) BEFORE the settle loop: on real link
-    // graphs the acyclic tail is the bulk of the node set, and one
-    // peel round is two semi-joins vs the settle loop's O(diameter)
-    // propagation. The cap only stops peeling — leftovers settle
-    // correctly in the main loop — so it never needs to fail loudly.
-    var nNodes = nodes.count()
-    var trim = 0
-    var peeled = true
-    while (peeled && trim < 24 && nNodes > 0L) {
-      trim += 1
-      val cyclic = active.select(col("src").as("node")).distinct()
-        .join(active.select(col("dst").as("node")).distinct(),
-          Seq("node"), "left_semi")
-      val remain = nodes.join(cyclic, Seq("node"), "left_semi")
-        .localCheckpoint(true)
-      val nRemain = remain.count()
-      if (nRemain == nNodes) peeled = false
-      else {
-        val trivial = nodes.join(remain, Seq("node"), "left_anti")
-        result = result.unionAll(
-          trivial.select(col("node"), col("node").as("scc_id")))
-        nodes = remain
-        active = active
-          .join(remain.select(col("node").as("src")), Seq("src"), "left_semi")
-          .join(remain.select(col("node").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-          .localCheckpoint(true)
-        nNodes = nRemain
-      }
+    val edges = edges0.select(col("src"), col("dst")).localCheckpoint(true)
+    val nodes = edges.select(col("src").as("node"))
+      .unionAll(edges.select(col("dst").as("node"))).distinct()
+    val nNodes = nodes.count()
+    def open(s: DataFrame): DataFrame =
+      s.where(col("scc_id").isNull).select(col("node"))
+    def openEdges(s: DataFrame): DataFrame = {
+      val o = open(s)
+      edges.join(o.select(col("node").as("src")), Seq("src"), "left_semi")
+        .join(o.select(col("node").as("dst")), Seq("dst"), "left_semi")
     }
-    var outer = 0
-    while (nodes.limit(1).count() > 0) {
-      outer += 1
-      require(outer <= maxOuter,
-        s"scc: settle rounds exceeded maxOuter=$maxOuter — raise the cap")
+    // closes the open nodes of `closing(node, scc_id)` at its scc_id: a
+    // union and min, not an outer join, because a join's estimated size
+    // is the product of its inputs' and a checkpoint keeps its plan's
+    // estimate. A join of the state per round compounded that estimate
+    // until planning a 40-round trim spent minutes in BigInt multiplies
+    def close(s: DataFrame, closing: DataFrame): DataFrame =
+      s.unionAll(closing)
+        .groupBy(col("node")).agg(min(col("scc_id")).as("scc_id"))
+    val init = nodes.select(col("node"),
+      lit(null).cast(edges.schema("src").dataType).as("scc_id"))
+    val trimmed = Fixpoint.converge("stronglyConnectedComponents trim",
+        init, Seq("node"), nNodes.min(Int.MaxValue).toInt) { s =>
+      val a = openEdges(s)
+      val cyclic = a.select(col("src").as("node")).distinct()
+        .join(a.select(col("dst").as("node")).distinct(),
+          Seq("node"), "left_semi")
+      close(s, open(s).join(cyclic, Seq("node"), "left_anti")
+        .select(col("node"), col("node").as("scc_id")))
+    }
+    Fixpoint.converge("stronglyConnectedComponents settle", trimmed,
+        Seq("node"), maxOuter) { state =>
+      // every propagation round joins against it
+      val active = openEdges(state).localCheckpoint(true)
       // one propagation round, composed lazily: min(f) arrives along
       // in-edges, min(b) along out-edges, self rides the union — ONE
       // keyed aggregate, the connectedComponents shape done twice-in-one
@@ -665,22 +658,10 @@ object GraphOps {
             min(col("b")).as("b"))
       }
       val st = Fixpoint.converge("stronglyConnectedComponents propagation",
-        nodes.select(col("node"), col("node").as("f"), col("node").as("b")),
+        open(state).select(col("node"), col("node").as("f"), col("node").as("b")),
         Seq("node"), maxInner, innerStride)(propagate)
-      val settled = st.where(col("f") === col("b"))
-        .select(col("node"), col("f").as("scc_id"))
-      // st is checkpointed, so the growing union stays shallow (≤
-      // maxOuter branches over materialized leaves) — no per-round
-      // checkpoint needed on the accumulator
-      result = result.unionAll(settled)
-      nodes = st.where(col("f") =!= col("b")).select(col("node"))
-        .localCheckpoint(true)
-      active = active
-        .join(nodes.select(col("node").as("src")), Seq("src"), "left_semi")
-        .join(nodes.select(col("node").as("dst")), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst"))
-        .localCheckpoint(true)
+      close(state, st.where(col("f") === col("b"))
+        .select(col("node"), col("f").as("scc_id")))
     }
-    result
   }
 }

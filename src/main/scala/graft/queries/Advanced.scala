@@ -813,20 +813,14 @@ object Advanced {
     val market = daily.groupBy(col("l_shipdate"))
       .agg(sum(col("day_price")).cast(DecimalType(18, 2)).as("mkt_price"))
     val joined = daily.join(broadcast(market), Seq("l_shipdate"))
-    // The moment sums exceed 2^53 in scaled-integer terms, where a
-    // direct decimal→double cast is no longer cross-engine exact
-    // (DuckDB converts the int128 to double FIRST, double-rounding).
-    // Route through a string: decimal→string is exact everywhere and
-    // string→double is correctly rounded everywhere — the same
-    // string-parity recipe the stock queries use for raw prices.
-    def d(c: Column): Column = c.cast("string").cast("double")
+    // the moment sums exceed 2^53 in scaled-integer terms: asDouble
     val stats = joined.groupBy(col("l_suppkey")).agg(
       count(lit(1)).cast("double").as("__n"),
-      d(sum(col("day_price"))).as("__sx"),
-      d(sum(col("mkt_price"))).as("__sy"),
-      d(sum(col("day_price") * col("mkt_price"))).as("__sxy"),
-      d(sum(col("day_price") * col("day_price"))).as("__sxx"),
-      d(sum(col("mkt_price") * col("mkt_price"))).as("__syy"))
+      asDouble(sum(col("day_price"))).as("__sx"),
+      asDouble(sum(col("mkt_price"))).as("__sy"),
+      asDouble(sum(col("day_price") * col("mkt_price"))).as("__sxy"),
+      asDouble(sum(col("day_price") * col("day_price"))).as("__sxx"),
+      asDouble(sum(col("mkt_price") * col("mkt_price"))).as("__syy"))
     val cov = col("__n") * col("__sxy") - col("__sx") * col("__sy")
     val varX = col("__n") * col("__sxx") - col("__sx") * col("__sx")
     val varY = col("__n") * col("__syy") - col("__sy") * col("__sy")

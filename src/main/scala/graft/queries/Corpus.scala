@@ -7624,12 +7624,10 @@ object Corpus {
       .crossJoin(broadcast(sL.select(col("__s").as("__sl"))))
       .crossJoin(broadcast(uN))
       .crossJoin(broadcast(pur))
-    def dd(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-      c.cast("string").cast("double")
     val nD = col("n").cast("double")
-    val hc = dd(col("__un") - col("__sc")) / nD / lit(1000.0)
-    val hl = dd(col("__un") - col("__sl")) / nD / lit(1000.0)
-    val mi = dd(col("__scl") - col("__sc") - col("__sl") + col("__un")) /
+    val hc = asDouble(col("__un") - col("__sc")) / nD / lit(1000.0)
+    val hl = asDouble(col("__un") - col("__sl")) / nD / lit(1000.0)
+    val mi = asDouble(col("__scl") - col("__sc") - col("__sl") + col("__un")) /
       nD / lit(1000.0)
     val degen = !(hc > lit(0.0)) || !(hl > lit(0.0))
     val nullD = lit(null).cast("double")

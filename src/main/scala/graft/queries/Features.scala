@@ -418,9 +418,8 @@ object Features {
           col("__cumq").cast(dec38) * col("n_rows")))
       .groupBy(col("segment"), col("nation"))
       .agg(sum(col("__term")).as("__num"))
-    def dd(c: Column): Column = c.cast("string").cast("double")
-    val tVal = dd(col("__num")) /
-      dd(col("n_rows").cast(dec38) * col("__nn") * (col("__m") - lit(1L)))
+    val tVal = asDouble(col("__num")) /
+      asDouble(col("n_rows").cast(dec38) * col("__nn") * (col("__m") - lit(1L)))
     val nullD = lit(null).cast("double")
     emd.join(ng, Seq("segment", "nation"))
       .crossJoin(broadcast(tot))
@@ -950,27 +949,26 @@ object Features {
     */
   def cupedFromPerUser(perUser: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     def pr(p: Column, c: Column): Column = sum(when(p, c).otherwise(lit(0L)))
     val xd = col("__x").cast(d19); val yd = col("__y").cast(d19)
     val m = perUser.agg(
       sum(when(col("__a"), 1L).otherwise(0L)).as("n_a"),
       sum(when(!col("__a"), 1L).otherwise(0L)).as("n_b"),
-      d(pr(col("__a"), col("__x"))).as("__sxa"),
-      d(pr(!col("__a"), col("__x"))).as("__sxb"),
-      d(pr(col("__a"), col("__y"))).as("__sya"),
-      d(pr(!col("__a"), col("__y"))).as("__syb"),
-      d(sum(when(col("__a"), xd * yd).otherwise(lit(0L).cast(d19))))
+      asDouble(pr(col("__a"), col("__x"))).as("__sxa"),
+      asDouble(pr(!col("__a"), col("__x"))).as("__sxb"),
+      asDouble(pr(col("__a"), col("__y"))).as("__sya"),
+      asDouble(pr(!col("__a"), col("__y"))).as("__syb"),
+      asDouble(sum(when(col("__a"), xd * yd).otherwise(lit(0L).cast(d19))))
         .as("__sxya"),
-      d(sum(when(!col("__a"), xd * yd).otherwise(lit(0L).cast(d19))))
+      asDouble(sum(when(!col("__a"), xd * yd).otherwise(lit(0L).cast(d19))))
         .as("__sxyb"),
-      d(sum(when(col("__a"), xd * xd).otherwise(lit(0L).cast(d19))))
+      asDouble(sum(when(col("__a"), xd * xd).otherwise(lit(0L).cast(d19))))
         .as("__sxxa"),
-      d(sum(when(!col("__a"), xd * xd).otherwise(lit(0L).cast(d19))))
+      asDouble(sum(when(!col("__a"), xd * xd).otherwise(lit(0L).cast(d19))))
         .as("__sxxb"),
-      d(sum(when(col("__a"), yd * yd).otherwise(lit(0L).cast(d19))))
+      asDouble(sum(when(col("__a"), yd * yd).otherwise(lit(0L).cast(d19))))
         .as("__syya"),
-      d(sum(when(!col("__a"), yd * yd).otherwise(lit(0L).cast(d19))))
+      asDouble(sum(when(!col("__a"), yd * yd).otherwise(lit(0L).cast(d19))))
         .as("__syyb"))
     val na = col("n_a").cast("double"); val nb = col("n_b").cast("double")
     val n = na + nb
@@ -1023,7 +1021,6 @@ object Features {
   }
 
   def q148_sql: String = {
-    def dd(x: String): String = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     val d19 = "DECIMAL(19,0)"
     def cond(p: String, e: String) =
       s"SUM(CASE WHEN $p THEN $e ELSE 0 END)"
@@ -1051,14 +1048,14 @@ object Features {
        |m AS (SELECT
        |    CAST(${cond("a", "1")} AS BIGINT) AS n_a,
        |    CAST(${cond("NOT a", "1")} AS BIGINT) AS n_b,
-       |    ${dd(cond("a", "x"))} AS sxa, ${dd(cond("NOT a", "x"))} AS sxb,
-       |    ${dd(cond("a", "y"))} AS sya, ${dd(cond("NOT a", "y"))} AS syb,
-       |    ${dd(condD("a", s"$xd * $yd"))} AS sxya,
-       |    ${dd(condD("NOT a", s"$xd * $yd"))} AS sxyb,
-       |    ${dd(condD("a", s"$xd * $xd"))} AS sxxa,
-       |    ${dd(condD("NOT a", s"$xd * $xd"))} AS sxxb,
-       |    ${dd(condD("a", s"$yd * $yd"))} AS syya,
-       |    ${dd(condD("NOT a", s"$yd * $yd"))} AS syyb
+       |    ${asDoubleSql(cond("a", "x"))} AS sxa, ${asDoubleSql(cond("NOT a", "x"))} AS sxb,
+       |    ${asDoubleSql(cond("a", "y"))} AS sya, ${asDoubleSql(cond("NOT a", "y"))} AS syb,
+       |    ${asDoubleSql(condD("a", s"$xd * $yd"))} AS sxya,
+       |    ${asDoubleSql(condD("NOT a", s"$xd * $yd"))} AS sxyb,
+       |    ${asDoubleSql(condD("a", s"$xd * $xd"))} AS sxxa,
+       |    ${asDoubleSql(condD("NOT a", s"$xd * $xd"))} AS sxxb,
+       |    ${asDoubleSql(condD("a", s"$yd * $yd"))} AS syya,
+       |    ${asDoubleSql(condD("NOT a", s"$yd * $yd"))} AS syyb
        |  FROM u),
        |w AS (SELECT *,
        |    CAST(n_a AS DOUBLE) + CAST(n_b AS DOUBLE) AS n,
@@ -1153,13 +1150,12 @@ object Features {
     */
   def anovaFromStats(g0: DataFrame): DataFrame = {
     val g = anovaDomainGuard(g0, "q141")
-    def d(c: Column): Column = c.cast("string").cast("double")
     val one = g.groupBy().pivot("event_type", AnovaTypes)
       .agg(first(col("n")).as("n"), first(col("s")).as("s"),
         first(col("s2")).as("s2"))
     def nT(t: String): Column = col(s"${t}_n").cast("double")
-    def sT(t: String): Column = d(col(s"${t}_s")) / lit(100.0)
-    def s2T(t: String): Column = d(col(s"${t}_s2")) / lit(10000.0)
+    def sT(t: String): Column = asDouble(col(s"${t}_s")) / lit(100.0)
+    def s2T(t: String): Column = asDouble(col(s"${t}_s2")) / lit(10000.0)
     val k = lit(AnovaTypes.size.toDouble)
     val nTot = AnovaTypes.map(nT).reduce(_ + _)
     val grand = AnovaTypes.map(sT).reduce(_ + _)
@@ -1186,7 +1182,6 @@ object Features {
     anovaFromStats(anovaSufficientStats(t(s, dir, "events")))
 
   def q141_sql: String = {
-    def dd(x: String): String = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     val subs = AnovaTypes.map { t =>
       s"""    (SELECT CAST(n AS BIGINT) FROM g WHERE event_type = '$t')
          |      AS n_$t,
@@ -1195,8 +1190,8 @@ object Features {
          |    (SELECT s2 FROM g WHERE event_type = '$t') AS s2_$t""".stripMargin
     }.mkString(",\n")
     val nT = AnovaTypes.map(t => s"CAST(n_$t AS DOUBLE)")
-    val sT = AnovaTypes.map(t => s"(${dd(s"s_$t")} / 100.0)")
-    val s2T = AnovaTypes.map(t => s"(${dd(s"s2_$t")} / 10000.0)")
+    val sT = AnovaTypes.map(t => s"(${asDoubleSql(s"s_$t")} / 100.0)")
+    val s2T = AnovaTypes.map(t => s"(${asDoubleSql(s"s2_$t")} / 10000.0)")
     val nTot = nT.mkString(" + ")
     val grand = sT.mkString(" + ")
     val ssbTerms = AnovaTypes.indices
@@ -1288,7 +1283,6 @@ object Features {
   private[graft] def kwRankStats(counts: DataFrame): (DataFrame, DataFrame) = {
     val d19 = DecimalType(19, 0)
     val d12 = DecimalType(12, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val vc = counts.groupBy(col("v")).agg(sum(col("c")).as("__c"))
       .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
       .localCheckpoint(true) // bucket prefix AND the tie-correction agg
@@ -1296,7 +1290,7 @@ object Features {
       .select(col("v"),
         (lit(2L) * col("__exc") + col("__c") + lit(1L)).as("__r2"))
     val tot = vc.agg(
-      d(sum(col("__c").cast(d12) * col("__c").cast(d12)
+      asDouble(sum(col("__c").cast(d12) * col("__c").cast(d12)
         * col("__c").cast(d12) - col("__c").cast(d12))).as("__tc"),
       sum(col("__c")).as("__n"))
     val perGrp = counts.join(r2, "v")
@@ -1307,7 +1301,6 @@ object Features {
   }
 
   def kruskalWallisFromCounts(counts: DataFrame): DataFrame = {
-    def d(c: Column): Column = c.cast("string").cast("double")
     val d12 = DecimalType(12, 0)
     val (perGrp0, tot0) = kwRankStats(counts)
     // q141's pivot guard: a 6th type's values WOULD enter the combined
@@ -1320,14 +1313,14 @@ object Features {
     def nT(t: String): Column = col(s"${t}_n").cast("double")
     // R_g = the doubled rank-sum halved LAST: s2 is integer-valued and
     // < 2⁵² as a double, so the halving is exact
-    def rT(t: String): Column = d(col(s"${t}_s2")) / lit(2.0)
+    def rT(t: String): Column = asDouble(col(s"${t}_s2")) / lit(2.0)
     val k = lit(AnovaTypes.size.toDouble)
     val nTot = AnovaTypes.map(nT).reduce(_ + _)
     val sumTerm = AnovaTypes.map(t => rT(t) * rT(t) / nT(t)).reduce(_ + _)
     val h = lit(12.0) / (nTot * (nTot + lit(1.0))) * sumTerm -
       lit(3.0) * (nTot + lit(1.0))
     val nTotL = AnovaTypes.map(t => col(s"${t}_n")).reduce(_ + _)
-    val n3 = d(nTotL.cast(d12) * nTotL.cast(d12) * nTotL.cast(d12) -
+    val n3 = asDouble(nTotL.cast(d12) * nTotL.cast(d12) * nTotL.cast(d12) -
       nTotL.cast(d12))
     val denom = lit(1.0) - col("__tc") / n3
     val degen = !(denom > lit(0.0)) || !(nTot > k)
@@ -1345,11 +1338,10 @@ object Features {
     kruskalWallisFromCounts(kwCounts(t(s, dir, "events")))
 
   def q142_sql: String = {
-    def dd(x: String): String = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     val subs = AnovaTypes.map { t =>
       s"""    (SELECT CAST(n AS BIGINT) FROM s WHERE grp = '$t')
          |      AS n_$t,
-         |    (SELECT ${dd("s2")} FROM s WHERE grp = '$t') AS s2_$t""".stripMargin
+         |    (SELECT ${asDoubleSql("s2")} FROM s WHERE grp = '$t') AS s2_$t""".stripMargin
     }.mkString(",\n")
     val nT = AnovaTypes.map(t => s"CAST(n_$t AS DOUBLE)")
     val rT = AnovaTypes.map(t => s"(s2_$t / 2.0)")
@@ -1371,7 +1363,7 @@ object Features {
        |    SUM(CAST(c AS DECIMAL(19,0)) * CAST(r2 AS DECIMAL(19,0))) AS s2
        |  FROM g JOIN r USING (v) GROUP BY grp
        |  HAVING ${anovaDomainGuardSql("q142", "grp")}),
-       |tcv AS (SELECT ${dd(s"SUM($c3 * $c3 * $c3 - $c3)")} AS tc FROM vc),
+       |tcv AS (SELECT ${asDoubleSql(s"SUM($c3 * $c3 * $c3 - $c3)")} AS tc FROM vc),
        |m AS (SELECT
        |$subs,
        |    (SELECT tc FROM tcv) AS tc),
@@ -1381,7 +1373,7 @@ object Features {
        |    tc FROM m),
        |w2 AS (SELECT n_total, ntd, tc,
        |    12.0 / (ntd * (ntd + 1.0)) * sumterm - 3.0 * (ntd + 1.0) AS h,
-       |    ${dd(s"$m3 * $m3 * $m3 - $m3")} AS n3
+       |    ${asDoubleSql(s"$m3 * $m3 * $m3 - $m3")} AS n3
        |  FROM w),
        |w3 AS (SELECT n_total, ntd, h, 1.0 - tc / n3 AS denom FROM w2)
        |SELECT n_total,
@@ -1418,7 +1410,6 @@ object Features {
     * the z against brute-force pooled-variance ranks).
     */
   def dunnFromCounts(counts: DataFrame): DataFrame = {
-    def d(c: Column): Column = c.cast("string").cast("double")
     val (perGrp, tot) = kwRankStats(counts)
     val a = perGrp.select(col("event_type").as("grp_a"),
       col("n").as("n_a"), col("s2").as("__s2a"))
@@ -1429,8 +1420,8 @@ object Features {
     val nd = col("__n").cast("double")
     val na = col("n_a").cast("double")
     val nb = col("n_b").cast("double")
-    val rbarA = d(col("__s2a")) / lit(2.0) / na
-    val rbarB = d(col("__s2b")) / lit(2.0) / nb
+    val rbarA = asDouble(col("__s2a")) / lit(2.0) / na
+    val rbarB = asDouble(col("__s2b")) / lit(2.0) / nb
     val sig2 = nd * (nd + lit(1.0)) / lit(12.0) -
       col("__tc") / (lit(12.0) * (nd - lit(1.0)))
     val z = (rbarA - rbarB) / sqrt(sig2 * (lit(1.0) / na + lit(1.0) / nb))
@@ -1446,7 +1437,6 @@ object Features {
 
   def q146_sql: String = {
     val c3 = "CAST(cv AS DECIMAL(12,0))"
-    def dd(x: String): String = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     val sig2 = "(nd * (nd + 1.0) / 12.0 - tc / (12.0 * (nd - 1.0)))"
     val z = "((rbar_a - rbar_b) / sqrt" +
       s"($sig2 * (1.0 / CAST(n_a AS DOUBLE) + 1.0 / CAST(n_b AS DOUBLE))))"
@@ -1462,12 +1452,12 @@ object Features {
        |s AS (SELECT grp, CAST(SUM(c) AS BIGINT) AS n,
        |    SUM(CAST(c AS DECIMAL(19,0)) * CAST(r2 AS DECIMAL(19,0))) AS s2
        |  FROM g JOIN r USING (v) GROUP BY grp),
-       |tot AS (SELECT ${dd(s"SUM($c3 * $c3 * $c3 - $c3)")} AS tc,
+       |tot AS (SELECT ${asDoubleSql(s"SUM($c3 * $c3 * $c3 - $c3)")} AS tc,
        |    CAST(SUM(cv) AS BIGINT) AS n_total FROM vc),
        |p AS (SELECT a.grp AS grp_a, b.grp AS grp_b,
        |    a.n AS n_a, b.n AS n_b,
-       |    ${dd("a.s2")} / 2.0 / CAST(a.n AS DOUBLE) AS rbar_a,
-       |    ${dd("b.s2")} / 2.0 / CAST(b.n AS DOUBLE) AS rbar_b
+       |    ${asDoubleSql("a.s2")} / 2.0 / CAST(a.n AS DOUBLE) AS rbar_a,
+       |    ${asDoubleSql("b.s2")} / 2.0 / CAST(b.n AS DOUBLE) AS rbar_b
        |  FROM s a JOIN s b ON a.grp < b.grp),
        |w AS (SELECT grp_a, grp_b, n_a, n_b, rbar_a, rbar_b,
        |    CAST(n_total AS DOUBLE) AS nd, tc
@@ -1561,7 +1551,6 @@ object Features {
     */
   val q131_spearman: Q = (s, dir) => {
     val d19 = DecimalType(19, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val li = t(s, dir, "lineitem")
     val features = Seq( // (report name, column, rank bucket step)
       ("l_quantity", 8.0), ("l_discount", 0.01))
@@ -1595,11 +1584,11 @@ object Features {
       val a = col(s"__a$i").cast(d19)
       val b = col("__b").cast(d19)
       Seq(count(col(s"__a$i")).as(s"__n$i"),
-        d(sum(a)).as(s"__sa$i"),
-        d(sum(when(col(s"__a$i").isNotNull, b))).as(s"__sb$i"),
-        d(sum(a * b)).as(s"__sab$i"),
-        d(sum(a * a)).as(s"__saa$i"),
-        d(sum(when(col(s"__a$i").isNotNull, b * b))).as(s"__sbb$i"))
+        asDouble(sum(a)).as(s"__sa$i"),
+        asDouble(sum(when(col(s"__a$i").isNotNull, b))).as(s"__sb$i"),
+        asDouble(sum(a * b)).as(s"__sab$i"),
+        asDouble(sum(a * a)).as(s"__saa$i"),
+        asDouble(sum(when(col(s"__a$i").isNotNull, b * b))).as(s"__sbb$i"))
     }
     val m = joined.agg(aggs.head, aggs.tail: _*)
     val rows = features.zipWithIndex.map { case ((x, _), i) =>
@@ -1678,7 +1667,6 @@ object Features {
     */
   val q132_token_gini: Q = (s, dir) => {
     val d19 = DecimalType(19, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val g = t(s, dir, "documents")
       .select(size(graft.text.TextAnalysis.tokens(col("text")))
         .cast("long").as("n_tokens"))
@@ -1694,7 +1682,7 @@ object Features {
     val tot = p.agg(
       sum(col("n_docs")).as("__n"),
       sum(col("n_tokens") * col("n_docs")).as("__s"),
-      d(sum((col("n_tokens") * col("n_docs")).cast(d19) *
+      asDouble(sum((col("n_tokens") * col("n_docs")).cast(d19) *
         (lit(2L) * col("__exc") + col("n_docs") + lit(1L)).cast(d19)))
         .as("__num"))
     val nD = col("__n").cast("double")
@@ -1770,7 +1758,6 @@ object Features {
     */
   val q133_bootstrap_ci: Q = (s, dir) => {
     val d19 = DecimalType(19, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val reps = 64
     val mult = {
       val h = graft.functions.KmvSketch.hash64(
@@ -1785,7 +1772,7 @@ object Features {
         size(graft.text.TextAnalysis.tokens(col("text")))
           .cast("long").as("__x"))
     val base = docs.agg(count(lit(1)).as("n_docs"),
-      (d(sum(col("__x").cast(d19))) / count(lit(1)).cast("double"))
+      (asDouble(sum(col("__x").cast(d19))) / count(lit(1)).cast("double"))
         .as("mean"))
     val repMeans = docs
       .select(col("doc_id"), col("__x"),
@@ -1793,7 +1780,7 @@ object Features {
       .withColumn("__m", mult)
       .groupBy(col("b"))
       .agg(sum(col("__m")).as("n_eff"),
-        (d(sum((col("__m") * col("__x")).cast(d19)))
+        (asDouble(sum((col("__m") * col("__x")).cast(d19)))
           / sum(col("__m")).cast("double")).as("mean_b"))
       .localCheckpoint(true) // consumed by the rank frame AND the output
     val wR = Window.partitionBy(pmod(col("b"), lit(1))) // deliberate: 64 rows
@@ -1862,7 +1849,6 @@ object Features {
     * guarded identically on both sides by exact integer compares.
     */
   val q134_vocab_richness: Q = (s, dir) => {
-    def d(c: Column): Column = c.cast("string").cast("double")
     val counts = t(s, dir, "documents")
       .select(explode(graft.text.TextAnalysis.tokens(col("text")))
         .as("token"))
@@ -1878,7 +1864,7 @@ object Features {
       (col("n_types").cast("double") +
         when(col("f2") > 0L, f1 * f1 / (lit(2.0) * f2))
           .otherwise(f1 * (f1 - lit(1.0)) / lit(2.0))).as("chao1"),
-      (f1 / d(col("n_tokens"))).as("gt_unseen_mass"))
+      (f1 / asDouble(col("n_tokens"))).as("gt_unseen_mass"))
   }
 
   def q134_sql: String = {
@@ -2019,7 +2005,6 @@ object Features {
     */
   def ksFromCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val g = counts
       .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
       .localCheckpoint(true) // prefix, totals, and the max fold
@@ -2034,7 +2019,7 @@ object Features {
     val num = cum.crossJoin(broadcast(tot))
       .select(abs(col("__cumr").cast(d19) * col("n_cur").cast(d19) -
         col("__cumc").cast(d19) * col("n_ref").cast(d19)).as("__diff"))
-      .agg(d(max(col("__diff"))).as("__maxdiff"))
+      .agg(asDouble(max(col("__diff"))).as("__maxdiff"))
     val (dStat, crit, flag) = ksTail
     tot.crossJoin(broadcast(num))
       .select(col("n_ref"), col("n_cur"),
@@ -2091,7 +2076,6 @@ object Features {
     */
   val q136_cohens_kappa: Q = (s, dir) => {
     val d19 = DecimalType(19, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val toks = graft.text.TextAnalysis.tokens(col("text"))
     val labeled = t(s, dir, "documents")
       .select(
@@ -2105,9 +2089,9 @@ object Features {
       sum(when(!col("__la") && !col("__lb"), 1L).otherwise(0L)).as("n_nn"))
     val n = col("n_docs").cast("double")
     val po = (col("n_pp") + col("n_nn")).cast("double") / n
-    val pe = (d((col("n_pp") + col("n_pn")).cast(d19) *
+    val pe = (asDouble((col("n_pp") + col("n_pn")).cast(d19) *
         (col("n_pp") + col("n_np")).cast(d19)) +
-      d((col("n_np") + col("n_nn")).cast(d19) *
+      asDouble((col("n_np") + col("n_nn")).cast(d19) *
         (col("n_pn") + col("n_nn")).cast(d19))) / (n * n)
     m.select(col("n_docs"), col("n_pp"), col("n_pn"), col("n_np"),
       col("n_nn"), po.as("po"), pe.as("pe"),
@@ -2209,12 +2193,11 @@ object Features {
     */
   def fleissFromStats(m: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val n = col("n_docs").cast("double")
     val sNeg = lit(3L) * col("n_docs") - col("s_pos")
     val po = col("s_agree").cast("double") / (lit(6.0) * n)
-    val pe = (d(col("s_pos").cast(d19) * col("s_pos").cast(d19)) +
-      d(sNeg.cast(d19) * sNeg.cast(d19))) / (n * n * lit(9.0))
+    val pe = (asDouble(col("s_pos").cast(d19) * col("s_pos").cast(d19)) +
+      asDouble(sNeg.cast(d19) * sNeg.cast(d19))) / (n * n * lit(9.0))
     m.select(col("n_docs"), col("s_pos"), sNeg.as("s_neg"),
       po.as("p_bar"), pe.as("p_bar_e"),
       when(pe === 1.0, lit(null).cast("double"))
@@ -2240,7 +2223,6 @@ object Features {
 
   def q144_sql: String = {
     val toksSql = graft.queries.Corpus.toksSqlPublic
-    def dd(x: String): String = s"CAST(CAST($x AS VARCHAR) AS DOUBLE)"
     val sq = "CAST(s_pos AS DECIMAL(19,0)) * CAST(s_pos AS DECIMAL(19,0))"
     val sqn = "CAST(s_neg AS DECIMAL(19,0)) * CAST(s_neg AS DECIMAL(19,0))"
     s"""WITH t AS (SELECT $toksSql AS toks FROM documents),
@@ -2261,7 +2243,7 @@ object Features {
        |    CAST(n_docs AS DOUBLE) AS nd FROM m),
        |w2 AS (SELECT n_docs, s_pos, s_neg,
        |    CAST(s AS DOUBLE) / (6.0 * nd) AS p_bar,
-       |    (${dd(sq)} + ${dd(sqn)}) / (nd * nd * 9.0) AS p_bar_e
+       |    (${asDoubleSql(sq)} + ${asDoubleSql(sqn)}) / (nd * nd * 9.0) AS p_bar_e
        |  FROM w)
        |SELECT n_docs, s_pos, s_neg, p_bar, p_bar_e,
        |  CASE WHEN p_bar_e = 1.0 THEN NULL
@@ -2299,7 +2281,6 @@ object Features {
   def mannWhitneyFromCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
     val d12 = DecimalType(12, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val g = counts
       .withColumn("__c", col("__cr") + col("__cc"))
       .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
@@ -2309,8 +2290,8 @@ object Features {
     val m = pref.agg(
       sum(col("__cr")).as("n_ref"),
       sum(col("__cc")).as("n_cur"),
-      d(sum(col("__cr").cast(d19) * col("__r2").cast(d19))).as("__r1x2"),
-      d(sum(col("__c").cast(d12) * col("__c").cast(d12)
+      asDouble(sum(col("__cr").cast(d19) * col("__r2").cast(d19))).as("__r1x2"),
+      asDouble(sum(col("__c").cast(d12) * col("__c").cast(d12)
           * col("__c").cast(d12) - col("__c").cast(d12))).as("__tc"))
     val (u, z, flag) = mwTail
     m.select(col("n_ref"), col("n_cur"), u.as("u_stat"),
@@ -2375,7 +2356,6 @@ object Features {
     */
   def cliffsDeltaFromCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val g = counts
       .withColumn("__c", col("__cr") + col("__cc"))
       .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
@@ -2390,9 +2370,9 @@ object Features {
     val nc = col("n_cur").cast(d19)
     // 2·U₁ − n₁n₂ = (doubled ref rank-sum) − n₁(n₁+1) − n₁n₂ — exact
     // DECIMAL integers end to end; only the final ratio is IEEE
-    val num = d(col("__r1x2d") - nr * (nr + lit(1L).cast(d19))
+    val num = asDouble(col("__r1x2d") - nr * (nr + lit(1L).cast(d19))
       - nr * nc)
-    val den = d(nr * nc)
+    val den = asDouble(nr * nc)
     val degen = col("n_ref") === 0 || col("n_cur") === 0
     val delta = when(degen, lit(null).cast("double")).otherwise(num / den)
     val mag = when(degen, lit(null).cast("string"))
@@ -2467,7 +2447,6 @@ object Features {
   def kendallFromPairs(xy: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
     val d38 = DecimalType(38, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val cells = xy
       .groupBy(col("x"), col("y"))
       .agg(count(lit(1)).as("nc"))
@@ -2479,19 +2458,19 @@ object Features {
     // COALESCE 0: a corpus whose x never varies has an EMPTY pair set,
     // and zero concordant pairs is a count, not an unknown
     val cd = pairs.agg(
-      coalesce(d(sum(when(col("__ya") < col("__yb"), col("__p"))
+      coalesce(asDouble(sum(when(col("__ya") < col("__yb"), col("__p"))
         .otherwise(lit(0).cast(d38)))), lit(0.0)).as("__c"),
-      coalesce(d(sum(when(col("__ya") > col("__yb"), col("__p"))
+      coalesce(asDouble(sum(when(col("__ya") > col("__yb"), col("__p"))
         .otherwise(lit(0).cast(d38)))), lit(0.0)).as("__d"))
     val tx = cells.groupBy(col("x")).agg(sum(col("nc")).as("__m"))
-      .agg(d(sum(col("__m").cast(d19) * (col("__m") - lit(1L)).cast(d19)))
+      .agg(asDouble(sum(col("__m").cast(d19) * (col("__m") - lit(1L)).cast(d19)))
         .as("__tx2"))
     val ty = cells.groupBy(col("y")).agg(sum(col("nc")).as("__m"))
-      .agg(d(sum(col("__m").cast(d19) * (col("__m") - lit(1L)).cast(d19)))
+      .agg(asDouble(sum(col("__m").cast(d19) * (col("__m") - lit(1L)).cast(d19)))
         .as("__ty2"))
     val tot = cells.agg(sum(col("nc")).as("n_rows"),
       count(lit(1)).as("n_cells"),
-      d(sum(col("nc")).cast(d19) * (sum(col("nc")) - lit(1L)).cast(d19))
+      asDouble(sum(col("nc")).cast(d19) * (sum(col("nc")) - lit(1L)).cast(d19))
         .as("__n02"))
     // doubled tie/pair counts halve LAST (2·n0 = n(n−1) etc.), so the
     // subtraction n0 − t happens on exact integer-valued doubles
@@ -2589,7 +2568,6 @@ object Features {
   def driftFromSliceCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
     val d12 = DecimalType(12, 0)
-    def d(c: Column): Column = c.cast("string").cast("double")
     val g = counts
       .withColumn("__c", col("__cr") + col("__cc"))
       .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
@@ -2621,11 +2599,11 @@ object Features {
     val m = rows.join(broadcast(tot), Seq("slice"))
       .groupBy(col("slice"))
       .agg(max(col("n_ref")).as("n_ref"), max(col("n_cur")).as("n_cur"),
-        d(max(abs(col("__cumr").cast(d19) * col("n_cur").cast(d19)
+        asDouble(max(abs(col("__cumr").cast(d19) * col("n_cur").cast(d19)
           - col("__cumc").cast(d19) * col("n_ref").cast(d19))))
           .as("__maxdiff"),
-        d(sum(col("__cr").cast(d19) * col("__r2").cast(d19))).as("__r1x2"),
-        d(sum(col("__c").cast(d12) * col("__c").cast(d12)
+        asDouble(sum(col("__cr").cast(d19) * col("__r2").cast(d19))).as("__r1x2"),
+        asDouble(sum(col("__c").cast(d12) * col("__c").cast(d12)
             * col("__c").cast(d12) - col("__c").cast(d12))).as("__tc"))
     // shared tails: the same guarded statistics q135/q137 emit — a
     // one-sided slice (every event on one side of the split) yields

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.graph.Fixpoint
+
 /** Graph-based ANN serving — greedy beam search over a persisted kNN
   * graph, the NSW/HNSW-family search shape production vector stores
   * default to (Malkov & Yashunin 2018's layer-0 walk; the reference
@@ -177,12 +179,12 @@ object GraphAnn {
     * of width `beam` (HNSW's ef — wider than k, because the walk
     * needs exploration slack beyond the answer size), finally cut to
     * the top-k. Returns (query_id, neighbor_id, cosine, rank).
-    * `onHop` receives each hop's candidate frame (specs assert the
-    * |Q|·beam·outDegree bound on it).
+    * `onHop` receives each hop's candidate frame, hop k's at the k-th
+    * call (specs assert the |Q|·beam·outDegree bound on it).
     */
   def search(idx: Index, queries: DataFrame, queryIdCol: String,
       queryVecCol: String, k: Int = 10, beam: Int = 32, hops: Int = 6,
-      onHop: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame =
+      onHop: DataFrame => Unit = _ => ()): DataFrame =
     searchImpl(idx, queries, queryIdCol, queryVecCol, k, beam, hops, onHop,
       beamSrc => idx.graph
         .join(broadcast(beamSrc), Seq("src"))
@@ -200,7 +202,7 @@ object GraphAnn {
     */
   def searchPruned(idx: Index, queries: DataFrame, queryIdCol: String,
       queryVecCol: String, k: Int = 10, beam: Int = 32, hops: Int = 6,
-      onHop: (Int, DataFrame) => Unit = (_, _) => ()): DataFrame = {
+      onHop: DataFrame => Unit = _ => ()): DataFrame = {
     val n = idx.srcBuckets.getOrElse(throw new IllegalArgumentException(
       "searchPruned needs a store-backed index (GraphAnn.read)"))
     searchImpl(idx, queries, queryIdCol, queryVecCol, k, beam, hops, onHop,
@@ -218,7 +220,7 @@ object GraphAnn {
 
   private def searchImpl(idx: Index, queries: DataFrame, queryIdCol: String,
       queryVecCol: String, k: Int, beam: Int, hops: Int,
-      onHop: (Int, DataFrame) => Unit,
+      onHop: DataFrame => Unit,
       expand: DataFrame => DataFrame): DataFrame = {
     val q = broadcast(queries.select(col(queryIdCol).as("query_id"),
       col(queryVecCol).cast("array<double>").as("__qv")))
@@ -234,20 +236,19 @@ object GraphAnn {
     def topB(df: DataFrame): DataFrame =
       graft.plans.TopKPerKey(df, Seq("query_id"),
         Seq(col("cos").desc, col("node").asc), beam)
-    var beamDf = topB(score(
+    // each hop reads the beam twice (expand, merge): init
+    // materialized, stride 1
+    val init = topB(score(
         q.select(col("query_id")).crossJoin(broadcast(idx.entries))))
       .localCheckpoint(true)
-    var h = 0
-    while (h < hops) {
-      h += 1
+    val beamDf = Fixpoint.iterate(init, hops) { prev =>
       val cand = expand(
-        beamDf.select(col("query_id"), col("node").as("src")))
-      onHop(h, cand)
+        prev.select(col("query_id"), col("node").as("src")))
+      onHop(cand)
       // merge is idempotent: a re-derived beam row is an exact
       // duplicate (same deterministic cos bits), collapsed by distinct
-      beamDf = topB(beamDf.unionByName(score(cand)).distinct())
-        .localCheckpoint(true)
-    }
+      topB(prev.unionByName(score(cand)).distinct())
+    }.last
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("node").asc)
     beamDf.withColumn("rank", row_number().over(w))

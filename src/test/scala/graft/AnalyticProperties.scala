@@ -599,8 +599,7 @@ object AnalyticProperties extends Properties("graft.analytic") {
         .select(col("seg").as("c_mktsegment"),
           col("nat").as("c_nationkey"),
           (col("sens").cast("double") * 1000.0).as("c_acctbal"))
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_q151_prop").toString
+      val tmp = SparkSpec.tempDir("graft_q151_prop")
       df.coalesce(1).write.mode("overwrite")
         .parquet(s"$tmp/customer.parquet")
       val got = graft.queries.Features.q151_t_closeness(spark, tmp)

@@ -24,8 +24,7 @@ class AvroTablesSpec extends SparkSpec {
           .cast(org.apache.spark.sql.types.TimestampType))
           .as("o_orderdate_us"))
       .repartition(5)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_avro_rt").toString + "/orders"
+    val path = SparkSpec.tempDir("graft_avro_rt") + "/orders"
     val files = AvroTables.writeOrders(src, path)
     assert(files.size === 5) // one container per non-empty partition
     val back = AvroTables.readOrders(spark, path)
@@ -46,8 +45,7 @@ class AvroTablesSpec extends SparkSpec {
           .cast(org.apache.spark.sql.types.TimestampType))
           .as("o_orderdate_us"))
       .limit(100)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_avro_idem").toString + "/orders"
+    val path = SparkSpec.tempDir("graft_avro_idem") + "/orders"
     AvroTables.writeOrders(src, path)
     AvroTables.writeOrders(src, path)
     assert(AvroTables.readOrders(spark, path).count() === 100L)

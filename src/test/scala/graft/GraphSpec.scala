@@ -443,15 +443,17 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  private val plantedDigraph = Seq[(Long, Long)](
+    (1L, 2L), (2L, 3L), (3L, 1L), // 3-cycle {1,2,3}
+    (5L, 6L), (6L, 5L),           // 2-cycle {5,6}
+    (3L, 4L), (4L, 5L),           // DAG chain into it
+    (7L, 1L), (0L, 5L), (8L, 2L)) // ancestors outside the cycles
+
   test("scc: planted digraph with known components (cycles, chains, a low-label outside ancestor)") {
     // node 0 feeds the {5,6} cycle from OUTSIDE it — forward-min of
     // 5/6 is 0 but backward-min is 5, so that SCC cannot settle in
     // round 1: the test exercises a second settle round.
-    val es = Seq[(Long, Long)](
-      (1L, 2L), (2L, 3L), (3L, 1L), // 3-cycle {1,2,3}
-      (5L, 6L), (6L, 5L),           // 2-cycle {5,6}
-      (3L, 4L), (4L, 5L),           // DAG chain into it
-      (7L, 1L), (0L, 5L), (8L, 2L)) // ancestors outside the cycles
+    val es = plantedDigraph
     val got = GraphOps.stronglyConnectedComponents(edges(es: _*))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 5L -> 5L, 6L -> 5L,
@@ -471,6 +473,43 @@ class GraphSpec extends SparkSpec {
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got === refScc(es))
     }
+  }
+
+  test("scc: an empty edge set gives an empty result") {
+    val got = GraphOps.stronglyConnectedComponents(edges())
+    assert(got.columns.toSeq === Seq("node", "scc_id"))
+    assert(got.count() === 0)
+  }
+
+  test("scc: the trim closes a pure DAG into singletons, leaving the settle loop no open node") {
+    // maxOuter = 0: a settle round that found an open node would hit
+    // the cap and throw
+    val es = Seq[(Long, Long)]((1L, 2L), (1L, 3L), (2L, 4L), (3L, 4L),
+      (4L, 5L), (0L, 5L), (6L, 2L))
+    val got = GraphOps.stronglyConnectedComponents(edges(es: _*), maxOuter = 0)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === (0L to 6L).map(v => v -> v).toMap)
+    assert(got === refScc(es))
+  }
+
+  test("scc: a random-id chain needing more than 24 trim rounds equals the closure reference") {
+    // an 80-node path with a 2-cycle in its middle peels one node off
+    // each end per trim round: 39 rounds. The settle loop closes one
+    // chain node or the 2-cycle per round, so a trim stopped after 24
+    // rounds would leave 31 of them and overrun maxOuter = 16
+    val ids = new scala.util.Random(2718).shuffle((1L to 80L).toVector)
+    val es = ids.sliding(2).map(p => (p(0), p(1))).toSeq :+ ((ids(40), ids(39)))
+    val got = GraphOps.stronglyConnectedComponents(edges(es: _*))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got === refScc(es))
+  }
+
+  test("scc: the settle cap fails loudly, naming the loop and its cap") {
+    // the planted digraph needs more than one settle round
+    val e = intercept[IllegalStateException](GraphOps
+      .stronglyConnectedComponents(edges(plantedDigraph: _*), maxOuter = 1))
+    assert(e.getMessage.contains("stronglyConnectedComponents settle"))
+    assert(e.getMessage.contains("maxRounds=1"))
   }
 
   test("scc settle loop converges inside its caps on the shipped sequence graph (sf0.001)") {

@@ -16,7 +16,7 @@ class IncrementalSpec extends SparkSpec {
     StructField("v", DoubleType)))
 
   test("appendIdempotent: re-running the same batch inserts zero; order-shuffled input is equivalent") {
-    val base = Files.createTempDirectory("graft_inc_spec").toString + "/t"
+    val base = SparkSpec.tempDir("graft_inc_spec") + "/t"
     val batch = Seq(("A", 1, 1.0), ("A", 2, 2.0), ("A", 2, 99.0), ("B", 1, 3.0))
       .toDF("sym", "d", "v")
     val n1 = Incremental.appendIdempotent(spark, base, batch, Seq("sym", "d"), schema)
@@ -31,7 +31,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("appendIdempotent rejects NULL-PK rows instead of re-inserting them forever") {
-    val base = Files.createTempDirectory("graft_nullpk_spec").toString + "/t"
+    val base = SparkSpec.tempDir("graft_nullpk_spec") + "/t"
     val batch = Seq(("A", Some(1), 1.0), ("B", None, 2.0))
       .toDF("sym", "d", "v")
     val n1 = Incremental.appendIdempotent(spark, base, batch, Seq("sym", "d"), schema)
@@ -41,7 +41,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("symbol-partitioned append: point reads prune partitions at plan time") {
-    val base = Files.createTempDirectory("graft_part_spec").toString + "/t"
+    val base = SparkSpec.tempDir("graft_part_spec") + "/t"
     val batch = Seq(("AAPL", 1, 1.0), ("AAPL", 2, 2.0), ("MSFT", 1, 3.0))
       .toDF("sym", "d", "v")
     val n = Incremental.appendIdempotent(spark, base, batch, Seq("sym", "d"),
@@ -64,7 +64,7 @@ class IncrementalSpec extends SparkSpec {
     val empty = Seq.empty[(String, Int, Double)].toDF("sym", "d", "v")
     val batch = Seq(("A", 1, 1.0), ("A", 2, 2.0), ("B", 1, 3.0)).toDF("sym", "d", "v")
     Seq(Nil, Seq("sym")).foreach { parts =>
-      val base = Files.createTempDirectory("graft_noop_spec").toString + "/t"
+      val base = SparkSpec.tempDir("graft_noop_spec") + "/t"
       def append(df: org.apache.spark.sql.DataFrame) =
         Incremental.append(spark, base, df, Seq("sym", "d"), schema, parts)
       assert(append(empty) == Incremental.Appended(0, 0), s"partitionBy $parts")
@@ -79,7 +79,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("a partitioned append writes exactly one data file per partition value") {
-    val base = Files.createTempDirectory("graft_onefile_spec").toString + "/t"
+    val base = SparkSpec.tempDir("graft_onefile_spec") + "/t"
     def batch(days: Range, syms: Seq[String]) =
       (for (s <- syms; d <- days) yield (s, d, d.toDouble)).toDF("sym", "d", "v")
         .repartition(8) // every symbol's rows spread over several tasks
@@ -129,7 +129,7 @@ class IncrementalSpec extends SparkSpec {
   }
 
   test("ensureCompanies appends only unseen symbols") {
-    val base = Files.createTempDirectory("graft_cat_spec").toString
+    val base = SparkSpec.tempDir("graft_cat_spec")
     val n1 = Catalog.ensureCompanies(spark, base, Seq("AAPL", "MSFT", "AAPL").toDF("s"))
     assert(n1 == 2)
     val n2 = Catalog.ensureCompanies(spark, base, Seq("AAPL", "GOOG").toDF("s"))
@@ -138,7 +138,7 @@ class IncrementalSpec extends SparkSpec {
 
   test("readEvolved merges an added column across file generations; pinned readers prune it") {
     import org.apache.spark.sql.functions._
-    val path = Files.createTempDirectory("graft_evolve").toString + "/t"
+    val path = SparkSpec.tempDir("graft_evolve") + "/t"
     // generation 1: two columns
     Seq(("AAPL", 10.0), ("MSFT", 20.0)).toDF("sym", "px")
       .write.mode("append").parquet(path)

@@ -79,12 +79,12 @@ class JdbcSinkSpec extends SparkSpec {
 
   test("streaming ingest to Derby: redelivered batches insert zero (foreachBatch + PK guard)") {
     withTable(dailyBarsDdl("daily_bars"), "daily_bars") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_jdbc")
+      val dir = java.nio.file.Paths.get(SparkSpec.tempDir("graft_stream_jdbc"))
       java.nio.file.Files.writeString(dir.resolve("aapl.json"), graft.ingest.Fixtures.dailyAapl)
       java.nio.file.Files.writeString(dir.resolve("msft.json"), graft.ingest.Fixtures.dailyMsft)
 
       def runOnce(): Unit = {
-        val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt")
+        val ckpt = java.nio.file.Paths.get(SparkSpec.tempDir("graft_stream_ckpt"))
         ingestToJdbc(dir.toString, "daily_bars", ckpt.toString)
       }
 
@@ -101,8 +101,8 @@ class JdbcSinkSpec extends SparkSpec {
 
   test("streaming ingest to Derby: a symbol first seen in a later run lands every bar, however old") {
     withTable(dailyBarsDdl("late_bars"), "late_bars") {
-      val dir = java.nio.file.Files.createTempDirectory("graft_stream_jdbc_late").toString
-      val ckpt = java.nio.file.Files.createTempDirectory("graft_stream_ckpt_late").toString
+      val dir = SparkSpec.tempDir("graft_stream_jdbc_late")
+      val ckpt = SparkSpec.tempDir("graft_stream_ckpt_late")
       StreamingSpec.writePayloads(dir, "aapl" -> Fixtures.dailyAapl)
       ingestToJdbc(dir, "late_bars", ckpt)
       assert(spark.read.jdbc(url, "late_bars", props).count() == 5L)

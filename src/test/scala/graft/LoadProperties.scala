@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, Prop, Properties, Test => ScTest}
@@ -36,7 +34,7 @@ object LoadProperties extends Properties("graft.load") {
 
   property("appendIdempotent: re-running any batch inserts zero") =
     Prop.forAll(genRows) { rows =>
-      val path = Files.createTempDirectory("graft_prop").toString + "/t"
+      val path = SparkSpec.tempDir("graft_prop") + "/t"
       val batch = rows.toDF("sym", "d", "v")
       val n1 = Incremental.appendIdempotent(spark, path, batch, Seq("sym", "d"), schema)
       val n2 = Incremental.appendIdempotent(spark, path, batch, Seq("sym", "d"), schema)

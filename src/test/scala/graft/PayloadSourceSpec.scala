@@ -20,7 +20,7 @@ class PayloadSourceSpec extends SparkSpec {
   }
 
   test("path mode reads one JSON document per file, one partition per file") {
-    val dir = Files.createTempDirectory("graft_payload_src")
+    val dir = java.nio.file.Paths.get(SparkSpec.tempDir("graft_payload_src"))
     Seq("aapl" -> Fixtures.dailyAapl, "msft" -> Fixtures.dailyMsft,
         "err" -> Fixtures.errorPayload, "note" -> Fixtures.ratelimitPayload)
       .foreach { case (n, doc) =>
@@ -32,7 +32,7 @@ class PayloadSourceSpec extends SparkSpec {
   }
 
   test("fetch mode pulls one URL per symbol partition on the executor (file:// transport)") {
-    val dir = Files.createTempDirectory("graft_payload_fetch")
+    val dir = java.nio.file.Paths.get(SparkSpec.tempDir("graft_payload_fetch"))
     Seq("AAPL" -> Fixtures.dailyAapl, "MSFT" -> Fixtures.dailyMsft)
       .foreach { case (sym, doc) =>
         Files.write(dir.resolve(s"$sym.json"), doc.getBytes(StandardCharsets.UTF_8))
@@ -51,7 +51,7 @@ class PayloadSourceSpec extends SparkSpec {
   }
 
   test("fetch mode onError=envelope degrades a failed fetch to the A14 error envelope") {
-    val dir = Files.createTempDirectory("graft_payload_fetch_err")
+    val dir = java.nio.file.Paths.get(SparkSpec.tempDir("graft_payload_fetch_err"))
     Files.write(dir.resolve("AAPL.json"),
       Fixtures.dailyAapl.getBytes(StandardCharsets.UTF_8))
     val v2 = spark.read.format("graft-payloads")

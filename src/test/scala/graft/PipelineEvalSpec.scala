@@ -126,7 +126,7 @@ class PipelineEvalSpec extends SparkSpec {
     // tiny lineitem with deliberate ties in every column: quantity 2
     // twice, discount 0.00/0.02 twice, price 30.00 twice
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_q131").toString
+    val dir = SparkSpec.tempDir("graft_q131")
     val rows = Seq(
       (1L, BigDecimal(1), BigDecimal(0.00), BigDecimal(10.00)),
       (2L, BigDecimal(2), BigDecimal(0.00), BigDecimal(20.00)),
@@ -232,7 +232,7 @@ class PipelineEvalSpec extends SparkSpec {
   test("q134 Chao1 and Good-Turing match the hand fold, including the F2=0 fallback") {
     import spark.implicits._
     // a=2, b=1, c=2, d=1 → V=4, N=6, F1=2, F2=2 → chao1 = 4 + 2²/(2·2)
-    val dir1 = java.nio.file.Files.createTempDirectory("graft_q134a").toString
+    val dir1 = SparkSpec.tempDir("graft_q134a")
     Seq((1L, "a a b c"), (2L, "c d")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir1/documents.parquet")
     val r1 = graft.queries.Features.q134_vocab_richness(spark, dir1)
@@ -242,7 +242,7 @@ class PipelineEvalSpec extends SparkSpec {
     assert(r1.getDouble(4) == 4.0 + 4.0 / 4.0, "chao1")
     assert(r1.getDouble(5) == 2.0 / 6.0, "good-turing unseen mass")
     // all singletons, F2=0 → the F1(F1−1)/2 fallback
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_q134b").toString
+    val dir2 = SparkSpec.tempDir("graft_q134b")
     Seq((1L, "a b")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")
     val r2 = graft.queries.Features.q134_vocab_richness(spark, dir2)
@@ -259,7 +259,7 @@ class PipelineEvalSpec extends SparkSpec {
 
   test("q135 KS statistic equals the exact cross-multiplied CDF-gap fold") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_q135").toString
+    val dir = SparkSpec.tempDir("graft_q135")
     val ref = java.sql.Timestamp.valueOf("2024-01-10 00:00:00")
     val cur = java.sql.Timestamp.valueOf("2024-01-20 00:00:00")
     (Seq(1.0, 2.0, 2.0, 5.0).map((ref, _)) ++
@@ -284,7 +284,7 @@ class PipelineEvalSpec extends SparkSpec {
   test("q136 kappa matches the exact contingency fold; perfect and degenerate agreement pinned") {
     import spark.implicits._
     // one doc per contingency cell: (la, lb) = (P,N), (N,P), (P,P), (N,N)
-    val dir = java.nio.file.Files.createTempDirectory("graft_q136").toString
+    val dir = SparkSpec.tempDir("graft_q136")
     val longStop = Seq.fill(60)("the").mkString(" ")  // la (100% stop), lb (60 ≥ 50)
     val longPlain = (1 to 60).map(i => s"w$i").mkString(" ") // ¬la, lb
     Seq((1L, "the a the a"), (2L, longPlain), (3L, longStop), (4L, "x y"))
@@ -297,13 +297,13 @@ class PipelineEvalSpec extends SparkSpec {
     assert(r.getDouble(6) == 0.5, "pe")   // balanced marginals
     assert(r.getDouble(7) == 0.0, "independent raters → κ = 0")
     // perfect agreement on both cells → κ = 1 exactly
-    val dir2 = java.nio.file.Files.createTempDirectory("graft_q136b").toString
+    val dir2 = SparkSpec.tempDir("graft_q136b")
     Seq((1L, longStop), (2L, "x y")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir2/documents.parquet")
     val r2 = graft.queries.Features.q136_cohens_kappa(spark, dir2).collect()(0)
     assert(r2.getDouble(5) == 1.0 && r2.getDouble(7) == 1.0)
     // all mass in one cell → pe = 1, κ undefined → NULL, never NaN
-    val dir3 = java.nio.file.Files.createTempDirectory("graft_q136c").toString
+    val dir3 = SparkSpec.tempDir("graft_q136c")
     Seq((1L, longStop), (2L, longStop)).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir3/documents.parquet")
     val r3 = graft.queries.Features.q136_cohens_kappa(spark, dir3).collect()(0)

@@ -119,7 +119,7 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("corrupt-shard tolerance: ignoreCorruptFiles reads past a damaged file; default mode fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_corrupt").toString
+    val dir = SparkSpec.tempDir("graft_corrupt")
     spark.range(100).selectExpr("id", "id * 2 AS v")
       .repartition(4).write.mode("overwrite").parquet(dir)
     // plant a garbage shard where a 100 TB table WILL eventually have
@@ -147,7 +147,7 @@ class ScaleSpec extends SparkSpec {
   test("dynamic partition pruning: a dim-side filter prunes fact partitions at runtime") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val path = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val path = SparkSpec.tempDir("graft_dpp")
     val ev = graft.Tables(spark, dir, "events")
       .withColumn("event_date", to_date(col("ts")))
     Scale.writePartitioned(ev, path, "event_date")
@@ -187,7 +187,7 @@ class ScaleSpec extends SparkSpec {
   test("writePartitioned: a partition-column predicate prunes to one directory") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val path = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val path = SparkSpec.tempDir("graft_part")
     val ev = graft.Tables(spark, dir, "events")
       .withColumn("event_date", to_date(col("ts")))
     Scale.writePartitioned(ev, path, "event_date")
@@ -222,8 +222,8 @@ class ScaleSpec extends SparkSpec {
   test("compactTo rewrites a fragmented table into few files, preserving rows") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val src = java.nio.file.Files.createTempDirectory("graft_frag").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft_compact").toString + "/out"
+    val src = SparkSpec.tempDir("graft_frag")
+    val dst = SparkSpec.tempDir("graft_compact") + "/out"
     val ev = graft.Tables(spark, dir, "events")
     ev.repartition(40).write.mode("overwrite").parquet(src)
     val (before, after) = Scale.compactTo(spark, src, dst, targetFileBytes = 1L << 30)
@@ -237,8 +237,8 @@ class ScaleSpec extends SparkSpec {
   test("compactTo sizes a hive-partitioned source recursively and computes a real file count") {
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val src = java.nio.file.Files.createTempDirectory("graft_frag_part").toString + "/src"
-    val dst = java.nio.file.Files.createTempDirectory("graft_compact_part").toString + "/out"
+    val src = SparkSpec.tempDir("graft_frag_part") + "/src"
+    val dst = SparkSpec.tempDir("graft_compact_part") + "/out"
     val ev = graft.Tables(spark, dir, "events")
       .withColumn("etype", col("event_type"))
     // hive layout: files nested under etype=…/ — the non-recursive

@@ -103,7 +103,7 @@ class SimilaritySpec extends SparkSpec {
     val idx = Similarity.IvfIndex.build(corpus, "vec_id", "embedding", nLists = 8)
     val mem = idx.search(queries, "vec_id", "embedding", k = 5, nProbe = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val path = SparkSpec.tempDir("graft_ivf")
     idx.write(path)
     // one directory per list on disk
     val listDirs = new java.io.File(s"$path/lists").listFiles()
@@ -157,7 +157,7 @@ class SimilaritySpec extends SparkSpec {
     try {
       val mem = idx.search(queries, "vec_id", "embedding", k = 5)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-      val path = java.nio.file.Files.createTempDirectory("graft_lsh").toString
+      val path = SparkSpec.tempDir("graft_lsh")
       idx.write(path)
       val pfxDirs = new java.io.File(s"$path/buckets").listFiles()
         .filter(_.getName.startsWith("bucket_pfx=")).map(_.getName).toSet
@@ -365,7 +365,7 @@ class SimilaritySpec extends SparkSpec {
     val hopCounts = scala.collection.mutable.ListBuffer[(Int, Long)]()
     val got = GraphAnn.search(idx, probes, "vec_id", "embedding",
       k = 10, beam = 32, hops = 6,
-      onHop = (h, cand) => hopCounts += ((h, cand.count())))
+      onHop = cand => hopCounts += ((hopCounts.size + 1, cand.count())))
     val exact = Similarity.bruteForceTopK(
       probes, e, "vec_id", "embedding", "vec_id", "embedding", k = 10)
     val recall = Similarity.recallAtK(exact, got)
@@ -437,7 +437,7 @@ class SimilaritySpec extends SparkSpec {
       dim = 16, planes = 6, tables = 8)
     try {
       val idx = GraphAnn.build(lsh, degree = 6, nEntries = 4)
-      val path = java.nio.file.Files.createTempDirectory("graft_gann_ins").toString
+      val path = SparkSpec.tempDir("graft_gann_ins")
       GraphAnn.write(idx, path)
       val restored = GraphAnn.read(spark, path)
       assert(restored.srcBuckets === Some(64))
@@ -477,7 +477,7 @@ class SimilaritySpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
       val mem = res(GraphAnn.search(idx, queries, "vec_id", "embedding",
         k = 5, beam = 8, hops = 3))
-      val path = java.nio.file.Files.createTempDirectory("graft_gann").toString
+      val path = SparkSpec.tempDir("graft_gann")
       GraphAnn.write(idx, path)
       val bktDirs = new java.io.File(s"$path/graph").listFiles()
         .filter(_.getName.startsWith("src_bkt=")).map(_.getName).toSet
@@ -495,7 +495,7 @@ class SimilaritySpec extends SparkSpec {
         org.apache.spark.sql.DataFrame]()
       assert(res(GraphAnn.searchPruned(restored, queries, "vec_id",
         "embedding", k = 5, beam = 8, hops = 3,
-        onHop = (_, c) => cands += c)) === mem)
+        onHop = c => cands += c)) === mem)
       assert(cands.size === 3)
       val lastHop = cands.last
       lastHop.collect() // execute THIS plan so its scan owns the metrics
@@ -831,7 +831,7 @@ class SimilaritySpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val queries = corpus.where(col("vec_id") < 3)
     val idx = Similarity.IvfIndex.build(corpus, "vec_id", "embedding", nLists = 8)
-    val path = java.nio.file.Files.createTempDirectory("graft_ivf_del").toString
+    val path = SparkSpec.tempDir("graft_ivf_del")
     idx.write(path)
     def res(i: Similarity.IvfIndex) =
       i.search(queries, "vec_id", "embedding", k = 5, nProbe = 8)
@@ -895,7 +895,7 @@ class SimilaritySpec extends SparkSpec {
     val idx = Similarity.LshIndex.build(corpus, "vec_id", "embedding",
       dim = 16, planes = 8, tables = 4)
     try {
-      val path = java.nio.file.Files.createTempDirectory("graft_lsh_del").toString
+      val path = SparkSpec.tempDir("graft_lsh_del")
       idx.write(path)
       def res(i: Similarity.LshIndex) =
         i.search(queries, "vec_id", "embedding", k = 5)

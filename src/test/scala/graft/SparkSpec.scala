@@ -23,4 +23,13 @@ object SparkSpec {
     s.sparkContext.setLogLevel("ERROR")
     s
   }
+
+  /** A fresh directory under the JVM's temp dir, named `prefix…`; it
+    * and its contents are deleted when the test JVM exits.
+    */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(dir))
+    dir.getAbsolutePath
+  }
 }

@@ -310,7 +310,7 @@ class SqlSurfaceSpec extends SparkSpec {
     // synthetic orders with heavy ties (31 distinct values per group),
     // tiny groups (n=1,2), and a group whose values all collide into
     // ONE bucket — the residual pass must resolve ranks by value counts
-    val tmp = java.nio.file.Files.createTempDirectory("g-q79").toString
+    val tmp = SparkSpec.tempDir("g-q79")
     val rows = (0 until 4000).map { i =>
       (s"G${i % 3}", math.round((i * 37 % 31) * 100.37 * 100) / 100.0)
     } ++ Seq(("TINY1", 42.0), ("TINY2", 7.0), ("TINY2", 9.0)) ++
@@ -348,7 +348,7 @@ class SqlSurfaceSpec extends SparkSpec {
     // the per-(user, day) first-level groups hold ≤86,400 events while
     // the single-aggregate formulation this replaced would buffer all
     // 1M (ts, event_id, ini) structs in one aggregation state
-    val tmp = java.nio.file.Files.createTempDirectory("g-q77").toString
+    val tmp = SparkSpec.tempDir("g-q77")
     val n = 1000002L
     val epoch = java.time.Instant.parse("2024-01-01T00:00:00Z").getEpochSecond
     // ts is written as nanosecond BIGINT — the TIMESTAMP(NANOS) shape

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 
 import graft.ingest.{Fixtures, Normalize}
@@ -27,7 +25,7 @@ class StockPipelineSpec extends SparkSpec {
   }
 
   test("rows_inserted equals each table's row-count change; a re-run inserts 0 and adds no file") {
-    val base = Files.createTempDirectory("graft_pipeline_spec").toString
+    val base = SparkSpec.tempDir("graft_pipeline_spec")
     val batches = Seq(Fixtures.dailyPayloads(spark), Fixtures.dailyPayloadsNextRun(spark))
     var before = rowCounts(base)
     batches.foreach { daily =>

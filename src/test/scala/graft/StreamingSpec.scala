@@ -29,7 +29,7 @@ class StreamingSpec extends SparkSpec {
     }
 
   test("dailyIngestStream: AvailableNow drains files, dedups on PK, resumes incrementally") {
-    val base = Files.createTempDirectory("graft_stream_spec").toString
+    val base = SparkSpec.tempDir("graft_stream_spec")
     val in = s"$base/in"; val out = s"$base/out"; val ckpt = s"$base/ckpt"
     new java.io.File(in).mkdirs()
 
@@ -51,7 +51,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ingestStream equals two StockPipeline.run batches on all four tables, a late new symbol's old bars included") {
-    val base = Files.createTempDirectory("graft_ingest_vs_batch").toString
+    val base = SparkSpec.tempDir("graft_ingest_vs_batch")
     val (in, ckpt, streamed, batched) =
       (s"$base/in", s"$base/ckpt", s"$base/streamed", s"$base/batched")
     writePayloads(in, "aapl" -> Fixtures.dailyAapl, "msft" -> Fixtures.dailyMsft,
@@ -77,7 +77,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("ingestStream replay: a micro-batch re-run under its own id inserts 0 rows in every table and writes no file") {
-    val base = Files.createTempDirectory("graft_ingest_replay").toString
+    val base = SparkSpec.tempDir("graft_ingest_replay")
     val (in, cp, store) = (s"$base/in", s"$base/cp", s"$base/store")
     val inserted = scala.collection.mutable.ArrayBuffer[Map[String, Long]]()
     def start() = StreamingIngest.ingestStream(spark, in, cp) { b =>
@@ -481,7 +481,7 @@ class StreamingSpec extends SparkSpec {
   test("streamingSessions state survives a checkpointed stop/restart exactly once") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_cp_").toString
+    val base = SparkSpec.tempDir("graft_cp_")
     val (inDir, cpDir, outDir) = (s"$base/in", s"$base/cp", s"$base/out")
     val gap = 30L * 60 * 1000 * 1000 // 30 min
     def ts(min: Int) = new java.sql.Timestamp((1000 + min) * 60000L)
@@ -523,7 +523,7 @@ class StreamingSpec extends SparkSpec {
   test("transitionMatrixStream state and generations survive a checkpointed stop/restart") {
     import org.apache.spark.sql.types._
     import spark.implicits._
-    val base = java.nio.file.Files.createTempDirectory("graft_mk_cp_").toString
+    val base = SparkSpec.tempDir("graft_mk_cp_")
     val (inDir, cpDir, root) = (s"$base/in", s"$base/cp", s"$base/matrix")
     def ts(min: Int) = new java.sql.Timestamp((1000 + min) * 60000L)
     def writeBatch(events: (Long, String, Int, Long)*): Unit =
@@ -802,7 +802,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.load.Incremental
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_scd_stream").toString
+    val base = SparkSpec.tempDir("graft_scd_stream")
     val root = s"$base/dim"; val ckpt = s"$base/ckpt"
     val stream = MemoryStream[(Long, String, Int)]
     val q = StreamingIngest.scdApplyStream(
@@ -837,7 +837,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions._
     import graft.text.{CorpusStats, TextAnalysis}
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_stats_stream").toString
+    val base = SparkSpec.tempDir("graft_stats_stream")
     val root = s"$base/stats"; val ckpt = s"$base/ckpt"
     val stream = MemoryStream[(Long, String)]
     val q = StreamingIngest.corpusStatsStream(
@@ -870,7 +870,7 @@ class StreamingSpec extends SparkSpec {
   test("termFreqStream: folded token counts derive exactly t47, known F1/F2 included") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_tf_stream").toString
+    val base = SparkSpec.tempDir("graft_tf_stream")
     val root = s"$base/tf"; val ckpt = s"$base/ckpt"
     val stream = MemoryStream[(Long, String)]
     val q = StreamingIngest.termFreqStream(
@@ -898,7 +898,7 @@ class StreamingSpec extends SparkSpec {
   test("truncationStream: folded per-length partials derive exactly t48 with hand-checked losses") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_trunc_stream").toString
+    val base = SparkSpec.tempDir("graft_trunc_stream")
     val root = s"$base/trunc"; val ckpt = s"$base/ckpt"
     val stream = MemoryStream[(Long, String)]
     val q = StreamingIngest.truncationStream(
@@ -936,7 +936,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_cat_stream").toString
+    val base = SparkSpec.tempDir("graft_cat_stream")
     val root = s"$base/cat"; val ckpt = s"$base/ckpt"
     val evs = graft.Tables(spark, dir, "events")
       .select(col("ts"), col("event_type"))
@@ -966,7 +966,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/documents.parquet").exists())
-    val base = Files.createTempDirectory("graft_fleiss_stream").toString
+    val base = SparkSpec.tempDir("graft_fleiss_stream")
     val root = s"$base/fleiss"; val ckpt = s"$base/ckpt"
     val docs = graft.Tables(spark, dir, "documents")
       .select(col("text")).collect().map(_.getString(0))
@@ -995,7 +995,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_markov_stream").toString
+    val base = SparkSpec.tempDir("graft_markov_stream")
     val root = s"$base/matrix"; val ckpt = s"$base/ckpt"
     // global (ts, event_id) sort before chunking — the per-user
     // in-order delivery contract the stateful twins document
@@ -1032,7 +1032,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_feat_stream").toString
+    val base = SparkSpec.tempDir("graft_feat_stream")
     val root = s"$base/store"; val ckpt = s"$base/ckpt"
     val evFrame = graft.Tables(spark, dir, "events")
       .select(col("user_id"), col("ts"), col("event_type"), col("value"))
@@ -1064,7 +1064,7 @@ class StreamingSpec extends SparkSpec {
   test("pruneGenerations keeps the newest snapshots and current reads are unaffected") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_genprune").toString
+    val base = SparkSpec.tempDir("graft_genprune")
     val root = s"$base/matrix"; val ckpt = s"$base/ckpt"
     def ev(u: Long, et: String, m: Int, id: Long) =
       StreamingIngest.TypedEvent(u, et, new java.sql.Timestamp((1000 + m) * 60000L), id)
@@ -1098,7 +1098,7 @@ class StreamingSpec extends SparkSpec {
   test("generation read-sides skip a marker-less (mid-write crash) generation and resolve the committed parent") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_gen_commit").toString
+    val base = SparkSpec.tempDir("graft_gen_commit")
 
     // direct-parquet store (scd dimension): Spark's committer owns the marker
     val dimRoot = s"$base/dim"
@@ -1145,7 +1145,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("backfillGenerationMarkers adopts complete legacy sub-table generations, never crash remnants") {
-    val base = Files.createTempDirectory("graft_gen_backfill").toString
+    val base = SparkSpec.tempDir("graft_gen_backfill")
     val root = s"$base/stats"
     // legacy COMPLETE generation: df + tot each parquet-committed
     // (per-table _SUCCESS), no gen-level marker — the pre-r16 layout
@@ -1176,7 +1176,7 @@ class StreamingSpec extends SparkSpec {
   test("asOfGeneration: historical snapshots read identically after newer batches land; prune sets the horizon") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_gen_asof").toString
+    val base = SparkSpec.tempDir("graft_gen_asof")
     val root = s"$base/matrix"; val ckpt = s"$base/ckpt"
     def ev(u: Long, et: String, m: Int, id: Long) =
       StreamingIngest.TypedEvent(u, et, new java.sql.Timestamp((1000 + m) * 60000L), id)
@@ -1226,7 +1226,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_cusum_stream").toString
+    val base = SparkSpec.tempDir("graft_cusum_stream")
     val root = s"$base/cusum"; val ckpt = s"$base/ckpt"
     val evs = graft.Tables(spark, dir, "events")
       .select(col("event_type"), col("ts"))
@@ -1254,7 +1254,7 @@ class StreamingSpec extends SparkSpec {
 
   test("foldStream replay: a batch re-run under its own id rewrites the same generation and creates no new one") {
     import org.apache.spark.sql.types._
-    val base = Files.createTempDirectory("graft_fold_replay").toString
+    val base = SparkSpec.tempDir("graft_fold_replay")
     val (inDir, cp, root) = (s"$base/in", s"$base/cp", s"$base/cusum")
     def ts(d: Int, h: Int) = java.sql.Timestamp.from(
       java.time.Instant.parse(f"2025-01-$d%02dT$h%02d:00:00Z"))
@@ -1297,7 +1297,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_psi_stream").toString
+    val base = SparkSpec.tempDir("graft_psi_stream")
     val root = s"$base/psi"; val ckpt = s"$base/ckpt"
     val evs = graft.Tables(spark, dir, "events")
       .select(col("ts"), col("value"))
@@ -1328,7 +1328,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_ks_stream").toString
+    val base = SparkSpec.tempDir("graft_ks_stream")
     val root = s"$base/ks"; val ckpt = s"$base/ckpt"
     val evs = graft.Tables(spark, dir, "events")
       .select(col("ts"), col("value"))
@@ -1361,7 +1361,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_ab_stream").toString
+    val base = SparkSpec.tempDir("graft_ab_stream")
     val root = s"$base/ab"; val ckpt = s"$base/ckpt"
     val evs = graft.Tables(spark, dir, "events")
       .select(col("user_id"), col("event_type"), col("value"))
@@ -1396,7 +1396,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_anova_stream").toString
+    val base = SparkSpec.tempDir("graft_anova_stream")
     val root = s"$base/anova"; val ckpt = s"$base/ckpt"
     val evs = graft.Tables(spark, dir, "events")
       .select(col("event_type"), col("value"))
@@ -1426,7 +1426,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_kw_stream").toString
+    val base = SparkSpec.tempDir("graft_kw_stream")
     val root = s"$base/kw"; val ckpt = s"$base/ckpt"
     val evs = graft.Tables(spark, dir, "events")
       .select(col("event_type"), col("value"))
@@ -1462,7 +1462,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_mk_stream").toString
+    val base = SparkSpec.tempDir("graft_mk_stream")
     val root = s"$base/mk"; val ckpt = s"$base/ckpt"
     val evs = graft.Tables(spark, dir, "events")
       .select(col("ts"), col("event_type"))
@@ -1492,7 +1492,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/events.parquet").exists())
-    val base = Files.createTempDirectory("graft_slice_stream").toString
+    val base = SparkSpec.tempDir("graft_slice_stream")
     val root = s"$base/slices"; val ckpt = s"$base/ckpt"
     val evs = graft.Tables(spark, dir, "events")
       .select(col("ts"), col("event_type"), col("value"))
@@ -1524,7 +1524,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_release_stream").toString
+    val base = SparkSpec.tempDir("graft_release_stream")
     val root = s"$base/rel"; val ckpt = s"$base/ckpt"
     // synthetic corpus with PLANTED duplicate texts: ids 1..90, six
     // sources, every text shared by three ids — after shuffling into
@@ -1561,7 +1561,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_qrel_stream").toString
+    val base = SparkSpec.tempDir("graft_qrel_stream")
     val root = s"$base/qrel"; val ckpt = s"$base/ckpt"
     // 90 docs = 30 planted duplicate groups of 3. Groups 0..19 share a
     // COMMON vocabulary (low xent — survive the tertile gate); groups
@@ -1619,7 +1619,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_qrel_reemit").toString
+    val base = SparkSpec.tempDir("graft_qrel_reemit")
     val root = s"$base/qrel"; val ckpt = s"$base/ckpt"
     // checkpoint replay protection does NOT apply across distinct
     // micro-batches (the r14-advice hazard): an at-least-once source
@@ -1659,7 +1659,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_bitext_stream").toString
+    val base = SparkSpec.tempDir("graft_bitext_stream")
     val root = s"$base/emb"; val ckpt = s"$base/ckpt"
     def v(xs: Double*): Array[Float] = xs.map(_.toFloat).toArray
     // batch 1: 0↔1 and 2↔3 are mutual best pairs across the parity
@@ -1715,7 +1715,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_bt_stream").toString
+    val base = SparkSpec.tempDir("graft_bt_stream")
     val root = s"$base/bt"; val ckpt = s"$base/ckpt"
     val types = Seq("view", "click", "purchase", "error", "signup")
     val t0 = 1704067200000000L // 2024-01-01T00:00Z in micros
@@ -1755,7 +1755,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_sft_stream").toString
+    val base = SparkSpec.tempDir("graft_sft_stream")
     val root = s"$base/sft"; val ckpt = s"$base/ckpt"
     val types = Seq("view", "click", "purchase", "error", "signup")
     val t0 = 1704067200000000L // 2024-01-01T00:00Z in micros
@@ -1795,7 +1795,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_pref_stream").toString
+    val base = SparkSpec.tempDir("graft_pref_stream")
     val root = s"$base/pref"; val ckpt = s"$base/ckpt"
     val types = Seq("view", "click", "purchase", "error", "signup")
     val t0 = 1704067200000000L // 2024-01-01T00:00Z in micros
@@ -1835,7 +1835,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_epoch_stream").toString
+    val base = SparkSpec.tempDir("graft_epoch_stream")
     val root = s"$base/epoch"; val ckpt = s"$base/ckpt"
     val docs = (1L to 120L).map(id => (id, s"tok$id words number ${id % 9}"))
     val shuffled = new scala.util.Random(37).shuffle(docs)
@@ -1860,7 +1860,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_tokeval_stream").toString
+    val base = SparkSpec.tempDir("graft_tokeval_stream")
     val root = s"$base/tokeval"; val ckpt = s"$base/ckpt"
     val langs = Seq("en", "de", "fr")
     val docs = (1L to 90L).map { id =>
@@ -1902,7 +1902,7 @@ class StreamingSpec extends SparkSpec {
   test("streamingNearDupAdmission: self-dedup + corpus filter; admitted generations append") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_neardup_stream").toString
+    val base = SparkSpec.tempDir("graft_neardup_stream")
     val root = s"$base/corpus"; val ckpt = s"$base/ckpt"
     val seed1 = "the quick brown fox jumps over the lazy dog near the old river bank every single morning"
     val seed4 = "spark executes declarative plans with whole stage codegen and adaptive query execution enabled"
@@ -1937,7 +1937,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
-    val base = Files.createTempDirectory("graft_substr_stream").toString
+    val base = SparkSpec.tempDir("graft_substr_stream")
     val root = s"$base/corpus"; val ckpt = s"$base/ckpt"
     def words(p: String, n: Int): Seq[String] = (1 to n).map(i => s"$p$i")
     val span = words("dup", 22)
@@ -1989,7 +1989,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.{col, explode, hex, lower}
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
-    val base = Files.createTempDirectory("graft_substr_migr").toString
+    val base = SparkSpec.tempDir("graft_substr_migr")
     val root = s"$base/corpus"; val ckpt = s"$base/ckpt"
     def words(p: String, n: Int): Seq[String] = (1 to n).map(i => s"$p$i")
     val span = words("old", 22)
@@ -2050,7 +2050,7 @@ class StreamingSpec extends SparkSpec {
 
   test("rewriteHexAnchors finishes an interrupted swap and leaves binary and uncommitted generations alone") {
     import org.apache.spark.sql.functions.{col, unhex}
-    val base = Files.createTempDirectory("graft_hex_rewrite").toString
+    val base = SparkSpec.tempDir("graft_hex_rewrite")
     val root = s"$base/corpus"
     val hexKeys = Seq("00112233445566778899aabbccddeeff", "ffeeddccbbaa99887766554433221100")
     def writeHex(path: String) = hexKeys.toDF("h").write.parquet(path)
@@ -2090,7 +2090,7 @@ class StreamingSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val dir = "/root/testdata/sf0.001"
     assume(new java.io.File(s"$dir/lineitem.parquet").exists())
-    val base = Files.createTempDirectory("graft_edge_stream").toString
+    val base = SparkSpec.tempDir("graft_edge_stream")
     val root = s"$base/edges"; val ckpt = s"$base/ckpt"
     // ROW-ORDER chunking (not order-aligned): orders straddle batch
     // boundaries on purpose — their pairs only exist if the per-order

@@ -172,7 +172,7 @@ class TextAnalysisSpec extends SparkSpec {
     // corpus: doc1 = "a a b", doc2 = "a c" → c(a)=3, c(b)=c(c)=1,
     // N=5, V=3; xent = ln(N+V) − Σ c_d(w)·ln(c(w)+1) / n_d with the
     // engine's per-term round-to-9 discipline
-    val dir = java.nio.file.Files.createTempDirectory("graft_t29").toString
+    val dir = SparkSpec.tempDir("graft_t29")
     Seq((1L, "a a b"), (2L, "a c")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // the engine's e-unit discipline: per-(doc, token) terms
@@ -199,7 +199,7 @@ class TextAnalysisSpec extends SparkSpec {
     // doc3 = "z" has no bigram events and must be absent.
     // c2: (a b)=2, (b a)=2; c1: a=2, b=2; V = |{a, b}| = 2 →
     // every term is ln(2+2) − ln(2+1)
-    val dir = java.nio.file.Files.createTempDirectory("graft_t30").toString
+    val dir = SparkSpec.tempDir("graft_t30")
     Seq((1L, "a b a b"), (2L, "b a"), (3L, "z")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // e-unit discipline: per-(doc, bigram) terms cd·(ln(c1+V)−ln(c2+1))
@@ -262,8 +262,7 @@ class TextAnalysisSpec extends SparkSpec {
     import spark.implicits._
     // counts a=6 b=3 c=1, N=10: 90% needs {a,b} exactly (coverage .9);
     // 95% and 99% both need all three (coverage 1.0)
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_t50").toString
+    val dir = SparkSpec.tempDir("graft_t50")
     Seq((1L, "srcA", "a a a a a a b b b c"))
       .toDF("doc_id", "source", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
