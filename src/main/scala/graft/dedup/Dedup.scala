@@ -118,6 +118,106 @@ object Dedup {
       array_distinct(TextAnalysis.shingles(a, k)),
       array_distinct(TextAnalysis.shingles(b, k)))
 
+  // ------------------------------------------- candidate-then-verify
+
+  /** `(id, sh_set)`: each document's distinct k-shingles — the payload
+    * every shingle-based pair operator bands, prefixes or indexes and
+    * then re-attaches for its exact verify.
+    *
+    * The round-robin exchange decouples compute parallelism from the
+    * input file layout: a small corpus parquet is often a single
+    * (unsplittable) row group, and without the exchange the whole
+    * shingle (and signature) stage runs on one core. The exchange is
+    * also reused (ReusedExchange) by both sides of a self-join, so the
+    * sets are not recomputed per side.
+    */
+  private def shingleSets(df: DataFrame, textCol: String, idCol: String,
+      k: Int): DataFrame =
+    df.select(col(idCol).as("id"), col(textCol).as("text"))
+      .repartition(df.sparkSession.sparkContext.defaultParallelism)
+      .select(col("id"),
+        array_distinct(TextAnalysis.shingles(col("text"), k)).as("sh_set"))
+
+  /** `(band, id)`: the LSH band keys of each `(id, sh_set)` row. Each
+    * expensive expression is staged as its own column so it runs once
+    * per document (CollapseProject keeps multi-referenced non-cheap
+    * projections apart; inlining the signature into all `bands` band
+    * keys would re-evaluate the whole shingle+md5 tree per band).
+    */
+  private def bandKeys(sets: DataFrame, numHashes: Int, bands: Int): DataFrame =
+    sets
+      // native one-loop signature (md5 + all permutations fused); the
+      // staged-HOF formulation (shingleBaseHashes → minhashOfHashes)
+      // computes the same bits interpreted — equivalence is spec-gated
+      .withColumn("sig", graft.functions.MinHashSignature(
+        col("sh_set"), minhashCoeffs(numHashes), minhashP))
+      // explode_outer: a plain explode makes the optimizer infer a
+      // size/notnull filter whose pushdown re-evaluates the whole
+      // signature expression a second time per row (band keys are never
+      // empty, so outer ≡ inner here)
+      .withColumn("band",
+        explode_outer(lshBandKeys(col("sig"), bands, numHashes / bands)))
+      .where(col("band").isNotNull)
+      .select(col("band"), col("id"))
+
+  /** `(tok, id, n)` — one row per shingle of each `(id, sh_set)` row,
+    * `n` the set size — and each set's rarest-first prefix
+    * `(tok, id, n, r)`. The global token order is rarest-first by
+    * corpus document frequency, ties by token (the order that
+    * minimizes candidate buckets); `r` is a token's rank in its set
+    * (one shuffle on id), and the prefix keeps r ≤ |s| − ⌈t·|s|⌉ + 1,
+    * the overlap-lemma bound of [[ngramJaccardNearDups]].
+    */
+  private def rarestFirst(sets: DataFrame,
+      threshold: Double): (DataFrame, DataFrame) = {
+    val toks = sets.select(col("id"), size(col("sh_set")).as("n"),
+      explode(col("sh_set")).as("tok"))
+    val freq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
+    val w = Window.partitionBy(col("id")).orderBy(col("df"), col("tok"))
+    val prefix = toks.join(freq, Seq("tok"))
+      .withColumn("r", row_number().over(w))
+      .where(col("r") <= col("n") - ceil(lit(threshold) * col("n")) + 1)
+      .select(col("tok"), col("id"), col("n"), col("r"))
+    (toks, prefix)
+  }
+
+  /** `cand(id_a, id_b)` plus `payload`'s column `v` for both ends, as
+    * `<v>_a` and `<v>_b`. Candidates carry ids only — a candidate join
+    * shuffles 16 bytes per row, not document content — and the payload
+    * re-attaches by id once per end for the exact verify.
+    */
+  private def attach(cand: DataFrame, payload: DataFrame, v: String): DataFrame =
+    cand
+      .join(payload.select(col("id").as("id_a"), col(v).as(s"${v}_a")), Seq("id_a"))
+      .join(payload.select(col("id").as("id_b"), col(v).as(s"${v}_b")), Seq("id_b"))
+
+  /** The verified pairs that `pairs` builds over `payload`, pinned
+    * ([[graft.Pin.during]]) while they are materialized.
+    *
+    * The payload feeds the candidate stage and both verify attachments,
+    * so it is pinned and computed once per document, not once per
+    * subtree. The pair frame is materialized once (`localCheckpoint`)
+    * and its lineage truncated: it is minuscule next to its compute
+    * (ids plus a score per pair), and consumers routinely reference it
+    * more than once ([[duplicateGroups]] builds src→dst ∪ dst→src),
+    * which without truncation re-runs the whole shingle/signature
+    * pipeline per reference. At cluster scale this is the same call —
+    * pairs for a 100 TB corpus are GBs, not TBs.
+    */
+  private def verifiedPairs(payload: DataFrame)(
+      pairs: DataFrame => DataFrame): DataFrame =
+    graft.Pin.during(payload)(p => pairs(p).localCheckpoint(true))
+
+  /** Candidate pairs with their exact shingle-set Jaccard ≥ `threshold`:
+    * (id_a, id_b, jaccard).
+    */
+  private def jaccardVerified(cand: DataFrame, sets: DataFrame,
+      threshold: Double): DataFrame =
+    attach(cand, sets, "sh_set")
+      .withColumn("jaccard", jaccardSets(col("sh_set_a"), col("sh_set_b")))
+      .where(col("jaccard") >= threshold)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
+
   /** MinHash+LSH near-duplicate pairs, exact-Jaccard verified.
     *
     * Plan shape (the part that must survive 100×): shingle+sign each doc
@@ -137,64 +237,14 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    // Decouple compute parallelism from input file layout: the signature
-    // stage does ~shingles × numHashes md5 calls per document, and a
-    // small corpus parquet is often a single (unsplittable) row group —
-    // without this round-robin exchange the whole hash stage runs on one
-    // core. The exchange also gets reused (ReusedExchange) by both sides
-    // of the band self-join, so signatures aren't recomputed per side.
-    val input = df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    // Stage each expensive expression as its own column so it is
-    // computed once per document (CollapseProject keeps multi-referenced
-    // non-cheap projections apart; inlining the signature into all
-    // `bands` band keys would re-evaluate the whole shingle+md5 tree per
-    // band and blow up planning/codegen).
-    // `sets` feeds three subtrees (band stage + both verify-join
-    // attachments); persist so the shingle+md5 work runs once per
-    // document instead of ~3x. Unpersisted below once the verified
-    // pairs are materialized.
-    val sets = input
-      .select(col("id"),
-        array_distinct(TextAnalysis.shingles(col("text"), k)).as("sh_set"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val banded = sets
-      // native one-loop signature (md5 + all permutations fused); the
-      // staged-HOF formulation (shingleBaseHashes → minhashOfHashes)
-      // computes the same bits interpreted — equivalence is spec-gated
-      .withColumn("sig", graft.functions.MinHashSignature(
-        col("sh_set"), minhashCoeffs(numHashes), minhashP))
-      // explode_outer: a plain explode makes the optimizer infer a
-      // size/notnull filter whose pushdown re-evaluates the whole
-      // signature expression a second time per row (band keys are never
-      // empty, so outer ≡ inner here)
-      .withColumn("band", explode_outer(lshBandKeys(col("sig"), bands, rowsPerBand)))
-      .where(col("band").isNotNull)
-      .select(col("band"), col("id"))
-    // Candidate pairs carry ids only (the band self-join shuffles 16
-    // bytes per row, not document content); shingle sets re-attach by id
-    // for the verify step.
-    val cand = banded.as("a").join(banded.as("b"), Seq("band"))
-      .where(col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val verified = cand
-      .join(sets.select(col("id").as("id_a"), col("sh_set").as("__sa")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("sh_set").as("__sb")), Seq("id_b"))
-      .withColumn("jaccard", jaccardSets(col("__sa"), col("__sb")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    // Materialize the verified pairs once and truncate lineage: the pair
-    // frame is minuscule next to its compute (ids + one double per
-    // near-dup pair), and downstream consumers routinely reference it
-    // more than once (duplicateGroups builds src→dst ∪ dst→src), which
-    // without truncation re-runs the entire shingle/signature pipeline
-    // per reference. At cluster scale this is the same call — pairs for
-    // a 100 TB corpus are GBs, not TBs.
-    val out = verified.localCheckpoint(true)
-    sets.unpersist(false)
-    out
+    verifiedPairs(shingleSets(df, textCol, idCol, k)) { sets =>
+      val banded = bandKeys(sets, numHashes, bands)
+      val cand = banded.as("a").join(banded.as("b"), Seq("band"))
+        .where(col("a.id") < col("b.id"))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct()
+      jaccardVerified(cand, sets, threshold)
+    }
   }
 
   /** Incremental (batch-vs-corpus) MinHash near-dup join — the
@@ -219,36 +269,24 @@ object Dedup {
       bands: Int = 4,
       threshold: Double = 0.5): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    val rowsPerBand = numHashes / bands
-    def stage(df: DataFrame, side: String) = {
-      val input = df.select(col(idCol).as(s"${side}_id"), col(textCol).as("text"))
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
-      val sets = input
-        .select(col(s"${side}_id"),
-          array_distinct(TextAnalysis.shingles(col("text"), k)).as(s"__s_$side"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val banded = sets
-        .withColumn("sig", graft.functions.MinHashSignature(
-          col(s"__s_$side"), minhashCoeffs(numHashes), minhashP))
-        .withColumn("band", explode_outer(lshBandKeys(col("sig"), bands, rowsPerBand)))
-        .where(col("band").isNotNull)
-        .select(col("band"), col(s"${side}_id"))
-      (sets, banded)
+    def banded(sets: DataFrame, side: String) =
+      bandKeys(sets, numHashes, bands)
+        .select(col("band"), col("id").as(s"${side}_id"))
+    def payload(sets: DataFrame, side: String) =
+      sets.select(col("id").as(s"${side}_id"), col("sh_set").as(s"__s_$side"))
+    graft.Pin.during(shingleSets(corpus, textCol, idCol, k)) { corpusSets =>
+      verifiedPairs(shingleSets(batch, textCol, idCol, k)) { batchSets =>
+        val cand = banded(corpusSets, "corpus")
+          .join(broadcast(banded(batchSets, "batch")), Seq("band"))
+          .select(col("corpus_id"), col("batch_id")).distinct()
+        cand
+          .join(payload(corpusSets, "corpus"), Seq("corpus_id"))
+          .join(broadcast(payload(batchSets, "batch")), Seq("batch_id"))
+          .withColumn("jaccard", jaccardSets(col("__s_corpus"), col("__s_batch")))
+          .where(col("jaccard") >= threshold)
+          .select(col("batch_id"), col("corpus_id"), col("jaccard"))
+      }
     }
-    val (corpusSets, corpusBands) = stage(corpus, "corpus")
-    val (batchSets, batchBands) = stage(batch, "batch")
-    val cand = corpusBands.join(broadcast(batchBands), Seq("band"))
-      .select(col("corpus_id"), col("batch_id")).distinct()
-    val verified = cand
-      .join(corpusSets, Seq("corpus_id"))
-      .join(broadcast(batchSets), Seq("batch_id"))
-      .withColumn("jaccard", jaccardSets(col("__s_corpus"), col("__s_batch")))
-      .where(col("jaccard") >= threshold)
-      .select(col("batch_id"), col("corpus_id"), col("jaccard"))
-    val out = verified.localCheckpoint(true)
-    corpusSets.unpersist(false)
-    batchSets.unpersist(false)
-    out
   }
 
   // ----------------------------------------- exact n-gram Jaccard join
@@ -281,59 +319,30 @@ object Dedup {
       textCol: String,
       idCol: String,
       k: Int = 5,
-      threshold: Double = 0.5): DataFrame = {
-    // Round-robin exchange first, same reason as minhashNearDups: the
-    // shingle stage must parallelize regardless of input file layout.
-    val input = df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    // Shingle sets feed three subtrees (prefix stage + both verify
-    // attachments); persist so shingling runs once per document.
-    val sets = input
-      .select(col("id"),
-        array_distinct(TextAnalysis.shingles(col("text"), k)).as("sh_set"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val toks = sets.select(col("id"), size(col("sh_set")).as("n"),
-      explode(col("sh_set")).as("tok"))
-    // Corpus document frequency per shingle — the global token order.
-    val freq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
-    // Rank each document's tokens rarest-first and keep the prefix.
-    // row_number is one shuffle on id; the prefix bound |s|−⌈t·|s|⌉+1
-    // comes straight from the overlap lemma above.
-    val w = Window.partitionBy(col("id")).orderBy(col("df"), col("tok"))
-    val prefix = toks.join(freq, Seq("tok"))
-      .withColumn("r", row_number().over(w))
-      .where(col("r") <= col("n") - ceil(lit(threshold) * col("n")) + 1)
-      .select(col("tok"), col("id"), col("n"), col("r"))
-    // PPJoin positional filter (Xiao et al. WWW'08): Jaccard ≥ t needs
-    // overlap O ≥ ⌈t·(|a|+|b|)/(1+t)⌉; a join row matching at prefix
-    // positions (ra, rb) bounds O ≤ 1 + min(|a|−ra, |b|−rb) for the
-    // pair's FIRST shared token (both prefixes sorted by the same
-    // global order, so every common token sits at-or-after the first
-    // match in both sets). Rows failing the bound drop before the
-    // distinct — the first-match row of a qualifying pair always
-    // survives, so the candidate set stays complete; the ε guards the
-    // double-rounding edge at exact-integer thresholds (keeps a spare
-    // candidate rather than losing a true pair — verify is exact).
-    val cand = prefix.as("a").join(prefix.as("b"), Seq("tok"))
-      .where(col("a.id") < col("b.id")
-        // length-ratio filter: Jaccard ≥ t bounds t·|a| ≤ |b| ≤ |a|/t
-        && col("b.n") >= ceil(lit(threshold) * col("a.n"))
-        && col("a.n") >= ceil(lit(threshold) * col("b.n"))
-        && lit(1) + least(col("a.n") - col("a.r"), col("b.n") - col("b.r"))
-          >= ceil(lit(threshold / (1.0 + threshold)) * (col("a.n") + col("b.n")) - lit(1e-9)))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val verified = cand
-      .join(sets.select(col("id").as("id_a"), col("sh_set").as("__sa")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("sh_set").as("__sb")), Seq("id_b"))
-      .withColumn("jaccard", jaccardSets(col("__sa"), col("__sb")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    // Same pair-frame lifetime discipline as minhashNearDups.
-    val out = verified.localCheckpoint(true)
-    sets.unpersist(false)
-    out
-  }
+      threshold: Double = 0.5): DataFrame =
+    verifiedPairs(shingleSets(df, textCol, idCol, k)) { sets =>
+      val (_, prefix) = rarestFirst(sets, threshold)
+      // PPJoin positional filter (Xiao et al. WWW'08): Jaccard ≥ t needs
+      // overlap O ≥ ⌈t·(|a|+|b|)/(1+t)⌉; a join row matching at prefix
+      // positions (ra, rb) bounds O ≤ 1 + min(|a|−ra, |b|−rb) for the
+      // pair's FIRST shared token (both prefixes sorted by the same
+      // global order, so every common token sits at-or-after the first
+      // match in both sets). Rows failing the bound drop before the
+      // distinct — the first-match row of a qualifying pair always
+      // survives, so the candidate set stays complete; the ε guards the
+      // double-rounding edge at exact-integer thresholds (keeps a spare
+      // candidate rather than losing a true pair — verify is exact).
+      val cand = prefix.as("a").join(prefix.as("b"), Seq("tok"))
+        .where(col("a.id") < col("b.id")
+          // length-ratio filter: Jaccard ≥ t bounds t·|a| ≤ |b| ≤ |a|/t
+          && col("b.n") >= ceil(lit(threshold) * col("a.n"))
+          && col("a.n") >= ceil(lit(threshold) * col("b.n"))
+          && lit(1) + least(col("a.n") - col("a.r"), col("b.n") - col("b.r"))
+            >= ceil(lit(threshold / (1.0 + threshold)) * (col("a.n") + col("b.n")) - lit(1e-9)))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct()
+      jaccardVerified(cand, sets, threshold)
+    }
 
   /** Containment (overlap-coefficient) near-dup pairs — the quote /
     * embedded-document detector. A short document wholly contained in a
@@ -359,41 +368,24 @@ object Dedup {
       textCol: String,
       idCol: String,
       k: Int = 5,
-      threshold: Double = 0.8): DataFrame = {
-    val input = df.select(col(idCol).as("id"), col(textCol).as("text"))
-      .repartition(df.sparkSession.sparkContext.defaultParallelism)
-    val sets = input
-      .select(col("id"),
-        array_distinct(TextAnalysis.shingles(col("text"), k)).as("sh_set"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val toks = sets.select(col("id"), size(col("sh_set")).as("n"),
-      explode(col("sh_set")).as("tok"))
-    val freq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
-    val w = Window.partitionBy(col("id")).orderBy(col("df"), col("tok"))
-    val prefix = toks.join(freq, Seq("tok"))
-      .withColumn("r", row_number().over(w))
-      .where(col("r") <= col("n") - ceil(lit(threshold) * col("n")) + 1)
-      .select(col("tok"), col("id"), col("n"))
-    // Probe smaller-side prefixes against the full index; the size
-    // ordering both fixes each pair's probe side and emits it once.
-    val cand = prefix.as("a").join(toks.as("b"), Seq("tok"))
-      .where(col("a.n") < col("b.n")
-        || (col("a.n") === col("b.n") && col("a.id") < col("b.id")))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-    val verified = cand
-      .join(sets.select(col("id").as("id_a"), col("sh_set").as("__sa")), Seq("id_a"))
-      .join(sets.select(col("id").as("id_b"), col("sh_set").as("__sb")), Seq("id_b"))
-      .withColumn("shared",
-        size(array_intersect(col("__sa"), col("__sb"))).cast("long"))
-      .withColumn("containment", col("shared").cast("double") /
-        least(size(col("__sa")), size(col("__sb"))))
-      .where(col("containment") >= threshold)
-      .select(col("id_a"), col("id_b"), col("shared"), col("containment"))
-    val out = verified.localCheckpoint(true)
-    sets.unpersist(false)
-    out
-  }
+      threshold: Double = 0.8): DataFrame =
+    verifiedPairs(shingleSets(df, textCol, idCol, k)) { sets =>
+      val (toks, prefix) = rarestFirst(sets, threshold)
+      // Probe smaller-side prefixes against the full index; the size
+      // ordering both fixes each pair's probe side and emits it once.
+      val cand = prefix.as("a").join(toks.as("b"), Seq("tok"))
+        .where(col("a.n") < col("b.n")
+          || (col("a.n") === col("b.n") && col("a.id") < col("b.id")))
+        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+        .distinct()
+      attach(cand, sets, "sh_set")
+        .withColumn("shared",
+          size(array_intersect(col("sh_set_a"), col("sh_set_b"))).cast("long"))
+        .withColumn("containment", col("shared").cast("double") /
+          least(size(col("sh_set_a")), size(col("sh_set_b"))))
+        .where(col("containment") >= threshold)
+        .select(col("id_a"), col("id_b"), col("shared"), col("containment"))
+    }
 
   // ------------------------------------------------- decontamination
 
@@ -422,14 +414,9 @@ object Dedup {
       k: Int = 5,
       minOverlap: Double = 0.5): DataFrame = {
     def exploded(df: DataFrame, side: String): DataFrame =
-      df.select(col(idCol).as(s"${side}_id"), col(textCol).as("__text"))
-        // round-robin exchange first (the minhashNearDups pattern): the
-        // shingle stage must parallelize regardless of file layout
-        .repartition(df.sparkSession.sparkContext.defaultParallelism)
-        .select(col(s"${side}_id"),
-          array_distinct(TextAnalysis.shingles(col("__text"), k)).as("__sh"))
-        .select(col(s"${side}_id"), size(col("__sh")).as(s"${side}_n"),
-          explode_outer(col("__sh")).as("__tok"))
+      shingleSets(df, textCol, idCol, k)
+        .select(col("id").as(s"${side}_id"), size(col("sh_set")).as(s"${side}_n"),
+          explode_outer(col("sh_set")).as("__tok"))
         .where(col("__tok").isNotNull)
         // join on the BINARY(16) md5, not the raw k-gram TEXT (r18 —
         // the d08 "span text never travels" discipline applied to the
@@ -492,35 +479,30 @@ object Dedup {
     val nBlocks = maxDist + 1
     val blockBits = bits / nBlocks
     // Round-robin exchange first: md5-per-token hashing must parallelize
-    // regardless of the input's row-group layout (see minhashNearDups).
-    // (id, sh) is 16 bytes/row — persist it so the md5-per-token SimHash
-    // fold runs once, not once per self-join side. Released after the
-    // verified pairs materialize below.
+    // regardless of the input's row-group layout (see [[shingleSets]]).
+    // (id, sh) is 16 bytes/row — pinned so the md5-per-token SimHash
+    // fold runs once, not once per self-join side.
     val hashed = df.select(col(idCol).as("id"), col(textCol).as("text"))
       .repartition(df.sparkSession.sparkContext.defaultParallelism)
       .select(col("id"), simhash(col("text"), bits).as("sh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val blocked = hashed.withColumn(
-      "block",
-      explode(array((0 until nBlocks).map { i =>
-        concat(lit(s"$i:"),
-          shiftright(col("sh"), i * blockBits)
-            .bitwiseAND(lit((1L << blockBits) - 1)))
-      }: _*)))
-    val a = blocked.select(col("block"), col("id").as("id_a"), col("sh").as("sh_a"))
-    val b = blocked.select(col("block"), col("id").as("id_b"), col("sh").as("sh_b"))
-    val verified = a.join(b, Seq("block"))
-      .where(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b"))
-      .distinct()
-      .withColumn("hamming", hammingDistance(col("sh_a"), col("sh_b")).cast("long"))
-      .where(col("hamming") <= maxDist)
-      .select(col("id_a"), col("id_b"), col("hamming"))
-    // materialize the (tiny) pair frame, truncate lineage, release the
-    // hash cache — same lifetime discipline as minhashNearDups
-    val out = verified.localCheckpoint(true)
-    hashed.unpersist(false)
-    out
+    verifiedPairs(hashed) { hashed =>
+      val blocked = hashed.withColumn(
+        "block",
+        explode(array((0 until nBlocks).map { i =>
+          concat(lit(s"$i:"),
+            shiftright(col("sh"), i * blockBits)
+              .bitwiseAND(lit((1L << blockBits) - 1)))
+        }: _*)))
+      val a = blocked.select(col("block"), col("id").as("id_a"), col("sh").as("sh_a"))
+      val b = blocked.select(col("block"), col("id").as("id_b"), col("sh").as("sh_b"))
+      a.join(b, Seq("block"))
+        .where(col("id_a") < col("id_b"))
+        .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b"))
+        .distinct()
+        .withColumn("hamming", hammingDistance(col("sh_a"), col("sh_b")).cast("long"))
+        .where(col("hamming") <= maxDist)
+        .select(col("id_a"), col("id_b"), col("hamming"))
+    }
   }
 
   // --------------------------------------------------- group formation
@@ -541,20 +523,16 @@ object Dedup {
     * returning unconverged groups. Each of its rounds is one shuffle
     * join on the node id + one aggregate; nothing materializes the
     * transitive closure.
+    *
+    * `pairs` is read twice (src→dst ∪ dst→src), so an expensive
+    * `pairs` is the caller's to materialize, as every pair operator in
+    * this object already does; the mirrored edges are pinned
+    * ([[graft.Pin.during]]) until the groups are built.
     */
   def duplicateGroups(
       pairs: DataFrame,
       maxIters: Int = 20,
       driverThreshold: Long = 1L << 20): DataFrame = {
-    // `pairs` is referenced twice (src→dst ∪ dst→src); persist it so an
-    // expensive upstream lineage (e.g. a full MinHash pipeline) runs at
-    // most once, and release it as soon as `edges` is materialized by
-    // the count below.
-    val p = pairs.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
-      .unionByName(p.select(col("id_b").as("src"), col("id_a").as("dst")))
-      .distinct()
-      .cache()
     // Near-dup pair graphs are tiny relative to the corpus; below the
     // threshold a driver-side union-find beats rounds of driver-
     // synchronized tiny-data jobs (the iterative path below remains
@@ -565,38 +543,38 @@ object Dedup {
            org.apache.spark.sql.types.ShortType => true
       case _ => false
     }
-    val nEdges = edges.count() // materializes the edges cache
-    p.unpersist(false)
-    if (integralIds && nEdges <= driverThreshold) {
-      val spark = pairs.sparkSession
-      import spark.implicits._
-      val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
-        .as[(Long, Long)].collect()
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        var r = x
-        while (parent.getOrElse(r, r) != r) r = parent(r)
-        var c = x
-        while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
-        r
+    graft.Pin.during(pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
+        .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
+        .distinct()) { edges =>
+      val nEdges = edges.count() // materializes the pinned edges
+      if (integralIds && nEdges <= driverThreshold) {
+        val spark = pairs.sparkSession
+        import spark.implicits._
+        val es = edges.select(col("src").cast("long"), col("dst").cast("long"))
+          .as[(Long, Long)].collect()
+        val parent = scala.collection.mutable.Map[Long, Long]()
+        def find(x: Long): Long = {
+          var r = x
+          while (parent.getOrElse(r, r) != r) r = parent(r)
+          var c = x
+          while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
+          r
+        }
+        es.foreach { case (a, b) =>
+          parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+          val (ra, rb) = (find(a), find(b))
+          if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+        }
+        parent.keys.toSeq.sorted
+          .map(id => (id, find(id))).toDF("id", "group_id")
+      } else {
+        // connectedComponents mirrors its input, so pass one orientation
+        // of the mirrored edges; its result is checkpointed, so it no
+        // longer reads the pinned edges
+        graft.graph.GraphOps.connectedComponents(
+            edges.where(col("src") <= col("dst")), maxIters)
+          .select(col("node").as("id"), col("label").as("group_id"))
       }
-      es.foreach { case (a, b) =>
-        parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-        val (ra, rb) = (find(a), find(b))
-        if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
-      }
-      edges.unpersist()
-      parent.keys.toSeq.sorted
-        .map(id => (id, find(id))).toDF("id", "group_id")
-    } else {
-      // connectedComponents mirrors its input, so pass one orientation
-      // of the mirrored edges; its result is checkpointed, so the edges
-      // cache can go
-      val out = graft.graph.GraphOps.connectedComponents(
-          edges.where(col("src") <= col("dst")), maxIters)
-        .select(col("node").as("id"), col("label").as("group_id"))
-      edges.unpersist(false)
-      out
     }
   }
 
@@ -632,31 +610,27 @@ object Dedup {
     } else {
       // Id-only discipline (same as the MinHash band join and lshTopK):
       // the bucket self-join and candidate dedup shuffle 16-byte id
-      // pairs, never the vectors; vectors re-attach from the persisted
+      // pairs, never the vectors; vectors re-attach from the pinned
       // base afterwards. The bucket stage appears on both join sides
       // with an identical plan, so its exchange is computed once and
       // reused.
-      val b0 = base.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // explode_outer for the same reason as the MinHash band stage: no
-      // inferred filter, so the native bucket loop runs once per row
-      val buckets = b0.select(
-          explode_outer(Similarity.hyperplaneBuckets(col("v"), dim = dim,
-            planes = planes, tables = tables)).as("bucket"),
-          col("id"))
-        .where(col("bucket").isNotNull)
-      val cand = buckets.as("a").join(buckets.as("b"), Seq("bucket"))
-        .where(col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
-      val verified = cand
-        .join(b0.select(col("id").as("id_a"), col("v").as("v_a")), Seq("id_a"))
-        .join(b0.select(col("id").as("id_b"), col("v").as("v_b")), Seq("id_b"))
-        .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
-        .where(col("cosine") >= threshold)
-        .select(col("id_a"), col("id_b"), col("cosine"))
-      val out = verified.localCheckpoint(true)
-      b0.unpersist(false)
-      out
+      verifiedPairs(base) { b0 =>
+        // explode_outer for the same reason as the MinHash band stage: no
+        // inferred filter, so the native bucket loop runs once per row
+        val buckets = b0.select(
+            explode_outer(Similarity.hyperplaneBuckets(col("v"), dim = dim,
+              planes = planes, tables = tables)).as("bucket"),
+            col("id"))
+          .where(col("bucket").isNotNull)
+        val cand = buckets.as("a").join(buckets.as("b"), Seq("bucket"))
+          .where(col("a.id") < col("b.id"))
+          .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+          .distinct()
+        attach(cand, b0, "v")
+          .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
+          .where(col("cosine") >= threshold)
+          .select(col("id_a"), col("id_b"), col("cosine"))
+      }
     }
   }
 
@@ -767,11 +741,9 @@ object Dedup {
         abs(col("a.n") - col("b.n")) <= 1)
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    cand
-      .join(input.select(col("id").as("id_a"), col("s").as("__sa")), Seq("id_a"))
-      .join(input.select(col("id").as("id_b"), col("s").as("__sb")), Seq("id_b"))
+    attach(cand, input, "s")
       .withColumn("edit_distance",
-        levenshtein(col("__sa"), col("__sb")).cast("long"))
+        levenshtein(col("s_a"), col("s_b")).cast("long"))
       .where(col("edit_distance") <= 1)
       .select(col("id_a"), col("id_b"), col("edit_distance"))
   }
@@ -862,11 +834,9 @@ object Dedup {
         (col("a.n") - q + 1 <= q * d || col("b.n") - q + 1 <= q * d))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
     val cand = longCand.union(shortCand).distinct()
-    cand
-      .join(input.select(col("id").as("id_a"), col("s").as("__sa")), Seq("id_a"))
-      .join(input.select(col("id").as("id_b"), col("s").as("__sb")), Seq("id_b"))
+    attach(cand, input, "s")
       .withColumn("edit_distance",
-        levenshtein(col("__sa"), col("__sb")).cast("long"))
+        levenshtein(col("s_a"), col("s_b")).cast("long"))
       .where(col("edit_distance") <= d)
       .select(col("id_a"), col("id_b"), col("edit_distance"))
   }
@@ -889,6 +859,22 @@ object Dedup {
     when(size(toks) >= L, transform(sequence(lit(1), size(toks) - (L - 1)),
       i => unhex(md5(concat_ws(" ", slice(toks, i, lit(L)))))))
       .otherwise(array().cast("array<binary>"))
+
+  /** `(doc_id, __toks)`, each document's token array, and its anchors
+    * `(doc_id, p, h)`: h the [[spanAnchors]] hash of the L-gram at
+    * 1-based token position p — the prologue of [[maximalMatches]] and
+    * [[cutMaximalMatches]].
+    */
+  private def tokenAnchors(docs: DataFrame, textCol: String, idCol: String,
+      L: Int): (DataFrame, DataFrame) = {
+    val toks = docs.select(col(idCol).as("doc_id"),
+      TextAnalysis.tokens(col(textCol)).as("__toks"))
+    val anchors = toks.select(col("doc_id"),
+        posexplode(spanAnchors(col("__toks"), L)))
+      .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
+        col("col").as("h"))
+    (toks, anchors)
+  }
 
   /** Maximal cross-document duplicated substrings ≥ `L` tokens — the
     * exact-substring dedup operator of Lee et al. 2022 ("Deduplicating
@@ -959,12 +945,7 @@ object Dedup {
       s"spark.graft.dedup.hotAnchorDf must be positive, got $hotDf")
     require(saltCap > 0,
       s"spark.graft.dedup.hotAnchorSalts must be positive, got $saltCap")
-    val toks = docs.select(col(idCol).as("doc_id"),
-      TextAnalysis.tokens(col(textCol)).as("__toks"))
-    val anchors = toks.select(col("doc_id"),
-        posexplode(spanAnchors(col("__toks"), L)))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
-        col("col").as("h"))
+    val (toks, anchors) = tokenAnchors(docs, textCol, idCol, L)
     // Per-hash anchor heat as an h-partitioned window count (guide
     // §2.4): the r17 groupBy + membership join paid a second anchor
     // shuffle; the window computes the same count inside the ONE h
@@ -1082,12 +1063,7 @@ object Dedup {
     */
   def cutMaximalMatches(docs: DataFrame, textCol: String, idCol: String,
       L: Int): DataFrame = {
-    val toks = docs.select(col(idCol).as("doc_id"),
-      TextAnalysis.tokens(col(textCol)).as("__toks"))
-    val anchors = toks.select(col("doc_id"),
-        posexplode(spanAnchors(col("__toks"), L)))
-      .select(col("doc_id"), (col("pos") + 1).cast("long").as("p"),
-        col("col").as("h"))
+    val (toks, anchors) = tokenAnchors(docs, textCol, idCol, L)
     // MIN(doc_id) per anchor hash as an h-partitioned window (guide
     // §2.4: two operations keyed the same way share one exchange) —
     // the r17 groupBy + membership join re-shuffled the anchor set a

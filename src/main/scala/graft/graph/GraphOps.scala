@@ -632,10 +632,15 @@ object GraphOps {
       lit(null).cast(edges.schema("src").dataType).as("scc_id"))
     val trimmed = Fixpoint.converge("stronglyConnectedComponents trim",
         init, Seq("node"), nNodes.min(Int.MaxValue).toInt) { s =>
+      // the open nodes with an open out-edge (bit 1) and an open
+      // in-edge (bit 2), flagged in one keyed aggregate: two distincts
+      // and a semi-join cost one more exchange, and one more job, per
+      // round
       val a = openEdges(s)
-      val cyclic = a.select(col("src").as("node")).distinct()
-        .join(a.select(col("dst").as("node")).distinct(),
-          Seq("node"), "left_semi")
+      val cyclic = a.select(col("src").as("node"), lit(1).as("d"))
+        .unionAll(a.select(col("dst").as("node"), lit(2).as("d")))
+        .groupBy(col("node")).agg(bit_or(col("d")).as("d"))
+        .where(col("d") === 3)
       close(s, open(s).join(cyclic, Seq("node"), "left_anti")
         .select(col("node"), col("node").as("scc_id")))
     }

@@ -3199,7 +3199,6 @@ object Corpus {
     * directly — same numbers, independent plan.
     */
   val t16_corpus_positions: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val bucketSize = 8192L // docs per bucket; prefix table = N/8192 rows
     val counts = t(s, dir, "documents")
       .select(col("doc_id"),
@@ -3215,24 +3214,11 @@ object Corpus {
     // term — a production pipeline materializes (doc_id, n_tokens)
     // once and feeds both from it.
     // ONE deliberate partition of ~N/8192 bucket rows (thousands at
-    // 100 TB, never documents). The partition key is constant-valued
-    // but non-foldable (pmod(b,1) = 0): a literal would be folded away
-    // and leave a genuinely unpartitioned window — this keeps the
-    // intent visible to WindowExec and to PlanLintSpec's scale lint.
-    val wBuckets = Window.partitionBy(pmod(col("__bucket"), lit(1)))
-      .orderBy(col("__bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val prefixes = counts.groupBy(col("__bucket"))
-      .agg(sum(col("n_tokens")).as("__btot"))
-      .select(col("__bucket"),
-        coalesce(sum(col("__btot")).over(wBuckets), lit(0L)).as("__bstart"))
-    val wInBucket = Window.partitionBy(col("__bucket")).orderBy(col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    counts.join(broadcast(prefixes), "__bucket")
-      .select(col("doc_id"), col("n_tokens"),
-        (col("__bstart") +
-          coalesce(sum(col("n_tokens")).over(wInBucket), lit(0L)))
-          .as("start_offset"))
+    // 100 TB, never documents) — the bucket prefix of
+    // Features.exclusivePrefix.
+    Features.exclusivePrefix(counts, "doc_id", "__bucket",
+        Seq("start_offset" -> "n_tokens"))
+      .select(col("doc_id"), col("n_tokens"), col("start_offset"))
   }
 
   val t16_sql: String =
@@ -3652,6 +3638,40 @@ object Corpus {
       |    AS DECIMAL(28,12))) AS DOUBLE), 6) AS sq_err
       |FROM q GROUP BY vec_id, label, n_dims, sc""".stripMargin
 
+  /** The exact re-rank that ends every quantized-ANN query (s06, s10,
+    * s17, s18): cut the approximate `scored(query_id, neighbor_id,
+    * approx)` frame to the top `nCand` per query by (approx DESC,
+    * neighbor_id ASC), re-attach both raw embeddings by id, keep the
+    * exact-cosine top 10 by (cosine DESC, neighbor_id ASC), and emit
+    * (query_id, neighbor_id, approx, cosine, rank) with both scores
+    * rounded to 6 places. Only the ≤ nCand survivors per probe carry
+    * vectors into the re-rank joins.
+    */
+  private def exactRerank(scored: DataFrame, embeddings: DataFrame,
+      nCand: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val wc = Window.partitionBy(col("query_id"))
+      .orderBy(col("approx").desc, col("neighbor_id").asc)
+    val wr = Window.partitionBy(col("query_id"))
+      .orderBy(col("cosine").desc, col("neighbor_id").asc)
+    scored
+      .withColumn("__r", row_number().over(wc))
+      .where(col("__r") <= nCand)
+      .select(col("query_id"), col("neighbor_id"), col("approx"))
+      .join(embeddings.select(col("vec_id").as("query_id"),
+        col("embedding").as("__pv")), Seq("query_id"))
+      .join(embeddings.select(col("vec_id").as("neighbor_id"),
+        col("embedding").as("__cv")), Seq("neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"), col("approx"),
+        Similarity.cosine(col("__pv"), col("__cv")).as("cosine"))
+      .withColumn("rank", row_number().over(wr))
+      .where(col("rank") <= 10)
+      .select(col("query_id"), col("neighbor_id"),
+        round(col("approx"), 6).as("approx"),
+        round(col("cosine"), 6).as("cosine"),
+        col("rank").cast("long").as("rank"))
+  }
+
   /** Quantized-scan ANN with float re-rank — the serving path the s05
     * manifest exists for: candidate generation scores int8 code pairs
     * (exact integer dot × the two per-vector scales; 4× less memory
@@ -3666,8 +3686,6 @@ object Corpus {
     * survivor vectors.
     */
   val s06_quant_ann: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val nCand = 40
     val base = t(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding"),
         (array_max(transform(col("embedding"), x => abs(x.cast("double"))))
@@ -3686,31 +3704,11 @@ object Corpus {
     val dot = aggregate(
       zip_with(col("__qp"), col("__qc"), (a, b) => (a * b).cast("long")),
       lit(0L), (acc, x) => acc + x)
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id").asc)
-    val candidates = probes.crossJoin(corpus)
+    val scored = probes.crossJoin(corpus)
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         (dot.cast("double") * col("__scp") * col("__scc")).as("approx"))
-      .withColumn("__r", row_number().over(wc))
-      .where(col("__r") <= nCand)
-      .select(col("query_id"), col("neighbor_id"), col("approx"))
-    val e = t(s, dir, "embeddings")
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    candidates
-      .join(e.select(col("vec_id").as("query_id"),
-        col("embedding").as("__pv")), Seq("query_id"))
-      .join(e.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("__cv")), Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("approx"),
-        Similarity.cosine(col("__pv"), col("__cv")).as("cosine"))
-      .withColumn("rank", row_number().over(wr))
-      .where(col("rank") <= 10)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("approx"), 6).as("approx"),
-        round(col("cosine"), 6).as("cosine"),
-        col("rank").cast("long").as("rank"))
+    exactRerank(scored, t(s, dir, "embeddings"), nCand = 40)
   }
 
   val s06_sql: String =
@@ -4730,7 +4728,6 @@ object Corpus {
     * number, independent plan.
     */
   val q121_auc_eval: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val scored = qcScored(s, dir)
       .select(col("__logit_u").as("s_u"),
         (col("__nstop") * lit(100L) > col("__ntok") * lit(6L)).as("__y"))
@@ -4742,21 +4739,9 @@ object Corpus {
       .withColumn("__bucket",
         floor(col("s_u").cast("double") / lit(1048576.0)))
       .localCheckpoint(true)
-    // t16's two-level prefix: exclusive bucket prefix (constant-valued
-    // non-foldable key keeps the window visibly partitioned), then a
-    // within-bucket running sum
-    val wB = Window.partitionBy(pmod(col("__bucket"), lit(1)))
-      .orderBy(col("__bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pref = g.groupBy(col("__bucket")).agg(sum(col("__n")).as("__bn"))
-      .select(col("__bucket"),
-        coalesce(sum(col("__bn")).over(wB), lit(0L)).as("__nstart"))
-    val wIn = Window.partitionBy(col("__bucket")).orderBy(col("s_u"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val withLess = g.join(broadcast(pref), "__bucket")
-      .select(col("s_u"), col("__p"), col("__n"),
-        (col("__nstart") + coalesce(sum(col("__n")).over(wIn), lit(0L)))
-          .as("__nless"))
+    // the two-level exclusive prefix: negatives strictly below s_u
+    val withLess = Features.exclusivePrefix(g, "s_u", "__bucket",
+      Seq("__nless" -> "__n"))
     val dec19 = org.apache.spark.sql.types.DecimalType(19, 0)
     withLess.agg(
         sum(col("__p")).as("n_pos"),
@@ -4915,7 +4900,6 @@ object Corpus {
     * that naive form, the plan avoids it.
     */
   val q128_auc_by_slice: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val scored = qcScored(s, dir)
     val withSrc = t(s, dir, "documents").select(col("doc_id"), col("source"))
       .join(scored, Seq("doc_id"))
@@ -4927,19 +4911,8 @@ object Corpus {
       .withColumn("__bucket",
         floor(col("s_u").cast("double") / lit(1048576.0)))
       .localCheckpoint(true)
-    val wB = Window.partitionBy(col("source")).orderBy(col("__bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pref = g.groupBy(col("source"), col("__bucket"))
-      .agg(sum(col("__n")).as("__bn"))
-      .select(col("source"), col("__bucket"),
-        coalesce(sum(col("__bn")).over(wB), lit(0L)).as("__nstart"))
-    val wIn = Window.partitionBy(col("source"), col("__bucket"))
-      .orderBy(col("s_u"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val withLess = g.join(broadcast(pref), Seq("source", "__bucket"))
-      .select(col("source"), col("s_u"), col("__p"), col("__n"),
-        (col("__nstart") + coalesce(sum(col("__n")).over(wIn), lit(0L)))
-          .as("__nless"))
+    val withLess = Features.exclusivePrefix(g, "s_u", "__bucket",
+      Seq("__nless" -> "__n"), by = Seq("source"))
     val dec19 = org.apache.spark.sql.types.DecimalType(19, 0)
     withLess.groupBy(col("source"))
       .agg(
@@ -8340,8 +8313,6 @@ object Corpus {
     * hash-checked like its pieces.
     */
   val s10_ivf_quant_ann: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
-    val nCand = 40
     val idx = ivfMetaIndex(s, dir)
     def quantize(v: org.apache.spark.sql.Column)
         : (org.apache.spark.sql.Column, org.apache.spark.sql.Column) = {
@@ -8365,30 +8336,11 @@ object Corpus {
     val dot = aggregate(
       zip_with(col("__qp"), col("__qc"), (a, b) => (a * b).cast("long")),
       lit(0L), (acc, x) => acc + x)
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id").asc)
-    val candidates = probes.join(corpus, Seq("ivf_list"))
+    val scored = probes.join(corpus, Seq("ivf_list"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         (dot.cast("double") * col("__scp") * col("__scc")).as("approx"))
-      .withColumn("__r", row_number().over(wc))
-      .where(col("__r") <= nCand)
-      .select(col("query_id"), col("neighbor_id"), col("approx"))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    candidates
-      .join(e.select(col("vec_id").as("query_id"),
-        col("embedding").as("__pv")), Seq("query_id"))
-      .join(e.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("__nv")), Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("approx"),
-        Similarity.cosine(col("__pv"), col("__nv")).as("cosine"))
-      .withColumn("rank", row_number().over(wr))
-      .where(col("rank") <= 10)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("approx"), 6).as("approx"),
-        round(col("cosine"), 6).as("cosine"),
-        col("rank").cast("long").as("rank"))
+    exactRerank(scored, e, nCand = 40)
   }
 
   /** DuckDB replay of s10: centroid-fixture assignment + probing (s03
@@ -8885,7 +8837,6 @@ object Corpus {
     })
 
   val s17_pq_ann: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     val cb = pqCodebook(s, dir)
     val e = t(s, dir, "embeddings")
     val codes = e
@@ -8894,33 +8845,14 @@ object Corpus {
       .transform(spreadScan)
     val probes = broadcast(e.where(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), cb.lut(col("embedding")).as("__lut")))
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id").asc)
     // approx is a fixed-order double fold of bit-identical LUT terms
     // (see PqCodebook.adcDot) — the oracle replays the same j-ascending
     // fold, so the scores agree to the last bit before the final round.
-    val cand = probes.crossJoin(codes)
+    val scored = probes.crossJoin(codes)
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         cb.adcDot(col("__lut"), col("__codes")).as("approx"))
-      .withColumn("__r", row_number().over(wc))
-      .where(col("__r") <= 40)
-      .select(col("query_id"), col("neighbor_id"), col("approx"))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    cand
-      .join(e.select(col("vec_id").as("query_id"),
-        col("embedding").as("__pv")), Seq("query_id"))
-      .join(e.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("__cv")), Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("approx"),
-        graft.similarity.Similarity.cosine(col("__pv"), col("__cv")).as("cosine"))
-      .withColumn("rank", row_number().over(wr))
-      .where(col("rank") <= 10)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("approx"), 6).as("approx"),
-        round(col("cosine"), 6).as("cosine"),
-        col("rank").cast("long").as("rank"))
+    exactRerank(scored, e, nCand = 40)
   }
 
   /** DuckDB replay of everything downstream of the PQ fit, from the
@@ -8995,7 +8927,6 @@ object Corpus {
     * codebook encode/LUT/ordered-ADC-fold.
     */
   val s18_ivfpq_ann: Q = (s, dir) => {
-    import org.apache.spark.sql.expressions.Window
     // 80 ADC candidates (vs s17's 40): the composed pipeline loses
     // recall at BOTH stages (probing ceiling ~0.94 x ADC cut), and the
     // re-rank is 80 cosines per query -- widening the cut is free next
@@ -9011,30 +8942,11 @@ object Corpus {
       .select(col("vec_id").as("query_id"), cb.lut(col("embedding")).as("__lut"),
         explode_outer(idx.probeLists(col("embedding"), 8)).as("ivf_list"))
       .where(col("ivf_list").isNotNull)
-    val wc = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx").desc, col("neighbor_id").asc)
-    val cand = probes.join(corpus, Seq("ivf_list"))
+    val scored = probes.join(corpus, Seq("ivf_list"))
       .where(col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
         cb.adcDot(col("__lut"), col("__codes")).as("approx"))
-      .withColumn("__r", row_number().over(wc))
-      .where(col("__r") <= nCand)
-      .select(col("query_id"), col("neighbor_id"), col("approx"))
-    val wr = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    cand
-      .join(e.select(col("vec_id").as("query_id"),
-        col("embedding").as("__pv")), Seq("query_id"))
-      .join(e.select(col("vec_id").as("neighbor_id"),
-        col("embedding").as("__cv")), Seq("neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"), col("approx"),
-        graft.similarity.Similarity.cosine(col("__pv"), col("__cv")).as("cosine"))
-      .withColumn("rank", row_number().over(wr))
-      .where(col("rank") <= 10)
-      .select(col("query_id"), col("neighbor_id"),
-        round(col("approx"), 6).as("approx"),
-        round(col("cosine"), 6).as("cosine"),
-        col("rank").cast("long").as("rank"))
+    exactRerank(scored, e, nCand)
   }
 
   /** DuckDB replay of s18 from both dumped fixtures: the s10-recipe

@@ -1471,47 +1471,57 @@ object Features {
 
   // -------------------------------------------- rank correlation
 
-  /** Exact average ranks (doubled, so ties' half-ranks stay BIGINT)
-    * for one numeric column, scale-safely: collapse to the
-    * distinct-value frame (one keyed aggregate, map-side combined),
-    * then the q121/t16 two-level prefix — per-bucket subtotals, an
-    * exclusive prefix over the domain-bounded bucket frame (the
-    * constant-key window touches only ~range/step rows at ANY corpus
-    * size), and a within-bucket running count. 2·avgrank(v) =
-    * 2·N₍₌₎(v) is exact integer arithmetic end to end.
-    */
-  /** The two-level exclusive prefix itself, stated ONCE (q131's ranks,
-    * q132's Lorenz cumulatives, q135's CDFs all derive from it): for
-    * each row of `g`, each measure's sum over all rows strictly
-    * earlier in `order` — per-bucket subtotals, an exclusive prefix
-    * over the bucket frame (the only constant-key window, bounded by
-    * the bucket domain at any corpus size), and a within-bucket
-    * exclusive running sum, joined back broadcast. `bucket` must be
-    * monotone in `order`. Callers materialize `g` if they consume it
-    * again. Scalacheck-pinned through [[rank2Frame]].
+  /** The two-level exclusive prefix itself, stated ONCE (t16's
+    * offsets, q121/q128's AUCs, q131's ranks, q132's Lorenz
+    * cumulatives, q135's CDFs and the drift dashboard all derive from
+    * it): for each row of `g`, each measure's sum over all rows
+    * strictly earlier in `order` — per-bucket subtotals, an exclusive
+    * prefix over the bucket frame, and a within-bucket exclusive
+    * running sum, joined back broadcast. `bucket` must be monotone in
+    * `order`. Callers materialize `g` if they consume it again.
+    * Scalacheck-pinned through [[rank2Frame]] and directly per group.
+    *
+    * With `by` keys the prefix restarts per group: the bucket prefix is
+    * partitioned by `by`, and the within-bucket sum and the join back
+    * are keyed on `by :+ bucket`. Without them the bucket prefix is the
+    * only constant-key window, bounded by the bucket domain at any
+    * corpus size; its key is constant-valued but non-foldable
+    * (pmod(bucket, 1) = 0), because a literal would be folded away and
+    * leave a genuinely unpartitioned window — this keeps the intent
+    * visible to WindowExec and to PlanLintSpec's scale lint.
     */
   private[graft] def exclusivePrefix(
       g: DataFrame, order: String, bucket: String,
-      measures: Seq[(String, String)]): DataFrame = {
-    val wB = Window.partitionBy(pmod(col(bucket), lit(1)))
+      measures: Seq[(String, String)], by: Seq[String] = Nil): DataFrame = {
+    val keys = (by :+ bucket).map(col)
+    val wB = (if (by.isEmpty) Window.partitionBy(pmod(col(bucket), lit(1)))
+        else Window.partitionBy(by.map(col): _*))
       .orderBy(col(bucket))
       .rowsBetween(Window.unboundedPreceding, -1)
-    val bAgg = g.groupBy(col(bucket)).agg(
+    val bAgg = g.groupBy(keys: _*).agg(
       sum(col(measures.head._2)).as(s"__b${measures.head._1}"),
       measures.tail.map { case (o, i) => sum(col(i)).as(s"__b$o") }: _*)
     val pref = bAgg.select(
-      col(bucket) +: measures.map { case (o, _) =>
+      keys ++ measures.map { case (o, _) =>
         coalesce(sum(col(s"__b$o")).over(wB), lit(0L)).as(s"__s$o")
       }: _*)
-    val wIn = Window.partitionBy(col(bucket)).orderBy(col(order))
+    val wIn = Window.partitionBy(keys: _*).orderBy(col(order))
       .rowsBetween(Window.unboundedPreceding, -1)
-    measures.foldLeft(g.join(broadcast(pref), bucket)) {
+    measures.foldLeft(g.join(broadcast(pref), by :+ bucket)) {
       case (df, (o, i)) =>
         df.withColumn(o,
           col(s"__s$o") + coalesce(sum(col(i)).over(wIn), lit(0L)))
     }.drop(measures.map(m => s"__s${m._1}"): _*)
   }
 
+  /** Exact average ranks (doubled, so ties' half-ranks stay BIGINT)
+    * for one numeric column, scale-safely: collapse to the
+    * distinct-value frame (one keyed aggregate, map-side combined),
+    * then [[exclusivePrefix]] over it — the constant-key bucket window
+    * touches only ~range/step rows at ANY corpus size — plus the
+    * value's own count. 2·avgrank(v) = 2·N₍₌₎(v) is exact integer
+    * arithmetic end to end.
+    */
   private[graft] def rank2Frame(
       pairs: DataFrame, v: String, bucketStep: Double): DataFrame = {
     // NULLs must never reach the window ordering: Spark's groupBy keeps
@@ -2572,25 +2582,9 @@ object Features {
       .withColumn("__c", col("__cr") + col("__cc"))
       .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
       .localCheckpoint(true) // bucket prefix AND the per-value join
-    val bAgg = g.groupBy(col("slice"), col("__bucket"))
-      .agg(sum(col("__c")).as("__bc"), sum(col("__cr")).as("__bcr"),
-        sum(col("__cc")).as("__bcc"))
-    val wB = Window.partitionBy(col("slice")).orderBy(col("__bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val pref = bAgg.select(col("slice"), col("__bucket"),
-      coalesce(sum(col("__bc")).over(wB), lit(0L)).as("__sc"),
-      coalesce(sum(col("__bcr")).over(wB), lit(0L)).as("__scr"),
-      coalesce(sum(col("__bcc")).over(wB), lit(0L)).as("__scc"))
-    val wIn = Window.partitionBy(col("slice"), col("__bucket"))
-      .orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val rows = g.join(broadcast(pref), Seq("slice", "__bucket"))
-      .withColumn("__excC",
-        col("__sc") + coalesce(sum(col("__c")).over(wIn), lit(0L)))
-      .withColumn("__excR",
-        col("__scr") + coalesce(sum(col("__cr")).over(wIn), lit(0L)))
-      .withColumn("__excU",
-        col("__scc") + coalesce(sum(col("__cc")).over(wIn), lit(0L)))
+    val rows = exclusivePrefix(g, "v", "__bucket",
+        Seq("__excC" -> "__c", "__excR" -> "__cr", "__excU" -> "__cc"),
+        by = Seq("slice"))
       .withColumn("__r2", lit(2L) * col("__excC") + col("__c") + lit(1L))
       .withColumn("__cumr", col("__excR") + col("__cr"))
       .withColumn("__cumc", col("__excU") + col("__cc"))

@@ -131,19 +131,20 @@ object PqCodebook {
     val total = c.count()
     val fraction =
       if (total > maxFitVectors) maxFitVectors.toDouble / total else 1.0
-    val sampled = (if (fraction < 1.0) c.sample(fraction, seed) else c).cache()
-    sampled.count()
-    val books = (0 until m).map { j =>
-      val fitInput = sampled.select(
-        array_to_vector(slice(col("__v"), j * subDim + 1, subDim))
-          .as("features"))
-      // seed varies per subspace so identical subspace distributions
-      // don't collapse to identical codebooks
-      val model = new KMeans().setK(k).setSeed(seed + j)
-        .setFeaturesCol("features").fit(fitInput)
-      model.clusterCenters.map(_.toArray.toSeq).toSeq
+    val books = graft.Pin.during(
+        if (fraction < 1.0) c.sample(fraction, seed) else c) { sampled =>
+      sampled.count()
+      (0 until m).map { j =>
+        val fitInput = sampled.select(
+          array_to_vector(slice(col("__v"), j * subDim + 1, subDim))
+            .as("features"))
+        // seed varies per subspace so identical subspace distributions
+        // don't collapse to identical codebooks
+        val model = new KMeans().setK(k).setSeed(seed + j)
+          .setFeaturesCol("features").fit(fitInput)
+        model.clusterCenters.map(_.toArray.toSeq).toSeq
+      }
     }
-    sampled.unpersist()
     PqCodebook(subDim, books.toSeq)
   }
 }

@@ -1471,20 +1471,19 @@ object StreamingIngest {
       val selfDropped = graft.dedup.Dedup.minhashNearDups(
         b, "text", "doc_id", k, numHashes, bands, threshold)
         .select(col("id_b").as("doc_id")).distinct()
-      val survivors = b.join(selfDropped, Seq("doc_id"), "left_anti")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val admitted =
-        if (gens.isEmpty) survivors
-        else {
-          val corpus = batch.sparkSession.read.parquet(gens: _*)
-          val hit = graft.dedup.Dedup.incrementalNearDups(
-            corpus, survivors, "text", "doc_id",
-            k, numHashes, bands, threshold)
-            .select(col("batch_id").as("doc_id")).distinct()
-          survivors.join(hit, Seq("doc_id"), "left_anti")
-        }
-      admitted.write.mode("overwrite").parquet(genDir)
-      survivors.unpersist(false)
+      graft.Pin.during(b.join(selfDropped, Seq("doc_id"), "left_anti")) { survivors =>
+        val admitted =
+          if (gens.isEmpty) survivors
+          else {
+            val corpus = batch.sparkSession.read.parquet(gens: _*)
+            val hit = graft.dedup.Dedup.incrementalNearDups(
+              corpus, survivors, "text", "doc_id",
+              k, numHashes, bands, threshold)
+              .select(col("batch_id").as("doc_id")).distinct()
+            survivors.join(hit, Seq("doc_id"), "left_anti")
+          }
+        admitted.write.mode("overwrite").parquet(genDir)
+      }
     }
 
   /** The admitted corpus across all committed generations, or None
@@ -1531,29 +1530,28 @@ object StreamingIngest {
       checkpointDir: String,
       L: Int = 20): StreamingQuery =
     generationStream(incoming, corpusRoot, checkpointDir) { (batch, gens, genDir) =>
-      val b = batch.select(col("doc_id"), col("text"))
-        .withColumn("__anch", array_distinct(
-          graft.dedup.Dedup.spanAnchors(
-            graft.text.TextAnalysis.tokens(col("text")), L)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val ex = b.select(col("doc_id"), explode(col("__anch")).as("h"))
-      val selfDrop = ex
-        .join(ex.groupBy(col("h")).agg(min(col("doc_id")).as("__min")),
-          Seq("h"))
-        .where(col("doc_id") > col("__min"))
-        .select(col("doc_id")).distinct()
-      val corpusHit =
-        if (gens.isEmpty) selfDrop.limit(0)
-        else ex.join(anchorIndex(batch.sparkSession, corpusRoot, gens), Seq("h"),
-            "left_semi")
+      graft.Pin.during(batch.select(col("doc_id"), col("text"))
+          .withColumn("__anch", array_distinct(
+            graft.dedup.Dedup.spanAnchors(
+              graft.text.TextAnalysis.tokens(col("text")), L)))) { b =>
+        val ex = b.select(col("doc_id"), explode(col("__anch")).as("h"))
+        val selfDrop = ex
+          .join(ex.groupBy(col("h")).agg(min(col("doc_id")).as("__min")),
+            Seq("h"))
+          .where(col("doc_id") > col("__min"))
           .select(col("doc_id")).distinct()
-      val dropped = selfDrop.unionByName(corpusHit).distinct()
-      val admitted = b.join(dropped, Seq("doc_id"), "left_anti")
-      admitted.select(col("doc_id"), col("text"))
-        .write.mode("overwrite").parquet(s"$genDir/docs")
-      admitted.select(explode(col("__anch")).as("h")).distinct()
-        .write.mode("overwrite").parquet(s"$genDir/anchors")
-      b.unpersist(false)
+        val corpusHit =
+          if (gens.isEmpty) selfDrop.limit(0)
+          else ex.join(anchorIndex(batch.sparkSession, corpusRoot, gens), Seq("h"),
+              "left_semi")
+            .select(col("doc_id")).distinct()
+        val dropped = selfDrop.unionByName(corpusHit).distinct()
+        val admitted = b.join(dropped, Seq("doc_id"), "left_anti")
+        admitted.select(col("doc_id"), col("text"))
+          .write.mode("overwrite").parquet(s"$genDir/docs")
+        admitted.select(explode(col("__anch")).as("h")).distinct()
+          .write.mode("overwrite").parquet(s"$genDir/anchors")
+      }
     }
 
   /** The anchor index of the generations at `gens`, read with one

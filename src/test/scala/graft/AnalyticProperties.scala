@@ -165,6 +165,36 @@ object AnalyticProperties extends Properties("graft.analytic") {
       got
     }
 
+  property("exclusivePrefix with by keys ≡ brute-force exclusive sums per group") =
+    Prop.forAll(
+      Gen.listOfN(6, Gen.choose(0, 30).flatMap(n =>
+        Gen.listOfN(n, Gen.zip(Gen.choose(-50L, 50L), Gen.choose(0L, 9L))))),
+      Gen.oneOf(1.0, 7.0, 64.0)) { (groups, step) =>
+      // the q128/drift shape: per group, each distinct value's sums over
+      // the group's strictly smaller values, for two measures at once —
+      // the prefix restarts at every group, whatever the bucket step
+      val rows = groups.zipWithIndex.flatMap { case (xs, i) =>
+        xs.map { case (v, w) => (i.toLong, v, w) }
+      }
+      val g = rows.toDF("grp", "v", "w")
+        .groupBy(col("grp"), col("v"))
+        .agg(count(lit(1)).as("__c"), sum(col("w")).as("__w"))
+        .withColumn("__bucket", floor(col("v").cast("double") / lit(step)))
+      val got = graft.queries.Features.exclusivePrefix(g, "v", "__bucket",
+          Seq("__excC" -> "__c", "__excW" -> "__w"), by = Seq("grp"))
+        .select(col("grp"), col("v"), col("__excC"), col("__excW"))
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
+        .toMap
+      val want = groups.zipWithIndex.flatMap { case (xs, i) =>
+        xs.map(_._1).distinct.map { v =>
+          (i.toLong, v) ->
+            (xs.count(_._1 < v).toLong, xs.filter(_._1 < v).map(_._2).sum)
+        }
+      }.toMap
+      got == want
+    }
+
   property("ksFromCounts D-statistic ≡ the classic max|F1−F2| fold on arbitrary samples") =
     Prop.forAll(
       Gen.nonEmptyListOf(Gen.choose(0, 200).map(_ / 2.0)),

@@ -59,6 +59,27 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.exists { case (a, b) => a == 5L || b == 5L })
   }
 
+  test("minhashNearDups whose job fails leaves its shingle-set frame uncached") {
+    // deterministic failure inside the shingle stage: the text column
+    // throws for one doc_id when the verify job first computes the sets.
+    // The exchange keeps the optimizer from folding the UDF over the
+    // local rows at planning time, so the failure comes from the job
+    val boom = udf { (id: Long, text: String) =>
+      if (id == 4L) throw new IllegalStateException(s"bad doc $id") else text
+    }
+    val failing = docs.repartition(2)
+      .withColumn("text", boom(col("doc_id"), col("text")))
+    intercept[Exception] {
+      Dedup.minhashNearDups(failing, "text", "doc_id", k = 3, numHashes = 16, bands = 8)
+    }
+    // the same plan as the operator's shingle sets, looked up in the cache
+    val sets = failing.select(col("doc_id").as("id"), col("text").as("text"))
+      .repartition(spark.sparkContext.defaultParallelism)
+      .select(col("id"),
+        array_distinct(graft.text.TextAnalysis.shingles(col("text"), 3)).as("sh_set"))
+    assert(sets.storageLevel === org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("incrementalNearDups equals the full self-join restricted to corpus×batch pairs") {
     // Same band family + threshold ⇒ the batch-vs-corpus join must
     // reproduce exactly the cross-side subset of the full self-join
