@@ -56,6 +56,42 @@ object FixtureTables {
   def path(name: String, dir: String): String =
     s"$root/${name}_${dir.replaceAll("[^A-Za-z0-9._-]", "_")}"
 
+  /** A fitted model or index that queries share, fit at most once per
+    * fixture dir in this JVM: the one rule "fit once per dir, write the
+    * oracle's dump before anyone sees the model".
+    *
+    * `apply(s, dir)` runs `fit(s, dir, path(dir))` on the first call
+    * for `dir`; `fit` writes whatever the oracle replays at that path
+    * before it returns. Later calls return the same value and run no
+    * Spark job. A `fit` that throws caches nothing, so the next call
+    * fits again. The fixture tables are read-only, so the cached value
+    * is exact.
+    *
+    * Each cell guards its own map with its own lock, held across `fit`:
+    * one dir is never fit by two threads at once, so a dump is written
+    * once, and a `fit` may call another cell's `apply` (the lock is
+    * per cell, and a cell's `fit` never reaches back to itself).
+    */
+  final class Fitted[M](name: String)(fit: (SparkSession, String, String) => M) {
+    private val fits = scala.collection.mutable.HashMap.empty[String, M]
+
+    /** Where this artifact's dump for `dir` lives; the oracle SQL
+      * interpolates it with `Corpus.oracleSfDir`.
+      */
+    def path(dir: String): String = FixtureTables.path(name, dir)
+
+    def apply(s: SparkSession, dir: String): M = synchronized {
+      fits.getOrElse(dir, {
+        val m = fit(s, dir, path(dir))
+        fits(dir) = m
+        m
+      })
+    }
+
+    /** The value fit for `dir`, if any call has fit it; fits nothing. */
+    def get(dir: String): Option[M] = synchronized(fits.get(dir))
+  }
+
   /** Writes a small artifact as one parquet file at `path`, replacing
     * what was there.
     */

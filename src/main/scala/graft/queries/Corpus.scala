@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.Jobs.concurrently
 import graft.dedup.Dedup
 import graft.ingest.FixtureTables
-import graft.ingest.FixtureTables.dump
+import graft.ingest.FixtureTables.{Fitted, dump}
 import graft.similarity.Similarity
 import graft.text.TextAnalysis
 
@@ -625,12 +625,6 @@ object Corpus {
 
   // ------------------------------------------------------------ t37 BPE
 
-  private val bpeModels =
-    scala.collection.concurrent.TrieMap[String, graft.text.Bpe.Merges]()
-
-  private def bpeMergesPath(dir: String): String =
-    FixtureTables.path("bpe_merges", dir)
-
   /** The training sample of every tokenizer fit: bounded and
     * deterministic, the corpus word-frequency table capped at 4096 rows
     * by (freq desc, token asc) — one keyed aggregate feeding a driver
@@ -646,20 +640,20 @@ object Corpus {
       .limit(4096)
       .collect().map(r => (r.getString(0), r.getLong(1))).toSeq
 
-  /** Dumps a fitted BPE merge table `(rank, lft, rgt)` for the oracle
-    * and returns it.
+  /** Fits a BPE merge table with `train` and dumps it `(rank, lft, rgt)`
+    * for the oracle.
     */
-  private def dumpMerges(s: SparkSession, m: graft.text.Bpe.Merges,
-      path: String): graft.text.Bpe.Merges = {
+  private def mergesFit(train: Seq[(String, Long)] => graft.text.Bpe.Merges)
+      (s: SparkSession, dir: String, path: String): graft.text.Bpe.Merges = {
+    val m = train(vocabSample(s, dir))
     import s.implicits._
     dump(m.lefts.indices.map(i => (i, m.lefts(i), m.rights(i)))
       .toDF("rank", "lft", "rgt"), path)
     m
   }
 
-  private def bpeModel(s: SparkSession, dir: String): graft.text.Bpe.Merges =
-    bpeModels.getOrElseUpdate(dir, dumpMerges(s,
-      graft.text.Bpe.train(vocabSample(s, dir), nMerges = 48), bpeMergesPath(dir)))
+  private val bpeModel = new Fitted("bpe_merges")(
+    mergesFit(graft.text.Bpe.train(_, nMerges = 48)))
 
   /** REAL BPE tokenization ([[graft.text.Bpe]] — Sennrich et al. ACL
     * 2016): a merge table is trained on the corpus's bounded
@@ -714,7 +708,7 @@ object Corpus {
   private def bpeSegPrefixSql: String =
     s"""WITH RECURSIVE
        |mg AS (SELECT rank, lft, rgt
-       |       FROM read_parquet('${bpeMergesPath(oracleSfDir)}/*.parquet')),
+       |       FROM read_parquet('${bpeModel.path(oracleSfDir)}/*.parquet')),
        |$tokposSqlCtes,
        |enc AS (
        |  SELECT token, list_transform(generate_series(1, length(token)),
@@ -828,16 +822,8 @@ object Corpus {
 
   // ----------------------------------------- t52 byte-fallback BPE
 
-  private val byteBpeModels =
-    scala.collection.concurrent.TrieMap[String, graft.text.Bpe.Merges]()
-
-  private def byteBpeMergesPath(dir: String): String =
-    FixtureTables.path("bytebpe_merges", dir)
-
-  private def byteBpeModel(s: SparkSession, dir: String): graft.text.Bpe.Merges =
-    byteBpeModels.getOrElseUpdate(dir, dumpMerges(s,
-      graft.text.Bpe.trainBytes(vocabSample(s, dir), nMerges = 48),
-      byteBpeMergesPath(dir)))
+  private val byteBpeModel = new Fitted("bytebpe_merges")(
+    mergesFit(graft.text.Bpe.trainBytes(_, nMerges = 48)))
 
   /** t52: byte-fallback BPE — the GPT-2-style BYTE-LEVEL alphabet
     * (Radford et al. 2019) that closes the tokenizer family's realism
@@ -891,7 +877,7 @@ object Corpus {
   private def byteBpeSegSqlCtes(mg: String, enc: String,
       fin: String): String =
     s"""$mg AS (SELECT rank, lft, rgt
-       |       FROM read_parquet('${byteBpeMergesPath(oracleSfDir)}/*.parquet')),
+       |       FROM read_parquet('${byteBpeModel.path(oracleSfDir)}/*.parquet')),
        |$enc AS (
        |  SELECT token,
        |    list_transform(generate_series(1, length(hex(encode(token))) // 2),
@@ -953,27 +939,20 @@ object Corpus {
 
   // ------------------------------------------------- t43 unigram-LM
 
-  private val unigramModels =
-    scala.collection.concurrent.TrieMap[String, graft.text.Unigram.Model]()
-
-  private def unigramModelPath(dir: String): String =
-    FixtureTables.path("unigram_model", dir)
-
   /** The fixed unigram-LM piece-length cap — a train-time parameter
     * (not data-derived), so both the expression and the oracle's
     * recursive CTE state it as the same literal.
     */
   private val UnigramMaxPieceLen = 6
 
-  private def unigramModel(s: SparkSession, dir: String): graft.text.Unigram.Model =
-    unigramModels.getOrElseUpdate(dir, {
-      val m = graft.text.Unigram.train(vocabSample(s, dir),
-        vocabSize = 512, maxPieceLen = UnigramMaxPieceLen, iters = 3)
-      import s.implicits._
-      dump(m.pieces.indices.map(i => (m.pieces(i), m.costs(i)))
-        .toDF("piece", "cost"), unigramModelPath(dir))
-      m
-    })
+  private val unigramModel = new Fitted("unigram_model")((s, dir, path) => {
+    val m = graft.text.Unigram.train(vocabSample(s, dir),
+      vocabSize = 512, maxPieceLen = UnigramMaxPieceLen, iters = 3)
+    import s.implicits._
+    dump(m.pieces.indices.map(i => (m.pieces(i), m.costs(i)))
+      .toDF("piece", "cost"), path)
+    m
+  })
 
   /** t43: unigram-LM (SentencePiece-style) tokenization
     * ([[graft.text.Unigram]] — Kudo ACL 2018), closing the tokenizer
@@ -1026,7 +1005,7 @@ object Corpus {
   private def unigramVitSqlCtes: String = {
     val L = UnigramMaxPieceLen
     s"""vm AS (SELECT piece, cost
-       |       FROM read_parquet('${unigramModelPath(oracleSfDir)}/*.parquet')),
+       |       FROM read_parquet('${unigramModel.path(oracleSfDir)}/*.parquet')),
        |uk AS (SELECT MAX(cost) + 1000000 AS unk FROM vm),
        |vit AS (
        |  SELECT token, 0 AS i, CAST([0] AS BIGINT[]) AS dp,
@@ -1088,20 +1067,12 @@ object Corpus {
 
   // ------------------------------------------------- t51 WordPiece
 
-  private val wordPieceModels =
-    scala.collection.concurrent.TrieMap[String, graft.text.WordPiece.Vocab]()
-
-  private def wordPieceVocabPath(dir: String): String =
-    FixtureTables.path("wordpiece_vocab", dir)
-
-  private def wordPieceModel(s: SparkSession,
-      dir: String): graft.text.WordPiece.Vocab =
-    wordPieceModels.getOrElseUpdate(dir, {
-      val m = graft.text.WordPiece.train(vocabSample(s, dir), nMerges = 48)
-      import s.implicits._
-      dump(m.pieces.toSeq.toDF("piece"), wordPieceVocabPath(dir))
-      m
-    })
+  private val wordPieceModel = new Fitted("wordpiece_vocab")((s, dir, path) => {
+    val m = graft.text.WordPiece.train(vocabSample(s, dir), nMerges = 48)
+    import s.implicits._
+    dump(m.pieces.toSeq.toDF("piece"), path)
+    m
+  })
 
   /** t51: WordPiece tokenization ([[graft.text.WordPiece]] — Schuster
     * & Nakajima 2012, the BERT-family encoder), completing the
@@ -1157,7 +1128,7 @@ object Corpus {
     s"""wv AS (SELECT piece, (piece LIKE '##%') AS cont,
        |    CASE WHEN piece LIKE '##%' THEN substr(piece, 3)
        |         ELSE piece END AS body
-       |  FROM read_parquet('${wordPieceVocabPath(oracleSfDir)}/*.parquet')),
+       |  FROM read_parquet('${wordPieceModel.path(oracleSfDir)}/*.parquet')),
        |wv2 AS (SELECT piece, cont, body, length(body) AS blen FROM wv),
        |wenc AS (
        |  SELECT token, 0 AS pos, CAST([] AS VARCHAR[]) AS pieces,
@@ -2637,6 +2608,28 @@ object Corpus {
        | FROM e a JOIN e b ON a.vec_id < b.vec_id)
        |SELECT id_a, id_b, ROUND(cos, 6) AS cosine FROM p WHERE cos >= 0.5""".stripMargin
 
+  /** The corpus-adaptive plane policy (s15's): pin expected bucket
+    * occupancy ≈ 30. Shared by the query AND the oracle fallback so
+    * the two sides cannot drift; DedupSpec asserts the fallback's
+    * assumed fixture size still matches the shipped fixture.
+    */
+  def d16AdaptivePlanes(nVectors: Long): Int = math.max(4,
+    math.ceil(math.log(nVectors / 30.0) / math.log(2.0)).toInt)
+
+  /** The adaptive plane count over a dir's embeddings, shared by d16
+    * and s15. Nothing is dumped: the oracles interpolate the count.
+    */
+  private val embeddingPlanes = new Fitted("embedding_planes")((s, dir, _) =>
+    d16AdaptivePlanes(t(s, dir, "embeddings").count()))
+
+  /** The plane count the query used for `oracleSfDir`: Verify dumps
+    * the oracle SQL after every query has run. A subset run that
+    * skipped both queries falls back to the sf0.01 fixture's
+    * 500-vector size, spec-pinned against fixture drift.
+    */
+  private def oraclePlanes: Int =
+    embeddingPlanes.get(oracleSfDir).getOrElse(d16AdaptivePlanes(500))
+
   /** d16: the LSH-bucketed SCALE PATH for embedding near-dup pairs —
     * d04's production twin, the d02↔d06 duality applied to vectors
     * (d04 is the exhaustive ground truth whose brute-force oracle
@@ -2657,36 +2650,16 @@ object Corpus {
     * the table count is the recall dial, candidates stay ≈
     * tables·30·n under the adaptive plane count either way.
     */
-  private val d16PlaneCounts =
-    scala.collection.concurrent.TrieMap[String, Int]()
-
-  /** The corpus-adaptive plane policy (s15's): pin expected bucket
-    * occupancy ≈ 30. Shared by the query AND the oracle fallback so
-    * the two sides cannot drift; DedupSpec asserts the fallback's
-    * assumed fixture size still matches the shipped fixture.
-    */
-  def d16AdaptivePlanes(nVectors: Long): Int = math.max(4,
-    math.ceil(math.log(nVectors / 30.0) / math.log(2.0)).toInt)
-
   val d16_embedding_neardups_lsh: Q = (s, dir) => {
     val e = t(s, dir, "embeddings")
-    val planes = d16AdaptivePlanes(e.count())
-    d16PlaneCounts(dir) = planes
+    val planes = embeddingPlanes(s, dir)
     Dedup.embeddingNearDups(e, "embedding", "vec_id", threshold = 0.5,
       dim = 64, planes = planes, tables = 64, bruteForce = false)
       .select(col("id_a"), col("id_b"), round(col("cosine"), 6).as("cosine"))
   }
 
   def d16_sql: String = {
-    // the plane count the query ACTUALLY used for oracleSfDir: this
-    // lookup is genuinely lazy — `oracles` and `d16_sql` are defs, and
-    // Verify dumps oracle_sql.json only AFTER every query has run, so
-    // a full verify always replays the exact planes the query chose.
-    // The fallback (a VERIFY_ONLY subset that skipped d16) derives
-    // from the same shared formula at the sf0.01 fixture's documented
-    // 500-vector size, spec-pinned against fixture drift.
-    val nPlanes = d16PlaneCounts.getOrElse(oracleSfDir, d16AdaptivePlanes(500))
-    val hp = Similarity.hyperplanes(dim = 64, planes = nPlanes, tables = 64)
+    val hp = Similarity.hyperplanes(dim = 64, planes = oraclePlanes, tables = 64)
     val planeRows = for {
       (tablePlanes, tIdx) <- hp.zipWithIndex
       (plane, pIdx)       <- tablePlanes.zipWithIndex
@@ -2734,6 +2707,12 @@ object Corpus {
        |SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine, rank
        |FROM r WHERE rank <= 10""".stripMargin
 
+  // build-once/serve-many, like the IVF index: bucket construction is
+  // the amortized index cost, searches pay only the candidate join
+  private val lshIndex = new Fitted("lsh_index")((s, dir, _) =>
+    Similarity.LshIndex.build(t(s, dir, "embeddings"), "vec_id", "embedding",
+      dim = 64, planes = 4, tables = 16))
+
   /** Approximate top-10 via random-hyperplane LSH (seeded planes) — the
     * 100 TB path: bucket join instead of the queries × corpus product.
     * The planes are a pure function of the seed, so the oracle
@@ -2746,17 +2725,9 @@ object Corpus {
     * is bought with tables × 2^-planes — planes must grow with corpus
     * density, tables with the recall target.
     */
-  private val lshIndexes =
-    scala.collection.concurrent.TrieMap[String, Similarity.LshIndex]()
-
   val s02_lsh_ann_topk: Q = (s, dir) => {
     val e = t(s, dir, "embeddings")
-    // build-once/serve-many, like the IVF index: bucket construction is
-    // the amortized index cost, searches pay only the candidate join
-    val idx = lshIndexes.getOrElseUpdate(dir,
-      Similarity.LshIndex.build(e, "vec_id", "embedding",
-        dim = 64, planes = 4, tables = 16))
-    idx.search(e.where(col("vec_id") < 5), "vec_id", "embedding", k = 10)
+    lshIndex(s, dir).search(e.where(col("vec_id") < 5), "vec_id", "embedding", k = 10)
       .select(col("query_id"), col("neighbor_id"),
         round(col("cosine"), 6).as("cosine"), col("rank").cast("long").as("rank"))
   }
@@ -2793,6 +2764,19 @@ object Corpus {
        |FROM r WHERE rank <= 10""".stripMargin
   }
 
+  /** s15's own index with CORPUS-ADAPTIVE plane count: fixed planes
+    * make bucket sizes grow linearly with the corpus, so the bucket
+    * SELF-join's Σ|bucket|² goes quadratic — the first s15 measured
+    * exactly that (ScaleGrowth at 10× blew past 10 min). planes =
+    * ⌈log₂(n / 30)⌉ (floor 4) pins expected bucket size at ~30, making
+    * candidates ≈ 30·n — the same published policy as
+    * `IvfIndex.adaptiveNLists`, applied to the hyperplane family. The
+    * count is d16's [[embeddingPlanes]], which the oracle interpolates.
+    */
+  private val lshKnnIndex = new Fitted("lsh_knn_index")((s, dir, _) =>
+    Similarity.LshIndex.build(t(s, dir, "embeddings"), "vec_id", "embedding",
+      dim = 64, planes = embeddingPlanes(s, dir), tables = 32))
+
   /** kNN-graph construction — every vector's top-3 approximate
     * neighbors in ONE pass, the backbone artifact of modern curation
     * (SemDeDup variants, diversity/typicality sampling, graph-based
@@ -2808,30 +2792,8 @@ object Corpus {
     * O(k·|corpus|), not the candidate volume. Oracle: the s02 seeded
     * hyperplanes replayed as SQL literals over ALL vectors.
     */
-  private val lshKnnIndexes =
-    scala.collection.concurrent.TrieMap[String, (Int, Similarity.LshIndex)]()
-
-  /** s15's own index with CORPUS-ADAPTIVE plane count: fixed planes
-    * make bucket sizes grow linearly with the corpus, so the bucket
-    * SELF-join's Σ|bucket|² goes quadratic — the first s15 measured
-    * exactly that (ScaleGrowth at 10× blew past 10 min). planes =
-    * ⌈log₂(n / 30)⌉ (floor 4) pins expected bucket size at ~30, making
-    * candidates ≈ 30·n — the same published policy as
-    * `IvfIndex.adaptiveNLists`, applied to the hyperplane family. The
-    * chosen count is stashed per dir so the ORACLE interpolates the
-    * same seeded planes (the s03 dump-then-replay protocol: Verify
-    * runs queries before dumping oracle SQL).
-    */
-  private def lshKnnIndex(s: SparkSession, dir: String): (Int, Similarity.LshIndex) =
-    lshKnnIndexes.getOrElseUpdate(dir, {
-      val e = t(s, dir, "embeddings")
-      val planes = d16AdaptivePlanes(e.count())
-      (planes, Similarity.LshIndex.build(e, "vec_id", "embedding",
-        dim = 64, planes = planes, tables = 32))
-    })
-
   val s15_knn_graph: Q = (s, dir) => {
-    val idx = lshKnnIndex(s, dir)._2
+    val idx = lshKnnIndex(s, dir)
     val b = idx.buckets
     val cand = b.select(col("bucket"), col("neighbor_id").as("query_id"))
       .join(b.select(col("bucket"), col("neighbor_id").as("neighbor_id")),
@@ -2851,10 +2813,7 @@ object Corpus {
   }
 
   def s15_sql: String = {
-    // the planes count the query actually used for oracleSfDir (5 at
-    // the 500-vector fixtures — the adaptive formula's value there)
-    val nPlanes = lshKnnIndexes.get(oracleSfDir).map(_._1).getOrElse(5)
-    val hp = Similarity.hyperplanes(dim = 64, planes = nPlanes, tables = 32)
+    val hp = Similarity.hyperplanes(dim = 64, planes = oraclePlanes, tables = 32)
     val planeRows = for {
       (tablePlanes, tIdx) <- hp.zipWithIndex
       (plane, pIdx)       <- tablePlanes.zipWithIndex
@@ -4597,9 +4556,6 @@ object Corpus {
        |SELECT id_a, id_b, COUNT(*) AS n_close_frames
        |FROM close GROUP BY id_a, id_b HAVING COUNT(*) >= 3""".stripMargin
 
-  private def qcDumpPath(dir: String): String =
-    FixtureTables.path("qc_weights", dir)
-
   /** Model-based document filter (fastText shape, CCNet-family): a
     * logistic classifier over 1024 hashed bag-of-words COUNT buckets
     * distills the stopword-ratio quality rule into a linear model —
@@ -4617,39 +4573,40 @@ object Corpus {
     * classification bit (integer logit > 0) and the reference label
     * (100·n_stop > 6·n_tok) are integer comparisons, so no float
     * boundary can flip either between engines.
+    *
+    * One [[Fitted]] fit per fixture dir, shared by all five queries: it
+    * dumps the micro-unit weight table every oracle replays and holds
+    * the bias; the weights are read back from the dump.
     */
+  private val qcFit = new Fitted("qc_weights")((s, dir, path) => {
+    import graft.text.QualityClassifier
+    // bounded, deterministically ordered training sample;
+    // pseudo-labels from the stopword rule over the SAME tokenizer
+    val sample = t(s, dir, "documents").where(col("doc_id") < 200)
+      .select(col("doc_id"), col("text"))
+      .collect().sortBy(_.getLong(0))
+      .map { r =>
+        val text = r.getString(1)
+        (text, QualityClassifier.label(QualityClassifier.tokens(text)))
+      }.toSeq
+    val (w, bias) = QualityClassifier.fit(sample)
+    import s.implicits._
+    dump((w.zipWithIndex.map { case (wu, bkt) => (bkt.toLong, wu) } :+
+      (-1L, bias)).toSeq.toDF("bucket", "w_u"), path)
+    bias
+  })
+
   /** Shared scorer of t38/q121/q126/q128/q152: fits the distilled
     * logistic model on the bounded sample and returns the whole-corpus
     * scored frame `(doc_id, __logit_u, __ntok, __nstop)` — the integer
     * logit plus the rule's raw counters, from which each query projects
     * its classification view or evaluation report.
     */
-  // one fit per fixture dir, shared by all five queries: the fit is
-  // deterministic, so this is a pure cache, and its fill dumps the
-  // micro-unit weight table once to the one path every oracle replays.
-  // Holds the bias; the weights are read back from the dump.
-  private val qcFits = scala.collection.concurrent.TrieMap[String, Long]()
-
   private def qcScored(s: SparkSession, dir: String): DataFrame = {
     import graft.text.QualityClassifier
     val docs = t(s, dir, "documents")
-    val bias = qcFits.getOrElseUpdate(dir, {
-      // bounded, deterministically ordered training sample;
-      // pseudo-labels from the stopword rule over the SAME tokenizer
-      val sample = docs.where(col("doc_id") < 200)
-        .select(col("doc_id"), col("text"))
-        .collect().sortBy(_.getLong(0))
-        .map { r =>
-          val text = r.getString(1)
-          (text, QualityClassifier.label(QualityClassifier.tokens(text)))
-        }.toSeq
-      val (w, bias) = QualityClassifier.fit(sample)
-      import s.implicits._
-      dump((w.zipWithIndex.map { case (wu, bkt) => (bkt.toLong, wu) } :+
-        (-1L, bias)).toSeq.toDF("bucket", "w_u"), qcDumpPath(dir))
-      bias
-    })
-    val weights = s.read.parquet(qcDumpPath(dir))
+    val bias = qcFit(s, dir)
+    val weights = s.read.parquet(qcFit.path(dir))
     val staged = docs
       .withColumn("__toks", TextAnalysis.tokens(col("text")))
       .select(col("doc_id"),
@@ -4682,7 +4639,7 @@ object Corpus {
 
   def t38_sql: String =
     s"""WITH w AS (SELECT bucket, w_u
-       |           FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')),
+       |           FROM read_parquet('${qcFit.path(oracleSfDir)}/*.parquet')),
        |t AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |st AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS ntok,
        |         CAST(len(list_filter(toks, x -> x IN ($stopRuleInSql)))
@@ -4696,7 +4653,7 @@ object Corpus {
        |sw AS (SELECT doc_id, CAST(SUM(b.c * w.w_u) AS BIGINT) AS sw
        |       FROM b JOIN w USING (bucket) WHERE w.bucket >= 0
        |       GROUP BY doc_id),
-       |bias AS (SELECT w_u FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')
+       |bias AS (SELECT w_u FROM read_parquet('${qcFit.path(oracleSfDir)}/*.parquet')
        |         WHERE bucket = -1)
        |SELECT st.doc_id,
        |  CAST((SELECT w_u FROM bias) + COALESCE(sw.sw, 0) AS DOUBLE)
@@ -4763,7 +4720,7 @@ object Corpus {
 
   def q121_sql: String =
     s"""WITH w AS (SELECT bucket, w_u
-       |  FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')),
+       |  FROM read_parquet('${qcFit.path(oracleSfDir)}/*.parquet')),
        |t AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |st AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS ntok,
        |         CAST(len(list_filter(toks, x -> x IN ($stopRuleInSql)))
@@ -4852,7 +4809,7 @@ object Corpus {
     val chain = graft.functions.PortableMath.sqlWithBindings(
       "SELECT * FROM g", q126Bindings)
     s"""WITH w AS (SELECT bucket, w_u
-       |  FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')),
+       |  FROM read_parquet('${qcFit.path(oracleSfDir)}/*.parquet')),
        |t AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |st AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS ntok,
        |         CAST(len(list_filter(toks, x -> x IN ($stopRuleInSql)))
@@ -4929,7 +4886,7 @@ object Corpus {
 
   def q128_sql: String =
     s"""WITH w AS (SELECT bucket, w_u
-       |  FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')),
+       |  FROM read_parquet('${qcFit.path(oracleSfDir)}/*.parquet')),
        |t AS (SELECT doc_id, source, $toksSql AS toks FROM documents),
        |st AS (SELECT doc_id, source, CAST(len(toks) AS BIGINT) AS ntok,
        |         CAST(len(list_filter(toks, x -> x IN ($stopRuleInSql)))
@@ -5066,7 +5023,7 @@ object Corpus {
 
   def q152_sql: String =
     s"""WITH w AS (SELECT bucket, w_u
-       |  FROM read_parquet('${qcDumpPath(oracleSfDir)}/*.parquet')),
+       |  FROM read_parquet('${qcFit.path(oracleSfDir)}/*.parquet')),
        |t AS (SELECT doc_id, source, $toksSql AS toks FROM documents),
        |st AS (SELECT doc_id, source, CAST(len(toks) AS BIGINT) AS ntok,
        |         CAST(len(list_filter(toks, x -> x IN ($stopRuleInSql)))
@@ -7212,6 +7169,40 @@ object Corpus {
       |  CAST(i * 160 * 1000 // 16000 AS BIGINT) AS start_ms
       |FROM w""".stripMargin
 
+  /** The sfDir the NEXT `oracles` read should describe. The s03 oracle
+    * replays assignment from the centroids that s03's index build for a
+    * specific sfDir dumped, so the fixture path must be per-dir (a
+    * whole-registry sweep at another SF — PlanLintSpec, RegistrySpec —
+    * would otherwise clobber the verified dir's centroid bits between
+    * the Verify dump and the driver's DuckDB run). Verify sets this
+    * from its sfDir argument before dumping oracle_sql.json; the
+    * default is the driver's correctness SF.
+    */
+  @volatile var oracleSfDir: String = "/root/testdata/sf0.01"
+
+  /** Builds an IVF index over `emb` and dumps its centroid table
+    * `(list_id, centroid)` to `path`, so the oracle SQL replays
+    * assignment from this run's exact centroid bits. `nLists = 0` is
+    * corpus-proportional (floor 16, so = 16 at every sf fixture; grows
+    * with the corpus at 10×+ — see adaptiveNLists).
+    */
+  private def ivfFit(s: SparkSession, emb: DataFrame, path: String,
+      metaCols: Seq[String] = Nil): Similarity.IvfIndex = {
+    val built = Similarity.IvfIndex.build(emb, "vec_id", "embedding",
+      nLists = 0, metaCols = metaCols)
+    import s.implicits._
+    dump(built.centroids.zipWithIndex.map { case (c, i) => (i, c) }
+      .toDF("list_id", "centroid"), path)
+    built
+  }
+
+  /** The s03 IVF index, built once per dir and dumped for the oracle —
+    * shared so s19's recall eval searches the SAME index (and a subset
+    * run of either query produces the centroid fixture).
+    */
+  private val s03Index = new Fitted("ivf_centroids")((s, dir, path) =>
+    ivfFit(s, t(s, dir, "embeddings"), path))
+
   /** IVF-ANN top-10 (k-means inverted lists, 8-probe) — the second ANN
     * scale path next to s02's hyperplane LSH. The index is built once
     * per corpus and reused (real serving shape: construction amortizes
@@ -7226,48 +7217,6 @@ object Corpus {
     * recall@10 = 0.94 vs exact ground truth at nProbe=8/nLists=16
     * (floor 0.9).
     */
-  private val ivfIndexes =
-    scala.collection.concurrent.TrieMap[String, Similarity.IvfIndex]()
-
-  /** The sfDir the NEXT `oracles` read should describe. The s03 oracle
-    * replays assignment from the centroids that s03's index build for a
-    * specific sfDir dumped, so the fixture path must be per-dir (a
-    * whole-registry sweep at another SF — PlanLintSpec, RegistrySpec —
-    * would otherwise clobber the verified dir's centroid bits between
-    * the Verify dump and the driver's DuckDB run). Verify sets this
-    * from its sfDir argument before dumping oracle_sql.json; the
-    * default is the driver's correctness SF.
-    */
-  @volatile var oracleSfDir: String = "/root/testdata/sf0.01"
-
-  private def ivfCentroidPath(dir: String): String =
-    FixtureTables.path("ivf_centroids", dir)
-
-  /** Dumps an IVF fit's centroid table `(list_id, centroid)` so the
-    * oracle SQL replays assignment from this run's exact centroid bits,
-    * and returns the index.
-    */
-  private def dumpCentroids(s: SparkSession, built: Similarity.IvfIndex,
-      path: String): Similarity.IvfIndex = {
-    import s.implicits._
-    dump(built.centroids.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("list_id", "centroid"), path)
-    built
-  }
-
-  /** The s03 IVF index, built once per dir and dumped for the oracle —
-    * factored out so s19's recall eval searches the SAME index (and
-    * a subset run of either query produces the centroid fixture).
-    */
-  private def s03Index(s: SparkSession, dir: String): Similarity.IvfIndex =
-    ivfIndexes.getOrElseUpdate(dir, {
-      // nLists = 0 → corpus-proportional (floor 16, so = 16 at every sf
-      // fixture; grows with the corpus at 10×+ — see adaptiveNLists)
-      dumpCentroids(s, Similarity.IvfIndex.build(
-        t(s, dir, "embeddings"), "vec_id", "embedding", nLists = 0),
-        ivfCentroidPath(dir))
-    })
-
   val s03_ivf_topk: Q = (s, dir) =>
     s03Index(s, dir)
       .search(t(s, dir, "embeddings").where(col("vec_id") < 5),
@@ -7296,7 +7245,7 @@ object Corpus {
     */
   private def s03AssignSqlCtes: String =
     s"""ctr AS (SELECT list_id, centroid
-       |        FROM read_parquet('${ivfCentroidPath(oracleSfDir)}/*.parquet')),
+       |        FROM read_parquet('${s03Index.path(oracleSfDir)}/*.parquet')),
        |dist AS (SELECT e.vec_id, c.list_id,
        |  ((list_reduce(list_transform(generate_series(1, 64),
        |      i -> e.v[i] * e.v[i]), (a, b) -> a + b)
@@ -7660,12 +7609,6 @@ object Corpus {
 
   // ---------------------------------------------- s23 PCA / whitening
 
-  private val s23Models =
-    scala.collection.concurrent.TrieMap[String, graft.similarity.Pca.Model]()
-
-  private def s23ModelPath(dir: String): String =
-    FixtureTables.path("s23_pca", dir)
-
   private[graft] val S23K = 4
   private[graft] val S23Dim = 64
   private[graft] val S23MaxSample = 4096
@@ -7696,27 +7639,23 @@ object Corpus {
     graft.similarity.Pca.fit(sample, dim, math.min(S23K, dim))
   }
 
-  /** One PCA fit per fixture dir (the qcFits pure-cache discipline);
-    * the cache fill dumps the model tables once to the per-dir path
-    * the oracle replays.
+  /** The PCA model over a dir's embeddings, its tables dumped under
+    * the path the oracle replays.
     */
-  private[graft] def s23Model(s: SparkSession,
-      dir: String): graft.similarity.Pca.Model =
-    s23Models.getOrElseUpdate(dir, {
-      val m = fitPca(t(s, dir, "embeddings"))
-      import s.implicits._
-      val path = s23ModelPath(dir)
-      // n rides at j = -1 (the bias-at-bucket-−1 move)
-      dump(((-1L, m.n) +: m.sums.toSeq.zipWithIndex
-          .map { case (v, j) => (j.toLong, v) })
-        .toDF("j", "s"), s"$path/means")
-      dump((for (k <- 0 until S23K; j <- 0 until S23Dim)
-          yield (k.toLong + 1L, j.toLong, m.loadings(k)(j)))
-        .toDF("k", "j", "v_e6"), s"$path/load")
-      dump(m.sigE6.toSeq.zipWithIndex.map { case (v, k) => (k.toLong + 1L, v) }
-        .toDF("k", "sig_e6"), s"$path/sig")
-      m
-    })
+  private val s23Model = new Fitted("s23_pca")((s, dir, path) => {
+    val m = fitPca(t(s, dir, "embeddings"))
+    import s.implicits._
+    // n rides at j = -1 (the bias-at-bucket-−1 move)
+    dump(((-1L, m.n) +: m.sums.toSeq.zipWithIndex
+        .map { case (v, j) => (j.toLong, v) })
+      .toDF("j", "s"), s"$path/means")
+    dump((for (k <- 0 until S23K; j <- 0 until S23Dim)
+        yield (k.toLong + 1L, j.toLong, m.loadings(k)(j)))
+      .toDF("k", "j", "v_e6"), s"$path/load")
+    dump(m.sigE6.toSeq.zipWithIndex.map { case (v, k) => (k.toLong + 1L, v) }
+      .toDF("k", "sig_e6"), s"$path/sig")
+    m
+  })
 
   /** s23: PCA projection + whitening over the embeddings table — the
     * learned linear dimensionality reduction the s-series lacked
@@ -7796,7 +7735,7 @@ object Corpus {
     * recall eval.
     */
   private def s23NumSqlCtes: String = {
-    val path = s23ModelPath(oracleSfDir)
+    val path = s23Model.path(oracleSfDir)
     val loadCtes = (1 to S23K).map(k =>
       s"""l$k AS (SELECT LIST(v_e6 ORDER BY j) AS lv
          |  FROM read_parquet('$path/load/*.parquet') WHERE k = $k),
@@ -7933,18 +7872,13 @@ object Corpus {
        |FROM hx LEFT JOIN hh USING (query_id)""".stripMargin
   }
 
-  private val graphAnnIndexes =
-    scala.collection.concurrent.TrieMap[String, graft.similarity.GraphAnn.Index]()
-
-  private def graphAnnPath(dir: String): String =
-    FixtureTables.path("graphann", dir)
-
-  /** Dumps a graph-ANN index (graph edges + entry points) under `path`
-    * so the oracle replays the walk over this exact graph, and returns
-    * the index.
+  /** Builds a graph-ANN index over `lsh` at serving out-degree 8 and
+    * dumps it (graph edges + entry points) under `path`, so the oracle
+    * replays the walk over this exact graph.
     */
-  private def dumpGraphAnn(built: graft.similarity.GraphAnn.Index,
+  private def graphAnnFit(lsh: Similarity.LshIndex,
       path: String): graft.similarity.GraphAnn.Index = {
+    val built = graft.similarity.GraphAnn.build(lsh, degree = 8, nEntries = 4)
     dump(built.graph, s"$path/graph.parquet")
     dump(built.entries, s"$path/entry.parquet")
     built
@@ -7956,11 +7890,8 @@ object Corpus {
     * entry points) so the oracle replays the walk over this run's
     * exact persisted index, the s03 dump-then-replay protocol.
     */
-  private def s25Index(s: SparkSession, dir: String): graft.similarity.GraphAnn.Index =
-    graphAnnIndexes.getOrElseUpdate(dir, dumpGraphAnn(
-      graft.similarity.GraphAnn.build(
-        lshKnnIndex(s, dir)._2, degree = 8, nEntries = 4),
-      graphAnnPath(dir)))
+  private val s25Index = new Fitted("graphann")((s, dir, path) =>
+    graphAnnFit(lshKnnIndex(s, dir), path))
 
   /** s25: graph-ANN beam serving ([[graft.similarity.GraphAnn]]) —
     * greedy beam search over the persisted s15-family kNN graph, the
@@ -8045,29 +7976,20 @@ object Corpus {
   }
 
   def s25_sql: String =
-    graphAnnWalkSql(graphAnnPath(oracleSfDir), corpusPred = "TRUE",
+    graphAnnWalkSql(s25Index.path(oracleSfDir), corpusPred = "TRUE",
       queryPred = "vec_id < 5", beam = 32, hops = 6, k = 10)
-
-  private val graphAnnRestIndexes =
-    scala.collection.concurrent.TrieMap[String, graft.similarity.GraphAnn.Index]()
-
-  private def graphAnnRestPath(dir: String): String =
-    FixtureTables.path("graphann_rest", dir)
 
   /** The s26 PRE-INSERT index: built over the corpus MINUS the delta
     * decile (vec_id % 10 ≠ 0), dumped so the oracle replays the
     * insert walk over this exact graph. Its own LSH fit (adaptive
     * planes over the rest count — the lshKnnIndex policy).
     */
-  private def s26Index(s: SparkSession, dir: String): graft.similarity.GraphAnn.Index =
-    graphAnnRestIndexes.getOrElseUpdate(dir, {
-      val rest = t(s, dir, "embeddings")
-        .where(pmod(col("vec_id"), lit(10)) =!= 0)
-      dumpGraphAnn(graft.similarity.GraphAnn.build(
-        graft.similarity.Similarity.LshIndex.build(rest, "vec_id", "embedding",
-          dim = 64, planes = d16AdaptivePlanes(rest.count()), tables = 32),
-        degree = 8, nEntries = 4), graphAnnRestPath(dir))
-    })
+  private val s26Index = new Fitted("graphann_rest")((s, dir, path) => {
+    val rest = t(s, dir, "embeddings")
+      .where(pmod(col("vec_id"), lit(10)) =!= 0)
+    graphAnnFit(Similarity.LshIndex.build(rest, "vec_id", "embedding",
+      dim = 64, planes = d16AdaptivePlanes(rest.count()), tables = 32), path)
+  })
 
   /** s26: graph-ANN INSERT ([[graft.similarity.GraphAnn.insert]]) —
     * the index-maintenance face s25 alone lacks, the s13 delta-append
@@ -8094,7 +8016,7 @@ object Corpus {
   }
 
   def s26_sql: String =
-    graphAnnWalkSql(graphAnnRestPath(oracleSfDir),
+    graphAnnWalkSql(s26Index.path(oracleSfDir),
       corpusPred = "vec_id % 10 <> 0", queryPred = "vec_id % 10 = 0",
       beam = 32, hops = 6, k = 16)
 
@@ -8163,6 +8085,15 @@ object Corpus {
        |  CAST(COALESCE(hh.n_hits, 0) AS DOUBLE) / hx.n_exact AS recall
        |FROM hx LEFT JOIN hh USING (query_id)""".stripMargin
 
+  /** The shared metadata-carrying IVF index (s09 filtered ANN + d11
+    * semantic dedup). Whichever query runs first builds it and dumps
+    * the fitted centroids for the oracle replay — the build is
+    * deterministic (seeded, bounded fit), so the dump's bits do not
+    * depend on which query wins.
+    */
+  private val ivfMetaIndex = new Fitted("ivf_centroids_meta")((s, dir, path) =>
+    ivfFit(s, t(s, dir, "embeddings"), path, metaCols = Seq("label")))
+
   /** Filtered ANN — vector search under a metadata predicate (the
     * retrieval-serving shape: "nearest neighbors WHERE label ∈ …").
     * The IVF index is built with `metaCols = label` so the predicate
@@ -8179,25 +8110,6 @@ object Corpus {
     * construction. Recall under the filter is spec-gated in
     * SimilaritySpec against filtered brute-force ground truth.
     */
-  private val ivfMetaIndexes =
-    scala.collection.concurrent.TrieMap[String, Similarity.IvfIndex]()
-
-  private def ivfMetaCentroidPath(dir: String): String =
-    FixtureTables.path("ivf_centroids_meta", dir)
-
-  /** The shared metadata-carrying IVF index (s09 filtered ANN + d11
-    * semantic dedup). Whichever query runs first builds it and dumps
-    * the fitted centroids for the oracle replay — the build is
-    * deterministic (seeded, bounded fit), so the dump's bits do not
-    * depend on which query wins.
-    */
-  private def ivfMetaIndex(s: SparkSession, dir: String): Similarity.IvfIndex =
-    ivfMetaIndexes.getOrElseUpdate(dir, dumpCentroids(s,
-      Similarity.IvfIndex.build(
-        t(s, dir, "embeddings"), "vec_id", "embedding",
-        nLists = 0, metaCols = Seq("label")),
-      ivfMetaCentroidPath(dir)))
-
   val s09_filtered_ann: Q = (s, dir) => {
     val idx = ivfMetaIndex(s, dir)
     idx.search(
@@ -8217,7 +8129,7 @@ object Corpus {
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |lab AS (SELECT vec_id, label FROM embeddings),
        |ctr AS (SELECT list_id, centroid
-       |        FROM read_parquet('${ivfMetaCentroidPath(oracleSfDir)}/*.parquet')),
+       |        FROM read_parquet('${ivfMetaIndex.path(oracleSfDir)}/*.parquet')),
        |dist AS (SELECT e.vec_id, c.list_id,
        |  ((list_reduce(list_transform(generate_series(1, 64),
        |      i -> e.v[i] * e.v[i]), (a, b) -> a + b)
@@ -8275,7 +8187,7 @@ object Corpus {
   def d11_sql: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |ctr AS (SELECT list_id, centroid
-       |        FROM read_parquet('${ivfMetaCentroidPath(oracleSfDir)}/*.parquet')),
+       |        FROM read_parquet('${ivfMetaIndex.path(oracleSfDir)}/*.parquet')),
        |dist AS (SELECT e.vec_id, c.list_id,
        |  ((list_reduce(list_transform(generate_series(1, 64),
        |      i -> e.v[i] * e.v[i]), (a, b) -> a + b)
@@ -8350,7 +8262,7 @@ object Corpus {
   def s10_sql: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |ctr AS (SELECT list_id, centroid
-       |        FROM read_parquet('${ivfMetaCentroidPath(oracleSfDir)}/*.parquet')),
+       |        FROM read_parquet('${ivfMetaIndex.path(oracleSfDir)}/*.parquet')),
        |dist AS (SELECT e.vec_id, c.list_id,
        |  ((list_reduce(list_transform(generate_series(1, 64),
        |      i -> e.v[i] * e.v[i]), (a, b) -> a + b)
@@ -8472,6 +8384,16 @@ object Corpus {
        |FROM r QUALIFY fused_rank <= 10""".stripMargin
   }
 
+  // write-once per dir: persist the shared metadata-carrying index
+  // (deterministic seeded build, so the store's bits never depend on
+  // which query triggered the build) and return the store's path
+  private val ivfStore = new Fitted("ivf_store")((s, dir, path) => {
+    ivfMetaIndex(s, dir).write(path)
+    path
+  })
+
+  def ivfStorePath(dir: String): String = ivfStore.path(dir)
+
   /** ANN serving from a PERSISTED index — the shape every query after
     * the first pays at 100 TB: the IVF index lands on disk ONCE per
     * corpus ([[Similarity.IvfIndex#write]]: inverted lists partitioned
@@ -8490,21 +8412,8 @@ object Corpus {
     * Oracle: the s03 assignment/probe replay against the STORE's own
     * centroid table — the serving artifact is also the replay fixture.
     */
-  private val ivfStoresWritten =
-    scala.collection.concurrent.TrieMap[String, Boolean]()
-
-  def ivfStorePath(dir: String): String = FixtureTables.path("ivf_store", dir)
-
   val s12_ivf_serving: Q = (s, dir) => {
-    val path = ivfStorePath(dir)
-    ivfStoresWritten.getOrElseUpdate(dir, {
-      // write-once per dir: persist the shared metadata-carrying index
-      // (deterministic seeded build, so the store's bits never depend
-      // on which query triggered the build)
-      ivfMetaIndex(s, dir).write(path)
-      true
-    })
-    Similarity.IvfIndex.read(s, path)
+    Similarity.IvfIndex.read(s, ivfStore(s, dir))
       .searchPruned(
         t(s, dir, "embeddings").where(col("vec_id") >= 10 && col("vec_id") < 15),
         "vec_id", "embedding", k = 10, nProbe = 8)
@@ -8548,6 +8457,11 @@ object Corpus {
        |SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine, rank
        |FROM r WHERE rank <= 10""".stripMargin
 
+  // s13's base index: fit on the corpus minus the delta decile
+  private val ivfDeltaBase = new Fitted("ivf_centroids_delta")((s, dir, path) =>
+    ivfFit(s, t(s, dir, "embeddings").where(pmod(col("vec_id"), lit(10)) =!= 0),
+      path))
+
   /** Incremental ANN index maintenance — the s-series counterpart of
     * t33's stats fold and d09's dedup admission, closing the
     * "continuous corpus" loop for retrieval serving: the IVF quantizer
@@ -8567,20 +8481,9 @@ object Corpus {
     * describing the corpus and a rebuild — s03's build — is the
     * rare scheduled event; the append path is the every-batch path.)
     */
-  private val ivfDeltaIndexes =
-    scala.collection.concurrent.TrieMap[String, Similarity.IvfIndex]()
-
-  private def ivfDeltaCentroidPath(dir: String): String =
-    FixtureTables.path("ivf_centroids_delta", dir)
-
   val s13_ivf_delta_append: Q = (s, dir) => {
     val e = t(s, dir, "embeddings")
-    val baseIdx = ivfDeltaIndexes.getOrElseUpdate(dir, dumpCentroids(s,
-      Similarity.IvfIndex.build(
-        e.where(pmod(col("vec_id"), lit(10)) =!= 0), "vec_id", "embedding",
-        nLists = 0),
-      ivfDeltaCentroidPath(dir)))
-    val merged = baseIdx.append(
+    val merged = ivfDeltaBase(s, dir).append(
       e.where(pmod(col("vec_id"), lit(10)) === 0), "vec_id", "embedding")
     merged.search(e.where(col("vec_id") >= 8 && col("vec_id") < 13),
         "vec_id", "embedding", k = 10, nProbe = 8)
@@ -8595,7 +8498,7 @@ object Corpus {
   def s13_sql: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |ctr AS (SELECT list_id, centroid
-       |        FROM read_parquet('${ivfDeltaCentroidPath(oracleSfDir)}/*.parquet')),
+       |        FROM read_parquet('${ivfDeltaBase.path(oracleSfDir)}/*.parquet')),
        |dist AS (SELECT e.vec_id, c.list_id,
        |  ((list_reduce(list_transform(generate_series(1, 64),
        |      i -> e.v[i] * e.v[i]), (a, b) -> a + b)
@@ -8625,6 +8528,19 @@ object Corpus {
        |SELECT query_id, neighbor_id, ROUND(cos, 6) AS cosine, rank
        |FROM r WHERE rank <= 10""".stripMargin
 
+  /** Write-once bootstrap of the tombstoned store (shared by s14's
+    * serving query and s16's health report): the same deterministic
+    * seeded index as s12's store, plus one tombstone batch
+    * (vec_id ≡ 3 mod 7). Returns the store's path.
+    */
+  private val ivfDelStore = new Fitted("ivf_store_del")((s, dir, path) => {
+    ivfMetaIndex(s, dir).write(path)
+    Similarity.IvfIndex.deleteFromStore(
+      t(s, dir, "embeddings").where(pmod(col("vec_id"), lit(7)) === 3),
+      "vec_id", path)
+    path
+  })
+
   /** Tombstone deletion against the PERSISTED ANN index — the third
     * and final face of index maintenance, closing the CRUD loop
     * (build = s03/s12, append = s13, delete = here): a delete batch
@@ -8643,30 +8559,8 @@ object Corpus {
     * Oracle: the s12 replay against THIS store's centroid table, with
     * the deleted ids excluded from the assignment side only.
     */
-  private val ivfDelStoresWritten =
-    scala.collection.concurrent.TrieMap[String, Boolean]()
-
-  def ivfDelStorePath(dir: String): String = ivfStorePath(dir) + "_del"
-
-  /** Write-once bootstrap of the tombstoned store (shared by s14's
-    * serving query and s16's health report): the same deterministic
-    * seeded index as s12's store, plus one tombstone batch
-    * (vec_id ≡ 3 mod 7).
-    */
-  private def ensureDelStore(s: SparkSession, dir: String): String = {
-    val path = ivfDelStorePath(dir)
-    ivfDelStoresWritten.getOrElseUpdate(dir, {
-      ivfMetaIndex(s, dir).write(path)
-      Similarity.IvfIndex.deleteFromStore(
-        t(s, dir, "embeddings").where(pmod(col("vec_id"), lit(7)) === 3),
-        "vec_id", path)
-      true
-    })
-    path
-  }
-
   val s14_ivf_tombstone_delete: Q = (s, dir) => {
-    val path = ensureDelStore(s, dir)
+    val path = ivfDelStore(s, dir)
     Similarity.IvfIndex.read(s, path)
       .searchPruned(
         t(s, dir, "embeddings").where(col("vec_id") >= 15 && col("vec_id") < 20),
@@ -8689,7 +8583,7 @@ object Corpus {
     * centroid table with the same ≡3 (mod 7) deletion rule.
     */
   val s16_index_health: Q = (s, dir) => {
-    val path = ensureDelStore(s, dir)
+    val path = ivfDelStore(s, dir)
     val nLists = s.read.parquet(s"$path/centroids").count()
     val tomb = s.read.parquet(s"$path/tombstones")
       .select(col("neighbor_id")).distinct()
@@ -8718,7 +8612,7 @@ object Corpus {
   def s16_sql: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |ctr AS (SELECT list_id, centroid
-       |        FROM read_parquet('${ivfDelStorePath(oracleSfDir)}/centroids/*.parquet')),
+       |        FROM read_parquet('${ivfDelStore.path(oracleSfDir)}/centroids/*.parquet')),
        |dist AS (SELECT e.vec_id, c.list_id,
        |  ((list_reduce(list_transform(generate_series(1, 64),
        |      i -> e.v[i] * e.v[i]), (a, b) -> a + b)
@@ -8753,7 +8647,7 @@ object Corpus {
   def s14_sql: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |ctr AS (SELECT list_id, centroid
-       |        FROM read_parquet('${ivfDelStorePath(oracleSfDir)}/centroids/*.parquet')),
+       |        FROM read_parquet('${ivfDelStore.path(oracleSfDir)}/centroids/*.parquet')),
        |dist AS (SELECT e.vec_id, c.list_id,
        |  ((list_reduce(list_transform(generate_series(1, 64),
        |      i -> e.v[i] * e.v[i]), (a, b) -> a + b)
@@ -8784,12 +8678,6 @@ object Corpus {
        |FROM r WHERE rank <= 10""".stripMargin
 
   // ------------------------------------------------------- s17: PQ ANN
-
-  private val pqCodebooks =
-    scala.collection.concurrent.TrieMap[String, graft.similarity.PqCodebook]()
-
-  private def pqCodebookPath(dir: String): String =
-    FixtureTables.path("pq_codebooks", dir)
 
   // PQ 16×4 (m subspaces of subDim dims, 16-entry codebooks — 4-bit
   // codes, a standard FAISS configuration): measured recall@10 0.90 at
@@ -8822,19 +8710,17 @@ object Corpus {
     * subspace order in both engines, so even the approximate scores
     * hash-match.
     */
-  private def pqCodebook(s: SparkSession, dir: String)
-      : graft.similarity.PqCodebook =
-    pqCodebooks.getOrElseUpdate(dir, {
-      val fitted = graft.similarity.PqCodebook.fit(
-        t(s, dir, "embeddings"), "embedding", m = pqM, k = 16)
-      // dump the fitted codebooks so the oracle SQL replays encoding
-      // from this run's exact centroid bits
-      import s.implicits._
-      dump(fitted.codebooks.zipWithIndex.flatMap { case (book, j) =>
-        book.zipWithIndex.map { case (ctr, c) => (j, c, ctr) }
-      }.toDF("sub_id", "code", "centroid"), pqCodebookPath(dir))
-      fitted
-    })
+  private val pqCodebook = new Fitted("pq_codebooks")((s, dir, path) => {
+    val fitted = graft.similarity.PqCodebook.fit(
+      t(s, dir, "embeddings"), "embedding", m = pqM, k = 16)
+    // dump the fitted codebooks so the oracle SQL replays encoding
+    // from this run's exact centroid bits
+    import s.implicits._
+    dump(fitted.codebooks.zipWithIndex.flatMap { case (book, j) =>
+      book.zipWithIndex.map { case (ctr, c) => (j, c, ctr) }
+    }.toDF("sub_id", "code", "centroid"), path)
+    fitted
+  })
 
   val s17_pq_ann: Q = (s, dir) => {
     val cb = pqCodebook(s, dir)
@@ -8868,7 +8754,7 @@ object Corpus {
   def s17_sql: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |cb AS (SELECT sub_id, code, centroid
-       |       FROM read_parquet('${pqCodebookPath(oracleSfDir)}/*.parquet')),
+       |       FROM read_parquet('${pqCodebook.path(oracleSfDir)}/*.parquet')),
        |dist AS (SELECT e.vec_id, cb.sub_id, cb.code,
        |  ((list_reduce(list_transform(generate_series(1, $pqSubDim),
        |      i -> e.v[cb.sub_id*$pqSubDim+i] * e.v[cb.sub_id*$pqSubDim+i]),
@@ -8958,7 +8844,7 @@ object Corpus {
   def s18_sql: String =
     s"""WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
        |ctr AS (SELECT list_id, centroid
-       |        FROM read_parquet('${ivfMetaCentroidPath(oracleSfDir)}/*.parquet')),
+       |        FROM read_parquet('${ivfMetaIndex.path(oracleSfDir)}/*.parquet')),
        |cdist AS (SELECT e.vec_id, c.list_id,
        |  ((list_reduce(list_transform(generate_series(1, 64),
        |      i -> e.v[i] * e.v[i]), (a, b) -> a + b)
@@ -8979,7 +8865,7 @@ object Corpus {
        |  FROM probe p JOIN assign a USING (list_id)
        |  WHERE a.neighbor_id <> p.query_id),
        |cb AS (SELECT sub_id, code, centroid
-       |       FROM read_parquet('${pqCodebookPath(oracleSfDir)}/*.parquet')),
+       |       FROM read_parquet('${pqCodebook.path(oracleSfDir)}/*.parquet')),
        |pqdist AS (SELECT e.vec_id, cb.sub_id, cb.code,
        |  ((list_reduce(list_transform(generate_series(1, $pqSubDim),
        |      i -> e.v[cb.sub_id*$pqSubDim+i] * e.v[cb.sub_id*$pqSubDim+i]),
