@@ -3,6 +3,8 @@ package graft.graph
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** The one round driver of the iterative operators in [[GraphOps]],
   * [[graft.similarity.GraphAnn]] and [[graft.analytics.Preference]]: a
   * DataFrame is a lazily built plan, so an iterative operator is its
@@ -29,9 +31,9 @@ object Fixpoint {
   /** Run `step` exactly `n` times from `init`; return `init` and the
     * states after steps 1..n (`n = 0` returns `Seq(init)`).
     *
-    * State k (1 ≤ k < n) is `localCheckpoint`ed when `stride` divides
-    * k; `init` and the last state stay lazy. The stride decides how the
-    * composed plan grows with `n`:
+    * State k (1 ≤ k < n) is materialized ([[graft.Materialize]]) when
+    * `stride` divides k; `init` and the last state stay lazy. The
+    * stride decides how the composed plan grows with `n`:
     *   - stride 1 when a step reads its state more than once, or every
     *     round's state feeds an output: left lazy, khop's
     *     `reach ∪ expand(reach)` doubles every round, and SCC
@@ -46,7 +48,7 @@ object Fixpoint {
       s"iterate needs n >= 0 and stride >= 1, got n=$n stride=$stride")
     (1 to n).scanLeft(init) { (state, k) =>
       val next = step(state)
-      if (k < n && k % stride == 0) next.localCheckpoint(true) else next
+      if (k < n && k % stride == 0) Materialize(next).df else next
     }
   }
 
@@ -61,40 +63,50 @@ object Fixpoint {
     * loop that converges before its cap runs no extra job.
     *
     * Materialization: `init` and the state after every stride are
-    * `localCheckpoint`ed, so round k's plan never replays rounds
-    * 1..k-1; pass `init` lazy. Within a stride the steps compose
-    * lazily, and overshooting the fixpoint inside one is harmless.
+    * materialized ([[graft.Materialize]]), so round k's plan never
+    * replays rounds 1..k-1 and every join over a state is planned from
+    * its measured size; pass `init` lazy (an `init` that is already a
+    * measured checkpoint, such as another `converge`'s result, costs no
+    * job). Within a stride the steps compose lazily, and overshooting
+    * the fixpoint inside one is harmless.
     *
-    * Change check: one `limit(1).count()` job over a left join of the
-    * new state to the old on `keys`, comparing every other column
-    * null-safely — a row whose key the old state lacks is a change.
+    * Change check: inside the job that materializes a stride. The new
+    * state is left-joined to the old on `keys`, an `Observation`
+    * counts the rows whose other columns differ null-safely or whose
+    * key the old state lacks, and the projection above it keeps the new
+    * state's columns. `keys` must be a key of every state, `init`
+    * included: an old state with a repeated key would repeat rows of
+    * the new one.
     */
   def converge(label: String, init: DataFrame, keys: Seq[String],
       maxRounds: Int, stride: Int = 1)(step: DataFrame => DataFrame): DataFrame = {
-    var state = init.localCheckpoint(true)
+    var state = Materialize(init).df
     var rounds = 0
     var changed = true
     while (changed && rounds < maxRounds) {
       val n = math.min(stride, maxRounds - rounds)
-      val next = iterate(state, n, stride = n)(step).last
-        .localCheckpoint(true)
-      changed = differs(next, state, keys)
-      state = next
+      val next = changes(iterate(state, n, stride = n)(step).last, state, keys)
+      changed = next.counts.head > 0
+      state = next.df
       rounds += n
     }
-    if (changed && differs(step(state), state, keys))
+    if (changed && changes(step(state), state, keys).counts.head > 0)
       throw new IllegalStateException(
         s"$label: no fixpoint within maxRounds=$maxRounds — raise the cap")
     state
   }
 
-  private def differs(next: DataFrame, prev: DataFrame,
-      keys: Seq[String]): Boolean = {
+  /** `next` materialized, with the number of its rows that differ from
+    * `prev` as the one count.
+    */
+  private def changes(next: DataFrame, prev: DataFrame,
+      keys: Seq[String]): Materialize.Measured = {
     val values = next.columns.filterNot(keys.contains).toSeq
     val old = prev.select(keys.map(col) ++
       values.map(c => col(c).as(s"__old_$c")) :+ lit(true).as("__old"): _*)
     val change = values.foldLeft(col("__old").isNull)((acc, c) =>
       acc || !(col(c) <=> col(s"__old_$c")))
-    next.join(old, keys, "left").where(change).limit(1).count() > 0
+    Materialize.projecting(next.join(old, keys, "left"), next.columns.toSeq,
+      "changed" -> count_if(change))
   }
 }

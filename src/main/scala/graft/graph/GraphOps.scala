@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Distributed graph analytics over edge DataFrames — the web-graph
   * face of a training-data pipeline (domain quality ranking via
   * PageRank, crawl-component discovery, local clustering for spam
@@ -45,7 +47,7 @@ object GraphOps {
 
   /** Undirected (src < dst) variant of [[copurchaseEdges]].
     *
-    * Materialized (`localCheckpoint`) before returning: every consumer
+    * Materialized ([[graft.Materialize]]) before returning: every consumer
     * reads the edge set at least twice (the directed mirror union, the
     * bidirectional union in components/reach, g04's probe selection),
     * and left lazy each read would replay the lineitem self-join +
@@ -60,11 +62,11 @@ object GraphOps {
   private def copurchaseBase(lineitem: DataFrame, minOrders: Int): DataFrame = {
     val b = lineitem.select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
-    b.as("a").join(b.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
+    Materialize(b.as("a")
+      .join(b.as("b"), col("a.o") === col("b.o") && col("a.p") < col("b.p"))
       .groupBy(col("a.p").as("src"), col("b.p").as("dst"))
       .agg(count(lit(1)).as("w"))
-      .where(col("w") >= minOrders)
-      .localCheckpoint(true)
+      .where(col("w") >= minOrders)).df
   }
 
   /** PageRank with damping 0.85 over `edges(src, dst)` restricted to
@@ -121,10 +123,10 @@ object GraphOps {
     * [[rankRecurrence]].
     */
   def pageRankWeighted(edges: DataFrame, nodes: DataFrame, iters: Int): DataFrame = {
-    val nodeSet = nodes.select(col("node")).localCheckpoint(true)
-    val n = nodeSet.count()
-    require(n > 0, "pageRankWeighted requires a non-empty node set")
-    rankRecurrence(edges, nodeSet.withColumn("__seed", lit(true)), n, iters)
+    val nodeSet = Materialize(nodes.select(col("node")))
+    require(nodeSet.rows > 0, "pageRankWeighted requires a non-empty node set")
+    rankRecurrence(edges, nodeSet.df.withColumn("__seed", lit(true)),
+      nodeSet.rows, iters)
   }
 
   /** Personalized PageRank: teleport mass returns to a SEED set
@@ -137,16 +139,14 @@ object GraphOps {
   def pageRankPersonalized(
       edges: DataFrame, nodes: DataFrame, seeds: DataFrame,
       iters: Int): DataFrame = {
-    val nodeSet = nodes.select(col("node")).localCheckpoint(true)
-    val seedSet = seeds.select(col("node")).localCheckpoint(true)
-    val nSeeds = seedSet.count()
-    require(nSeeds > 0,
+    val nodeSet = Materialize(nodes.select(col("node"))).df
+    val seedSet = Materialize(seeds.select(col("node")))
+    require(seedSet.rows > 0,
       "pageRankPersonalized requires a non-empty seed set")
-    val seeded = nodeSet
-      .join(seedSet.withColumn("__seed", lit(true)), Seq("node"), "left")
-      .localCheckpoint(true)
+    val seeded = Materialize(nodeSet
+      .join(seedSet.df.withColumn("__seed", lit(true)), Seq("node"), "left")).df
     rankRecurrence(edges.select(col("src"), col("dst")).withColumn("w", lit(1L)),
-      seeded, nSeeds, iters)
+      seeded, seedSet.rows, iters)
   }
 
   /** The one rank loop of the PageRanks: of the nodes in
@@ -161,7 +161,7 @@ object GraphOps {
     * before iterating — without it an edge head outside the node set
     * would inject a phantom rank row and skew the teleport mass
     * against the documented semantics. The edge list and out-weights
-    * materialize ONCE (`localCheckpoint`): left lazy, the
+    * materialize ONCE ([[graft.Materialize]]): left lazy, the
     * edge-derivation subtree is replayed in every iteration's lineage
     * — measured 8.4s → 2.9s at sf0.1. The 100 TB form is the same:
     * persist the edges, iterate over the materialized blocks.
@@ -173,12 +173,11 @@ object GraphOps {
     // attaches it inside the src exchange the edge frame needs anyway
     // (guide §2.4), so each round pays ONE src-keyed join (edges⋈ranks)
     // — no deg join, no second edge-sized checkpoint (r17, flat)
-    val ew = edges.select(col("src"), col("dst"), col("w"))
+    val ew = Materialize(edges.select(col("src"), col("dst"), col("w"))
       .join(nodeSet.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
       .join(nodeSet.withColumnRenamed("node", "dst"), Seq("dst"), "left_semi")
       .withColumn("outw", sum(col("w")).over(
-        Window.partitionBy(col("src"))))
-      .localCheckpoint(true)
+        Window.partitionBy(col("src"))))).df
     def perSeed(units: Long): Column =
       when(col("__seed"), lit(units / nSeeds)).otherwise(lit(0L))
     val base = seeded.select(col("node"), // 0.15/nSeeds in e-12 units
@@ -198,10 +197,9 @@ object GraphOps {
     * loop that reads it joins against it (see [[pageRank]]).
     */
   private def mirrored(edges: DataFrame, extra: String*): DataFrame =
-    edges.select(Seq(col("src"), col("dst")) ++ extra.map(col): _*)
+    Materialize(edges.select(Seq(col("src"), col("dst")) ++ extra.map(col): _*)
       .unionAll(edges.select(
-        Seq(col("dst").as("src"), col("src").as("dst")) ++ extra.map(col): _*))
-      .localCheckpoint(true)
+        Seq(col("dst").as("src"), col("src").as("dst")) ++ extra.map(col): _*))).df
 
   /** Connected components by min-label propagation to fixpoint; fails
     * loudly at the cap `maxRounds` ([[Fixpoint.converge]]). Measured
@@ -302,13 +300,13 @@ object GraphOps {
     // iters = 0 would return the initial hubs with no authority rows
     // (there is no round-0 authority state) — reject it loudly instead
     require(iters >= 1, s"hits requires iters >= 1, got $iters")
-    val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
+    val e = Materialize(edges.select(col("src"), col("dst"))).df
     val norm = expr(
       s"CAST(__raw AS DECIMAL(30,0)) * ${HitsScale}L div CAST(__mx AS DECIMAL(30,0))")
     // one side's scores from its raw (node, __raw) sums, which are
     // materialized: they feed the max fold AND the normalize
     def side(raw: DataFrame, role: String): DataFrame = {
-      val r = raw.localCheckpoint(true)
+      val r = Materialize(raw).df
       r.crossJoin(broadcast(r.agg(max(col("__raw")).as("__mx"))))
         .select(lit(role).as("role"), col("node"), norm.as("score_e6"))
     }
@@ -336,8 +334,7 @@ object GraphOps {
   def triangles(edgesUndirected: DataFrame): DataFrame = {
     // the edge set feeds three join branches + the degree count —
     // materialize once (see pageRank)
-    val e = edgesUndirected.select(col("src"), col("dst"))
-      .localCheckpoint(true)
+    val e = Materialize(edgesUndirected.select(col("src"), col("dst"))).df
     val tri = e.as("e1")
       .join(e.as("e2"), col("e1.dst") === col("e2.src"))
       .join(e.as("e3"),
@@ -386,9 +383,8 @@ object GraphOps {
     import graft.functions.KmvSketch
     val both = mirrored(edgesUndirected)
     // each hop reads the counters twice: init materialized, stride 1
-    val init = both.select(col("src").as("node")).distinct()
-      .select(col("node"), array(KmvSketch.hash64(col("node"))).as("ctr"))
-      .localCheckpoint(true)
+    val init = Materialize(both.select(col("src").as("node")).distinct()
+      .select(col("node"), array(KmvSketch.hash64(col("node"))).as("ctr"))).df
     def est = when(size(col("ctr")) < k, size(col("ctr")).cast("long"))
       .otherwise(floor(lit((k - 1).toDouble) * lit(KmvSketch.TwoPow60)
         / element_at(col("ctr"), k).cast("double")).cast("long"))
@@ -417,8 +413,7 @@ object GraphOps {
     // reach is referenced twice per hop (self ∪ its own expansion), so
     // a lazy plan doubles every hop — exponential in maxHops: the
     // initial reach and every hop's state are materialized (stride 1)
-    val init = probes.select(col("probe"), col("probe").as("node"))
-      .localCheckpoint(true)
+    val init = Materialize(probes.select(col("probe"), col("probe").as("node"))).df
     Fixpoint.iterate(init, maxHops) { reach =>
       reach
         .unionAll(reach.join(both, reach("node") === both("src"))
@@ -459,9 +454,8 @@ object GraphOps {
   def coreness(edgesUndirected: DataFrame, maxRounds: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val both = mirrored(edgesUndirected)
-    val deg = both.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("degree"))
-      .localCheckpoint(true)
+    val deg = Materialize(both.groupBy(col("src").as("node"))
+      .agg(count(lit(1)).as("degree"))).df
     val w = Window.partitionBy(col("node")).orderBy(col("__nh").desc)
     val core = Fixpoint.converge("coreness",
         deg.select(col("node"), col("degree").as("h")), Seq("node"),
@@ -546,10 +540,10 @@ object GraphOps {
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
     val wTop = Window.partitionBy(col("src"))
       .orderBy(col("w").desc, col("dst").asc)
-    pair.withColumn("__rn", row_number().over(wTop))
+    // every consumer iterates over it
+    Materialize(pair.withColumn("__rn", row_number().over(wTop))
       .where(col("__rn") <= topK)
-      .select(col("src"), col("dst"))
-      .localCheckpoint(true) // every consumer iterates over it
+      .select(col("src"), col("dst"))).df
   }
 
   /** Strongly connected components of a DIRECTED `edges(src, dst)`
@@ -609,10 +603,9 @@ object GraphOps {
     // at sf0.001 (analysis/codegen explosion) vs 21.5s at stride 2;
     // stride 1 doubles the job count for no plan saving
     val innerStride = 2
-    val edges = edges0.select(col("src"), col("dst")).localCheckpoint(true)
-    val nodes = edges.select(col("src").as("node"))
-      .unionAll(edges.select(col("dst").as("node"))).distinct()
-    val nNodes = nodes.count()
+    val edges = Materialize(edges0.select(col("src"), col("dst"))).df
+    val nodes = Materialize(edges.select(col("src").as("node"))
+      .unionAll(edges.select(col("dst").as("node"))).distinct())
     def open(s: DataFrame): DataFrame =
       s.where(col("scc_id").isNull).select(col("node"))
     def openEdges(s: DataFrame): DataFrame = {
@@ -621,17 +614,17 @@ object GraphOps {
         .join(o.select(col("node").as("dst")), Seq("dst"), "left_semi")
     }
     // closes the open nodes of `closing(node, scc_id)` at its scc_id: a
-    // union and min, not an outer join, because a join's estimated size
-    // is the product of its inputs' and a checkpoint keeps its plan's
-    // estimate. A join of the state per round compounded that estimate
-    // until planning a 40-round trim spent minutes in BigInt multiplies
+    // union and one keyed min (which skips an open row's NULL), with no
+    // join over the state. A join's size estimate is the product of its
+    // inputs'; measured checkpoints stop that product compounding from
+    // round to round, but not across the rounds of a lazy stride
     def close(s: DataFrame, closing: DataFrame): DataFrame =
       s.unionAll(closing)
         .groupBy(col("node")).agg(min(col("scc_id")).as("scc_id"))
-    val init = nodes.select(col("node"),
+    val init = nodes.df.select(col("node"),
       lit(null).cast(edges.schema("src").dataType).as("scc_id"))
     val trimmed = Fixpoint.converge("stronglyConnectedComponents trim",
-        init, Seq("node"), nNodes.min(Int.MaxValue).toInt) { s =>
+        init, Seq("node"), nodes.rows.min(Int.MaxValue).toInt) { s =>
       // the open nodes with an open out-edge (bit 1) and an open
       // in-edge (bit 2), flagged in one keyed aggregate: two distincts
       // and a semi-join cost one more exchange, and one more job, per
@@ -647,7 +640,7 @@ object GraphOps {
     Fixpoint.converge("stronglyConnectedComponents settle", trimmed,
         Seq("node"), maxOuter) { state =>
       // every propagation round joins against it
-      val active = openEdges(state).localCheckpoint(true)
+      val active = Materialize(openEdges(state)).df
       // one propagation round, composed lazily: min(f) arrives along
       // in-edges, min(b) along out-edges, self rides the union — ONE
       // keyed aggregate, the connectedComponents shape done twice-in-one

@@ -1,8 +1,10 @@
 package graft.load
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+
+import graft.Materialize
 
 /** Incremental, idempotent loading — the reference's high-water-mark +
   * `ON CONFLICT DO NOTHING` semantics (SURVEY.md §2 A7/B4/B6),
@@ -213,24 +215,10 @@ object Incremental {
       appended
     } else {
       val Seq(offered, inserted) =
-        observedWrite(rows.repartition(partitionBy.map(col): _*), counts: _*) {
+        Materialize.observed(rows.repartition(partitionBy.map(col): _*), counts: _*) {
           fresh(_).write.mode("append").partitionBy(partitionBy: _*).parquet(path)
-        }
+        }._2
       Appended(offered, inserted)
     }
-  }
-
-  /** Runs `write` over `df` and returns the named counts, evaluated by an
-    * [[Observation]] inside the write job rather than by a second scan.
-    * The counts see `df` as given, before anything `write` adds on top.
-    */
-  private[graft] def observedWrite(df: DataFrame, counts: (String, Column)*)(
-      write: DataFrame => Unit): Seq[Long] = {
-    val o = Observation()
-    val named = counts.map { case (n, c) => c.as(n) }
-    write(df.observe(o, named.head, named.tail: _*))
-    val got = o.get
-    require(got.nonEmpty, "the write's plan lost its observed counts")
-    counts.map { case (n, _) => got(n).asInstanceOf[Long] }
   }
 }

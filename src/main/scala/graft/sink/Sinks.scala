@@ -3,6 +3,7 @@ package graft.sink
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 
+import graft.Materialize
 import graft.load.Incremental
 
 /** JDBC sink — the reference's Postgres target (`main_parallel.py`
@@ -44,8 +45,8 @@ final class JdbcSink(
     * empty append writes nothing, so there is no count-first path.
     */
   def appendIdempotent(rows: DataFrame): Long =
-    Incremental.observedWrite(Incremental.notInTarget(rows, existingPks(), pk),
-      "rows" -> count(lit(1)))(append).head
+    Materialize.observed(Incremental.notInTarget(rows, existingPks(), pk),
+      "rows" -> count(lit(1)))(append)._2.head
 
   /** Concurrent-writer-safe idempotent append — the staging-table +
     * transactional `INSERT … WHERE NOT EXISTS` route the single-writer

@@ -1,11 +1,16 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.SparkEnv
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions, JacksonParser}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
 import org.apache.spark.sql.catalyst.util.FailureSafeParser
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.RDDBlockId
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -37,6 +42,31 @@ object Bridge {
   def logicalPlan(df: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.queryExecution.analyzed
+
+  /** `checkpoint`, a frame whose plan is a bare `LogicalRDD` (a
+    * `localCheckpoint`), re-wrapped over the same RDD, output,
+    * partitioning, ordering and constraints with `stats` as its
+    * statistics (`graft.Materialize`).
+    */
+  def withStatistics(checkpoint: DataFrame, stats: Statistics): DataFrame = {
+    val p = checkpoint.queryExecution.logical.asInstanceOf[LogicalRDD]
+    val session = checkpoint.sparkSession
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    ofRows(session, p.copy()(session, Some(stats), Some(p.constraints)))
+  }
+
+  /** The bytes the block managers hold for `rdd`'s blocks, memory plus
+    * disk, as the driver's block manager master records them. No job
+    * runs, and a block counts as soon as the task that stored it has
+    * finished; the status store behind `SparkContext.getRDDStorageInfo`
+    * is fed by the listener bus, which nothing orders before the job's
+    * return.
+    */
+  def storedBytes(rdd: RDD[_]): Long =
+    SparkEnv.get.blockManager.master.getStorageStatus.iterator
+      .flatMap(_.rddBlocks).collect {
+        case (RDDBlockId(id, _), s) if id == rdd.id => s.memSize + s.diskSize
+      }.sum
 
   /** A reusable JSON-document → InternalRow parser for the given (possibly
     * column-pruned) schema — the same `JacksonParser` + permissive

@@ -1,15 +1,9 @@
 package graft
 
-import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicInteger
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.concurrent.Eventually._
-import org.scalatest.time.{Seconds, Span}
 
 import graft.ingest.FixtureTables.{Fitted, dump}
 
@@ -45,40 +39,14 @@ class FittedSpec extends SparkSpec {
   private def dumped(path: String): Long =
     spark.read.parquet(path).head().getLong(0)
 
-  /** The Spark jobs started while `body` runs on this thread, counted
-    * by a listener. A marker job run afterwards is waited for: the
-    * listener bus delivers in order, so every earlier start is in.
-    */
-  private def jobsStartedBy(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val group = s"fitted-spec-${System.nanoTime()}"
-    val groups = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "measured")
-      try body finally sc.clearJobGroup()
-      sc.setJobGroup(s"$group-marker", "marker")
-      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
-      eventually(timeout(Span(60, Seconds))) {
-        assert(groups.contains(s"$group-marker"))
-      }
-      groups.asScala.count(_ == group)
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("a second apply for one dir returns the same instance and starts no Spark job") {
     val fits = counter()
     val cell = new Fitted("fitted_spec_once")(sumFit(fits))
     val dir = dirOf(1L, 2L, 3L)
     var first: Total = null
-    assert(jobsStartedBy { first = cell(spark, dir) } > 0)
+    assert(jobsOf { first = cell(spark, dir) }._2 > 0)
     var second: Total = null
-    assert(jobsStartedBy { second = cell(spark, dir) } === 0)
+    assert(jobsOf { second = cell(spark, dir) }._2 === 0)
     assert(second eq first)
     assert(first.sum === 6L)
     assert(fits.get === 1)

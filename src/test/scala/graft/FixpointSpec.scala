@@ -1,8 +1,16 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 
 import graft.graph.Fixpoint
 
@@ -134,5 +142,47 @@ class FixpointSpec extends SparkSpec {
       assert(steps === maxRounds + 1)
       assert(e.getMessage.contains(s"maxRounds=$maxRounds"), e.getMessage)
     }
+  }
+
+  test("a converge stride runs no change-check job beyond its materialization") {
+    val sc = spark.sparkContext
+    val group = s"fixpoint-spec-${System.nanoTime()}"
+    val jobs = new ConcurrentLinkedQueue[String]()
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart if s.jobGroupId.contains(group) =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    var steps = 0
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "converge")
+      try {
+        val init = Seq((1L, 0L), (2L, 5L)).toDF("k", "v")
+        // 0 → 1 → 2 changes twice; the third step is the identity
+        Fixpoint.converge("clamp", init, Seq("k"), maxRounds = 10) { s =>
+          steps += 1
+          s.select(col("k"), least(col("v") + 1L, lit(2L)).as("v"))
+        }
+      } finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+      eventually(timeout(Span(60, Seconds))) {
+        assert(jobs.contains(s"$group-marker"))
+      }
+    } finally sc.removeSparkListener(listener)
+    assert(steps === 3)
+    // one SQL execution per materialization: init and the three strides
+    assert(plans.size === 4, plans.asScala.mkString("\n----\n"))
+    assert(jobs.asScala.count(_ == group) >= 4)
+    // the old change check planned a GlobalLimit over the left join
+    val limited = plans.asScala.filter(_.contains("Limit"))
+    assert(limited.isEmpty, limited.mkString("\n----\n"))
   }
 }

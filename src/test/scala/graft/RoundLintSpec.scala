@@ -30,27 +30,8 @@ class RoundLintSpec extends AnyFunSuite {
   private val transcendental =
     raw"(?<![\w.])(log|log10|log2|log1p|exp|expm1|pow|cbrt)\s*\(".r
 
-  private def stripComments(src: String): String = {
-    // block comments (incl. scaladoc), then line comments; keep line
-    // structure so reported line numbers stay meaningful
-    val noBlock = raw"(?s)/\*.*?\*/".r
-      .replaceAllIn(src, m => m.matched.map(c => if (c == '\n') '\n' else ' '))
-    noBlock.linesIterator
-      .map(l => l.indexOf("//") match {
-        case -1 => l
-        case i  => l.substring(0, i)
-      })
-      .mkString("\n")
-  }
-
   test("no compared output passes a transcendental through round(double, n)") {
-    val root = new java.io.File("src/main/scala/graft")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
-    val offenders = walk(root).flatMap { f =>
-      val src = stripComments(
-        new String(java.nio.file.Files.readAllBytes(f.toPath)))
+    val offenders = RoundLintSpec.sources("src/main/scala/graft").flatMap { case (f, src) =>
       raw"(?<![\w.])round\(".r.findAllMatchIn(src).flatMap { m =>
         var (depth, i) = (0, m.end - 1)
         while (i < src.length && {
@@ -73,5 +54,32 @@ class RoundLintSpec extends AnyFunSuite {
       s"round(<transcendental>) is the round-9 cross-engine divergence " +
         s"class — use PortableMath + roundedUnits instead:\n  " +
         offenders.mkString("\n  "))
+  }
+}
+
+object RoundLintSpec {
+
+  /** Every `.scala` file under `root` with its comments blanked out —
+    * block comments (incl. scaladoc), then line comments — keeping the
+    * line structure so reported line numbers stay meaningful.
+    */
+  def sources(root: String): Seq[(java.io.File, String)] = {
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Seq.empty
+    walk(new java.io.File(root)).map { f =>
+      f -> stripComments(new String(java.nio.file.Files.readAllBytes(f.toPath)))
+    }
+  }
+
+  private def stripComments(src: String): String = {
+    val noBlock = raw"(?s)/\*.*?\*/".r
+      .replaceAllIn(src, m => m.matched.map(c => if (c == '\n') '\n' else ' '))
+    noBlock.linesIterator
+      .map(l => l.indexOf("//") match {
+        case -1 => l
+        case i  => l.substring(0, i)
+      })
+      .mkString("\n")
   }
 }

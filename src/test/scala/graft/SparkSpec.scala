@@ -1,14 +1,47 @@
 package graft
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.{Seconds, Span}
 
 /** Shared local SparkSession for all specs (one JVM-wide session — specs
   * run sequentially in sbt's forked test JVM).
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** `body`'s result and the Spark jobs it started on this thread,
+    * counted by a listener. A marker job run afterwards is waited for:
+    * the listener bus delivers in order, so every earlier start is in.
+    */
+  def jobsOf[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"jobs-of-${System.nanoTime()}"
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "measured")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-marker", "marker")
+      try sc.parallelize(1 to 1, 1).count() finally sc.clearJobGroup()
+      eventually(timeout(Span(60, Seconds))) {
+        assert(groups.contains(s"$group-marker"))
+      }
+      (out, groups.asScala.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
 }
 
 object SparkSpec {
