@@ -6,10 +6,13 @@ import org.apache.spark.sql.catalyst.trees.TreeNodeTag
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.LongType
 
-/** The eager materialization that measures itself: a `localCheckpoint`
-  * whose one job also counts the frame's rows (and whatever else the
-  * caller names), and whose plan tells Catalyst the frame's real size.
+/** The engine's one eager materialization, for every checkpoint in it:
+  * a `localCheckpoint` whose one job also counts the frame's rows (and
+  * whatever else the caller names), and whose plan tells Catalyst the
+  * frame's real size. A total the plan would otherwise join back as a
+  * lazy 1-row aggregate is such a named count, read as a literal.
   *
   * A plain `localCheckpoint` keeps its plan's size ESTIMATE, and an
   * estimate compounds with every join over it, so a join with a tiny
@@ -64,12 +67,17 @@ object Materialize {
   /** Runs `action` over `df` and returns its result with the named
     * counts, evaluated by an [[Observation]] inside the action's job
     * rather than by a second scan. The counts see `df` as given, before
-    * anything `action` adds on top.
+    * anything `action` adds on top. Each count must be a BIGINT, checked
+    * before any job runs; over no rows a `sum` reads 0, not the NULL a
+    * lazy aggregate gives, and a DISTINCT aggregate cannot be observed.
     */
   private[graft] def observed[T](df: DataFrame, counts: (String, Column)*)(
       action: DataFrame => T): (T, Seq[Long]) = {
     val o = Observation()
     val named = counts.map { case (n, c) => c.as(n) }
+    for (f <- df.select(named: _*).schema)
+      require(f.dataType == LongType,
+        s"count ${f.name} is ${f.dataType.sql}, not BIGINT")
     val out = action(df.observe(o, named.head, named.tail: _*))
     val got = o.get
     require(got.nonEmpty, "the action's plan lost its observed counts")

@@ -3,6 +3,7 @@ package graft.analytics
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.graph.Fixpoint
 
 /** Preference-data consumption: the Bradley–Terry strength fit over a
@@ -65,23 +66,22 @@ object Preference {
   def bradleyTerryFromDuels(duels: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"bradleyTerry requires iters >= 1, got $iters")
     import org.apache.spark.sql.expressions.Window
-    val d = duels.select(col("item_w"), col("item_l"), col("n_wl"))
-      .localCheckpoint(true) // feeds the matrix AND the win totals
+    val d = Materialize(
+      duels.select(col("item_w"), col("item_l"), col("n_wl"))).df // feeds the matrix AND the win totals
     // symmetric opponent matrix n_ij — the per-round join frame
-    val nm = d.select(col("item_w").as("i"), col("item_l").as("j"),
+    val nm = Materialize(d.select(col("item_w").as("i"), col("item_l").as("j"),
         col("n_wl").as("n"))
       .unionAll(d.select(col("item_l").as("i"), col("item_w").as("j"),
         col("n_wl").as("n")))
-      .groupBy(col("i"), col("j")).agg(sum(col("n")).as("n_ij"))
-      .localCheckpoint(true)
+      .groupBy(col("i"), col("j")).agg(sum(col("n")).as("n_ij"))).df
     val wins = d.groupBy(col("item_w").as("i"))
       .agg(sum(col("n_wl")).as("__w"))
-    val base = nm.groupBy(col("i")).agg(sum(col("n_ij")).as("n_duels"))
+    val base = Materialize(nm.groupBy(col("i"))
+      .agg(sum(col("n_ij")).as("n_duels"))
       .join(wins, Seq("i"), "left")
       .select(col("i"), col("n_duels"),
         coalesce(col("__w"), lit(0L)).as("n_wins"),
-        (coalesce(col("__w"), lit(0L)) + lit(1L)).as("__w1"))
-      .localCheckpoint(true)
+        (coalesce(col("__w"), lit(0L)) + lit(1L)).as("__w1"))).df
     // each state is one round over its materialized raw: stride iters
     val s = Fixpoint.iterate(base.select(col("i"), lit(BtScale).as("s_e6")),
         iters, stride = iters) { st =>
@@ -93,11 +93,10 @@ object Preference {
             " div (__si + __sj)").as("__t"))
         .groupBy(col("i"))
         .agg(sum(expr("CAST(__t AS DECIMAL(38,0))")).as("__d"))
-      val raw = base.join(den, Seq("i"))
+      val raw = Materialize(base.join(den, Seq("i"))
         .select(col("i"),
           expr(s"CAST(__w1 AS DECIMAL(38,0)) * ${BtRawK}L div __d")
-            .as("__raw"))
-        .localCheckpoint(true) // the max fold AND the normalize
+            .as("__raw"))).df // the max fold AND the normalize
       val mx = raw.agg(max(col("__raw")).as("__mx"))
       raw.crossJoin(broadcast(mx))
         .select(col("i"),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.text.TextAnalysis
 
 /** Deduplication operators for training-data pipelines: exact,
@@ -196,8 +197,9 @@ object Dedup {
     *
     * The payload feeds the candidate stage and both verify attachments,
     * so it is pinned and computed once per document, not once per
-    * subtree. The pair frame is materialized once (`localCheckpoint`)
-    * and its lineage truncated: it is minuscule next to its compute
+    * subtree. The pair frame is materialized once ([[graft.Materialize]],
+    * which also hands the planner its measured size) and its lineage
+    * truncated: it is minuscule next to its compute
     * (ids plus a score per pair), and consumers routinely reference it
     * more than once ([[duplicateGroups]] builds src→dst ∪ dst→src),
     * which without truncation re-runs the whole shingle/signature
@@ -206,7 +208,7 @@ object Dedup {
     */
   private def verifiedPairs(payload: DataFrame)(
       pairs: DataFrame => DataFrame): DataFrame =
-    graft.Pin.during(payload)(p => pairs(p).localCheckpoint(true))
+    graft.Pin.during(payload)(p => Materialize(pairs(p)).df)
 
   /** Candidate pairs with their exact shingle-set Jaccard ≥ `threshold`:
     * (id_a, id_b, jaccard).
@@ -953,7 +955,7 @@ object Dedup {
     // OCCURRENCES, not distinct documents — for routing that is the
     // right load measure (per-key join fan-out is occurrence²), and
     // it only selects the route, never the output.
-    // Materialized ONCE (localCheckpoint — the q155 shingle-index
+    // Materialized ONCE (graft.Materialize — the q155 shingle-index
     // discipline: at 100 TB this frame IS the anchor index an
     // exact-substring pipeline persists; non-reliable executor-local
     // storage spills to disk but is lost on executor failure — a
@@ -962,9 +964,8 @@ object Dedup {
     // (cold×2, hot×2), and left lazy each side would replay the
     // corpus scan + tokenize + md5 explode — measured 9 document
     // scans / 10 aggregates in the un-materialized plan vs 1 each.
-    val routed = anchors
-      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("h"))))
-      .localCheckpoint(true)
+    val routed = Materialize(anchors
+      .withColumn("__df", count(lit(1)).over(Window.partitionBy(col("h"))))).df
     val cold = routed.where(col("__df") <= hotDf)
       .select(col("h"), col("doc_id"), col("p"))
     val hot = routed.where(col("__df") > hotDf)

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
+
 /** Two-phase CUBE for algebraic aggregates (sums/counts): Spark's
   * native `.cube` plans Expand BEFORE the partial aggregate, so every
   * input row is duplicated once per grouping set (4× for two dims) and
@@ -33,7 +35,7 @@ object Rollups {
     // every grouping-set branch references the base — materialize it
     // eagerly (it is |finest groups| rows) so the expensive upstream
     // aggregate runs once, not once per branch
-    val b = base.localCheckpoint(true)
+    val b = Materialize(base).df
     val levels: Seq[Seq[String]] = dims.toSet.subsets().map(_.toSeq).toSeq
     levels.map { kept =>
       val dimCols: Seq[Column] = dims.map { d =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Jobs.concurrently
+import graft.Materialize
 import graft.dedup.Dedup
 import graft.ingest.FixtureTables
 import graft.ingest.FixtureTables.{Fitted, dump}
@@ -1475,16 +1476,17 @@ object Corpus {
     */
   val t50_vocab_budget: Q = (s, dir) => {
     import graft.queries.Features.exclusivePrefix
-    val cls = tfCounts(t(s, dir, "documents"))
-      .groupBy(col("c")).agg(count(lit(1)).as("__k"))
-      .withColumn("__mass", col("c") * col("__k"))
-      .withColumn("__ord", -col("c"))
-      .withColumn("__bucket", floor(col("__ord") / lit(64.0)).cast("long"))
-      .localCheckpoint(true) // prefix AND totals
+    // the prefix reads it twice; its totals come out of its own job
+    val Materialize.Measured(cls, _, Seq(n, v)) = Materialize(
+      tfCounts(t(s, dir, "documents"))
+        .groupBy(col("c")).agg(count(lit(1)).as("__k"))
+        .withColumn("__mass", col("c") * col("__k"))
+        .withColumn("__ord", -col("c"))
+        .withColumn("__bucket", floor(col("__ord") / lit(64.0)).cast("long")),
+      "__n" -> sum(col("__mass")), "__v" -> sum(col("__k")))
     val pref = exclusivePrefix(cls, "__ord", "__bucket",
       Seq("__exm" -> "__mass", "__exk" -> "__k"))
-    val tot = cls.agg(sum(col("__mass")).as("__n"), sum(col("__k")).as("__v"))
-    val cand = pref.crossJoin(broadcast(tot))
+    val cand = pref.select(col("*"), lit(n).as("__n"), lit(v).as("__v"))
       .withColumn("target",
         explode(array(lit(90L), lit(95L), lit(99L))))
       .where(lit(100L) * (col("__exm") + col("__mass")) >=
@@ -2201,7 +2203,8 @@ object Corpus {
     import graft.functions.KmvSketch
     val docs = t(s, dir, "documents").select(col("doc_id"))
     val g = d05Groups(s, dir)
-    docs
+    // the split report AND two audit folds
+    Materialize(docs
       .join(g, docs("doc_id") === g("id"), "left")
       .select(col("doc_id"),
         coalesce(col("group_id"), col("doc_id")).as("__gid"))
@@ -2215,8 +2218,7 @@ object Corpus {
         when(col("__gb") < 80L, "train").when(col("__gb") < 90L, "val")
           .otherwise("test").as("split"),
         when(col("__nb") < 80L, "train").when(col("__nb") < 90L, "val")
-          .otherwise("test").as("__naive"))
-      .localCheckpoint(true) // the split report AND two audit folds
+          .otherwise("test").as("__naive"))).df
   }
 
   val q154_leakage_safe_split: Q = (s, dir) => {
@@ -2300,7 +2302,7 @@ object Corpus {
     // stream; left lazy, each side would replay the corpus-scale
     // explode (at 100 TB this materialization IS the shingle index a
     // decontamination pipeline persists)
-    val exploded = t(s, dir, "documents")
+    val exploded = Materialize(t(s, dir, "documents")
       .select(col("doc_id"),
         array_distinct(TextAnalysis.shingles(col("text"), 5)).as("__sh"))
       .join(asg, "doc_id")
@@ -2313,8 +2315,7 @@ object Corpus {
         // BINARY(16), not the 32-char hex (r18, the spanAnchors key
         // shrink): the key never reaches the output, and the
         // checkpoint + distinct + semi-join all halve their payload
-        unhex(md5(col("__tok"))).as("tok"))
-      .localCheckpoint(true)
+        unhex(md5(col("__tok"))).as("tok"))).df
     val trainSh = exploded.where(col("split") === "train")
       .select(col("tok")).distinct()
     val test = exploded.where(col("split") === "test")
@@ -4210,19 +4211,19 @@ object Corpus {
     */
   private[graft] def tertileBuckets(perDoc0: DataFrame): DataFrame = {
     import graft.queries.Features.exclusivePrefix
-    val perDoc = perDoc0.localCheckpoint(true) // dist AND label
-    val dist = perDoc.groupBy(col("xent_e6")).agg(count(lit(1)).as("__c"))
-      .withColumn("__bucket",
-        floor(col("xent_e6") / lit(1000000L)).cast("long"))
-      .localCheckpoint(true)
+    // dist AND label; N, the scored documents, is its row count
+    val Materialize.Measured(perDoc, nn, _) = Materialize(perDoc0)
+    val dist = Materialize(
+      perDoc.groupBy(col("xent_e6")).agg(count(lit(1)).as("__c"))
+        .withColumn("__bucket",
+          floor(col("xent_e6") / lit(1000000L)).cast("long"))).df
     val cum = exclusivePrefix(dist, "xent_e6", "__bucket",
         Seq("__exc" -> "__c"))
       .select(col("xent_e6"), (col("__exc") + col("__c")).as("__cum"))
-    val tot = dist.agg(sum(col("__c")).as("__nn"))
-    val th = cum.crossJoin(broadcast(tot)).agg(
-      min(when(col("__cum") * lit(3L) >= col("__nn"), col("xent_e6")))
+    val th = cum.agg(
+      min(when(col("__cum") * lit(3L) >= lit(nn), col("xent_e6")))
         .as("__t1"),
-      min(when(col("__cum") * lit(3L) >= lit(2L) * col("__nn"),
+      min(when(col("__cum") * lit(3L) >= lit(2L) * lit(nn),
         col("xent_e6"))).as("__t2"))
     perDoc.crossJoin(broadcast(th))
       .select(col("doc_id"), col("n_tokens"),
@@ -4690,12 +4691,11 @@ object Corpus {
         (col("__nstop") * lit(100L) > col("__ntok") * lit(6L)).as("__y"))
     // distinct-score frame: |g| ≤ distinct integer logits — consumed
     // by both prefix branches, so materialize once (the t39 rule)
-    val g = scored.groupBy(col("s_u"))
+    val g = Materialize(scored.groupBy(col("s_u"))
       .agg(sum(when(col("__y"), 1L).otherwise(0L)).as("__p"),
         sum(when(col("__y"), 0L).otherwise(1L)).as("__n"))
       .withColumn("__bucket",
-        floor(col("s_u").cast("double") / lit(1048576.0)))
-      .localCheckpoint(true)
+        floor(col("s_u").cast("double") / lit(1048576.0)))).df
     // the two-level exclusive prefix: negatives strictly below s_u
     val withLess = Features.exclusivePrefix(g, "s_u", "__bucket",
       Seq("__nless" -> "__n"))
@@ -4862,12 +4862,11 @@ object Corpus {
       .join(scored, Seq("doc_id"))
       .select(col("source"), col("__logit_u").as("s_u"),
         (col("__nstop") * lit(100L) > col("__ntok") * lit(6L)).as("__y"))
-    val g = withSrc.groupBy(col("source"), col("s_u"))
+    val g = Materialize(withSrc.groupBy(col("source"), col("s_u"))
       .agg(sum(when(col("__y"), 1L).otherwise(0L)).as("__p"),
         sum(when(col("__y"), 0L).otherwise(1L)).as("__n"))
       .withColumn("__bucket",
-        floor(col("s_u").cast("double") / lit(1048576.0)))
-      .localCheckpoint(true)
+        floor(col("s_u").cast("double") / lit(1048576.0)))).df
     val withLess = Features.exclusivePrefix(g, "s_u", "__bucket",
       Seq("__nless" -> "__n"), by = Seq("source"))
     val dec19 = org.apache.spark.sql.types.DecimalType(19, 0)
@@ -4930,9 +4929,10 @@ object Corpus {
     * equitably. Per source slice: selection rate (demographic
     * parity), TPR and FPR against the rule label (the equalized-odds
     * pair), each as an EXACT e-6 integer rate; the gap columns are
-    * integer differences against the pooled global rates (one
-    * broadcast 1-row fold), and the disparate-impact flag is the
-    * EEOC four-fifths rule AS THE RULE DEFINES IT — each slice's
+    * integer differences against the pooled global rates (counted
+    * in the slice aggregate's materializing job), and the
+    * disparate-impact flag is the EEOC four-fifths rule AS THE RULE
+    * DEFINES IT — each slice's
     * selection rate against the HIGHEST-rate slice's, in exact
     * cross-multiplied integers (5·np_s·n_max < 4·np_max·n_s; the
     * r14 version compared floored e-6 rates to the POOLED rate,
@@ -4957,9 +4957,10 @@ object Corpus {
     *
     * Scale shape: the scoring scan is t38's (shared shuffle); the
     * report is ONE map-side-combined groupBy(source) over exact
-    * counters plus a broadcast 1-row global fold and a broadcast
-    * 1-row max-rate fold (an anti-join over the slice-domain-bounded
-    * aggregate — the report-cross exemption class) — no window, no
+    * counters, whose materialization also counts the global totals,
+    * plus a broadcast 1-row max-rate fold (an anti-join over the
+    * slice-domain-bounded aggregate — the report-cross exemption
+    * class) — no window, no
     * driver state.
     */
   val q152_fairness_report: Q = (s, dir) => {
@@ -4969,16 +4970,18 @@ object Corpus {
       .select(col("source"),
         (col("__logit_u") > 0L).as("__pred"),
         (col("__nstop") * lit(100L) > col("__ntok") * lit(6L)).as("__y"))
-    val agg = base.groupBy(col("source")).agg(
+    // the slice rows AND the max-rate fold; the global totals are
+    // counted in its job
+    val Materialize.Measured(agg, _, Seq(gn, gnp, gny, gtp, gfp)) = Materialize(
+      base.groupBy(col("source")).agg(
         count(lit(1)).as("n_docs"),
         sum(when(col("__pred"), 1L).otherwise(0L)).as("__np"),
         sum(when(col("__y"), 1L).otherwise(0L)).as("__ny"),
         sum(when(col("__pred") && col("__y"), 1L).otherwise(0L)).as("__tp"),
-        sum(when(col("__pred") && !col("__y"), 1L).otherwise(0L)).as("__fp"))
-      .localCheckpoint(true) // the slice rows AND the global fold
-    val glob = agg.agg(sum(col("n_docs")).as("__gn"),
-      sum(col("__np")).as("__gnp"), sum(col("__ny")).as("__gny"),
-      sum(col("__tp")).as("__gtp"), sum(col("__fp")).as("__gfp"))
+        sum(when(col("__pred") && !col("__y"), 1L).otherwise(0L)).as("__fp")),
+      "__gn" -> sum(col("n_docs")), "__gnp" -> sum(col("__np")),
+      "__gny" -> sum(col("__ny")), "__gtp" -> sum(col("__tp")),
+      "__gfp" -> sum(col("__fp")))
     // the max-SELECTION-RATE slice, by exact fraction comparison
     // (cross-multiplied DECIMAL(19,0) products — exact up to 1e13-doc
     // slices) with a source-name tie-break; slice b "beats" slice a
@@ -4995,7 +4998,10 @@ object Corpus {
       .join(agg.select(col("source").as("__bs"), col("n_docs").as("__bn"),
         col("__np").as("__bnp")), beats, "left_anti")
       .select(col("__np").as("__mxnp"), col("n_docs").as("__mxn"))
-    val one = agg.crossJoin(broadcast(glob)).crossJoin(broadcast(mx))
+    val one = agg
+      .select(col("*"), lit(gn).as("__gn"), lit(gnp).as("__gnp"),
+        lit(gny).as("__gny"), lit(gtp).as("__gtp"), lit(gfp).as("__gfp"))
+      .crossJoin(broadcast(mx))
     val nullL = lit(null).cast("long")
     val ppr = expr("__np * 1000000L div n_docs")
     val tpr = when(col("__ny") > 0L, expr("__tp * 1000000L div __ny"))
@@ -5098,13 +5104,11 @@ object Corpus {
     * aggregate directly, the bigram aggregate off the staged array) —
     * both map-side combined, both materialized once
     * (vocabulary-sized, the [[graft.graph.GraphOps]] checkpoint
-    * discipline) because each is consumed twice (counts + its
-    * position total). The two position totals are bounded 1-row
-    * driver hops off the AGGREGATED frames (the q82/t19 scalar
-    * discipline — never a scan of the corpus). Scoring joins the
-    * bigram counts to the unigram vocabulary twice on the word key;
-    * the top-50 cut is a TakeOrdered with the unique (w1, w2)
-    * tie-break.
+    * discipline), and each one's position total is counted inside
+    * its materializing job — no total costs a job or a scan of its
+    * own. Scoring joins the bigram counts to the unigram vocabulary
+    * twice on the word key; the top-50 cut is a TakeOrdered with the
+    * unique (w1, w2) tie-break.
     *
     * Determinism: lift divides exact BIGINT counts as doubles in the
     * identical written order in both engines — every int→double cast
@@ -5116,25 +5120,23 @@ object Corpus {
   val t39_collocations: Q = (s, dir) => {
     val toks = t(s, dir, "documents")
       .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("__toks"))
-    val uc = toks
+    // the two corpus totals, each counted in its aggregate's
+    // materializing job (never another scan)
+    val Materialize.Measured(uc, _, Seq(nu)) = Materialize(toks
       .select(explode_outer(col("__toks")).as("w"))
       .where(col("w").isNotNull)
-      .groupBy(col("w")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    val bc = toks.where(size(col("__toks")) >= 2)
-      .select(explode_outer(transform(
-        sequence(lit(1), size(col("__toks")) - 1),
-        i => struct(
-          element_at(col("__toks"), i).as("w1"),
-          element_at(col("__toks"), i + 1).as("w2")))).as("bg"))
-      .where(col("bg").isNotNull)
-      .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
-      .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
-    // the two corpus totals: bounded 1-row hops off vocabulary-sized
-    // aggregates (never the corpus), like q82's bounds and t19's avgdl
-    val nu = uc.agg(sum(col("c"))).collect()(0).getLong(0)
-    val nb = bc.agg(sum(col("c"))).collect()(0).getLong(0)
+      .groupBy(col("w")).agg(count(lit(1)).as("c")), "nu" -> sum(col("c")))
+    val Materialize.Measured(bc, _, Seq(nb)) = Materialize(
+      toks.where(size(col("__toks")) >= 2)
+        .select(explode_outer(transform(
+          sequence(lit(1), size(col("__toks")) - 1),
+          i => struct(
+            element_at(col("__toks"), i).as("w1"),
+            element_at(col("__toks"), i + 1).as("w2")))).as("bg"))
+        .where(col("bg").isNotNull)
+        .select(col("bg.w1").as("w1"), col("bg.w2").as("w2"))
+        .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c")),
+      "nb" -> sum(col("c")))
     val lift =
       (col("pair_count").cast("double") / lit(nb).cast("double")) /
         ((col("ca").cast("double") / lit(nu).cast("double")) *
@@ -5561,7 +5563,7 @@ object Corpus {
     * Scale shape: the corpus is touched exactly ONCE — a narrow
     * projection computing per-doc token counts and hashes — and the
     * dedup fold shuffles on the 60-bit text HASH (8-byte key, never
-    * document bodies); `localCheckpoint` then pins a compact
+    * document bodies); [[graft.Materialize]] then pins a compact
     * (id, source, 3×BIGINT) survivor frame and text never travels
     * again. The fold is ASSOCIATIVE (min-by of a union = min-by of
     * the min-bys), so the streaming twin
@@ -5616,19 +5618,18 @@ object Corpus {
     * out of [[releaseFromSurvivors]] so t44's best-fit-decreasing
     * packing report runs over the SAME selected mix (one statement of
     * the dedup→quota→threshold rule, two consumers). Returns
-    * (selected rows, quotas frame); `quotas` is localCheckpoint-pinned
-    * so both consumers reuse it without recompute.
+    * (selected rows, quotas frame); `quotas` is materialized
+    * ([[graft.Materialize]]) so both consumers reuse it without
+    * recompute.
     */
   private[graft] def c06Selection(
       survivors: DataFrame, budget: Long): (DataFrame, DataFrame) = {
     import graft.functions.KmvSketch
-    val dd = survivors
-      .localCheckpoint(true) // quota count + threshold fold + selection
-    val quotas = hamiltonQuotas(
+    val dd = Materialize(survivors).df // quota count + threshold fold + selection
+    val quotas = Materialize(hamiltonQuotas(
       dd.groupBy(col("source")).agg(count(lit(1)).as("n_docs")),
       budget = budget)
-      .select(col("source"), col("n_docs"), col("final_quota"))
-      .localCheckpoint(true) // threshold pick AND the manifest join
+      .select(col("source"), col("n_docs"), col("final_quota"))).df // threshold pick AND the manifest join
     val thrs = dd.groupBy(col("source"))
       .agg(KmvSketch.kmvHashes(col("__h"), budget.toInt).as("__hs"))
       .join(broadcast(quotas), Seq("source"))
@@ -5851,11 +5852,11 @@ object Corpus {
       docs.sparkSession, "c10 signal scans",
       () => tertileBuckets(t29PerDocOf(docs))
         .select(col("doc_id"), (col("bucket") === "tail").as("__tail")),
-      () => docs
+      // the share fold AND the per-source agg
+      () => Materialize(docs
         .select(col("source"),
           TextAnalysis.fingerprint(col("text"), k = 8).as("__fp"))
-        .distinct()
-        .localCheckpoint(true)) // the share fold AND the per-source agg
+        .distinct()).df)
     val stop = docs
       .withColumn("__toks", TextAnalysis.tokens(col("text")))
       .select(col("doc_id"),
@@ -6519,11 +6520,10 @@ object Corpus {
     val wOrd = Window.partitionBy(col("user_id"), col("conv_week"))
       .orderBy(col("reward").desc, col("ts").asc, col("event_id").asc)
     val wAll = Window.partitionBy(col("user_id"), col("conv_week"))
-    val ranked = cand
+    val ranked = Materialize(cand
       .withColumn("__rn", row_number().over(wOrd))
       .withColumn("n_candidates", count(lit(1)).over(wAll))
-      .where(col("n_candidates") >= 2L)
-      .localCheckpoint(true) // read from both ends: chosen + rejected
+      .where(col("n_candidates") >= 2L)).df // read from both ends: chosen + rejected
     val chosen = ranked.where(col("__rn") === 1)
       .select(col("user_id"), col("conv_week"), col("n_candidates"),
         col("event_id").as("chosen_event_id"),
@@ -7524,18 +7524,16 @@ object Corpus {
     */
   private[graft] def s22EvalOf(cells0: DataFrame): DataFrame = {
     import graft.functions.PortableMath
-    val cells = cells0
-      .localCheckpoint(true) // margins, purity, totals, cell terms
+    val cells = Materialize(cells0).df // margins, purity, totals, cell terms
     def uSum(df: DataFrame): DataFrame =
       PortableMath.withBindings(df, s22LnBindings)
         .agg(sum(col("__u_e3").cast("decimal(38,0)")).as("__s"))
     val sCl = uSum(cells.select(col("n")))
     val sC = uSum(cells.groupBy(col("cluster")).agg(sum(col("n")).as("n")))
     val sL = uSum(cells.groupBy(col("label")).agg(sum(col("n")).as("n")))
-    val tot = cells.agg(sum(col("n")).as("n"),
+    val tot = Materialize(cells.agg(sum(col("n")).as("n"),
         count_distinct(col("cluster")).as("n_clusters"),
-        count_distinct(col("label")).as("n_labels"))
-      .localCheckpoint(true) // joins the report AND feeds N·lnN
+        count_distinct(col("label")).as("n_labels"))).df // joins the report AND feeds N·lnN
     val uN = PortableMath.withBindings(tot.select(col("n")), s22LnBindings)
       .select(col("__u_e3").cast("decimal(38,0)").as("__un"))
     val pur = cells.groupBy(col("cluster")).agg(max(col("n")).as("__mx"))

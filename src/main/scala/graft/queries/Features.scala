@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.Materialize
 import graft.operators.Joins
 
 /** Round-9 (continued) training-pipeline surface: point-in-time
@@ -390,10 +391,9 @@ object Features {
       col("c_mktsegment").as("segment"),
       col("c_nationkey").cast("long").as("nation"),
       floor(col("c_acctbal") / 1000.0).cast("long").as("sensitive"))
-    val cell = base
+    val cell = Materialize(base
       .groupBy(col("segment"), col("nation"), col("sensitive"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true) // global hist, grid join, group totals
+      .agg(count(lit(1)).as("__n"))).df // global hist, grid join, group totals
     val gq = cell.groupBy(col("sensitive")).agg(sum(col("__n")).as("__nq"))
     val gqc = exclusivePrefix(gq, "sensitive", "sensitive",
         Seq("__exc" -> "__nq"))
@@ -541,15 +541,16 @@ object Features {
     * union of batches (spec-asserted).
     */
   def psiFromBins(bins: DataFrame): DataFrame = {
-    val g = bins.localCheckpoint(true) // totals AND the final frame
-    val tot = g.agg(sum(col("n_ref")).as("__R"), sum(col("n_cur")).as("__C"),
-      count(lit(1)).as("__B"))
-    val perBin = graft.functions.PortableMath
-      .withBindings(g.crossJoin(broadcast(tot)), psiBindings)
-      .select(col("bin"), col("n_ref"), col("n_cur"), col("psi_term_e9"))
-      .localCheckpoint(true) // consumed by the total AND the output
-    val psi = perBin.agg(sum(col("psi_term_e9")).as("psi_e9"))
-    perBin.crossJoin(broadcast(psi))
+    // each total is counted in the job that materializes its frame
+    val Materialize.Measured(g, b, Seq(r, c)) = Materialize(bins,
+      "__R" -> sum(col("n_ref")), "__C" -> sum(col("n_cur")))
+    val Materialize.Measured(perBin, _, Seq(psi)) = Materialize(
+      graft.functions.PortableMath
+        .withBindings(g.select(col("*"), lit(r).as("__R"), lit(c).as("__C"),
+          lit(b).as("__B")), psiBindings)
+        .select(col("bin"), col("n_ref"), col("n_cur"), col("psi_term_e9")),
+      "psi_e9" -> sum(col("psi_term_e9")))
+    perBin.select(col("*"), lit(psi).as("psi_e9"))
   }
 
   val q122_psi_drift: Q = (s, dir) =>
@@ -593,13 +594,12 @@ object Features {
     */
   val q123_target_encoding: Q = (s, dir) => {
     val m = 20.0 // smoothing pseudo-count
-    val byCatFold = t(s, dir, "orders")
+    val byCatFold = Materialize(t(s, dir, "orders")
       .select(col("o_orderpriority").as("category"),
         pmod(col("o_orderkey"), lit(5L)).as("fold"),
         col("o_totalprice").cast(dec2).as("__y"))
       .groupBy(col("category"), col("fold"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("__y")).as("__s"))
-      .localCheckpoint(true) // consumed by the rollup AND the final join
+      .agg(count(lit(1)).as("n_rows"), sum(col("__y")).as("__s"))).df // consumed by the rollup AND the final join
     val byCat = byCatFold.groupBy(col("category"))
       .agg(sum(col("n_rows")).as("__nc"), sum(col("__s")).as("__sc"))
     val glob = byCat.agg(sum(col("__nc")).as("__ng"),
@@ -689,18 +689,19 @@ object Features {
         .otherwise(datediff(col("__end"), col("__first")))
         .cast("long").as("t"),
       when(col("__purch").isNotNull, 1L).otherwise(0L).as("__e"))
-    val g = dur.groupBy(col("t")).agg(
+    // N, the users at risk at t = 0, is counted in g's job
+    val Materialize.Measured(g, _, Seq(nAll)) = Materialize(
+      dur.groupBy(col("t")).agg(
         sum(col("__e")).as("n_events"),
-        sum(lit(1L) - col("__e")).as("n_censored"))
-      .localCheckpoint(true) // totals AND the prefix frame
-    val tot = g.agg(sum(col("n_events") + col("n_censored")).as("__N"))
+        sum(lit(1L) - col("__e")).as("n_censored")),
+      "__N" -> sum(col("n_events") + col("n_censored")))
     val wEx = Window.partitionBy(pmod(col("t"), lit(1))).orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, -1)
     val wCum = Window.partitionBy(pmod(col("t"), lit(1))).orderBy(col("t"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val risk = g.crossJoin(broadcast(tot)).select(
+    val risk = g.select(
       col("t"), col("n_events"), col("n_censored"),
-      (col("__N") - coalesce(
+      (lit(nAll) - coalesce(
         sum(col("n_events") + col("n_censored")).over(wEx), lit(0L)))
         .as("n_at_risk"))
       .withColumn("__sur0", col("n_at_risk") - col("n_events"))
@@ -1283,9 +1284,8 @@ object Features {
   private[graft] def kwRankStats(counts: DataFrame): (DataFrame, DataFrame) = {
     val d19 = DecimalType(19, 0)
     val d12 = DecimalType(12, 0)
-    val vc = counts.groupBy(col("v")).agg(sum(col("c")).as("__c"))
-      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
-      .localCheckpoint(true) // bucket prefix AND the tie-correction agg
+    val vc = Materialize(counts.groupBy(col("v")).agg(sum(col("c")).as("__c"))
+      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df // bucket prefix AND the tie-correction agg
     val r2 = exclusivePrefix(vc, "v", "__bucket", Seq("__exc" -> "__c"))
       .select(col("v"),
         (lit(2L) * col("__exc") + col("__c") + lit(1L)).as("__r2"))
@@ -1530,11 +1530,10 @@ object Features {
     // the DuckDB oracles sort NULLs LAST. The equi-join back to the
     // pair frame drops NULL keys anyway, so filtering here changes no
     // joined result — it only removes the cross-engine rank hazard.
-    val g = pairs.where(col(v).isNotNull)
+    val g = Materialize(pairs.where(col(v).isNotNull)
       .groupBy(col(v)).agg(count(lit(1)).as("__c"))
       .withColumn("__bucket",
-        floor(col(v).cast("double") / lit(bucketStep)))
-      .localCheckpoint(true) // consumed by the bucket prefix AND the join
+        floor(col(v).cast("double") / lit(bucketStep)))).df // consumed by the bucket prefix AND the join
     exclusivePrefix(g, v, "__bucket", Seq("__exc" -> "__c"))
       .select(col(v),
         (lit(2L) * col("__exc") + col("__c") + lit(1L)).as("__r2"))
@@ -1677,18 +1676,16 @@ object Features {
     */
   val q132_token_gini: Q = (s, dir) => {
     val d19 = DecimalType(19, 0)
-    val g = t(s, dir, "documents")
+    val g = Materialize(t(s, dir, "documents")
       .select(size(graft.text.TextAnalysis.tokens(col("text")))
         .cast("long").as("n_tokens"))
       .groupBy(col("n_tokens")).agg(count(lit(1)).as("n_docs"))
       .withColumn("__w", col("n_tokens") * col("n_docs"))
       .withColumn("__bucket",
-        floor(col("n_tokens").cast("double") / lit(64.0)))
-      .localCheckpoint(true) // consumed by the bucket prefix AND the join
-    val p = exclusivePrefix(g, "n_tokens", "__bucket",
+        floor(col("n_tokens").cast("double") / lit(64.0)))).df // consumed by the bucket prefix AND the join
+    val p = Materialize(exclusivePrefix(g, "n_tokens", "__bucket",
         Seq("__exc" -> "n_docs", "__exw" -> "__w"))
-      .select(col("n_tokens"), col("n_docs"), col("__exc"), col("__exw"))
-      .localCheckpoint(true) // consumed by the totals AND the output
+      .select(col("n_tokens"), col("n_docs"), col("__exc"), col("__exw"))).df // consumed by the totals AND the output
     val tot = p.agg(
       sum(col("n_docs")).as("__n"),
       sum(col("n_tokens") * col("n_docs")).as("__s"),
@@ -1784,15 +1781,14 @@ object Features {
     val base = docs.agg(count(lit(1)).as("n_docs"),
       (asDouble(sum(col("__x").cast(d19))) / count(lit(1)).cast("double"))
         .as("mean"))
-    val repMeans = docs
+    val repMeans = Materialize(docs
       .select(col("doc_id"), col("__x"),
         explode(sequence(lit(0L), lit(reps - 1L))).as("b"))
       .withColumn("__m", mult)
       .groupBy(col("b"))
       .agg(sum(col("__m")).as("n_eff"),
         (asDouble(sum((col("__m") * col("__x")).cast(d19)))
-          / sum(col("__m")).cast("double")).as("mean_b"))
-      .localCheckpoint(true) // consumed by the rank frame AND the output
+          / sum(col("__m")).cast("double")).as("mean_b"))).df // consumed by the rank frame AND the output
     val wR = Window.partitionBy(pmod(col("b"), lit(1))) // deliberate: 64 rows
       // NULLS LAST explicitly: a replicate whose Poisson multiplicities
       // are all zero (P = e^-n per replicate — degenerate corpora only)
@@ -2015,9 +2011,11 @@ object Features {
     */
   def ksFromCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
-    val g = counts
-      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
-      .localCheckpoint(true) // prefix, totals, and the max fold
+    // prefix, the reported totals, and the max fold, whose totals are
+    // counted in g's job (over no rows the report's lazy sums stay NULL)
+    val Materialize.Measured(g, _, Seq(nRef, nCur)) = Materialize(counts
+        .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long")),
+      "n_ref" -> sum(col("__cr")), "n_cur" -> sum(col("__cc")))
     // inclusive CDF = the shared exclusive prefix + the value's own count
     val cum = exclusivePrefix(g, "v", "__bucket",
         Seq("__exr" -> "__cr", "__exc2" -> "__cc"))
@@ -2026,9 +2024,9 @@ object Features {
         (col("__exc2") + col("__cc")).as("__cumc"))
     val tot = g.agg(sum(col("__cr")).as("n_ref"),
       sum(col("__cc")).as("n_cur"))
-    val num = cum.crossJoin(broadcast(tot))
-      .select(abs(col("__cumr").cast(d19) * col("n_cur").cast(d19) -
-        col("__cumc").cast(d19) * col("n_ref").cast(d19)).as("__diff"))
+    val num = cum
+      .select(abs(col("__cumr").cast(d19) * lit(nCur).cast(d19) -
+        col("__cumc").cast(d19) * lit(nRef).cast(d19)).as("__diff"))
       .agg(asDouble(max(col("__diff"))).as("__maxdiff"))
     val (dStat, crit, flag) = ksTail
     tot.crossJoin(broadcast(num))
@@ -2291,10 +2289,9 @@ object Features {
   def mannWhitneyFromCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
     val d12 = DecimalType(12, 0)
-    val g = counts
+    val g = Materialize(counts
       .withColumn("__c", col("__cr") + col("__cc"))
-      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
-      .localCheckpoint(true) // bucket prefix AND the per-value join
+      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df // bucket prefix AND the per-value join
     val pref = exclusivePrefix(g, "v", "__bucket", Seq("__exc" -> "__c"))
       .withColumn("__r2", lit(2L) * col("__exc") + col("__c") + lit(1L))
     val m = pref.agg(
@@ -2366,10 +2363,9 @@ object Features {
     */
   def cliffsDeltaFromCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
-    val g = counts
+    val g = Materialize(counts
       .withColumn("__c", col("__cr") + col("__cc"))
-      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
-      .localCheckpoint(true) // bucket prefix AND the per-value join
+      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df // bucket prefix AND the per-value join
     val pref = exclusivePrefix(g, "v", "__bucket", Seq("__exc" -> "__c"))
       .withColumn("__r2", lit(2L) * col("__exc") + col("__c") + lit(1L))
     val m = pref.agg(
@@ -2457,10 +2453,9 @@ object Features {
   def kendallFromPairs(xy: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
     val d38 = DecimalType(38, 0)
-    val cells = xy
+    val cells = Materialize(xy
       .groupBy(col("x"), col("y"))
-      .agg(count(lit(1)).as("nc"))
-      .localCheckpoint(true) // pair join (twice-read) + marginals + total
+      .agg(count(lit(1)).as("nc"))).df // pair join (twice-read) + marginals + total
     val pairs = cells.as("a").join(broadcast(cells.as("b")),
         col("a.x") < col("b.x"))
       .select((col("a.nc").cast(d19) * col("b.nc").cast(d19)).as("__p"),
@@ -2578,10 +2573,9 @@ object Features {
   def driftFromSliceCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
     val d12 = DecimalType(12, 0)
-    val g = counts
+    val g = Materialize(counts
       .withColumn("__c", col("__cr") + col("__cc"))
-      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))
-      .localCheckpoint(true) // bucket prefix AND the per-value join
+      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df // bucket prefix AND the per-value join
     val rows = exclusivePrefix(g, "v", "__bucket",
         Seq("__excC" -> "__c", "__excR" -> "__cr", "__excU" -> "__cc"),
         by = Seq("slice"))
@@ -2951,12 +2945,13 @@ object Features {
       .withColumn("bh_critical_z", crit)
       .withColumn("__pass",
         when(col("__az") >= col("bh_critical_z"), col("bh_rank")))
-      .localCheckpoint(true) // the frontier fold AND the report join
-    val mx = flagged.agg(coalesce(max(col("__pass")), lit(0L)).as("__mp"))
-    flagged.crossJoin(broadcast(mx))
+    // the frontier fold is counted in the job that materializes it
+    val Materialize.Measured(marked, _, Seq(mp)) = Materialize(flagged,
+      "__mp" -> coalesce(max(col("__pass")), lit(0L)))
+    marked
       .select(col("slice"), col("n_ref"), col("n_cur"), col("z_score"),
         col("bh_rank"), col("m_tests"), col("bh_critical_z"),
-        col("mw_drift"), (col("bh_rank") <= col("__mp")).as("bh_reject"))
+        col("mw_drift"), (col("bh_rank") <= lit(mp)).as("bh_reject"))
   }
 
   val q143_bh_fdr: Q = (s, dir) =>

@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.graph.Fixpoint
 
 /** Graph-based ANN serving — greedy beam search over a persisted kNN
@@ -116,10 +117,9 @@ object GraphAnn {
       .unionByName(fwd.select(col("dst").as("src"), col("src").as("dst"),
         col("cos")))
       .distinct()
-    val graph = graft.plans.TopKPerKey(undirected, Seq("src"),
+    val graph = Materialize(graft.plans.TopKPerKey(undirected, Seq("src"),
         Seq(col("cos").desc, col("dst").asc), 2 * degree)
-      .select(col("src"), col("dst"))
-      .localCheckpoint(true) // every search hop iterates over it
+      .select(col("src"), col("dst"))).df // every search hop iterates over it
     // entry points: nearest corpus vectors to the per-dim mean — an
     // O(n·dim) aggregate + one global top-nEntries (TakeOrdered, no
     // full sort). The 64-double mean is the only driver-side value.
@@ -127,13 +127,12 @@ object GraphAnn {
       .select(posexplode(col("__cv").cast("array<double>")).as(Seq("i", "x")))
       .groupBy(col("i")).agg(avg(col("x")).as("m"))
       .orderBy(col("i")).collect().map(_.getDouble(1))
-    val entries = idx.corpus
+    val entries = Materialize(idx.corpus
       .select(col("neighbor_id").as("node"),
         Similarity.cosine(col("__cv"), array(mean.map(lit(_)): _*)).as("__c"))
       .orderBy(col("__c").desc, col("node").asc)
       .limit(nEntries)
-      .select(col("node"))
-      .localCheckpoint(true)
+      .select(col("node"))).df
     Index(graph, entries,
       idx.corpus.select(col("neighbor_id").as("node"), col("__cv")))
   }
@@ -154,16 +153,14 @@ object GraphAnn {
       degree: Int = 16, beam: Int = 32, hops: Int = 6): Index = {
     val found = search(idx, delta, idCol, vecCol, k = degree, beam, hops)
       .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-    val graph = idx.graph.select(col("src"), col("dst"))
+    val graph = Materialize(idx.graph.select(col("src"), col("dst"))
       .unionByName(found)
       .unionByName(found.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct()).df
     // no cast: __cv keeps the corpus's own element type (cosine casts
     // at scoring time), so the union stays schema-exact
-    val corpus = idx.corpus.unionByName(
-        delta.select(col(idCol).as("node"), col(vecCol).as("__cv")))
-      .localCheckpoint(true)
+    val corpus = Materialize(idx.corpus.unionByName(
+        delta.select(col(idCol).as("node"), col(vecCol).as("__cv")))).df
     // srcBuckets = None, NOT idx.srcBuckets: the unioned in-memory
     // graph was selected down to (src, dst) — no src_bkt column, no
     // partition layout — so propagating a store-backed index's bucket
@@ -238,9 +235,8 @@ object GraphAnn {
         Seq(col("cos").desc, col("node").asc), beam)
     // each hop reads the beam twice (expand, merge): init
     // materialized, stride 1
-    val init = topB(score(
-        q.select(col("query_id")).crossJoin(broadcast(idx.entries))))
-      .localCheckpoint(true)
+    val init = Materialize(topB(score(
+        q.select(col("query_id")).crossJoin(broadcast(idx.entries))))).df
     val beamDf = Fixpoint.iterate(init, hops) { prev =>
       val cand = expand(
         prev.select(col("query_id"), col("node").as("src")))

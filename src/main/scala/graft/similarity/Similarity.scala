@@ -598,8 +598,8 @@ object Similarity {
         .groupBy(col("query_id")).agg(sum(col("__ce6")).as("__sk"),
           count(lit(1)).as("__nk")) // actual neighborhood size ≤ k
     }
-    val ca = quant(candAB).localCheckpoint(true) // sums AND pair scores
-    val cb = quant(candBA).localCheckpoint(true)
+    val ca = graft.Materialize(quant(candAB)).df // sums AND pair scores
+    val cb = graft.Materialize(quant(candBA)).df
     val ka = kSums(ca)
     val kb = kSums(cb)
     def scored(pairs: DataFrame, qSums: DataFrame,

@@ -84,6 +84,14 @@ class MaterializeSpec extends SparkSpec {
     assert(local.rows === 0L)
   }
 
+  test("a count that is not a BIGINT fails by name before any job runs") {
+    val (err, jobs) = jobsOf(intercept[IllegalArgumentException] {
+      Materialize(grouped(100), "mean" -> avg(col("n")))
+    })
+    assert(jobs === 0)
+    assert(err.getMessage.contains("count mean is DOUBLE"), err.getMessage)
+  }
+
   test("materializing an already-measured checkpoint runs no job") {
     val m = Materialize(grouped(1000))
     val (again, jobs) = jobsOf(Materialize(m.df))

@@ -3,11 +3,12 @@ package graft
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one walk over the registered query surface: it builds each query
   * once at [[sfDir]], in name order, and hands the built frame to every
-  * check in turn. A build runs the query's eager `localCheckpoint` and
-  * `count` jobs, so a new surface-wide check is one more entry in
+  * check in turn. A build runs the query's eager [[graft.Materialize]]
+  * and `count` jobs, so a new surface-wide check is one more entry in
   * [[checks]], never another walk. Only failure lines are kept, never a
   * frame. A query whose build or analysis throws is reported once, under
   * [[Analysis]], and no check sees it; a check that throws reports the
@@ -23,6 +24,7 @@ object Surface {
   val Lint = "plan lint"
   val Execution = "execution"
   val Replay = "fixture replay"
+  val Measured = "measured checkpoints"
 
   /** How many builds a walk ran, and each check's failure lines. */
   final case class Findings(builds: Int, failures: Map[String, Seq[String]]) {
@@ -32,6 +34,15 @@ object Surface {
   /** The replay runs last: it globs what the execution dumped. */
   def checks: Seq[(String, Check)] = Seq(
     Lint -> PlanLintSpec.lint(mutable.Map()),
+    // every checkpoint in the built plan tells the planner its measured
+    // rows; a LogicalRDD over a plain RDD (an empty catalog frame) is
+    // not a checkpoint
+    Measured -> { (name, df) =>
+      df.queryExecution.analyzed.collectWithSubqueries {
+        case r: LogicalRDD if r.rdd.isCheckpointed &&
+            r.computeStats().rowCount.isEmpty => s"$name: ${r.simpleString(5)}"
+      }.distinct
+    },
     Execution -> { (_, df) =>
       df.write.format("noop").mode("overwrite").save()
       Nil

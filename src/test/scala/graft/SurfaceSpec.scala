@@ -35,9 +35,15 @@ class SurfaceSpec extends SparkSpec {
     assert(found(Surface.Execution).map(_.takeWhile(_ != ':')) == Seq("c_execute_throws"))
     assert(found(Surface.Lint).isEmpty)
     assert(found(Surface.Replay).isEmpty)
+    assert(found(Surface.Measured).isEmpty)
   }
 
   test("the registered surface is walked once, one build per query") {
     assert(Surface.findings.builds == SparkEntry.queries.size)
+  }
+
+  test("every checkpoint in a registered query's plan carries its measured rows") {
+    val failures = Surface.findings(Surface.Measured)
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 }
