@@ -66,8 +66,8 @@ object Preference {
   def bradleyTerryFromDuels(duels: DataFrame, iters: Int): DataFrame = {
     require(iters >= 1, s"bradleyTerry requires iters >= 1, got $iters")
     import org.apache.spark.sql.expressions.Window
-    val d = Materialize(
-      duels.select(col("item_w"), col("item_l"), col("n_wl"))).df // feeds the matrix AND the win totals
+    val d = Materialize( // feeds the matrix AND the win totals
+      duels.select(col("item_w"), col("item_l"), col("n_wl"))).df
     // symmetric opponent matrix n_ij — the per-round join frame
     val nm = Materialize(d.select(col("item_w").as("i"), col("item_l").as("j"),
         col("n_wl").as("n"))

@@ -5625,11 +5625,11 @@ object Corpus {
   private[graft] def c06Selection(
       survivors: DataFrame, budget: Long): (DataFrame, DataFrame) = {
     import graft.functions.KmvSketch
-    val dd = Materialize(survivors).df // quota count + threshold fold + selection
-    val quotas = Materialize(hamiltonQuotas(
+    val dd = Materialize(survivors).df // quotas + threshold fold + selection
+    val quotas = Materialize(hamiltonQuotas( // threshold pick AND manifest join
       dd.groupBy(col("source")).agg(count(lit(1)).as("n_docs")),
       budget = budget)
-      .select(col("source"), col("n_docs"), col("final_quota"))).df // threshold pick AND the manifest join
+      .select(col("source"), col("n_docs"), col("final_quota"))).df
     val thrs = dd.groupBy(col("source"))
       .agg(KmvSketch.kmvHashes(col("__h"), budget.toInt).as("__hs"))
       .join(broadcast(quotas), Seq("source"))
@@ -6520,10 +6520,10 @@ object Corpus {
     val wOrd = Window.partitionBy(col("user_id"), col("conv_week"))
       .orderBy(col("reward").desc, col("ts").asc, col("event_id").asc)
     val wAll = Window.partitionBy(col("user_id"), col("conv_week"))
-    val ranked = Materialize(cand
+    val ranked = Materialize(cand // read from both ends: chosen + rejected
       .withColumn("__rn", row_number().over(wOrd))
       .withColumn("n_candidates", count(lit(1)).over(wAll))
-      .where(col("n_candidates") >= 2L)).df // read from both ends: chosen + rejected
+      .where(col("n_candidates") >= 2L)).df
     val chosen = ranked.where(col("__rn") === 1)
       .select(col("user_id"), col("conv_week"), col("n_candidates"),
         col("event_id").as("chosen_event_id"),
@@ -7531,9 +7531,9 @@ object Corpus {
     val sCl = uSum(cells.select(col("n")))
     val sC = uSum(cells.groupBy(col("cluster")).agg(sum(col("n")).as("n")))
     val sL = uSum(cells.groupBy(col("label")).agg(sum(col("n")).as("n")))
-    val tot = Materialize(cells.agg(sum(col("n")).as("n"),
+    val tot = Materialize(cells.agg(sum(col("n")).as("n"), // report AND N·lnN
         count_distinct(col("cluster")).as("n_clusters"),
-        count_distinct(col("label")).as("n_labels"))).df // joins the report AND feeds N·lnN
+        count_distinct(col("label")).as("n_labels"))).df
     val uN = PortableMath.withBindings(tot.select(col("n")), s22LnBindings)
       .select(col("__u_e3").cast("decimal(38,0)").as("__un"))
     val pur = cells.groupBy(col("cluster")).agg(max(col("n")).as("__mx"))

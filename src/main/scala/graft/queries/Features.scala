@@ -594,12 +594,12 @@ object Features {
     */
   val q123_target_encoding: Q = (s, dir) => {
     val m = 20.0 // smoothing pseudo-count
-    val byCatFold = Materialize(t(s, dir, "orders")
+    val byCatFold = Materialize(t(s, dir, "orders") // rollup AND final join
       .select(col("o_orderpriority").as("category"),
         pmod(col("o_orderkey"), lit(5L)).as("fold"),
         col("o_totalprice").cast(dec2).as("__y"))
       .groupBy(col("category"), col("fold"))
-      .agg(count(lit(1)).as("n_rows"), sum(col("__y")).as("__s"))).df // consumed by the rollup AND the final join
+      .agg(count(lit(1)).as("n_rows"), sum(col("__y")).as("__s"))).df
     val byCat = byCatFold.groupBy(col("category"))
       .agg(sum(col("n_rows")).as("__nc"), sum(col("__s")).as("__sc"))
     val glob = byCat.agg(sum(col("__nc")).as("__ng"),
@@ -1284,8 +1284,9 @@ object Features {
   private[graft] def kwRankStats(counts: DataFrame): (DataFrame, DataFrame) = {
     val d19 = DecimalType(19, 0)
     val d12 = DecimalType(12, 0)
+    // bucket prefix AND the tie-correction agg
     val vc = Materialize(counts.groupBy(col("v")).agg(sum(col("c")).as("__c"))
-      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df // bucket prefix AND the tie-correction agg
+      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df
     val r2 = exclusivePrefix(vc, "v", "__bucket", Seq("__exc" -> "__c"))
       .select(col("v"),
         (lit(2L) * col("__exc") + col("__c") + lit(1L)).as("__r2"))
@@ -1530,10 +1531,10 @@ object Features {
     // the DuckDB oracles sort NULLs LAST. The equi-join back to the
     // pair frame drops NULL keys anyway, so filtering here changes no
     // joined result — it only removes the cross-engine rank hazard.
-    val g = Materialize(pairs.where(col(v).isNotNull)
+    val g = Materialize(pairs.where(col(v).isNotNull) // prefix AND the join
       .groupBy(col(v)).agg(count(lit(1)).as("__c"))
       .withColumn("__bucket",
-        floor(col(v).cast("double") / lit(bucketStep)))).df // consumed by the bucket prefix AND the join
+        floor(col(v).cast("double") / lit(bucketStep)))).df
     exclusivePrefix(g, v, "__bucket", Seq("__exc" -> "__c"))
       .select(col(v),
         (lit(2L) * col("__exc") + col("__c") + lit(1L)).as("__r2"))
@@ -1676,16 +1677,17 @@ object Features {
     */
   val q132_token_gini: Q = (s, dir) => {
     val d19 = DecimalType(19, 0)
-    val g = Materialize(t(s, dir, "documents")
+    val g = Materialize(t(s, dir, "documents") // bucket prefix AND the join
       .select(size(graft.text.TextAnalysis.tokens(col("text")))
         .cast("long").as("n_tokens"))
       .groupBy(col("n_tokens")).agg(count(lit(1)).as("n_docs"))
       .withColumn("__w", col("n_tokens") * col("n_docs"))
       .withColumn("__bucket",
-        floor(col("n_tokens").cast("double") / lit(64.0)))).df // consumed by the bucket prefix AND the join
+        floor(col("n_tokens").cast("double") / lit(64.0)))).df
+    // consumed by the totals AND the output
     val p = Materialize(exclusivePrefix(g, "n_tokens", "__bucket",
         Seq("__exc" -> "n_docs", "__exw" -> "__w"))
-      .select(col("n_tokens"), col("n_docs"), col("__exc"), col("__exw"))).df // consumed by the totals AND the output
+      .select(col("n_tokens"), col("n_docs"), col("__exc"), col("__exw"))).df
     val tot = p.agg(
       sum(col("n_docs")).as("__n"),
       sum(col("n_tokens") * col("n_docs")).as("__s"),
@@ -1781,14 +1783,14 @@ object Features {
     val base = docs.agg(count(lit(1)).as("n_docs"),
       (asDouble(sum(col("__x").cast(d19))) / count(lit(1)).cast("double"))
         .as("mean"))
-    val repMeans = Materialize(docs
+    val repMeans = Materialize(docs // consumed by the rank frame AND the output
       .select(col("doc_id"), col("__x"),
         explode(sequence(lit(0L), lit(reps - 1L))).as("b"))
       .withColumn("__m", mult)
       .groupBy(col("b"))
       .agg(sum(col("__m")).as("n_eff"),
         (asDouble(sum((col("__m") * col("__x")).cast(d19)))
-          / sum(col("__m")).cast("double")).as("mean_b"))).df // consumed by the rank frame AND the output
+          / sum(col("__m")).cast("double")).as("mean_b"))).df
     val wR = Window.partitionBy(pmod(col("b"), lit(1))) // deliberate: 64 rows
       // NULLS LAST explicitly: a replicate whose Poisson multiplicities
       // are all zero (P = e^-n per replicate — degenerate corpora only)
@@ -2011,11 +2013,8 @@ object Features {
     */
   def ksFromCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
-    // prefix, the reported totals, and the max fold, whose totals are
-    // counted in g's job (over no rows the report's lazy sums stay NULL)
-    val Materialize.Measured(g, _, Seq(nRef, nCur)) = Materialize(counts
-        .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long")),
-      "n_ref" -> sum(col("__cr")), "n_cur" -> sum(col("__cc")))
+    val g = Materialize(counts // prefix, totals, and the max fold
+      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df
     // inclusive CDF = the shared exclusive prefix + the value's own count
     val cum = exclusivePrefix(g, "v", "__bucket",
         Seq("__exr" -> "__cr", "__exc2" -> "__cc"))
@@ -2024,9 +2023,9 @@ object Features {
         (col("__exc2") + col("__cc")).as("__cumc"))
     val tot = g.agg(sum(col("__cr")).as("n_ref"),
       sum(col("__cc")).as("n_cur"))
-    val num = cum
-      .select(abs(col("__cumr").cast(d19) * lit(nCur).cast(d19) -
-        col("__cumc").cast(d19) * lit(nRef).cast(d19)).as("__diff"))
+    val num = cum.crossJoin(broadcast(tot))
+      .select(abs(col("__cumr").cast(d19) * col("n_cur").cast(d19) -
+        col("__cumc").cast(d19) * col("n_ref").cast(d19)).as("__diff"))
       .agg(asDouble(max(col("__diff"))).as("__maxdiff"))
     val (dStat, crit, flag) = ksTail
     tot.crossJoin(broadcast(num))
@@ -2289,9 +2288,9 @@ object Features {
   def mannWhitneyFromCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
     val d12 = DecimalType(12, 0)
-    val g = Materialize(counts
+    val g = Materialize(counts // bucket prefix AND the per-value join
       .withColumn("__c", col("__cr") + col("__cc"))
-      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df // bucket prefix AND the per-value join
+      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df
     val pref = exclusivePrefix(g, "v", "__bucket", Seq("__exc" -> "__c"))
       .withColumn("__r2", lit(2L) * col("__exc") + col("__c") + lit(1L))
     val m = pref.agg(
@@ -2363,9 +2362,9 @@ object Features {
     */
   def cliffsDeltaFromCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
-    val g = Materialize(counts
+    val g = Materialize(counts // bucket prefix AND the per-value join
       .withColumn("__c", col("__cr") + col("__cc"))
-      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df // bucket prefix AND the per-value join
+      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df
     val pref = exclusivePrefix(g, "v", "__bucket", Seq("__exc" -> "__c"))
       .withColumn("__r2", lit(2L) * col("__exc") + col("__c") + lit(1L))
     val m = pref.agg(
@@ -2453,9 +2452,9 @@ object Features {
   def kendallFromPairs(xy: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
     val d38 = DecimalType(38, 0)
-    val cells = Materialize(xy
+    val cells = Materialize(xy // pair join (twice-read) + marginals + total
       .groupBy(col("x"), col("y"))
-      .agg(count(lit(1)).as("nc"))).df // pair join (twice-read) + marginals + total
+      .agg(count(lit(1)).as("nc"))).df
     val pairs = cells.as("a").join(broadcast(cells.as("b")),
         col("a.x") < col("b.x"))
       .select((col("a.nc").cast(d19) * col("b.nc").cast(d19)).as("__p"),
@@ -2573,9 +2572,9 @@ object Features {
   def driftFromSliceCounts(counts: DataFrame): DataFrame = {
     val d19 = DecimalType(19, 0)
     val d12 = DecimalType(12, 0)
-    val g = Materialize(counts
+    val g = Materialize(counts // bucket prefix AND the per-value join
       .withColumn("__c", col("__cr") + col("__cc"))
-      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df // bucket prefix AND the per-value join
+      .withColumn("__bucket", floor(col("v") / lit(25.0)).cast("long"))).df
     val rows = exclusivePrefix(g, "v", "__bucket",
         Seq("__excC" -> "__c", "__excR" -> "__cr", "__excU" -> "__cc"),
         by = Seq("slice"))

@@ -76,20 +76,18 @@ object PlanLintSpec {
       "s09_filtered_ann", "q83_gap_fill", "s11_hybrid_rrf",
       "t33_incremental_corpus_stats", "t36_quota_allocation",
       "q95_benford", "s16_index_health", "q112_tpch_q11", "s17_pq_ann",
-      // q122/q123/t40: each crosses against a broadcast 1-row totals
-      // frame (PSI's R/C/B, the encoding's global mean, χ²'s P/M) —
-      // the q82-bounds shape, never a row×row cross
-      "q122_psi_drift", "q123_target_encoding", "t40_chi2_terms",
+      // q123/t40: each crosses against a broadcast 1-row totals frame
+      // (the encoding's global mean, χ²'s P/M) — the q82-bounds shape,
+      // never a row×row cross
+      "q123_target_encoding", "t40_chi2_terms",
       // q127: two 1-row variant-summary frames crossed — never row×row
       "q127_ab_test",
       // q149: the q127 shape verbatim (same two 1-row frames crossed)
       "q149_mde",
       // t41: both bucket rollups cross a broadcast 1-row max-id frame
       "t41_heaps_law",
-      // q130: two broadcast 1-row crosses (observation end; N total)
-      "q130_kaplan_meier",
       // q132: the distinct-count Lorenz frame crosses a broadcast
-      // 1-row (n, S, gini-numerator) totals frame — the q122 shape
+      // 1-row (n, S, gini-numerator) totals frame — the q123 shape
       "q132_token_gini",
       // q133: the 64-row replicate frame crosses two broadcast 1-row
       // frames (point estimate; percentile CI) — the q127 shape
@@ -119,9 +117,6 @@ object PlanLintSpec {
       // q142: the k-row pivot frame crosses the broadcast 1-row
       // tie-correction total — the q135 report shape, never row×row
       "q142_kruskal_wallis",
-      // q143: the ≤5-row test frame crosses the broadcast 1-row
-      // rejection-frontier fold — the q135 report shape
-      "q143_bh_fdr",
       // g10: each HITS round crosses its side's score frame against
       // the broadcast 1-row max (the exact integer renormalizer) —
       // the q135 report shape, once per side per round
@@ -131,19 +126,14 @@ object PlanLintSpec {
       // 1-row tie/N totals — never row×row
       "q146_dunn_posthoc",
       // t49: the per-doc score frame crosses the broadcast 1-row
-      // tertile-boundary fold (plus t29's inherited 1-row totals
-      // cross) — the q135 report shape
+      // tertile-boundary fold — the q135 report shape
       "t49_perplexity_buckets",
-      // t50: the count-class frame crosses the broadcast 1-row
-      // (N, V) totals — the q135 report shape
-      "t50_vocab_budget",
       // q150: each Bradley–Terry MM round crosses the item-domain-
       // bounded strength frame against the broadcast 1-row max (the
       // exact integer renormalizer) — the g10 per-round shape
       "q150_bradley_terry",
-      // c10: inherits t49's tertile crosses (distinct-score frame ×
-      // broadcast 1-row totals, per-doc frame × broadcast 1-row
-      // boundary fold) through the shared tertileBuckets stage —
+      // c10: inherits t49's tertile cross (per-doc frame × broadcast
+      // 1-row boundary fold) through the shared tertileBuckets stage —
       // never row×row
       "c10_domain_gate",
       // s22: the 1-row totals frame crosses five broadcast 1-row
@@ -159,10 +149,10 @@ object PlanLintSpec {
       // leak-audit folds (each a fully aggregated count) — the q135
       // report shape, never row×row
       "q154_leakage_safe_split",
-      // q152: the catalog-bounded slice frame crosses TWO broadcast
-      // 1-row folds (pooled rates + the max-rate slice, the latter
-      // picked by an anti-join over the slice-domain-bounded
-      // aggregate — ≤|sources|² comparisons) — the q135 report shape
+      // q152: the catalog-bounded slice frame crosses the broadcast
+      // 1-row max-rate slice, picked by an anti-join over the
+      // slice-domain-bounded aggregate (≤|sources|² comparisons; the
+      // pooled rates are literals) — the q135 report shape
       // (plus t38's inherited broadcast bias lookup)
       "q152_fairness_report",
       // s25: the fixed 5-row broadcast probe set crosses the 4-row
